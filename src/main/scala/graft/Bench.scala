@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+
+import Lane.{f2, f3, jsonString, materialize}
 
 object Bench {
   /** (steal, total) jiffies from the aggregate cpu line of /proc/stat —
@@ -20,16 +22,6 @@ object Bench {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.getLines().next().split("\\s+")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
-
-  /** Fully materialize a query result. `df.count()` lets Catalyst rewrite
-    * the action into an aggregate over the child plan, which for a
-    * projection-only query can short-circuit actual column production
-    * (parquet count-from-metadata; MalformedRecordsSpec documents
-    * count-only plans parsing nothing). `toRdd.count()` runs the
-    * executed plan exactly as registered (AQE included) and drains every
-    * partition iterator, so every row is actually produced. */
-  private def materialize(df: DataFrame): Long =
-    df.queryExecution.toRdd.count()
 
   /** One timed attempt. Right(seconds) on success; Left(error) on ANY
     * throw — plan-build, analysis, or execution. A failure must never
@@ -156,18 +148,7 @@ object Bench {
     // Single definition: this file is both the full-map artifact this run
     // writes and the committed deviation reference the next run reads.
     val fullPath = "BENCH_FULL.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.BucketedTable.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Spill accounting (VERDICT r12 #6 — the constrained-heap lane's
     // evidence): total task spill volumes across the whole run, so a
     // half-heap bench can PIN "pressure absorbed by spill, zero
@@ -186,26 +167,9 @@ object Bench {
           }
         }
       })
-    // Bench-local filter for WindowExec's move-all-data-to-one-partition
-    // WARN: the three unpartitioned windows in the suite (funnel stage
-    // rates, concurrency bucket offsets, shard-balance offsets) are
-    // provably bounded — PlanShapeSpec pins that they sit above
-    // aggregates — and a constant partition key does not survive the
-    // optimizer (foldable spec keys are eliminated). Scoped to the two
-    // window classes, bench only; Verify and user sessions keep the
-    // warning.
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      java.util.Map.of(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR,
-        "org.apache.spark.sql.execution.window.WindowExecBase",
-        org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () } // logging impl absent: keep the noise
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c: subset filter for local iteration on
-    // specific queries (the driver never sets it = full run).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val benchQueries = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    GraftSession.quietWindowWarnings()
+    val only = Lane.benchOnly
+    val benchQueries = Lane.queries(only)
     // Ambient load BEFORE the bench perturbs the box: the 32-thread
     // warm-up passes below push the 1-minute loadavg to ~5 on their own,
     // so capturing load_avg_start after them (as earlier rounds did)
@@ -357,8 +321,6 @@ object Bench {
     val results = firstPass ++ remeasured.map { case (n, orig, best, _) =>
       n -> math.min(orig, best)
     }
-    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Full per-query map + telemetry goes to a file; the stdout line
     // carries only the slowest 40 so the whole JSON line stays well under
@@ -369,23 +331,15 @@ object Bench {
     def qjson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + f3(v) }
         .mkString("{", ",", "}")
-    // JSON string escape for error messages (quotes/backslashes/control
-    // chars would otherwise break the artifact's json.load).
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // err is emitted whenever ANY attempt threw — including ok=true rows
     // where repeat>1 and only some attempts failed. Without it, a query
     // that throws on 1 of N attempts left no trace anywhere (ADVICE r9).
     val teleJson = telemetry.map { q =>
-      val errField = if (q.err.nonEmpty) s""","err":${jstr(q.err)}""" else ""
+      val errField = if (q.err.nonEmpty) s""","err":${jsonString(q.err)}""" else ""
       s"""{"q":"${q.name}","sec":${f3(q.sec)},"ok":${q.ok},"end_ms":${q.endMs},"load":${f2(q.load)},"steal_pct":${f2(q.stealPct)},"order":${q.pos}$errField}"""
     }.mkString("[", ",", "]")
     val failedJson = failed.map(q =>
-      s"""{"q":"${q.name}","err":${jstr(q.err)}}""").mkString("[", ",", "]")
+      s"""{"q":"${q.name}","err":${jsonString(q.err)}}""").mkString("[", ",", "]")
     def meta(medRatio: Option[Double]) = s""""sf":"$sfDir","seed":$seed,"warm_full":$warmFull,"load_avg_start":${f2(load0)},"load_avg_end":${f2(load1)},"steal_pct":${f2(stealPct)},"median_ref_ratio":${medRatio.map(f2).getOrElse("null")},"heap_max_mb":${Runtime.getRuntime.maxMemory() >> 20},"spill_mem_mb":${spillMem.get() >> 20},"spill_disk_mb":${spillDisk.get() >> 20}"""
     // Deviation guard (VERDICT r05 hygiene item 2): flag every query
     // that ran >3x slower than the last committed full map, so a noisy
@@ -407,11 +361,11 @@ object Bench {
       s"""{"q":"$n","sec":${f3(s)},"prev_sec":${f3(p)},"ratio":${f2(r)}}"""
     }.mkString("[", ",", "]")
     val remJson = remeasured.map { case (n, orig, best, err) =>
-      val extra = if (err.nonEmpty) s""","salvage_err":${jstr(err)}""" else ""
+      val extra = if (err.nonEmpty) s""","salvage_err":${jsonString(err)}""" else ""
       s"""{"q":"$n","first_sec":${f3(orig)},"best_sec":${f3(best)}$extra}"""
     }.mkString("[", ",", "]")
     val flakyJson = flaky.map(q =>
-      s"""{"q":"${q.name}","err":${jstr(q.err)}}""").mkString("[", ",", "]")
+      s"""{"q":"${q.name}","err":${jsonString(q.err)}}""").mkString("[", ",", "]")
     val devMeta = s""""deviations":$devJson,"remeasured":$remJson,"remeasure_dropped":$remeasureDropped,"deviation_ref":"$prevSource","failed":$failedJson,"flaky":$flakyJson"""
     // Reference-update gate ([[refDecision]]): subset runs and failed
     // runs never replace the committed full map, and a NOISY window's

@@ -5,7 +5,9 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import Lane.{f2, f3, jsonString, materialize}
 
 /** Concurrent-query bench lane (VERDICT r11 #6): a production warehouse
   * session runs queries CONCURRENTLY on one SparkSession, which the
@@ -35,38 +37,15 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchConcurrent {
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val threads = sys.env.getOrElse("SPARK_GRAFT_BENCH_THREADS", "6").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val load0 = Bench.loadAvg()
     val (steal0, jiffies0) = Bench.cpuJiffies()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.BucketedTable.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      java.util.Map.of(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR,
-        "org.apache.spark.sql.execution.window.WindowExecBase",
-        org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () }
+    val spark = GraftSession(fair = true)
+    GraftSession.quietWindowWarnings()
 
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val qs = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }.toSeq
+    val qs = Lane.queries(Lane.benchOnly).toSeq
 
     // codegen warm-up (plan-structure dependent only)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
@@ -76,7 +55,7 @@ object BenchConcurrent {
         try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
       }
 
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timed(fn: (SparkSession, String) => DataFrame)
         : Either[String, Double] = {
       val t0 = System.nanoTime()
       try { materialize(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
@@ -104,28 +83,17 @@ object BenchConcurrent {
     val (steal1, jiffies1) = Bench.cpuJiffies()
     val stealPct = if (jiffies1 > jiffies0)
       100.0 * (steal1 - steal0) / (jiffies1 - jiffies0) else 0.0
-    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
-    def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
     val serialOk = serial.collect { case (n, Right(s)) => n -> s }
     val concOk = conc.collect { case (n, Right(s)) => n -> s }
     val errors =
       serial.collect { case (n, Left(e)) =>
-        s"""{"q":"$n","pass":"serial","err":${jstr(e)}}""" } ++
+        s"""{"q":"$n","pass":"serial","err":${jsonString(e)}}""" } ++
       conc.collect { case (n, Left(e)) =>
-        s"""{"q":"$n","pass":"concurrent","err":${jstr(e)}}""" }
+        s"""{"q":"$n","pass":"concurrent","err":${jsonString(e)}}""" }
     val ratios = concOk.flatMap { case (n, c) =>
       serialOk.get(n).filter(_ > 0.05).map(s => n -> c / s) }.toSeq
-    val sortedR = ratios.map(_._2).sorted
-    def pct(p: Double): Double =
-      if (sortedR.isEmpty) -1.0
-      else sortedR(math.min(sortedR.size - 1, (p * sortedR.size).toInt))
+    def pct(p: Double): Double = Lane.pct(ratios.map(_._2), p)
     val perQuery = qs.map(_._1).sorted.map { n =>
       val s = serialOk.get(n).map(f3).getOrElse("null")
       val c = concOk.get(n).map(f3).getOrElse("null")

@@ -5,9 +5,10 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+
+import Lane.{f1, f2, jsonString, materialize, pct}
 
 /** Mixed-workload lane (VERDICT r12 #5): the streaming decontamination
   * loop and the batch bench surface CONCURRENTLY on ONE SparkSession —
@@ -41,41 +42,20 @@ object BenchMixed {
 
   private case class Stat(rows: Long, ms: Double)
 
-  private def materialize(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
-  private def pct(ms: Seq[Double], q: Double): Double =
-    if (ms.isEmpty) -1.0
-    else ms.sorted.apply(math.min(ms.size - 1, (q * ms.size).toInt))
-
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val soloTriggers = sys.env.getOrElse("SPARK_GRAFT_MIXED_SOLO", "5").toInt
     val docsPerTrigger =
       sys.env.getOrElse("SPARK_GRAFT_MIXED_DOCS", "2500").toInt
     val load0 = Bench.loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.BucketedTable.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(fair = true)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val qs = SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }.toSeq
+    val qs = Lane.queries(Lane.benchOnly).toSeq
 
     // codegen warm-up (plan-structure dependent only)
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
@@ -121,11 +101,6 @@ object BenchMixed {
       Stat(batch.length.toLong, (System.nanoTime() - t0) / 1e6)
     }
 
-    def f1(d: Double): String =
-      "%.1f".formatLocal(java.util.Locale.ROOT, d)
-    def f2(d: Double): String =
-      "%.2f".formatLocal(java.util.Locale.ROOT, d)
-
     // phase SOLO-PRE
     val pre = (1 to soloTriggers).map(_ => oneTrigger())
 
@@ -168,7 +143,7 @@ object BenchMixed {
       else pct(mixedStats.map(_.ms), 0.5) / math.max(pct(pre.map(_.ms), 0.5), 1e-9)
     val slowest = batchTimes.sortBy(-_._2).take(5)
       .map { case (n, s) => s""""$n":${f2(s)}""" }.mkString(",")
-    val json = s"""{"metric":"mixed_workload","sf_dir":"$sfDir","load_avg_start":${f2(load0)},"docs_per_trigger":$perTrigger,"batch":{"queries":${batchTimes.size},"failures":${batchErrs.size},"failed":[${batchErrs.map(e => "\"" + e.replace("\"", "'") + "\"").mkString(",")}],"wall_sec":${f2(batchWall)},"slowest":{$slowest}},"stream":{${phase("solo_pre", pre)},${phase("mixed", mixedStats)},${phase("solo_post", post)},"mixed_over_solo_p50":${f2(dilation)},"index_files_final":$files}}"""
+    val json = s"""{"metric":"mixed_workload","sf_dir":"$sfDir","load_avg_start":${f2(load0)},"docs_per_trigger":$perTrigger,"batch":{"queries":${batchTimes.size},"failures":${batchErrs.size},"failed":[${batchErrs.map(jsonString).mkString(",")}],"wall_sec":${f2(batchWall)},"slowest":{$slowest}},"stream":{${phase("solo_pre", pre)},${phase("mixed", mixedStats)},${phase("solo_post", post)},"mixed_over_solo_p50":${f2(dilation)},"index_files_final":$files}}"""
     println(json)
     spark.stop()
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Lane.{f3, materialize}
+
 /** Empirical scale probe: measure how each headline query's runtime grows
   * when the data grows ~10x, converting the repo's "this plan survives
   * 100x" arguments (PlanShapeSpec pins) into measurements.
@@ -209,7 +211,7 @@ object ScaleProbe {
     // attempt 1 pays the per-factor index build at that scale,
     // min-of-attempts keeps the steady-state lookup, which must stay
     // ~linear (a scan + hash projection + the stored-edge witness
-    // join). Ingest-vs-rebuild economics live in SplitIndexProbe; the
+    // join). Ingest-vs-rebuild economics live in `Probe split-ingest`; the
     // *_ingested twins are omitted here because min-of-attempts
     // reduces them to the same read path as *_indexed.
     "leakage_safe_split", "leakage_safe_split_indexed",
@@ -354,9 +356,6 @@ object ScaleProbe {
         threshold = 6.0)
     }))
 
-  private def materialize(df: DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
   /** One timed attempt split into (build, exec) seconds: build is the
     * query-construction call — for operators with an eager planning
     * component (SemanticDedup's count+centroid fit, estimated joins'
@@ -384,25 +383,8 @@ object ScaleProbe {
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
     val attempts =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_ATTEMPTS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.BucketedTable.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      java.util.Map.of(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        org.apache.logging.log4j.Level.ERROR,
-        "org.apache.spark.sql.execution.window.WindowExecBase",
-        org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () }
+    val spark = GraftSession()
+    GraftSession.quietWindowWarnings()
 
     val qs = probeQueries.filter(n => only.forall(_.contains(n)))
       .flatMap(n => SparkEntry.queries.get(n).map(n -> _)) ++
@@ -431,8 +413,6 @@ object ScaleProbe {
         try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
       }
 
-    def f3(d: Double): String =
-      "%.3f".formatLocal(java.util.Locale.ROOT, d)
     val timings = qs.map { case (name, fn) =>
       val byFactor = dirs.map { case (k, d) =>
         val (build, exec) =

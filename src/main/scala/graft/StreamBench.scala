@@ -3,12 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{StreamingDecontamination, StreamingKpis,
   StreamingSessions}
+import Lane.{f1, f2, pct}
 
 /** Streaming micro-bench (VERDICT r09 #4): the 8 streaming suites prove
   * semantics but publish no latency/throughput number. This harness
@@ -43,10 +43,6 @@ object StreamBench {
 
   private case class TriggerStat(rows: Long, ms: Double)
 
-  private def pct(xs: Seq[Double], p: Double): Double =
-    if (xs.isEmpty) -1.0
-    else xs.sorted.apply(math.min(xs.size - 1, (p * xs.size).toInt))
-
   /** Growth slope of a trigger-latency series: p50 of the last
     * `steady/2` triggers over p50 of the first `steady/2` (equal-size
     * halves; an odd middle trigger is dropped), the warmup trigger
@@ -68,11 +64,6 @@ object StreamBench {
     }
   }
 
-  private def f1(d: Double): String =
-    "%.1f".formatLocal(java.util.Locale.ROOT, d)
-  private def f2(d: Double): String =
-    "%.2f".formatLocal(java.util.Locale.ROOT, d)
-
   private def report(name: String, stats: Seq[TriggerStat],
                      extra: String = ""): String = {
     val rows = stats.map(_.rows).sum
@@ -91,18 +82,7 @@ object StreamBench {
     // artifact without its measurement conditions can't be adjudicated
     val load0 = Bench.loadAvg()
     val (steal0, jiffies0) = Bench.cpuJiffies()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.sources.BucketedTable.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

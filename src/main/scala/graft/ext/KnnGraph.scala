@@ -95,7 +95,7 @@ object KnnGraph {
   /** Corpus-count-scaled internal degree — the coded form of the
     * Scaladoc caveat that a FIXED degree's recall decays with n on
     * isotropic vectors (the no-structure worst case). Measured with
-    * [[graft.RecallProbe]] (30-query tie-aware recall@3, iters 3,
+    * `graft.Probe recall` (30-query tie-aware recall@3, iters 3,
     * nprobe 3, registered nlist sizing) on the sign-flip replica
     * corpora:
     *
@@ -125,8 +125,8 @@ object KnnGraph {
     * ≈ 1 on isotropic corpora (the centroids explain almost nothing of
     * the norm — the no-structure worst case [[degreeFor]] is calibrated
     * on); → 0 on strongly clustered ones (v ≈ centroid + noise).
-    * Measured (RecallProbe): 0.917 on the sign-flip replica family,
-    * 0.153 on the 256-center mixture family past the fit cap
+    * Measured (`graft.Probe recall`): 0.917 on the sign-flip replica
+    * family, 0.153 on the 256-center mixture family past the fit cap
     * (gen:clustered lane; see [[degreeForCorpus]]'s trade table for
     * the below-cap nuance). */
   def compactness(corpus: DataFrame,
@@ -146,7 +146,7 @@ object KnnGraph {
     * calibrated on the isotropic worst case and overpays quadratically
     * in d on clustered corpora, where neighbors concentrate inside
     * coarse cells and the seed already finds them — measured on the
-    * 256-center mixture family (RecallProbe gen:clustered, 30-query
+    * 256-center mixture family (`graft.Probe recall gen:clustered`, 30-query
     * tie-aware recall@3): FIXED d18 holds 1.0 from 20k through 200k
     * vectors, where the isotropic family needs d30 for 0.68 at 200k.
     * The rule interpolates on the measured [[compactness]] statistic:

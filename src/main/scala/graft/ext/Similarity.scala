@@ -190,7 +190,7 @@ object Similarity {
     * candidate whose exact rounded cosine clears the query's k-th
     * brute-force cosine), same one-corpus-scan plan, but the fraction
     * itself instead of a thresholded boolean, for sizing sweeps
-    * ([[graft.RecallProbe]]) where the distance to the floor is the
+    * (`graft.Probe recall`) where the distance to the floor is the
     * signal. */
   def recallFraction(retrieved: DataFrame, corpus: DataFrame,
                      queries: DataFrame, k: Int,

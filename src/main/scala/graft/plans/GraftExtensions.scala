@@ -8,9 +8,9 @@ import graft.functions.{AgmsSketch, AudioInfoExpr, CmsEstimateExpr, CmsSketch, D
 
 /** Session extension registering graft's native expressions as SQL
   * functions (`SELECT graft_dot(a, b)`), so pure-SQL users get the codegen
-  * path too. Enable with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * path too. [[graft.GraftSession]] enables it; elsewhere set
+  * `spark.sql.extensions=graft.plans.GraftExtensions` or call
+  * `withExtensions(new GraftExtensions)` on a session builder.
   *
   * The DataFrame API does not require this — `VectorFunctions.dotNative`
   * builds the expression directly.

@@ -496,7 +496,7 @@ object ExtQueries {
     // decade after; round work n·(2d)²/2 scored pairs, so the rule's
     // price is a log²(n) constant). Measured tie-aware recall@3 on the
     // isotropic replica corpora where knn_graph's floor goes false
-    // (7.7% coverage at x10): RecallProbe 30-query sweep — 0.77 at x10
+    // (7.7% coverage at x10): `graft.Probe recall` 30-query sweep — 0.77 at x10
     // (20k, d18), floor-true at x30 (60k, d24) and 0.68 at x100 (200k,
     // d30), where FIXED d18 measured 0.58 / 0.50. Same nlist
     // catalog-stat sizing as knn_graph so the two rows stay comparable.

@@ -41,8 +41,11 @@ object Archive {
     val fs = src.getFileSystem(conf)
     val dst = new Path(dstDir)
     if (!fs.exists(dst)) fs.mkdirs(dst)
+    // a missing source dir is "no files"; a malformed glob or an I/O
+    // error propagates instead of leaving landing files unarchived forever
     val matches =
-      try fs.globStatus(new Path(src, glob)) catch { case _: Throwable => null }
+      try fs.globStatus(new Path(src, glob))
+      catch { case _: java.io.FileNotFoundException => null }
     Option(matches).getOrElse(Array.empty).toSeq
       .filter(_.isFile)
       .flatMap { st =>

@@ -55,9 +55,9 @@ import org.apache.spark.sql.functions.col
   * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false`
   * (Spark's DisableUnnecessaryBucketedScan rule otherwise turns the
   * bucketed scan off exactly for the point lookups whose bucket PRUNING
-  * we want). [[configure]] sets it; every layout-owning entry point
-  * (Bench/Verify/ScaleProbe/SparkSpec) calls it ONCE at session
-  * bootstrap — a table READER mutating session confs as a side effect
+  * we want). [[configure]] sets it, called ONCE at session bootstrap by
+  * [[graft.GraftSession]], which every entry point (each `main` and the
+  * test SparkSpec) builds its session through — a table READER mutating session confs as a side effect
   * made plan shapes order-dependent (ADVICE r10), so bucketed() no
   * longer does. */
 object BucketedTable {

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.sql.DriverManager
 import java.util.Properties
 
 import org.apache.hadoop.fs.Path
@@ -48,16 +47,15 @@ final case class CopyBulkSink(url: String, props: Properties = new Properties) {
     * dialect's ingest statements transactionally. Returns the executed
     * statements (for observability/tests).
     *
-    * @param writeOptions extra CSV writer options (e.g. `timestampFormat`
-    *                     when the warehouse's parser differs from Spark's
-    *                     default ISO-8601).
+    * @param writeOptions CSV writer options, layered over
+    *                     [[CopyBulkSink.CsvDefaults]].
     */
   def copyLoad(df: DataFrame, table: String, stagingDir: String,
                dialect: CopyBulkSink.Dialect = CopyBulkSink.derbyImport,
                numPartitions: Int = 4, header: Boolean = false,
                writeOptions: Map[String, String] = Map.empty): Seq[String] = {
     df.repartition(numPartitions).write.mode("overwrite")
-      .option("header", header).options(writeOptions)
+      .option("header", header).options(CopyBulkSink.CsvDefaults ++ writeOptions)
       .csv(stagingDir)
     // Enumerate staged part files via the Hadoop FS API so the same code
     // resolves local paths in tests and object-store prefixes in prod.
@@ -68,14 +66,7 @@ final case class CopyBulkSink(url: String, props: Properties = new Properties) {
       .filter(_.getName.startsWith("part-"))
       .map(_.toUri.getPath).sorted.toSeq
     val statements = dialect(table, stagingDir, parts)
-    val c = DriverManager.getConnection(url, props)
-    try {
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      try { statements.foreach(st.execute); c.commit() }
-      catch { case e: Throwable => c.rollback(); throw e }
-      finally st.close()
-    } finally c.close()
+    Jdbc.transaction(url, props)(st => statements.foreach(st.execute))
     statements
   }
 }
@@ -83,6 +74,15 @@ final case class CopyBulkSink(url: String, props: Properties = new Properties) {
 object CopyBulkSink {
   /** `(table, stagedDir, partFiles) => ingest statements`. */
   type Dialect = (String, String, Seq[String]) => Seq[String]
+
+  /** Default CSV writer options, readable by both Redshift `COPY ... CSV`
+    * and Derby's import: a quote inside a field is escaped by doubling it
+    * (RFC 4180) — Spark's default backslash escape makes Derby stop with
+    * XIE0R on any string holding a quote — and timestamps are written as
+    * `yyyy-MM-dd HH:mm:ss.SSSSSS`, which both parse and which keeps the
+    * microseconds Spark's default format drops. */
+  val CsvDefaults: Map[String, String] = Map(
+    "escape" -> "\"", "timestampFormat" -> "yyyy-MM-dd HH:mm:ss.SSSSSS")
 
   /** SQL string-literal escaping for interpolated paths: double any
     * single quote. Paths are developer-controlled, but a legitimate

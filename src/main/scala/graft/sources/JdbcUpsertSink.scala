@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.sql.{Connection, DriverManager}
+import java.sql.Statement
 import java.util.Properties
 
 import org.apache.spark.sql.DataFrame
@@ -29,19 +29,21 @@ import org.apache.spark.sql.DataFrame
   */
 final case class JdbcUpsertSink(url: String, props: Properties = new Properties) {
 
-  private def withConn[A](f: Connection => A): A = {
-    val c = DriverManager.getConnection(url, props)
-    try f(c) finally c.close()
-  }
+  /** One statement on its own connection. */
+  private def withStatement[A](f: Statement => A): A =
+    Jdbc.connect(url, props)(c => Jdbc.statement(c)(f))
+
+  /** On one connection, run `sql` iff whether `table` exists equals
+    * `exists` (create-if-missing, drop-if-present). */
+  private def executeIf(table: String, exists: Boolean, sql: String): Unit =
+    Jdbc.connect(url, props) { c =>
+      if (Jdbc.tableExists(c, table) == exists)
+        Jdbc.statement(c)(_.execute(sql))
+    }
 
   /** S6: create target if missing. `ddl` is dialect-specific DDL. */
-  def ensureTable(ddl: String, table: String): Unit = withConn { c =>
-    val exists = {
-      val rs = c.getMetaData.getTables(null, null, table.toUpperCase, null)
-      try rs.next() finally rs.close()
-    }
-    if (!exists) { val st = c.createStatement(); try st.execute(ddl) finally st.close() }
-  }
+  def ensureTable(ddl: String, table: String): Unit =
+    executeIf(table, exists = false, ddl)
 
   /** S7+S8: batched staging write, then transactional delete+insert upsert.
     *
@@ -56,23 +58,13 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
     val cols = df.columns.map(quote).mkString(", ")
     val keyMatch = (keyCols :+ dateCol)
       .map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
-    withConn { c =>
-      c.setAutoCommit(false)
-      val st = c.createStatement()
-      try {
-        // Derby lacks DELETE...USING; the EXISTS form is equivalent and
-        // portable (same rows: target matching any staged key+date).
-        st.executeUpdate(
-          s"""DELETE FROM $table t WHERE EXISTS (
-              SELECT 1 FROM $staging s WHERE $keyMatch)""")
-        st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
-        c.commit()
-      } catch {
-        case e: Throwable => c.rollback(); throw e
-      } finally {
-        st.close()
-        c.setAutoCommit(true)
-      }
+    Jdbc.transaction(url, props) { st =>
+      // Derby lacks DELETE...USING; the EXISTS form is equivalent and
+      // portable (same rows: target matching any staged key+date).
+      st.executeUpdate(
+        s"""DELETE FROM $table t WHERE EXISTS (
+            SELECT 1 FROM $staging s WHERE $keyMatch)""")
+      st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
     }
   }
 
@@ -81,11 +73,7 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
   private def stageBatch(df: DataFrame, staging: String,
                          numPartitions: Int, batchSize: Int): Unit = {
     // Drop + rewrite staging (overwrite semantics without DDL surprises).
-    withConn { c =>
-      val rs = c.getMetaData.getTables(null, null, staging.toUpperCase, null)
-      val exists = try rs.next() finally rs.close()
-      if (exists) { val st = c.createStatement(); try st.execute(s"DROP TABLE $staging") finally st.close() }
-    }
+    executeIf(staging, exists = true, s"DROP TABLE $staging")
     // Force VARCHAR for string columns in the staging DDL — some dialects
     // (Derby) default StringType to CLOB, which is not comparable to the
     // VARCHAR business keys of the target table.
@@ -135,14 +123,10 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
         val setClause = nonKey.map(c => s"${quote(c)} = s.${quote(c)}").mkString(", ")
         s"WHEN MATCHED THEN UPDATE SET $setClause"
       }
-    withConn { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""MERGE INTO $table t USING $staging s ON $keyMatch
-            $matchedClause
-            WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($values)""")
-      finally st.close()
-    }
+    withStatement(_.executeUpdate(
+      s"""MERGE INTO $table t USING $staging s ON $keyMatch
+          $matchedClause
+          WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($values)"""))
   }
 
   /** Delete target rows whose key appears in `keysDf` (staged batch +
@@ -156,24 +140,17 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
       numPartitions, batchSize)
     val keyMatch = keyCols
       .map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
-    withConn { c =>
-      val st = c.createStatement()
-      try st.executeUpdate(
-        s"""DELETE FROM $table t WHERE EXISTS (
-            SELECT 1 FROM $staging s WHERE $keyMatch)""").toLong
-      finally st.close()
-    }
+    withStatement(_.executeUpdate(
+      s"""DELETE FROM $table t WHERE EXISTS (
+          SELECT 1 FROM $staging s WHERE $keyMatch)""").toLong)
   }
 
   private def quote(c: String): String = "\"" + c + "\""
 
   /** Post-load QC (reference's dead code A8, made live): row count for a
     * load date, fetched through one connection. */
-  def countWhere(table: String, predicate: String): Long = withConn { c =>
-    val st = c.createStatement()
-    try {
-      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table WHERE $predicate")
-      rs.next(); rs.getLong(1)
-    } finally st.close()
+  def countWhere(table: String, predicate: String): Long = withStatement { st =>
+    val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table WHERE $predicate")
+    rs.next(); rs.getLong(1)
   }
 }

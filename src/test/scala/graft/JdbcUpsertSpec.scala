@@ -150,6 +150,35 @@ class JdbcUpsertSpec extends SparkSpec {
     assert(sink.countWhere("copy_rollback", "1=1") === 0)
   }
 
+  test("copyLoad's default CSV options load quotes and microseconds exactly") {
+    // a JSON string holding quotes (Spark's default backslash escape stops
+    // Derby's import with XIE0R) and a microsecond timestamp (Spark's
+    // default timestamp format drops the microseconds)
+    sink.ensureTable(
+      """CREATE TABLE copy_defaults (
+         "payload" VARCHAR(256) NOT NULL,
+         "ts" TIMESTAMP NOT NULL)""", "copy_defaults")
+    val payload = """{"genre":"rock","note":"say \"hi\", it's 'live'"}"""
+    val staging = java.nio.file.Files.createTempDirectory("graft_copy_def")
+      .resolve("batch").toString
+    graft.sources.CopyBulkSink(url).copyLoad(
+      Seq(payload).toDF("payload")
+        .select(col("payload"),
+          lit("2024-06-25 13:45:07.123456").cast("timestamp").as("ts")),
+      "copy_defaults", staging, numPartitions = 1)
+    val c = java.sql.DriverManager.getConnection(url)
+    val back =
+      try {
+        val rs = c.createStatement()
+          .executeQuery("""SELECT "payload", "ts" FROM copy_defaults""")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (r.getString(1), r.getTimestamp(2).toLocalDateTime))
+          .toList
+      } finally c.close()
+    assert(back === List((payload,
+      java.time.LocalDateTime.parse("2024-06-25T13:45:07.123456"))))
+  }
+
   test("redshiftCopy emits the reference COPY statement shape") {
     val stmts = graft.sources.CopyBulkSink.redshiftCopy(
       credentialsSql = "IAM_ROLE 'arn:aws:iam::0:role/loader'",

@@ -13,7 +13,7 @@ import graft.operators.RangeJoin
   * of only showing up as a 10x bench regression.
   *
   * Assertions read the FORMATTED physical plan string — the same artifact
-  * a human audit reads (graft.Explain).
+  * a human audit reads (`graft.Probe explain`).
   */
 class PlanShapeSpec extends SparkSpec {
   import spark.implicits._

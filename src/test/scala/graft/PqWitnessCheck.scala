@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ext.{ProductQuant, Similarity, TextAnalysis}
 object PqWitnessCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("hash-witness")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus = 8)
     for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
       val docs = graft.sources.Tables.table(spark, s"/root/testdata/$sf", "documents")
       val vecs = TextAnalysis.hashingVectorizer(docs).withColumnRenamed("doc_id", "vec_id")

@@ -4,25 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs; mirrors the Verify/Bench session config
-  * (UTC, small shuffle partitions, nanos-as-long for the events table). */
+/** Shared local session for specs, built by the same [[GraftSession]]
+  * factory as Verify/Bench (UTC, nanos-as-long for the events table,
+  * bucketed layout reads) on 2 threads and 2 shuffle partitions, so a
+  * spec session cannot drift from theirs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // arm the debug contract check in top_k_by(distinctIds): any suite
   // exercising it through a caller that feeds an id differing values
   // fails loudly instead of silently getting best-value-per-id
   System.setProperty("graft.topk.checkDistinctContract", "true")
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-      "false") // layout-owning session: see BucketedTable.configure
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cpus = 2)
 
   override def afterAll(): Unit = () // shared across suites; JVM exit cleans up
 }

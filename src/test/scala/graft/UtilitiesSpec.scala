@@ -25,6 +25,15 @@ class ArchiveSpec extends SparkSpec {
     // missing source dir: empty result, no throw
     assert(Archive.moveMatching(spark, src.toString + "-nope", dst.toString).isEmpty)
   }
+
+  test("moveMatching propagates a malformed glob instead of moving nothing") {
+    val src = Files.createTempDirectory("arch-bad-glob")
+    Files.writeString(src.resolve("a.csv"), "x")
+    assertThrows[java.io.IOException] {
+      Archive.moveMatching(spark, src.toString, src.toString + "-dst", "[")
+    }
+    assert(Files.exists(src.resolve("a.csv")))
+  }
 }
 
 class SkewSpec extends SparkSpec {
