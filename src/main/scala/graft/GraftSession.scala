@@ -57,5 +57,7 @@ object GraftSession {
         org.apache.logging.log4j.Level.ERROR,
         "org.apache.spark.sql.execution.window.WindowExecBase",
         org.apache.logging.log4j.Level.ERROR))
-    catch { case _: Throwable => () } // logging impl absent: keep the noise
+    catch { // log4j-core absent, or another backend: keep the noise
+      case _: LinkageError | _: ClassCastException => ()
+    }
 }

@@ -36,7 +36,7 @@ object Archive {
     * is outside the contract). */
   def moveMatching(spark: SparkSession, srcDir: String, dstDir: String,
                    glob: String = "*"): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     val src = new Path(srcDir)
     val fs = src.getFileSystem(conf)
     val dst = new Path(dstDir)

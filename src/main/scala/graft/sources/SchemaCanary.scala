@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
@@ -66,7 +68,7 @@ object SchemaCanary {
       val path = s"$dir/$table.parquet"
       val actual =
         try Right(spark.read.parquet(path).schema)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           Left(s"$table: unreadable at $path (${e.getClass.getSimpleName})") }
       actual match {
         case Left(err) => Seq(err)

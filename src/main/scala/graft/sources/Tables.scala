@@ -1,17 +1,23 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.PathFilterFactory
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Readers over the engine's table surface.
   *
-  * The reference ingests CSV objects from S3 prefixes with hand-rolled
-  * listing/pruning (reference: dags/etl/extract_stream_data.py:26-60 listing,
-  * :124-150 mtime pruning, :62-77 per-file read). Spark's file sources subsume
-  * all of that: globbing skips zero-length files, `modifiedAfter` replaces the
-  * 2-hour recency heuristic, and explicit schemas replace dtype inference
-  * (SURVEY.md §1.3 — inference differences are a correctness hazard).
+  * The reference ingests CSV objects from S3 prefixes by listing the prefix
+  * and dropping old keys by `LastModified` on the driver (reference:
+  * dags/etl/extract_stream_data.py:26-60 listing, :124-150 mtime pruning,
+  * :62-77 per-file read). [[csv]] prunes the same way: one glob on the
+  * driver, filtered by mtime through Spark's own `modifiedAfter` filter, so
+  * only the fresh batch reaches Spark's file index. Spark's listing still
+  * skips zero-length and hidden files, and explicit schemas replace dtype
+  * inference (SURVEY.md §1.3 — inference differences are a correctness
+  * hazard).
   *
   * Scale posture: these return lazy scans; filters/projections composed on top
   * reach the parquet reader as PushedFilters/ReadSchema. No collect, no
@@ -69,13 +75,46 @@ object Tables {
     else df
   }
 
-  /** CSV scan with explicit schema (S1). `modifiedAfter` gives the reference's
-    * incremental-window semantics (S3) natively; Spark skips empty files (S2).
+  /** CSV scan with explicit schema (S1) over the files `path` (a Hadoop
+    * glob) matches, keeping those modified after `modifiedAfter`: the
+    * reference's incremental window (S3). Spark skips empty files (S2).
+    *
+    * The glob is expanded once on the driver, and its statuses, which
+    * already carry each file's mtime, go through Spark's own path filters
+    * for these options. Only the survivors reach the reader. Handing Spark
+    * the glob instead makes its file index hold every file the prefix ever
+    * received; past `parallelPartitionDiscovery.threshold` (32 paths) Spark
+    * then runs a listing job with one task per file only to re-stat them
+    * before it drops the stale ones. The reader keeps `modifiedAfter`, so
+    * Spark still filters the survivors and the file set can only shrink.
+    * A glob that matches nothing is handed over as it is, so Spark raises
+    * its usual PATH_NOT_FOUND.
     */
   def csv(spark: SparkSession, schema: StructType, path: String,
           modifiedAfter: Option[String] = None): DataFrame = {
-    val base = spark.read.schema(schema).option("header", "true")
-    modifiedAfter.fold(base)(ts => base.option("modifiedAfter", ts)).csv(path)
+    val options = Map("header" -> "true") ++ modifiedAfter.map("modifiedAfter" -> _)
+    spark.read.schema(schema).options(options).csv(fresh(spark, path, options): _*)
+  }
+
+  /** Hadoop glob metacharacters; a `\` before one makes it literal. */
+  private val GlobMeta = """([{}\[\]*?\\])"""
+
+  /** `glob`'s matches that pass Spark's path filters for `options`, as
+    * escaped literal paths (Spark globs every path it is given). Directories
+    * are kept for Spark to list and filter. */
+  private def fresh(spark: SparkSession, glob: String,
+                    options: Map[String, String]): Seq[String] = {
+    val pattern = new Path(glob)
+    val fs = pattern.getFileSystem(
+      spark.sessionState.newHadoopConfWithOptions(options))
+    val matches = Option(fs.globStatus(pattern)).getOrElse(Array.empty[FileStatus])
+    if (matches.isEmpty) Seq(glob)
+    else {
+      val filters = PathFilterFactory.create(CaseInsensitiveMap(options))
+      matches.toSeq
+        .filter(st => st.isDirectory || filters.forall(_.accept(st)))
+        .map(_.getPath.toString.replaceAll(GlobMeta, """\\$1"""))
+    }
   }
 
   /** Row lineage (P1): the reference tags every row with its source object key

@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.nio.file.attribute.FileTime
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.{Sinks, Tables}
@@ -33,6 +38,96 @@ class SourcesSpec extends SparkSpec {
       modifiedAfter = Some(cutoff))
     val names = recent.collect().map(_.getString(1))
     assert(names.toSeq === Seq("new"))
+  }
+
+  private def hourAgo: String =
+    java.time.Instant.now().minusSeconds(3600).toString.replace("Z", "")
+
+  /** A landing prefix of 40 files: 35 stale and 5 fresh. One fresh name
+    * holds glob metacharacters that, read as a pattern, match another
+    * fresh file (`fresh[4].csv` matches `fresh4.csv`). */
+  private def landing(): java.nio.file.Path = {
+    val dir = Files.createTempDirectory("csv-landing")
+    val stale = FileTime.fromMillis(System.currentTimeMillis() - 48L * 3600 * 1000)
+    (0 until 35).foreach { i =>
+      val f = dir.resolve(f"old$i%02d.csv")
+      Files.writeString(f, s"id,name\n$i,old$i\n")
+      Files.setLastModifiedTime(f, stale)
+    }
+    Seq("fresh1", "fresh2", "fresh3", "fresh4", "fresh[4]").zipWithIndex
+      .foreach { case (n, i) =>
+        Files.writeString(dir.resolve(s"$n.csv"), s"id,name\n${100 + i},$n\n")
+      }
+    dir
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, String, String)] =
+    Tables.withLineage(df).collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sortBy(_._1)
+
+  /** Spark's own recency-filtered read of `glob`, the reference result. */
+  private def sparkRead(glob: String, cutoff: String): DataFrame =
+    spark.read.schema(schema).option("header", "true")
+      .option("modifiedAfter", cutoff).csv(glob)
+
+  test("S3 pruned read equals Spark's modifiedAfter read of the same glob") {
+    val glob = landing().toString + "/*.csv"
+    val cutoff = hourAgo
+    val pruned = rows(Tables.csv(spark, schema, glob, Some(cutoff)))
+    assert(pruned === rows(sparkRead(glob, cutoff)))
+    assert(pruned.map(_._2) ===
+      Seq("fresh1", "fresh2", "fresh3", "fresh4", "fresh[4]"))
+  }
+
+  test("S3 pruning runs on the driver: no Spark job builds the frame") {
+    val glob = landing().toString + "/*.csv"
+    val cutoff = hourAgo
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val confBefore = spark.conf.getAll
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Tables.csv(spark, schema, glob, Some(cutoff))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0)
+    assert(spark.conf.getAll === confBefore)
+  }
+
+  test("S3 a survivor named with glob metacharacters is read exactly once") {
+    val df = Tables.csv(spark, schema, landing().toString + "/*.csv",
+      Some(hourAgo))
+    val names = rows(df).map(_._2)
+    assert(names.count(_ == "fresh[4]") === 1)
+    assert(names.count(_ == "fresh4") === 1)
+  }
+
+  test("S3 an empty glob raises PATH_NOT_FOUND; an all-stale glob is empty") {
+    val dir = landing()
+    val e = intercept[AnalysisException] {
+      Tables.csv(spark, schema, dir.toString + "/none*.csv", Some(hourAgo))
+    }
+    assert(e.getCondition === "PATH_NOT_FOUND")
+    val allStale = Tables.csv(spark, schema, dir.toString + "/old*.csv",
+      Some(hourAgo))
+    assert(allStale.schema === schema)
+    assert(allStale.count() === 0)
+  }
+
+  test("S2 hidden and empty files are skipped, as by a plain read") {
+    val dir = Files.createTempDirectory("csv-hidden")
+    Files.writeString(dir.resolve("a.csv"), "id,name\n1,x\n")
+    Files.writeString(dir.resolve("_meta.csv"), "id,name\n2,meta\n")
+    Files.writeString(dir.resolve(".hidden.csv"), "id,name\n3,hidden\n")
+    Files.writeString(dir.resolve("empty.csv"), "")
+    val glob = dir.toString + "/*.csv"
+    val cutoff = hourAgo
+    val pruned = rows(Tables.csv(spark, schema, glob, Some(cutoff)))
+    assert(pruned.map(_._2) === Seq("x"))
+    assert(pruned === rows(sparkRead(glob, cutoff)))
   }
 
   test("P1 lineage column carries the source file path") {

@@ -34,6 +34,36 @@ class ArchiveSpec extends SparkSpec {
     }
     assert(Files.exists(src.resolve("a.csv")))
   }
+
+  test("moveMatching goes through the session's Hadoop conf") {
+    val src = Files.createTempDirectory("arch-session-conf")
+    Files.writeString(src.resolve("a.csv"), "x")
+    val before = CountingLocalFs.renames.get
+    spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val moved = Archive.moveMatching(spark, src.toString, src.toString + "-dst")
+      assert(moved.size === 1)
+      assert(CountingLocalFs.renames.get - before === 1)
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
+}
+
+/** A local file system that counts renames: set as `fs.file.impl`, it
+  * shows which Hadoop conf a caller's file system was built from. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    CountingLocalFs.renames.incrementAndGet()
+    super.rename(src, dst)
+  }
+}
+
+object CountingLocalFs {
+  val renames = new java.util.concurrent.atomic.AtomicInteger
 }
 
 class SkewSpec extends SparkSpec {
