@@ -22,12 +22,14 @@ import graft.sources.{VersionedStats, VersionedTable}
   * signal an operator wants from a cold catalog. Layout-dependent
   * columns (files, rows) make those row VALUES machine-specific, so
   * the registered `index_health` query first ENSURES every reported
-  * family exists (delegating the cold-catalog question to the
-  * creators' fingerprint-keyed no-op) and projects only the
+  * family exists (through the same `registry.IndexCatalog` ensure*
+  * each family's authoritative query calls) and projects only the
   * deterministic columns — which holds it to the DuckDB oracle like
-  * every other query. The layout-dependent columns stay here for
-  * operators and are pinned by IndexHealthSpec, including the
-  * decade-boundary staleness crossing.
+  * every other query. The cold-catalog (versions = 0) signal is
+  * therefore reachable only by calling this report directly: the
+  * registered query never sees a cold family. The layout-dependent
+  * columns stay here for operators and are pinned by IndexHealthSpec,
+  * including the decade-boundary staleness crossing.
   *
   * Reference scope: the reference pipeline has no persisted index
   * machinery; this extends the LLM-data-pipeline surface (SURVEY §6).

@@ -34,24 +34,6 @@ object PqIndex {
 
   private def modelPath(root: String) = new Path(root, "_model")
 
-  /** A root under `base` keyed by a cheap fingerprint (name, length,
-    * mtime of every file) of the SOURCE the index is built from — the
-    * [[graft.sources.BucketedTable]] lesson: a cached physical asset
-    * keyed by path alone silently serves stale data when the source is
-    * regenerated in place. With the fingerprint in the key, a
-    * regenerated source simply builds a fresh index at a fresh root. */
-  def fingerprintedRoot(spark: SparkSession, base: String,
-                        sourcePath: String): String = {
-    val p = new Path(sourcePath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(p).sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    s"${base}_$h"
-  }
-
   /** Build the index: fit coarse + residual codebooks on the corpus
     * (bounded samples — [[ProductQuant.pqFit]] discipline), persist the
     * model, commit codes v1. No-op if the index already exists. */

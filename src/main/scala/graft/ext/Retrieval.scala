@@ -141,17 +141,8 @@ object Retrieval {
     * count) — the sizing numbers a retrieval deployment is planned from,
     * and an exactly-oracled integer surface for the BM25 inputs. */
   def bm25CorpusStats(docs: DataFrame): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    // two consumers (doc lengths, postings/vocab) — same build-once
-    // checkpoint as [[bm25Scores]]'s tf frame, same measured
-    // durability tradeoff (see the comment there)
-    val tf = docs.repartition(par)
-      .select(col("doc_id"),
-        explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
-      .where(col("token").isNotNull)
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    // two consumers (doc lengths, postings/vocab)
+    val tf = tfFrame(docs)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val postings = tf.agg(count(lit(1)).as("n_postings"),
       countDistinct(col("token")).as("vocab"))

@@ -168,18 +168,8 @@ object TextAnalysis {
     * change the statistic). */
   def tfIdf(docs: DataFrame, topK: Int,
             docFilter: Column = lit(true)): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val toks = docs.repartition(par)
-      .select(col("doc_id"), explode_outer(tokens(col("text"))).as("token"))
-      .where(col("token").isNotNull) // outer: avoids InferFiltersFromGenerate
-    // tf feeds the df re-aggregation AND the score join — build once.
-    // Postings-sized executor-local blocks: executor loss fails the
-    // query (caller re-runs); persist(MEMORY_AND_DISK) measured
-    // 1.5-1.7x slower and leaks in CacheManager — see the stated
-    // tradeoff at Retrieval.bm25Scores' tf frame.
-    val tf = toks.groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+    // tf feeds the df re-aggregation AND the score join
+    val tf = Retrieval.tfFrame(docs)
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val n = docs.select(count(lit(1)).as("n_docs"))
     val scored = tf.join(dfreq, "token").crossJoin(broadcast(n))
@@ -219,27 +209,18 @@ object TextAnalysis {
     * and are excluded (the quality gate drops them upstream anyway). */
   def unigramPerplexity(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, s"need positive smoothing alpha: $alpha")
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    // (doc, token, m) feeds the model re-aggregation AND the score join
-    // — build once (eager executor-local checkpoint, grouped narrow
-    // rows; postings-sized — measured durability tradeoff stated at
-    // Retrieval.bm25Scores' tf frame)
-    val dt = docs.repartition(par)
-      .select(col("doc_id"), explode_outer(tokens(col("text"))).as("tok"))
-      .where(col("tok").isNotNull) // outer: avoids InferFiltersFromGenerate
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("m"))
-      .localCheckpoint(true)
-    val vocab = dt.groupBy(col("tok")).agg(sum(col("m")).as("cnt"))
+    // (doc, token, tf) feeds the model re-aggregation AND the score join
+    val tf = Retrieval.tfFrame(docs)
+    val vocab = tf.groupBy(col("token")).agg(sum(col("tf")).as("cnt"))
     val totals = vocab.agg(sum(col("cnt")).as("T"),
       count(lit(1)).as("V"))
-    dt.join(vocab, "tok")
+    tf.join(vocab, "token")
       .crossJoin(broadcast(totals))
       .groupBy(col("doc_id"))
-      .agg(sum(col("m")).cast("long").as("n_tokens"),
-        (-sum(col("m") * log((col("cnt") + lit(alpha)) /
+      .agg(sum(col("tf")).cast("long").as("n_tokens"),
+        (-sum(col("tf") * log((col("cnt") + lit(alpha)) /
             (col("T") + lit(alpha) * col("V"))))
-          / sum(col("m"))).as("nll"))
+          / sum(col("tf"))).as("nll"))
       .select(col("doc_id"), col("n_tokens"),
         round(exp(col("nll")), 6).as("ppl"))
   }

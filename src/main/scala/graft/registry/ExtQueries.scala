@@ -123,18 +123,7 @@ object ExtQueries {
           coalesce(col("component"), col("doc_id")).as("rep"))
       val split = Sampling.deterministicSplit(withRep, col("rep"),
         Seq("train" -> 80, "eval" -> 20))
-      val cross = pairs
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, pairs)
     }),
 
     // The PERSISTED form of the leakage-safe split (ext/SplitIndex —
@@ -149,26 +138,10 @@ object ExtQueries {
     // the fresh pass (SplitIndexSpec additionally pins ingest ≡
     // rebuild on growth fixtures).
     "leakage_safe_split_indexed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/split2",
-        dir + "/documents.parquet")
-      graft.ext.SplitIndex.create(docs, root)
+      val root = IndexCatalog.ensureSplit(s, dir)
       val split = graft.ext.SplitIndex.split(s, root,
         Seq("train" -> 80, "eval" -> 20))
-      val cross = graft.ext.SplitIndex.edges(s, root)
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, graft.ext.SplitIndex.edges(s, root))
     }),
 
     // Incremental maintenance of the split index, held to the FRESH
@@ -191,26 +164,13 @@ object ExtQueries {
       val docs = t(s, dir, "documents")
       val base = docs.where(col("doc_id") % 5 =!= 0)
       val delta = docs.where(col("doc_id") % 5 === 0)
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/spliti2",
-        dir + "/documents.parquet")
+      val root = IndexCatalog.fingerprinted(s, dir, "spliti2",
+        "documents.parquet")
       graft.ext.SplitIndex.create(base, root)
       graft.ext.SplitIndex.ingest(root, delta)
       val split = graft.ext.SplitIndex.split(s, root,
         Seq("train" -> 80, "eval" -> 20))
-      val cross = graft.ext.SplitIndex.edges(s, root)
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, graft.ext.SplitIndex.edges(s, root))
     }),
 
     // The SEMANTIC regime of the leakage-safe split (VERDICT r13 #5):
@@ -258,18 +218,7 @@ object ExtQueries {
           coalesce(col("component"), col("doc_id")).as("rep"))
       val split = Sampling.deterministicSplit(withRep, col("rep"),
         Seq("train" -> 80, "eval" -> 20))
-      val cross = pairs
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, pairs)
     }),
 
     // The PERSISTED form of the SEMANTIC leakage-safe split
@@ -284,29 +233,10 @@ object ExtQueries {
     // sources (documents and embeddings), so a regen of either builds
     // a fresh asset.
     "leakage_safe_split_semantic_indexed" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val emb = t(s, dir, "embeddings")
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        graft.ext.PqIndex.fingerprintedRoot(s,
-          "/tmp/graft_dedup_index/" +
-            dir.replaceAll("[^A-Za-z0-9]", "_") + "/splitsem",
-          dir + "/documents.parquet"),
-        dir + "/embeddings.parquet")
-      graft.ext.SplitIndex.createSemantic(docs, emb, root)
+      val root = IndexCatalog.ensureSplitSemantic(s, dir)
       val split = graft.ext.SplitIndex.split(s, root,
         Seq("train" -> 80, "eval" -> 20))
-      val cross = graft.ext.SplitIndex.unionEdges(s, root)
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, graft.ext.SplitIndex.unionEdges(s, root))
     }),
 
     // Incremental maintenance of the semantic split index, held to the
@@ -332,28 +262,13 @@ object ExtQueries {
       val deltaDocs = docs.where(col("doc_id") % 5 === 0)
       val baseEmb = emb.where(col("vec_id") % 5 =!= 0)
       val deltaEmb = emb.where(col("vec_id") % 5 === 0)
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        graft.ext.PqIndex.fingerprintedRoot(s,
-          "/tmp/graft_dedup_index/" +
-            dir.replaceAll("[^A-Za-z0-9]", "_") + "/splitsemi",
-          dir + "/documents.parquet"),
-        dir + "/embeddings.parquet")
+      val root = IndexCatalog.fingerprinted(s, dir, "splitsemi",
+        "documents.parquet", "embeddings.parquet")
       graft.ext.SplitIndex.createSemantic(baseDocs, baseEmb, root)
       graft.ext.SplitIndex.ingestSemantic(root, deltaDocs, deltaEmb)
       val split = graft.ext.SplitIndex.split(s, root,
         Seq("train" -> 80, "eval" -> 20))
-      val cross = graft.ext.SplitIndex.unionEdges(s, root)
-        .join(split.select(col("doc_id").as("doc_a"),
-          col("split").as("__sa")), Seq("doc_a"))
-        .join(split.select(col("doc_id").as("doc_b"),
-          col("split").as("__sb")), Seq("doc_b"))
-        .where(col("__sa") =!= col("__sb"))
-        .agg(count(lit(1)).as("cross_split_pairs"))
-      split.groupBy(col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("rep")).as("n_groups"))
-        .crossJoin(broadcast(cross))
-        .orderBy(col("split"))
+      splitReport(split, graft.ext.SplitIndex.unionEdges(s, root))
     }),
 
     // Exact cosine top-5 for 10 probe vectors (brute-force ANN baseline).
@@ -552,11 +467,7 @@ object ExtQueries {
     // on every run.
     "knn_graph_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/kg3",
-        dir + "/embeddings.parquet")
-      graft.ext.KnnGraphIndex.create(emb, root)
+      val root = IndexCatalog.ensureKnnGraph(s, dir)
       val graph = graft.ext.KnnGraphIndex.topK(s, root)
       val queries = emb.where(col("vec_id") < 10)
       val recall = Similarity.recallWitness(
@@ -595,10 +506,8 @@ object ExtQueries {
       val emb = t(s, dir, "embeddings")
       val base = emb.where(col("vec_id") % 10 =!= 0)
       val batch = emb.where(col("vec_id") % 10 === 0)
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/kgi3",
-        dir + "/embeddings.parquet")
+      val root = IndexCatalog.fingerprinted(s, dir, "kgi3",
+        "embeddings.parquet")
       graft.ext.KnnGraphIndex.create(base, root)
       graft.ext.KnnGraphIndex.ingest(root, emb, batch)
       val graph = graft.ext.KnnGraphIndex.topK(s, root)
@@ -678,11 +587,7 @@ object ExtQueries {
     "knn_pq_indexed" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val queries = emb.where(col("vec_id") < 10)
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/pq",
-        dir + "/embeddings.parquet")
-      graft.ext.PqIndex.create(emb, root)
+      val root = IndexCatalog.ensurePq(s, dir)
       // both legs feed BOTH sides of the two-way exceptAll — checkpoint
       // each once (queries × k scalar rows) so the read path and the
       // fresh rebuild each execute exactly once, not twice
@@ -711,11 +616,7 @@ object ExtQueries {
     // staying far under the held-out average (~1.1, PqIndexSpec).
     "semantic_contamination_pq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = graft.ext.PqIndex.fingerprintedRoot(s,
-        "/tmp/graft_dedup_index/" +
-          dir.replaceAll("[^A-Za-z0-9]", "_") + "/pq",
-        dir + "/embeddings.parquet")
-      graft.ext.PqIndex.create(emb, root)
+      val root = IndexCatalog.ensurePq(s, dir)
       val dups = emb.where(col("vec_id") < 10)
         .withColumn("vec_id", col("vec_id") + 100000L)
       graft.ext.PqIndex.semanticContamination(s, root, dups,
@@ -1166,6 +1067,24 @@ object ExtQueries {
             >= count(lit(1)) * lit(0.9)).as("band_frac_ge_090"))
     })
   )
+
+  /** The leakage-safe split's report: per split its doc and group
+    * counts, crossed with the witness — how many near-dup `pairs`
+    * (doc_a, doc_b) straddle the boundary, counted, never assumed. */
+  private def splitReport(split: DataFrame, pairs: DataFrame): DataFrame = {
+    val cross = pairs
+      .join(split.select(col("doc_id").as("doc_a"),
+        col("split").as("__sa")), Seq("doc_a"))
+      .join(split.select(col("doc_id").as("doc_b"),
+        col("split").as("__sb")), Seq("doc_b"))
+      .where(col("__sa") =!= col("__sb"))
+      .agg(count(lit(1)).as("cross_split_pairs"))
+    split.groupBy(col("split"))
+      .agg(count(lit(1)).as("n_docs"),
+        countDistinct(col("rep")).as("n_groups"))
+      .crossJoin(broadcast(cross))
+      .orderBy(col("split"))
+  }
 
   /** Shared fixture for the NB quality-filter family: documents with
     * the word-presence label and the deterministic 80/20 split. */

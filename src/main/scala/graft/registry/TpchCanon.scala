@@ -3,8 +3,6 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** TPC-H canon witnesses (Q1 / Q3 / Q5 / Q18 + the decorrelation trio
   * Q17 / Q20 / Q21) over the driver's tables.
   *
@@ -40,9 +38,6 @@ import graft.sources.Tables
   *    build side is HAVING-filtered, answer-sized.
   */
 object TpchCanon {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

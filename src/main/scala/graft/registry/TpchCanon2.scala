@@ -3,8 +3,6 @@ package graft.registry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-
 /** TPC-H canon, second half — Q4 / Q6-Q14 / Q16 / Q19 / Q22. Together with
   * [[TpchCanon]] (Q1/Q2/Q3/Q5/Q15/Q17/Q18/Q20/Q21) this completes the full
   * 22-query decision-support suite over the driver's tables.
@@ -63,9 +61,6 @@ import graft.sources.Tables
   *    prune before the join.
   */
 object TpchCanon2 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.table(s, dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -156,8 +156,8 @@ class ConcurrentBuildSpec extends SparkSpec {
       n -> fn(spark, dir.getAbsolutePath).collect().toSeq.map(_.toString).sorted
     }.toMap
     // wipe the roots so the concurrent pass rebuilds them under the race
-    val mangled = dir.getAbsolutePath.replaceAll("[^A-Za-z0-9]", "_")
-    val idxRoot = Paths.get(s"/tmp/graft_dedup_index/$mangled")
+    val idxRoot = Paths.get(
+      graft.registry.IndexCatalog.dirRoot(dir.getAbsolutePath))
     if (Files.exists(idxRoot)) {
       import scala.jdk.CollectionConverters._
       Files.walk(idxRoot).iterator().asScala.toSeq.reverse
