@@ -15,13 +15,13 @@ object Bench {
         val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
         (if (f.length > 7) f(7) else 0L, f.sum)
       } finally src.close()
-    } catch { case _: Throwable => (0L, 0L) }
+    } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
 
   private[graft] def loadAvg(): Double =
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.getLines().next().split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case scala.util.control.NonFatal(_) => -1.0 }
 
   /** One timed attempt. Right(seconds) on success; Left(error) on ANY
     * throw — plan-build, analysis, or execution. A failure must never
@@ -31,7 +31,7 @@ object Bench {
   private def timedAttempt(mk: () => DataFrame): Either[String, Double] = {
     val t0 = System.nanoTime()
     try { materialize(mk()); Right((System.nanoTime() - t0) / 1e9) }
-    catch { case e: Throwable =>
+    catch { case scala.util.control.NonFatal(e) =>
       Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
   }
 
@@ -108,7 +108,7 @@ object Bench {
       val json = scala.sys.process.Process(
         Seq("git", "show", s"HEAD:$path")).!!
       "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1))
-    } catch { case _: Throwable => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The previous run's per-query map, for the deviation guard: prefer
     * the last COMMITTED BENCH_FULL.json (the repo's defensible number),
@@ -135,12 +135,12 @@ object Bench {
         Seq("git", "show", s"HEAD:$path")).!!
       val q = parseQueries(committed)
       if (q.nonEmpty) return ("HEAD", q)
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
     try {
       val src = scala.io.Source.fromFile(path)
       val q = try parseQueries(src.mkString) finally src.close()
       if (q.nonEmpty) ("disk", q) else ("none", Map.empty)
-    } catch { case _: Throwable => ("none", Map.empty) }
+    } catch { case scala.util.control.NonFatal(_) => ("none", Map.empty) }
   }
 
   def main(args: Array[String]): Unit = {
@@ -180,7 +180,7 @@ object Bench {
     // Warm-up: JVM/codegen/parquet-reader init should not be billed to
     // whichever query happens to run first.
     spark.range(1000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/region.parquet").count() catch { case _: Throwable => () }
+    try spark.read.parquet(s"$sfDir/region.parquet").count() catch { case scala.util.control.NonFatal(_) => () }
     // Codegen warm-up stage 1 at the smallest SF: run every query once
     // against sf0.001 before timing. WholeStageCodegen sources depend on
     // plan structure, not data paths or volume, and janino compilation is
@@ -192,7 +192,7 @@ object Bench {
     if (warmDir != "none" && warmDir != sfDir
         && new java.io.File(warmDir).isDirectory) {
       benchQueries.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try materialize(fn(spark, warmDir)) catch { case scala.util.control.NonFatal(_) => () }
       }
     }
     // Warm-up stage 2: one untimed pass at the measured SF itself. AQE's
@@ -210,7 +210,7 @@ object Bench {
     val warmFull = sys.env.getOrElse("SPARK_GRAFT_WARMUP_FULL", "1") != "0"
     if (warmFull) {
       benchQueries.foreach { case (_, fn) =>
-        try materialize(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try materialize(fn(spark, sfDir)) catch { case scala.util.control.NonFatal(_) => () }
       }
     }
     // repeat>1: per-query best-of-N in one JVM. Default 1.
@@ -407,7 +407,7 @@ object Bench {
         val w = new java.io.PrintWriter(path, "UTF-8")
         try w.println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","ref_update":"$refAction","queries":${qjson(byTime)},"telemetry":$teleJson,$devMeta,${meta(medRatio)}}""")
         finally w.close()
-      } catch { case _: Throwable => () }
+      } catch { case scala.util.control.NonFatal(_) => () }
     }
     println(s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":${qjson(byTime.take(40))},"n_queries":${results.size},"n_failed":${failed.size},"ref_update":"$refAction","all_queries_file":"$fullPath",$devMeta,${meta(medRatio)}}""")
     spark.stop()

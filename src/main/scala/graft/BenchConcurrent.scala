@@ -52,14 +52,14 @@ object BenchConcurrent {
       "/root/testdata/sf0.001")
     if (warmDir != "none" && new java.io.File(warmDir).isDirectory)
       qs.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try materialize(fn(spark, warmDir)) catch { case scala.util.control.NonFatal(_) => () }
       }
 
     def timed(fn: (SparkSession, String) => DataFrame)
         : Either[String, Double] = {
       val t0 = System.nanoTime()
       try { materialize(fn(spark, sfDir)); Right((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
+      catch { case scala.util.control.NonFatal(e) =>
         Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}") }
     }
 

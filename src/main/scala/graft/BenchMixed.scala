@@ -62,7 +62,7 @@ object BenchMixed {
       "/root/testdata/sf0.001")
     if (warmDir != "none" && new java.io.File(warmDir).isDirectory)
       qs.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try materialize(fn(spark, warmDir)) catch { case scala.util.control.NonFatal(_) => () }
       }
 
     // ---- decontamination stream, pre-seeded + compaction armed ----
@@ -117,7 +117,7 @@ object BenchMixed {
           val s0 = System.nanoTime()
           try { materialize(fn(spark, sfDir))
             times += name -> (System.nanoTime() - s0) / 1e9
-          } catch { case e: Throwable =>
+          } catch { case scala.util.control.NonFatal(e) =>
             errs += s"$name: ${Option(e.getMessage).getOrElse(e.toString).take(120)}"
           }
         }

@@ -84,10 +84,10 @@ object Probe {
                    names: Seq[String]): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
     try spark.read.parquet(s"$sfDir/region.parquet").count()
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(_) => () }
     for (n <- names; dir <- Seq(Lane.testData("sf0.001"), sfDir))
       try materialize(SparkEntry.queries(n)(spark, dir))
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** Per-job profile: each named query's wall time plus every job's start

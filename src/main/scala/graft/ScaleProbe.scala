@@ -410,14 +410,14 @@ object ScaleProbe {
       "/root/testdata/sf0.001")
     if (warmDir != "none" && new java.io.File(warmDir).isDirectory)
       qs.foreach { case (_, fn) =>
-        try materialize(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try materialize(fn(spark, warmDir)) catch { case scala.util.control.NonFatal(_) => () }
       }
 
     val timings = qs.map { case (name, fn) =>
       val byFactor = dirs.map { case (k, d) =>
         val (build, exec) =
           try timeIt(() => fn(spark, d), attempts)
-          catch { case e: Throwable =>
+          catch { case scala.util.control.NonFatal(e) =>
             System.err.println(
               s"[scaleprobe] FAILED $name@x$k: ${e.getMessage}")
             (-1.0, 0.0) }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{VersionedStats, VersionedTable}
+import graft.sources.{MetaFile, VersionedStats, VersionedTable}
 
 /** Persisted leakage-safe SPLIT LABELS — the sixth index family
   * ([[DedupIndex]] fingerprints/minhash/span, [[PqIndex]] codes,
@@ -168,34 +168,21 @@ object SplitIndex {
   // overstates the overlay debt and triggers one extra compaction,
   // which converges.
   private def writeBaseMarker(spark: SparkSession, root: String,
-                              v: Long, files: Int, rows: Long): Unit = {
-    val p = baseMarkerPath(root)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (f.exists(p)) f.delete(p, false)
-    val out = f.create(p, true)
-    try out.write(s"$v $files $rows".getBytes("UTF-8"))
-    finally out.close()
-  }
+                              v: Long, files: Int, rows: Long): Unit =
+    MetaFile.replace(spark, baseMarkerPath(root), s"$v $files $rows")
 
   /** (baseVersion, baseFileCount, baseRows) from the marker —
     * (-1, 0, 0) when absent or torn (pre-rows markers degrade to rows
     * 0, which only means the rows trigger fires once and the fold
     * rewrites the marker). */
   private def baseMarker(spark: SparkSession,
-                         root: String): (Long, Int, Long) = {
-    val p = baseMarkerPath(root)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(p)) return (-1L, 0, 0L)
-    val in = f.open(p)
-    try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      val parts = new String(bytes, "UTF-8").trim.split("\\s+")
+                         root: String): (Long, Int, Long) =
+    try MetaFile.read(spark, baseMarkerPath(root)).map { s =>
+      val parts = s.trim.split("\\s+")
       (parts(0).toLong, parts(1).toInt,
         if (parts.length >= 3) parts(2).toLong else 0L)
-    } catch { case scala.util.control.NonFatal(_) => (-1L, 0, 0L) }
-    finally in.close()
-  }
+    }.getOrElse((-1L, 0, 0L))
+    catch { case scala.util.control.NonFatal(_) => (-1L, 0, 0L) }
 
   /** The committed (doc_id, rep) labels — latest version, or pinned:
     * the base snapshot with overlay rows superseding by doc_id. The

@@ -72,26 +72,12 @@ final class RunLog(spark: SparkSession, path: String) {
 
   /** Write the whole buffer as ONE object at `path`, overwriting any
     * previous push — `put_object` semantics: readers see a complete log
-    * or the previous one. On object stores the PUT itself is atomic; on
-    * file systems this stages to a `.tmp` sibling and renames over the
-    * target (atomic on POSIX; on stores where rename-over-existing
-    * fails, the old object is deleted first — a torn read shrinks to
-    * the delete/rename instant instead of the whole write). Returns the
-    * byte count written. */
+    * or the previous one ([[MetaFile.replace]]: a `.tmp` sibling renamed
+    * over the target). Returns the byte count written. */
   def push(): Long = {
-    val bytes = content.getBytes("UTF-8")
-    val p = new Path(path)
-    val tmp = new Path(path + ".tmp")
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (p.getParent != null) f.mkdirs(p.getParent)
-    val out = f.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (!f.rename(tmp, p)) {
-      f.delete(p, false)
-      if (!f.rename(tmp, p))
-        throw new java.io.IOException(s"could not publish run log at $path")
-    }
-    bytes.length.toLong
+    val text = content
+    MetaFile.replace(spark, new Path(path), text)
+    text.getBytes("UTF-8").length.toLong
   }
 }
 

@@ -25,9 +25,6 @@ import graft.operators.{AdaptiveJoin, EstimatedJoin}
   */
 object VersionedStats {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def statsPath(root: String, v: Long) =
     new Path(new Path(root, "_stats"), s"v$v.json")
 
@@ -130,31 +127,17 @@ object VersionedStats {
     val json =
       if (hhJson.isEmpty) s"""{"rows": $rows, "sketches": {$sketches}}"""
       else s"""{"rows": $rows, "sketches": {$sketches}, "hh": {$hhJson}}"""
-    val p = statsPath(root, v)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    MetaFile.createNew(spark, statsPath(root, v), json)
     v
   }
 
   /** Read a sidecar file fully, degrading to None on ANY failure —
     * including torn writes that fail the filesystem's checksum at read
-    * time, which surface as exceptions from `open`/`readFully`, not
-    * from parsing. Advisory stats must never fail a job. */
+    * time, which surface as exceptions from the read, not from
+    * parsing. Advisory stats must never fail a job. */
   private def readSidecar(spark: SparkSession, p: Path): Option[String] =
-    try {
-      val f = fs(spark, p)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try {
-          val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes)
-          Some(new String(bytes, "UTF-8"))
-        } finally in.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try MetaFile.read(spark, p)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private def toHex(s: String): String =
     s.getBytes("UTF-8").map(b => f"${b & 0xff}%02x").mkString
@@ -211,11 +194,7 @@ object VersionedStats {
       else VersionedTable.read(spark, root, Some(v)).count()
     val rows = prior.getOrElse(0L) + deltaRows
     val json = s"""{"rows": $rows, "sketches": {}}"""
-    val p = statsPath(root, v)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    MetaFile.createNew(spark, statsPath(root, v), json)
     v
   }
 
@@ -239,8 +218,8 @@ object VersionedStats {
     // and a repeat call (idempotent ensure loops run this every trigger)
     // must cost a metadata stat, not a scan
     val p = rangesPath(root, v)
-    val f = fs(spark, p)
-    if (f.exists(p)) return false
+    if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
+      return false
     val rows = VersionedTable.read(spark, root, Some(v))
       .groupBy(input_file_name().as("__f"))
       .agg(min(col(keyCol).cast("string")).as("__lo"),
@@ -249,10 +228,7 @@ object VersionedStats {
     val items = rows.map(r =>
       s"""["${toHex(r.getString(0))}","${toHex(r.getString(1))}","${toHex(r.getString(2))}"]""")
       .mkString(",")
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"""{"ranges": [$items]}""".getBytes("UTF-8"))
-    finally out.close()
+    MetaFile.createNew(spark, p, s"""{"ranges": [$items]}""")
     true
   }
 
@@ -287,20 +263,9 @@ object VersionedStats {
     * the source version has no sidecar. */
   def carryForward(spark: SparkSession, root: String,
                    from: Long, to: Long): Boolean = {
-    val src = statsPath(root, from)
-    val dst = statsPath(root, to)
-    val f = fs(spark, src)
-    if (!f.exists(src)) return false
-    val in = f.open(src)
-    val bytes = try {
-      val b = new Array[Byte](f.getFileStatus(src).getLen.toInt)
-      in.readFully(b)
-      b
-    } finally in.close()
-    f.mkdirs(dst.getParent)
-    val out = f.create(dst, false)
-    try out.write(bytes) finally out.close()
-    true
+    val json = MetaFile.read(spark, statsPath(root, from))
+    json.foreach(MetaFile.createNew(spark, statsPath(root, to), _))
+    json.isDefined
   }
 
   /** Stored stats for a version (latest by default): (row count, sketch

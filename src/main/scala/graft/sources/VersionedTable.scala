@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -106,21 +108,7 @@ object VersionedTable {
           "claimed the version directory); staged files removed — " +
           "retrying commits a fresh version")
     }
-    val newFiles = f.listStatus(dataDir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toUri.toString).sorted
-    val carried =
-      if (append && prior.nonEmpty) manifestFiles(spark, root, prior.last)
-      else Seq.empty
-    val all = carried ++ newFiles
-    val mDir = manifestDir(root)
-    f.mkdirs(mDir)
-    // the COMMIT POINT: one create of the manifest file
-    val out = f.create(new Path(mDir, s"v$v.json"), false)
-    try out.write(
-      all.mkString("{\"files\": [\"", "\", \"", "\"]}").getBytes("UTF-8"))
-    finally out.close()
-    v
+    publish(spark, root, v, prior, append, dataDir)
   }
 
   /** Object-store-safe commit: the same manifest contract with NO
@@ -162,6 +150,20 @@ object VersionedTable {
     // a reader's file index applies to hidden (./_) segments
     val dataDir = new Path(root, s"data/obj-v$v-$nonce")
     df.write.mode("errorifexists").parquet(dataDir.toString)
+    publish(spark, root, v, prior, append, dataDir)
+  }
+
+  /** Write version `v`'s manifest — `dataDir`'s files, after the prior
+    * version's on an append — as the COMMIT POINT of both commit modes,
+    * and the only step whose atomicity is required. ONLY an existing
+    * manifest is the lost-race signal; a write that fails after the
+    * create is a FAILED commit, whose partial manifest [[MetaFile]]
+    * removes (so versions() never lists a torn v{N}.json). Either way
+    * this writer's data directory is removed too, so a retry commits a
+    * fresh version with no orphans. Returns `v`. */
+  private def publish(spark: SparkSession, root: String, v: Long,
+                      prior: Seq[Long], append: Boolean,
+                      dataDir: Path): Long = {
     val f = fs(spark, dataDir)
     val newFiles = f.listStatus(dataDir)
       .filter(_.getPath.getName.endsWith(".parquet"))
@@ -170,38 +172,19 @@ object VersionedTable {
       if (append && prior.nonEmpty) manifestFiles(spark, root, prior.last)
       else Seq.empty
     val all = carried ++ newFiles
-    val mDir = manifestDir(root)
-    f.mkdirs(mDir)
-    // the COMMIT POINT — and the only step whose atomicity is required.
-    // ONLY FileAlreadyExistsException is the lost-race signal: create()
-    // can succeed and write()/close() fail (disk full, transient IO),
-    // leaving a torn v{N}.json that versions() would list as the latest
-    // committed version forever. Such a failure is a FAILED commit, not
-    // a lost race — delete the partial manifest (so history stays
-    // un-torn) and rethrow; the staged data dir is also removed so a
-    // retry commits a fresh version with no orphans.
-    val manifest = new Path(mDir, s"v$v.json")
-    val created =
-      try {
-        val out = f.create(manifest, false)
-        try out.write(
-          all.mkString("{\"files\": [\"", "\", \"", "\"]}").getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case e: java.io.IOException =>
-          try f.delete(manifest, false) catch { case _: java.io.IOException => }
-          try f.delete(dataDir, true) catch { case _: java.io.IOException => }
-          throw e
-      }
-    if (!created) {
-      f.delete(dataDir, true)
-      throw new IllegalStateException(
-        s"lost commit race for version $v of $root (manifest already " +
-          "created by another writer); staged files removed — retrying " +
-          "commits a fresh version")
+    try MetaFile.createNew(spark, new Path(manifestDir(root), s"v$v.json"),
+      all.mkString("{\"files\": [\"", "\", \"", "\"]}"))
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+           _: java.nio.file.FileAlreadyExistsException =>
+        f.delete(dataDir, true)
+        throw new IllegalStateException(
+          s"lost commit race for version $v of $root (manifest already " +
+            "created by another writer); staged files removed — retrying " +
+            "commits a fresh version")
+      case NonFatal(e) =>
+        try f.delete(dataDir, true) catch { case _: java.io.IOException => }
+        throw e
     }
     v
   }
@@ -220,18 +203,11 @@ object VersionedTable {
 
   private[graft] def manifestFiles(spark: SparkSession, root: String,
                                    v: Long): Seq[String] = {
-    val p = new Path(manifestDir(root), s"v$v.json")
-    val f = fs(spark, p)
-    require(f.exists(p), s"no such version $v under $root")
-    val in = f.open(p)
-    val json = try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, "UTF-8")
-    } finally in.close()
+    val json = MetaFile.read(spark, new Path(manifestDir(root), s"v$v.json"))
+    require(json.isDefined, s"no such version $v under $root")
     // manifests are machine-written (above): a flat {"files": [...]}
     "\"(file:[^\"]+|hdfs:[^\"]+|[^\",\\[\\]{}]+\\.parquet)\"".r
-      .findAllMatchIn(json).map(_.group(1)).toSeq
+      .findAllMatchIn(json.get).map(_.group(1)).toSeq
   }
 
   /** Number of data files in a committed version's manifest (latest by

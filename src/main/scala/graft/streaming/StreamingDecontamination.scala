@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ext.DedupIndex
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
 
 /** The streaming substring-decontamination loop: a continuous document
   * stream is cut against the PERSISTED span index
@@ -54,9 +54,6 @@ import graft.sources.VersionedTable
   */
 object StreamingDecontamination {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def markerPath(indexRoot: String, batchId: Long) =
     new Path(new Path(indexRoot, "_ingest"), s"b$batchId")
 
@@ -65,32 +62,12 @@ object StreamingDecontamination {
     * markers carry only the index version — their report half is None
     * and the caller falls back to the content-diff guard. */
   private def markedVersions(spark: SparkSession, indexRoot: String,
-                             batchId: Long): Option[(Long, Option[Long])] = {
-    val p = markerPath(indexRoot, batchId)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val parts = try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8").trim.split("\\s+")
-      } finally in.close()
-      Some((parts(0).toLong,
-        if (parts.length >= 2) Some(parts(1).toLong) else None))
+                             batchId: Long): Option[(Long, Option[Long])] =
+    MetaFile.read(spark, markerPath(indexRoot, batchId)).map { s =>
+      val parts = s.trim.split("\\s+")
+      (parts(0).toLong,
+        if (parts.length >= 2) Some(parts(1).toLong) else None)
     }
-  }
-
-  private def writeMarker(spark: SparkSession, indexRoot: String,
-                          batchId: Long, preVersion: Long,
-                          reportPre: Long): Unit = {
-    val p = markerPath(indexRoot, batchId)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"$preVersion $reportPre".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** The index at version `v`, where 0 means "before any commit" — an
     * empty hash-key frame. */
@@ -164,7 +141,8 @@ object StreamingDecontamination {
       // the marker is the FIRST write: every later step guards on a stored
       // version against the marker's recorded pre-version
       if (marked.isEmpty)
-        writeMarker(spark, indexRoot, batchId, pre, reportLatest0)
+        MetaFile.replace(spark, markerPath(indexRoot, batchId),
+          s"$pre $reportLatest0")
       // append guard, keyed on the marker's pre-commit report version — a
       // metadata check, never a content diff against the whole log. Legacy
       // (index-only) markers fall back to the old content guard.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.KnnGraphIndex
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
 
 /** Streaming maintenance of the PERSISTED corpus kNN graph — the fifth
   * index family's per-trigger loop (the span index has
@@ -53,36 +53,12 @@ import graft.sources.VersionedTable
   */
 object StreamingKnnGraph {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def markerPath(graphRoot: String, batchId: Long) =
     new Path(new Path(graphRoot, "_stream"), s"b$batchId")
 
   private def markedVersion(spark: SparkSession, graphRoot: String,
-                            batchId: Long): Option[Long] = {
-    val p = markerPath(graphRoot, batchId)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
-
-  private def writeMarker(spark: SparkSession, graphRoot: String,
-                          batchId: Long, preCorpus: Long): Unit = {
-    val p = markerPath(graphRoot, batchId)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"$preCorpus".getBytes("UTF-8"))
-    finally out.close()
-  }
+                            batchId: Long): Option[Long] =
+    MetaFile.read(spark, markerPath(graphRoot, batchId)).map(_.trim.toLong)
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the graph version after
@@ -110,7 +86,8 @@ object StreamingKnnGraph {
     val vecs = batch.select(col("vec_id"), col("embedding"))
     val marked = markedVersion(spark, graphRoot, batchId)
     val pre = marked.getOrElse(corpusVs.last)
-    if (marked.isEmpty) writeMarker(spark, graphRoot, batchId, pre)
+    if (marked.isEmpty)
+      MetaFile.replace(spark, markerPath(graphRoot, batchId), s"$pre")
     if (VersionedTable.versions(spark, corpusRoot).last == pre) {
       // novelty filter: only vec_ids absent from the stored corpus
       // append (re-sent vectors must not duplicate corpus rows); the

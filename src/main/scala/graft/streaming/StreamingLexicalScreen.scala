@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.LexicalIndex
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
 
 /** Streaming lexical decontamination: the training-document stream is
   * screened per micro-batch against the STATIC persisted BM25 index of
@@ -29,35 +29,12 @@ import graft.sources.VersionedTable
   */
 object StreamingLexicalScreen {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def markerPath(reportRoot: String, batchId: Long) =
     new Path(new Path(reportRoot, "_screen"), s"b$batchId")
 
   private def markedReportPre(spark: SparkSession, reportRoot: String,
-                              batchId: Long): Option[Long] = {
-    val p = markerPath(reportRoot, batchId)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
-
-  private def writeMarker(spark: SparkSession, reportRoot: String,
-                          batchId: Long, reportPre: Long): Unit = {
-    val p = markerPath(reportRoot, batchId)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"$reportPre".getBytes("UTF-8")) finally out.close()
-  }
+                              batchId: Long): Option[Long] =
+    MetaFile.read(spark, markerPath(reportRoot, batchId)).map(_.trim.toLong)
 
   /** One batch through the screen — public so specs can replay it as
     * foreachBatch would. Returns the batch's report (committed at most
@@ -75,7 +52,9 @@ object StreamingLexicalScreen {
       .lastOption.getOrElse(0L)
     val pre = markedReportPre(spark, reportRoot, batchId) match {
       case Some(v) => v
-      case None => writeMarker(spark, reportRoot, batchId, reportLatest)
+      case None =>
+        MetaFile.replace(spark, markerPath(reportRoot, batchId),
+          s"$reportLatest")
         reportLatest
     }
     if (VersionedTable.versions(spark, reportRoot)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.PqIndex
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
 
 /** Streaming SEMANTIC decontamination — the embedding-modality sibling
   * of [[StreamingDecontamination]]'s span loop: a continuous stream of
@@ -52,38 +52,15 @@ import graft.sources.VersionedTable
   */
 object StreamingSemanticDecontamination {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def markerPath(indexRoot: String, batchId: Long) =
     new Path(new Path(indexRoot, "_screen"), s"b$batchId")
 
   private def markedVersions(spark: SparkSession, indexRoot: String,
-                             batchId: Long): Option[(Long, Long)] = {
-    val p = markerPath(indexRoot, batchId)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val parts = try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8").trim.split("\\s+")
-      } finally in.close()
-      Some((parts(0).toLong, parts(1).toLong))
+                             batchId: Long): Option[(Long, Long)] =
+    MetaFile.read(spark, markerPath(indexRoot, batchId)).map { s =>
+      val parts = s.trim.split("\\s+")
+      (parts(0).toLong, parts(1).toLong)
     }
-  }
-
-  private def writeMarker(spark: SparkSession, indexRoot: String,
-                          batchId: Long, preVersion: Long,
-                          reportPre: Long): Unit = {
-    val p = markerPath(indexRoot, batchId)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"$preVersion $reportPre".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the screen report
@@ -120,7 +97,8 @@ object StreamingSemanticDecontamination {
       .withColumnRenamed("query_id", "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (marked.isEmpty)
-      writeMarker(spark, indexRoot, batchId, pre, reportLatest0)
+      MetaFile.replace(spark, markerPath(indexRoot, batchId),
+        s"$pre $reportLatest0")
     val reportPre = marked.map(_._2).getOrElse(reportLatest0)
     val doCommit = VersionedTable.versions(spark, reportRoot)
       .lastOption.getOrElse(0L) == reportPre

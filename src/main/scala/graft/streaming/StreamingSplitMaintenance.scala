@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.SplitIndex
-import graft.sources.VersionedTable
+import graft.sources.{MetaFile, VersionedTable}
 
 /** Streaming maintenance of the persisted SPLIT-LABELS index — the
   * sixth index family's per-trigger loop, completing the family
@@ -52,38 +52,15 @@ import graft.sources.VersionedTable
   */
 object StreamingSplitMaintenance {
 
-  private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   private def markerPath(root: String, batchId: Long) =
     new Path(new Path(root, "_stream"), s"b$batchId")
 
   private def markedVersions(spark: SparkSession, root: String,
-                             batchId: Long): Option[(Long, Long)] = {
-    val p = markerPath(root, batchId)
-    val f = fs(spark, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val parts = try {
-        val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8").trim.split("\\s+")
-      } finally in.close()
-      Some((parts(0).toLong, parts(1).toLong))
+                             batchId: Long): Option[(Long, Long)] =
+    MetaFile.read(spark, markerPath(root, batchId)).map { s =>
+      val parts = s.trim.split("\\s+")
+      (parts(0).toLong, parts(1).toLong)
     }
-  }
-
-  private def writeMarker(spark: SparkSession, root: String,
-                          batchId: Long, reportPre: Long,
-                          labelsPost: Long): Unit = {
-    val p = markerPath(root, batchId)
-    val f = fs(spark, p)
-    f.mkdirs(p.getParent)
-    val out = f.create(p, false)
-    try out.write(s"$reportPre $labelsPost".getBytes("UTF-8"))
-    finally out.close()
-  }
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the batch's assignment
@@ -125,7 +102,8 @@ object StreamingSplitMaintenance {
       .lastOption.getOrElse(0L)
     val marked = markedVersions(spark, indexRoot, batchId)
     if (marked.isEmpty)
-      writeMarker(spark, indexRoot, batchId, reportPre0, labelsPost0)
+      MetaFile.replace(spark, markerPath(indexRoot, batchId),
+        s"$reportPre0 $labelsPost0")
     val (reportPre, labelsV) = marked.getOrElse((reportPre0, labelsPost0))
     val report = graft.ext.Sampling.deterministicSplit(
         SplitIndex.labels(spark, indexRoot, Some(labelsV)),

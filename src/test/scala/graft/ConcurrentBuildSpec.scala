@@ -142,7 +142,23 @@ class ConcurrentBuildSpec extends SparkSpec {
     // two sharing the pq root — the exact sets the concurrent bench
     // overlaps; a private tables dir gives them COLD roots
     val dir = Files.createTempDirectory("graft-conc-e2e").toFile
-    dir.deleteOnExit()
+    val idxRoot = Paths.get(
+      graft.registry.IndexCatalog.dirRoot(dir.getAbsolutePath))
+    try sharedRootRace(dir, idxRoot)
+    finally { deleteTree(idxRoot); deleteTree(dir.toPath) }
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (Files.exists(root)) {
+      import scala.jdk.CollectionConverters._
+      val stream = Files.walk(root)
+      try stream.iterator().asScala.toSeq.reverse
+        .foreach(p => Files.deleteIfExists(p))
+      finally stream.close()
+    }
+
+  private def sharedRootRace(dir: java.io.File,
+                             idxRoot: java.nio.file.Path): Unit = {
     for (t <- Seq("documents", "embeddings")) {
       spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet")
         .write.mode("overwrite")
@@ -156,13 +172,7 @@ class ConcurrentBuildSpec extends SparkSpec {
       n -> fn(spark, dir.getAbsolutePath).collect().toSeq.map(_.toString).sorted
     }.toMap
     // wipe the roots so the concurrent pass rebuilds them under the race
-    val idxRoot = Paths.get(
-      graft.registry.IndexCatalog.dirRoot(dir.getAbsolutePath))
-    if (Files.exists(idxRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(idxRoot).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-    }
+    deleteTree(idxRoot)
     val results = race(names.size) { i =>
       val (n, fn) = qs(i)
       n -> fn(spark, dir.getAbsolutePath).collect().toSeq.map(_.toString).sorted

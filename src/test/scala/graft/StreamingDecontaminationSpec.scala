@@ -69,8 +69,15 @@ class StreamingDecontaminationSpec extends SparkSpec {
     val b2 = batch2.toDF("doc_id", "text")
     StreamingDecontamination.decontaminateBatch(b1, 0L, indexRoot,
       reportRoot, K)
+    // batch 2 first arrives after a crash that tore its marker's
+    // temporary write: the delivery runs as a clean one would
+    MetaFileSpec.plantCrashedMarker(s"$indexRoot/_ingest", 1L)
     val first = reportMap(StreamingDecontamination.decontaminateBatch(
       b2, 1L, indexRoot, reportRoot, K))
+    assert(first === Map(10L -> ((6L, 0L)), 11L -> ((6L, 3L)),
+      12L -> ((4L, 4L))))
+    // "<index pre> <report pre>", the format existing markers carry
+    assert(MetaFileSpec.marker(s"$indexRoot/_ingest", 1L) === "1 1")
     val indexV = VersionedTable.versions(spark, indexRoot)
     val reportV = VersionedTable.versions(spark, reportRoot)
     // full redelivery of batch 1 (the crash-after-everything window):

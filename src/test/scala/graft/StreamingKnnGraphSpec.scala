@@ -36,9 +36,14 @@ class StreamingKnnGraphSpec extends SparkSpec {
     val k = KnnGraphIndex.readModel(spark, graphRoot)._2.k
 
     val b1 = emb.where(col("vec_id") >= 400 && col("vec_id") < 410)
+    // the first delivery follows a crash that tore the marker's
+    // temporary write: it must run exactly as a clean one
+    MetaFileSpec.plantCrashedMarker(s"$graphRoot/_stream", 0L)
     val v = StreamingKnnGraph.ingestBatch(b1, batchId = 0,
       graphRoot, corpusRoot)
     assert(v === 2L)
+    // "<corpus pre>", the format existing markers carry
+    assert(MetaFileSpec.marker(s"$graphRoot/_stream", 0L) === "1")
     // corpus table holds seed + batch; graph covers every id with k edges
     assert(VersionedTable.read(spark, corpusRoot).count() === 410L)
     val g = KnnGraphIndex.topK(spark, graphRoot)

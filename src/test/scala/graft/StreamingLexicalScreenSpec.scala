@@ -28,11 +28,16 @@ class StreamingLexicalScreenSpec extends SparkSpec {
 
     val b0 = Seq((100L, "alpha beta gamma delta epsilon zeta"),
       (101L, "plainly novel content entirely")).toDF("doc_id", "text")
+    // the first delivery follows a crash that tore the marker's
+    // temporary write: it must run exactly as a clean one
+    MetaFileSpec.plantCrashedMarker(s"$reportRoot/_screen", 0L)
     val r0 = StreamingLexicalScreen.screenBatch(b0, 0L, indexRoot,
       reportRoot, threshold = 4.0)
     val rows0 = r0.as[(Long, Long, Long, Double, Boolean)].collect()
     assert(rows0.length === 1 && rows0(0)._1 === 100L && rows0(0)._5)
     assert(VersionedTable.versions(spark, reportRoot).length === 1)
+    // "<report pre>", the format existing markers carry
+    assert(MetaFileSpec.marker(s"$reportRoot/_screen", 0L) === "0")
 
     // replay batch 0: identical report, NO second append
     val r0b = StreamingLexicalScreen.screenBatch(b0, 0L, indexRoot,

@@ -45,8 +45,14 @@ class StreamingSemanticDecontaminationSpec extends SparkSpec {
     // (its twin is indexed if it survived; if its twin flagged, whatever
     // indexed vector flagged the twin still does — the index only grew)
     val b2 = b1.withColumn("vec_id", col("vec_id") + 100000L)
+    // its first delivery follows a crash that tore the marker's
+    // temporary write: it must run exactly as a clean one
+    val preB2 = VersionedTable.versions(spark, indexRoot).last
+    MetaFileSpec.plantCrashedMarker(s"$indexRoot/_screen", 1L)
     val r2 = StreamingSemanticDecontamination.screenBatch(
       b2, batchId = 1, indexRoot, reportRoot, nprobe = 4, tau2 = 1.0)
+    // "<index pre> <report pre>", the format existing markers carry
+    assert(MetaFileSpec.marker(s"$indexRoot/_screen", 1L) === s"$preB2 1")
     val rep2 = r2.as[(Long, Option[Double], Boolean)].collect()
     assert(rep2.length === 10 && rep2.forall(_._3),
       s"unflagged re-sent vectors: ${rep2.filterNot(_._3).mkString(",")}")

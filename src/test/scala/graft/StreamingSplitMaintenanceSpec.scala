@@ -37,6 +37,9 @@ class StreamingSplitMaintenanceSpec extends SparkSpec {
     // batch: a twin of cluster-a (inherits side), a fresh singleton
     val b1 = Seq((100L, text("a")), (101L, text("z101")))
       .toDF("doc_id", "text")
+    // the first delivery follows a crash that tore the marker's
+    // temporary write: it must run exactly as a clean one
+    MetaFileSpec.plantCrashedMarker(s"$root/_stream", 0L)
     val r1 = StreamingSplitMaintenance.assignBatch(b1, batchId = 0,
       root, report)
     val rows1 = r1.as[(Long, Long, String)].collect().sortBy(_._1)
@@ -47,6 +50,9 @@ class StreamingSplitMaintenanceSpec extends SparkSpec {
     assert(rows1(1)._2 === 101L) // fresh singleton reps itself
     assert(VersionedTable.read(spark, report).count() === 2L)
     val labelsVs = VersionedTable.versions(spark, root + "/labels")
+    // "<report pre> <labels post>", the format existing markers carry
+    assert(MetaFileSpec.marker(s"$root/_stream", 0L) ===
+      s"0 ${labelsVs.last}")
 
     // replay the same batchId: identical rows, no second append, no
     // new labels version

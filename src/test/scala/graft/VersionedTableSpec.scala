@@ -1,9 +1,44 @@
 package graft
 
+import java.io.{FilterOutputStream, IOException}
+import java.net.URI
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 import graft.operators.SnapshotDiff
 import graft.sources.VersionedTable
+
+/** A local FileSystem whose next manifest write, once armed, fails the
+  * way a full disk or a transient store error does: the create
+  * succeeds, half the bytes land, and `close` throws. Registered under
+  * the `faulty://` scheme via `fs.faulty.impl` -> this class. */
+class FailingCloseFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    val raw = super.create(f, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (f.getParent.getName != "_manifests" ||
+        !FailingCloseFileSystem.armed.getAndSet(false)) raw
+    else new FSDataOutputStream(new FilterOutputStream(raw) {
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        raw.write(b, off, len / 2)
+      override def close(): Unit = {
+        raw.close()
+        throw new IOException(s"injected close failure on $f")
+      }
+    }, null)
+  }
+}
+
+object FailingCloseFileSystem {
+  val armed = new AtomicBoolean(false)
+}
 
 /** The manifest-commit contract: versions are immutable snapshots, the
   * manifest is the single source of truth, orphans are invisible. */
@@ -179,6 +214,30 @@ class VersionedTableSpec extends SparkSpec {
     // time travel to the pre-evolution version keeps the old schema
     assert(VersionedTable.read(spark, root, Some(1L)).columns.toSeq ===
       Seq("id", "x"))
+  }
+
+  test("a manifest write that fails leaves no torn version behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_vt_faulty")
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl",
+      classOf[FailingCloseFileSystem].getName)
+    val root = s"faulty://$dir/tbl"
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+    FailingCloseFileSystem.armed.set(true)
+    intercept[IOException] {
+      VersionedTable.commit(Seq((2L, "b")).toDF("id", "x"), root,
+        append = true)
+    }
+    assert(!FailingCloseFileSystem.armed.get, "the fault never fired")
+    // the failed commit is gone without a trace: no listed version, no
+    // partial manifest, no claimed data directory
+    assert(VersionedTable.versions(spark, root) === Seq(1L))
+    assert(!java.nio.file.Files.exists(dir.resolve("tbl/_manifests/v2.json")))
+    assert(!java.nio.file.Files.exists(dir.resolve("tbl/data/v2")))
+    // and the retry commits the same version number cleanly
+    assert(VersionedTable.commit(Seq((3L, "c")).toDF("id", "x"), root,
+      append = true) === 2L)
+    assert(VersionedTable.read(spark, root).select("id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 3L))
   }
 
   test("reading an uncommitted version or empty table fails fast") {
