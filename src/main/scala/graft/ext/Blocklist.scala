@@ -43,8 +43,7 @@ object Blocklist {
       s"unreasonable longest phrase: $maxLen tokens")
     val anchored = ph.withColumn("anchor",
       element_at(split(col("phrase"), " "), 1))
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val grams = docs.repartition(par)
+    val grams = Spread(docs)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__w"))
       .select(col("doc_id"), explode_outer(
         transform(sequence(lit(1), greatest(size(col("__w")), lit(1))),

@@ -39,8 +39,7 @@ object Bpe {
   /** The (word, n) type table of a document corpus — the one
     * corpus-sized aggregation everything else works from. */
   def wordTypes(docs: DataFrame): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    docs.repartition(par)
+    Spread(docs)
       .select(explode_outer(TextAnalysis.tokens(col("text"))).as("word"))
       .where(col("word").isNotNull)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -164,11 +163,10 @@ object Bpe {
     * vocabulary-many times, not corpus-many. */
   private def statsOverTypes(docs: DataFrame, wt: DataFrame,
                              merges: Seq[Merge]): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     val types = wt
       .select(col("word"),
         size(segmented(col("word"), merges)).cast("long").as("n_sym"))
-    docs.repartition(par)
+    Spread(docs)
       .select(col("lang"),
         explode_outer(TextAnalysis.tokens(col("text"))).as("word"))
       .where(col("word").isNotNull)

@@ -45,7 +45,6 @@ object Dedup {
     // core. Rebalance to the cluster's parallelism first — at corpus scale
     // the scan is already many-partitioned and this shuffle is one tiny
     // extra exchange of raw text.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     val keep = col("doc_id") +: carry.map(col)
     // NB: the < k-token case must be handled INSIDE the expression (empty
     // array), not only by a preceding filter — Spark's sequence(1, n) turns
@@ -55,7 +54,7 @@ object Dedup {
     // Catalyst evaluate the whole shingle transform a second time (once for
     // the predicate, once for the projection); downstream explode() already
     // drops empty arrays for free.
-    docs.repartition(par).select(keep :+ w.as("w"): _*)
+    Spread(docs).select(keep :+ w.as("w"): _*)
       .select(keep :+
         when(size(col("w")) >= k, array_distinct(
           transform(sequence(lit(1), size(col("w")) - (k - 1)),
@@ -203,8 +202,7 @@ object Dedup {
     * votes yield signature 0 — the same default a join-back would assign,
     * without scanning or shuffling the corpus a second time. */
   def simhashSignatures(docs: DataFrame): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val toks = docs.repartition(par).select(col("doc_id"),
+    val toks = Spread(docs).select(col("doc_id"),
       explode_outer(array_distinct(TextAnalysis.tokens(col("text")))).as("tok"))
     val hashed = toks
       .withColumn("hLo", conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long"))
@@ -239,8 +237,7 @@ object Dedup {
     * hash order); selection dedups afterwards. One projection per doc, no
     * explode until the (doc, fingerprint) rows. */
   def winnowingFingerprints(docs: DataFrame, k: Int = 5, w: Int = 4): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val toks = docs.repartition(par)
+    val toks = Spread(docs)
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("w"))
     val hashed = toks.select(col("doc_id"),
       when(size(col("w")) >= k,

@@ -52,11 +52,10 @@ object ImportanceSampling {
   private def hashedNgramCountsCarrying(docs: DataFrame, dim: Int,
                                         carry: Seq[String]): DataFrame = {
     require(dim >= 2, s"unreasonable feature dim: $dim")
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     val keep = (col("doc_id") +: carry.map(col)) :+
       TextAnalysis.tokens(col("text")).as("__t")
     val ids = col("doc_id") +: carry.map(col)
-    val base = docs.repartition(par).select(keep: _*)
+    val base = Spread(docs).select(keep: _*)
     val uni = base
       .select((ids :+ explode_outer(col("__t")).as("g")): _*)
       .where(col("g").isNotNull)

@@ -263,7 +263,7 @@ object KnnGraph {
 
     // ---- seed: candidates within (probed cell, table, in-cell bucket)
     val assigned = v.withColumn("__lists",
-      SemanticDedup.ivfListIds(col("embedding"), centroids, nprobe))
+      Similarity.ivfListIds(col("embedding"), centroids, nprobe))
     // home-cell occupancy → per-cell split depth: one aggregate, nlist
     // rows to the driver (bounded by the fit cap, a catalog-stat-sized
     // transfer — same as SemanticDedup.refinedVerdicts)
@@ -309,8 +309,8 @@ object KnnGraph {
     def score(pairs: DataFrame): DataFrame = pairs
       .where(col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"), col("neighbor_id"),
-        round(Similarity.pairCosine(dotNative(col("qv"), col("cv")),
-          col("qn2"), col("cn2")), 6).as("cos_sim"))
+        Similarity.cosSim(col("qv"), col("cv"), col("qn2"), col("cn2"))
+          .as("cos_sim"))
     def cand(df: DataFrame): DataFrame = df.select(
       col("cell"), col("vec_id").as("neighbor_id"),
       col("embedding").as("cv"), col("n2").as("cn2"))
@@ -419,8 +419,8 @@ object KnnGraph {
       val cand = x.join(y, Seq("b"))
         .where(col("u") < col("w"))
         .select(col("u"), col("w"),
-          round(Similarity.pairCosine(dotNative(col("uv"), col("wv")),
-            col("un2"), col("wn2")), 6).as("cos_sim"))
+          Similarity.cosSim(col("uv"), col("wv"), col("un2"), col("wn2"))
+            .as("cos_sim"))
       val merged = edges
         .unionByName(cand.select(col("u").as("vec_id"),
           col("w").as("neighbor_id"), col("cos_sim")))

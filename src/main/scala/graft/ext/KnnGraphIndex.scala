@@ -316,7 +316,7 @@ object KnnGraphIndex {
         // scalar rows), never graph-sized, so the materialization cost
         // rides the locality the ingest exists for.
         val par = spark.sparkContext.defaultParallelism
-        val v = corpus.repartition(par)
+        val v = Spread(corpus)
           .select(col("vec_id"), col("embedding"),
             dotNative(col("embedding"), col("embedding")).as("n2"))
           .persist()
@@ -324,21 +324,21 @@ object KnnGraphIndex {
         def score(pairs: DataFrame): DataFrame = pairs
           .where(col("neighbor_id") =!= col("vec_id"))
           .select(col("vec_id"), col("neighbor_id"),
-            round(Similarity.pairCosine(dotNative(col("qv"), col("cv")),
-              col("qn2"), col("cn2")), 6).as("cos_sim"))
+            Similarity.cosSim(col("qv"), col("cv"), col("qn2"), col("cn2"))
+              .as("cos_sim"))
         // seed: batch (probed cells) x corpus (home cell) — the same
         // pair space the build's flat-cell join generates for these
         // vectors; in-cell splitting is skipped because the batch side
         // bounds the volume (|batch|·nprobe·cellsize)
         val cand = v.withColumn("cell",
-            element_at(SemanticDedup.ivfListIds(col("embedding"),
+            element_at(Similarity.ivfListIds(col("embedding"),
               centroids, 1), 1))
           .select(col("cell"), col("vec_id").as("neighbor_id"),
             col("embedding").as("cv"), col("n2").as("cn2"))
         val bkeys = batch.select(col("vec_id"))
         val q = v.join(bkeys, Seq("vec_id"), "left_semi")
           .withColumn("cell",
-            explode_outer(SemanticDedup.ivfListIds(col("embedding"),
+            explode_outer(Similarity.ivfListIds(col("embedding"),
               centroids, p.nprobe)))
           .where(col("cell").isNotNull)
           .select(col("cell"), col("vec_id"), col("embedding").as("qv"),
@@ -406,8 +406,8 @@ object KnnGraphIndex {
           val pairs = x.join(y, Seq("b"))
             .where(col("u") < col("w"))
             .select(col("u"), col("w"),
-              round(Similarity.pairCosine(dotNative(col("uv"), col("wv")),
-                col("un2"), col("wn2")), 6).as("cos_sim"))
+              Similarity.cosSim(col("uv"), col("wv"), col("un2"),
+                col("wn2")).as("cos_sim"))
           // scored descent pairs stream straight into the bounded
           // aggregate — only top-2·degree new sightings per vertex ever
           // materialize (lossless for the final merge, see above)

@@ -335,8 +335,7 @@ object ProductQuant {
     val m = codebooks.length
     val ksub = codebooks(0).length
     val r = if (refine > 0) refine else 10 * k
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val codesOnly = encodePacked(corpus.repartition(par), codebooks)
+    val codesOnly = encodePacked(Spread(corpus), codebooks)
       .select(col("vec_id").as("cand_id"), col("pq_packed"))
     // Per-query LUT: lut[s][j] = ‖q̂_s − c_{s,j}‖², exact on the query
     // side ("asymmetric" — only candidates are quantized).
@@ -354,23 +353,14 @@ object ProductQuant {
     // Exact re-rank of the shortlist: rejoin the full candidate and
     // query vectors (shortlist is queries×refine rows — broadcast
     // side), score exact cosine with the shared op order, keep top-k.
-    val qv = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"))
-    val cand = corpus.select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"),
-      dotNative(col("embedding"), col("embedding")).as("cn2"))
+    val qv = Similarity.scoringSide(queries, "query_id", "qv", "qn2")
+    val cand = Similarity.scoringSide(corpus, "cand_id", "cv", "cn2")
     val exact = cand.join(
         broadcast(shortlist.join(qv, Seq("query_id"))), Seq("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(Similarity.pairCosine(dotNative(col("qv"), col("cv")),
-          col("qn2"), col("cn2")), 6).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+        Similarity.cosSim(col("qv"), col("cv"), col("qn2"), col("cn2"))
+          .as("cos_sim"))
+    Similarity.topK(exact, "query_id", "cand_id", k)
   }
 
   /** IVF-PQ ANN (IVFADC, Jégou et al. §V) — the composition that makes
@@ -401,8 +391,7 @@ object ProductQuant {
                coarse: Array[Array[Double]],
                codebooks: Array[Array[Array[Double]]],
                nprobe: Int, refine: Int = 0): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val codes = encodeIvfPacked(corpus.repartition(par), coarse, codebooks)
+    val codes = encodeIvfPacked(Spread(corpus), coarse, codebooks)
       .select(col("vec_id"), col("list_id"), col("pq_packed"))
     adcSearchIvf(codes, queries, k, coarse, codebooks, nprobe, refine,
       rerank = corpus)
@@ -482,23 +471,14 @@ object ProductQuant {
         .where(col("cand_id") =!= col("query_id"))
         .select(col("query_id"), col("cand_id"), adc.as("adc_dist")), r)
 
-    val qv = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"))
-    val cand = rerank.select(col("vec_id").as("cand_id"),
-      col("embedding").as("cv"),
-      dotNative(col("embedding"), col("embedding")).as("cn2"))
+    val qv = Similarity.scoringSide(queries, "query_id", "qv", "qn2")
+    val cand = Similarity.scoringSide(rerank, "cand_id", "cv", "cn2")
     val exact = cand.join(
         broadcast(shortlist.join(qv, Seq("query_id"))), Seq("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(Similarity.pairCosine(dotNative(col("qv"), col("cv")),
-          col("qn2"), col("cn2")), 6).as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    exact.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+        Similarity.cosSim(col("qv"), col("cv"), col("qn2"), col("cn2"))
+          .as("cos_sim"))
+    Similarity.topK(exact, "query_id", "cand_id", k)
   }
 
   /** Per-query MINIMUM ADC distance to any coded vector in the query's

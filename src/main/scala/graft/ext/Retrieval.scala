@@ -68,8 +68,7 @@ object Retrieval {
     * identity across invocations — the warm-pass-feeds-timed-pass
     * dishonesty r17's KnnGraph/PageRank containment work eliminated. */
   private[graft] def tfFrame(docs: DataFrame): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    docs.repartition(par)
+    Spread(docs)
       .select(col("doc_id"),
         explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
       .where(col("token").isNotNull) // outer: avoids InferFiltersFromGenerate

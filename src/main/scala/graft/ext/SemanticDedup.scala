@@ -66,8 +66,9 @@ import graft.functions.VectorFunctions.dotNative
   * vectors get equal cell assignments and equal sign bits in every
   * table, so exact duplicates are always co-bucketed (spec-pinned).
   *
-  * Cosine uses the same 6-dp rounding as [[Similarity.cosineNearDupPairs]]
-  * so the subset relation holds exactly at the threshold boundary.
+  * Cosine is [[Similarity.cosSim]], the same 6-dp rounded value as
+  * [[Similarity.cosineNearDupPairs]], so the subset relation holds
+  * exactly at the threshold boundary.
   *
   * Reference scope: the reference pipeline has no embedding operators —
   * this is part of the beyond-reference LLM-curation surface (SURVEY.md
@@ -120,24 +121,6 @@ object SemanticDedup {
         math.log1p(-recallFloor) / math.log1p(-perTable)).toInt)
     }
 
-  /** The `probes` nearest-centroid list ids (squared-L2 argmin expanded
-    * as −2·v·c + |c|², |v|² constant per row), as an array — the
-    * multi-probe assignment that rescues near-dup pairs straddling a
-    * k-means boundary (single-assignment recall measured < 0.5 on the
-    * test corpus; 2-probe 0.79–1.0). Pure projection over inlined
-    * centroid literals — bounded at [[FlatNlistCap]] × dim values, like
-    * [[Similarity.ivfListId]]. */
-  def ivfListIds(v: Column, centroids: Array[Array[Double]],
-                 probes: Int): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      val c2 = c.map(x => x * x).sum
-      struct((lit(-2.0) * Similarity.dotN(v, typedLit(c.toSeq), c.length)
-        + lit(c2)).as("d"), lit(i).as("i"))
-    }
-    transform(slice(array_sort(array(scored.toIndexedSeq: _*)),
-      1, math.min(probes, centroids.length)), s => s.getField("i"))
-  }
-
   /** Per-vector verdict frame: `vec_id`, `cluster` (nearest coarse list
     * id), `pruned` (boolean), `keeper_id`/`keeper_cos` (smallest
     * qualifying lower-id neighbor and its rounded cosine; null for
@@ -180,8 +163,8 @@ object SemanticDedup {
     val dupPairs = a.join(b, Seq("plist"))
       .where(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(Similarity.pairCosine(dotNative(col("va"), col("vb")),
-          col("n2a"), col("n2b")), 6).as("cos_sim"))
+        Similarity.cosSim(col("va"), col("vb"), col("n2a"), col("n2b"))
+          .as("cos_sim"))
       .where(col("cos_sim") >= threshold)
     withKeepers(v0, dupPairs)
   }
@@ -241,8 +224,8 @@ object SemanticDedup {
     val dupPairs = a.join(b, Seq("cell", "tbl", "bucket"))
       .where(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(Similarity.pairCosine(dotNative(col("va"), col("vb")),
-          col("n2a"), col("n2b")), 6).as("cos_sim"))
+        Similarity.cosSim(col("va"), col("vb"), col("n2a"), col("n2b"))
+          .as("cos_sim"))
       .where(col("cos_sim") >= threshold)
     withKeepers(v0, dupPairs)
   }
@@ -251,12 +234,11 @@ object SemanticDedup {
   private def assigned(corpus: DataFrame,
                        centroids: Array[Array[Double]],
                        probes: Int): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus.repartition(par)
+    Spread(corpus)
       .select(col("vec_id"), col("embedding"),
         dotNative(col("embedding"), col("embedding")).as("n2"))
       .withColumn("__lists",
-        ivfListIds(col("embedding"), centroids, probes))
+        Similarity.ivfListIds(col("embedding"), centroids, probes))
   }
 
   /** Fold qualifying pairs into the verdict frame: smallest qualifying
@@ -291,9 +273,8 @@ object SemanticDedup {
     corpus.join(pruned, Seq("vec_id"), "left_anti")
   }
 
-  /** In-plan cosine between two embedding columns with the library's
-    * 6-dp rounding — for witness queries re-verifying pruned pairs. */
+  /** In-plan [[Similarity.cosSim]] between two embedding columns — for
+    * witness queries re-verifying pruned pairs. */
   def roundedCosine(a: Column, b: Column): Column =
-    round(Similarity.pairCosine(dotNative(a, b),
-      dotNative(a, a), dotNative(b, b)), 6)
+    Similarity.cosSim(a, b, dotNative(a, a), dotNative(b, b))
 }

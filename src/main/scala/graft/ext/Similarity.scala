@@ -5,25 +5,39 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.dotNative
 
-/** Approximate-nearest-neighbor search over the `embeddings` table
+/** Vector similarity search over the `embeddings` table
   * (vec_id, embedding: array<float>, label) — SURVEY.md §7.3.7.
   *
-  * Two paths:
-  *  - [[knnBruteForce]]: exact cosine top-k — the correctness baseline.
-  *    Query side is tiny (a handful of probe vectors) so it broadcasts; the
-  *    candidate corpus streams through one WholeStageCodegen projection and
-  *    a per-query top-k window. At 100 TB the corpus never shuffles: only
-  *    (queries × k) rows survive to the window.
-  *  - [[knnLsh]]: random-hyperplane LSH (sign bits → bucket id). Buckets
-  *    co-partition candidates and queries, so each query only scans its own
-  *    bucket — the linear-ish scale path (Charikar SimHash / Indyk-Motwani
-  *    LSH). Recall is tested against brute force in the spec, not oracled.
+  * One scoring kernel, several candidate strategies. The kernel is the
+  * contract every strategy shares and every oracle mirrors, so tied
+  * values compare equal bitwise across strategies:
+  *  - [[cosSim]]: the 6-dp rounded cosine, norms computed once per side;
+  *  - [[topK]]: per-group `row_number` over (cos_sim desc, id asc),
+  *    rank ≤ k, ordered (group, rank);
+  *  - [[ivfListId]] / [[ivfListIds]]: the IVF probe order, both read
+  *    from one centroid-distance array.
   *
-  * The dot product is a higher-order `aggregate` over `zip_with` — codegen'd
-  * built-ins, no UDF. Elements are cast float→double *before* multiply and
-  * summed left-to-right, i.e. the same IEEE754 operation sequence any other
-  * engine performs with the same plan, which keeps cosine values
-  * bit-comparable for the oracle (rounded to 6 dp anyway).
+  * The strategies differ only in which pairs reach the kernel:
+  *  - brute force ([[knnBruteForce]], [[cosineNearDupPairs]]): every
+  *    pair — the correctness baseline, capped at [[BruteForceCap]]. The
+  *    query side is tiny and broadcasts; the corpus never shuffles;
+  *  - LSH ([[knnLsh]], [[knnLshOr]], [[hardNegativesLsh]], and the
+  *    near-dup family over [[multiProbePairs]]): pairs sharing a seeded
+  *    sign-bit bucket (Charikar SimHash / Indyk-Motwani LSH);
+  *  - IVF ([[knnIvf]], [[knnIvfAdaptive]], [[knnGraphIvf]]): pairs
+  *    within the probed k-means lists.
+  * Outside this object, [[ProductQuant]] re-ranks its ADC shortlist with
+  * [[cosSim]] and [[topK]], and [[SemanticDedup]], [[KnnGraph]],
+  * [[KnnGraphIndex]] and [[SplitIndex]] score their pairs with [[cosSim]].
+  * Recall of the approximate strategies is tested against brute force,
+  * not oracled.
+  *
+  * The pair dot product is one compiled expression (`dotNative`, no UDF,
+  * bit-identical to the [[dotN]] fold). Elements are cast
+  * float→double *before* multiply and summed left-to-right, i.e. the
+  * same IEEE754 operation sequence any other engine performs with the
+  * same plan, which keeps cosine values bit-comparable for the oracle
+  * (rounded to 6 dp anyway).
   */
 object Similarity {
 
@@ -54,9 +68,36 @@ object Similarity {
   /** Pairwise cosine with norms computed ONCE per side (not 3 dot products
     * per pair). Op order matches [[cosine]]: dot / (sqrt(n2a) * sqrt(n2b)).
     */
-  private[ext] def pairCosine(dotCol: Column, n2a: Column, n2b: Column): Column =
+  private def pairCosine(dotCol: Column, n2a: Column, n2b: Column): Column =
     when(sqrt(n2a) === 0.0 || sqrt(n2b) === 0.0, lit(0.0))
       .otherwise(dotCol / (sqrt(n2a) * sqrt(n2b)))
+
+  /** The scoring kernel: cosine of `a` and `b` given their squared norms,
+    * rounded to 6 dp. Every strategy ranks and thresholds on exactly this
+    * value, so an external oracle computing the same rounded cosine
+    * agrees at every boundary and tie. */
+  def cosSim(a: Column, b: Column, n2a: Column, n2b: Column): Column =
+    round(pairCosine(dotNative(a, b), n2a, n2b), 6)
+
+  /** One scoring side: `vec_id` as `id`, `embedding` as `v`, |v|² as
+    * `n2`, then `extra` (evaluated over the same input row). */
+  private[ext] def scoringSide(df: DataFrame, id: String, v: String,
+                               n2: String, extra: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as(id), col("embedding").as(v),
+      dotNative(col("embedding"), col("embedding")).as(n2)) ++ extra: _*)
+
+  /** The ranking tail shared by every top-k strategy: per `group`,
+    * `rank` = row_number over (cos_sim desc, `id` asc) as a long, keep
+    * rank ≤ k, order by (group, rank). */
+  private[ext] def topK(scored: DataFrame, group: String, id: String,
+                        k: Int, rank: String = "rank"): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(group))
+      .orderBy(col("cos_sim").desc, col(id).asc)
+    scored.withColumn(rank, row_number().over(w).cast("long"))
+      .where(col(rank) <= k)
+      .orderBy(col(group), col(rank))
+  }
 
   /** Row cap above which the all-pairs control paths ([[knnBruteForce]],
     * [[cosineNearDupPairs]]) refuse to run. They exist as correctness
@@ -133,25 +174,15 @@ object Similarity {
                     dim: Int = 64, force: Boolean = false): DataFrame = {
     guardBruteForcePair(corpus, queries, "knnBruteForce",
       "knnLsh or knnIvf", force)
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"))
+    val q = scoringSide(queries, "query_id", "qv", "qn2")
     // Rebalance the candidate side: queries×dim dot products per corpus row
     // must engage every core even when the corpus scan is one small file.
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"))
+    val c = scoringSide(Spread(corpus), "cand_id", "cv", "cn2")
     val scored = c.crossJoin(broadcast(q))
       .where(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"), col("cn2")), 6)
-          .as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
+    topK(scored, "query_id", "cand_id", k)
   }
 
   /** Tie-aware recall@k witness for an ANN path, as one lazy plan:
@@ -202,18 +233,13 @@ object Similarity {
       .agg(min(col("cos_sim")).as("__kth"))
     // exact similarity of each retrieved pair, identical expression and
     // rounding to knnBruteForce so tied values compare equal bitwise
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"))
+    val q = scoringSide(queries, "query_id", "qv", "qn2")
     val pairs = retrieved.select(col("query_id"), col("cand_id"))
-    val scored = corpus
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"))
+    val scored = scoringSide(corpus, "cand_id", "cv", "cn2")
       .join(broadcast(pairs), Seq("cand_id"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")),
-          col("qn2"), col("cn2")), 6).as("__sim"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("__sim"))
     val hits = scored.join(broadcast(kth), Seq("query_id"))
       .where(col("__sim") >= col("__kth"))
       .agg(count(lit(1)).as("__hits"))
@@ -235,8 +261,7 @@ object Similarity {
   def cosineNearDupPairs(corpus: DataFrame, threshold: Double,
                          dim: Int = 64, force: Boolean = false): DataFrame = {
     guardBruteForce(corpus, "cosineNearDupPairs", "cosineNearDupPairsLsh", force)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val v = corpus.repartition(par).select(col("vec_id"), col("embedding"),
+    val v = Spread(corpus).select(col("vec_id"), col("embedding"),
       dotNative(col("embedding"), col("embedding")).as("n2"))
     val a = v.select(col("vec_id").as("vec_a"), col("embedding").as("va"),
       col("n2").as("n2a"))
@@ -244,8 +269,7 @@ object Similarity {
       col("n2").as("n2b"))
     a.crossJoin(b).where(col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(pairCosine(dotNative(col("va"), col("vb")), col("n2a"), col("n2b")), 6)
-          .as("cos_sim"))
+        cosSim(col("va"), col("vb"), col("n2a"), col("n2b")).as("cos_sim"))
       .where(col("cos_sim") >= threshold)
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -258,26 +282,11 @@ object Similarity {
     * the deliberate trade; raise recall with fewer planes or multiple plane
     * sets (OR-amplification), both pure config. Bucket semantics are
     * deterministic (seeded planes), so an external oracle reproduces them
-    * exactly. */
+    * exactly. One table, one mask of [[multiProbePairs]]. */
   def cosineNearDupPairsLsh(corpus: DataFrame, threshold: Double,
                             nPlanes: Int = 4, seed: Long = 42L,
-                            dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim, seed)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val v = corpus.repartition(par).select(col("vec_id"), col("embedding"),
-      dotNative(col("embedding"), col("embedding")).as("n2"),
-      bucketId(col("embedding"), planes).as("bucket"))
-    val a = v.select(col("bucket"), col("vec_id").as("vec_a"),
-      col("embedding").as("va"), col("n2").as("n2a"))
-    val b = v.select(col("bucket"), col("vec_id").as("vec_b"),
-      col("embedding").as("vb"), col("n2").as("n2b"))
-    a.join(b, Seq("bucket")).where(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"), col("bucket"),
-        round(pairCosine(dotNative(col("va"), col("vb")), col("n2a"), col("n2b")), 6)
-          .as("cos_sim"))
-      .where(col("cos_sim") >= threshold)
-      .orderBy(col("vec_a"), col("vec_b"))
-  }
+                            dim: Int = 64): DataFrame =
+    multiProbePairs(corpus, threshold, nPlanes, 1, 1, seed, dim)
 
   /** [[cosineNearDupPairsLsh]] with the two knobs that make the plan
     * survive corpus growth, derived from the corpus itself (the round-10
@@ -317,35 +326,7 @@ object Similarity {
                                     dim: Int = 64): DataFrame = {
     val n = math.max(1L, corpus.count())
     val (planes, tables) = lshAdaptiveParams(n, threshold, targetBucket)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val v = corpus.repartition(par).select(col("vec_id"), col("embedding"),
-      dotNative(col("embedding"), col("embedding")).as("n2"))
-    val perTable = (0 until tables).map { t =>
-      val pl = hyperplanes(planes, dim, seed + t)
-      val vt = v.withColumn("bucket", bucketId(col("embedding"), pl))
-      val a = vt.select(col("bucket"), col("vec_id").as("vec_a"),
-        col("embedding").as("va"), col("n2").as("n2a"))
-      val b = vt.select(col("bucket"), col("vec_id").as("vec_b"),
-        col("embedding").as("vb"), col("n2").as("n2b"))
-      // Threshold BEFORE the cross-table dedup: cos_sim is identical for
-      // every sighting of a pair (same vectors, same rounding), so the
-      // filter commutes with dedup — and it is the difference between
-      // shuffling a handful of near-dup rows and shuffling every
-      // co-bucket candidate pair (T·N·targetBucket rows) into the
-      // dedup exchange.
-      a.join(b, Seq("bucket")).where(col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"), col("bucket"),
-          round(pairCosine(dotNative(col("va"), col("vb")),
-            col("n2a"), col("n2b")), 6).as("cos_sim"))
-        .where(col("cos_sim") >= threshold)
-    }
-    // Deterministic cross-table dedup: bucket differs per table — keep
-    // the smallest. (dropDuplicates would keep an arbitrary sighting's.)
-    perTable.reduce(_ unionByName _)
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(min(col("bucket")).as("bucket"), max(col("cos_sim")).as("cos_sim"))
-      .select(col("vec_a"), col("vec_b"), col("bucket"), col("cos_sim"))
-      .orderBy(col("vec_a"), col("vec_b"))
+    multiProbePairs(corpus, threshold, planes, 1, tables, seed, dim)
   }
 
   /** Multi-probe cosine-LSH near-dup pairs (the probing idea of Lv et
@@ -467,9 +448,12 @@ object Similarity {
     multiProbePairs(corpus, threshold, planes, probes, tables, seed, dim)
   }
 
-  /** Shared multi-probe pair generator: `probes` masks (the exact
+  /** The one LSH near-dup pair generator: `probes` masks (the exact
     * bucket + probes−1 single sign bits) over `tables` seeded plane
-    * sets of `planes` bits. private[ext]: [[SplitIndex]]'s semantic
+    * sets of `planes` bits, pairs scored with [[cosSim]], thresholded,
+    * then deduplicated across tables (smallest bucket kept). The
+    * single-bucket family ([[cosineNearDupPairsLsh]],
+    * [[cosineNearDupPairsLshAdaptive]]) is `probes = 1`. private[ext]: [[SplitIndex]]'s semantic
     * regime must generate pairs under its FROZEN model params (a
     * crash-recovered create may not re-derive the adaptive sizing from
     * today's corpus count), so it calls this directly instead of the
@@ -479,8 +463,7 @@ object Similarity {
                                    seed: Long, dim: Int): DataFrame = {
     require(probes >= 1 && probes <= planes + 1,
       s"probes must be in [1, ${planes + 1}]: $probes")
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val v = corpus.repartition(par).select(col("vec_id"), col("embedding"),
+    val v = Spread(corpus).select(col("vec_id"), col("embedding"),
       dotNative(col("embedding"), col("embedding")).as("n2"))
     // XOR masks: 0 (the exact bucket) plus each probed single sign bit
     val masks = lit(0L) +: (0 until probes - 1).map(i => lit(1L << i))
@@ -492,22 +475,30 @@ object Similarity {
       // Probe side: each vector visits its bucket and the P Hamming-1
       // neighbors. A pair differing in bit i is caught at mask e_i and
       // only there (mask 0 catches the equal-signature pairs), so no
-      // within-table double-count exists to dedup.
+      // within-table double-count exists to dedup. One mask (the exact
+      // bucket alone) needs no generator at all.
       // explode_outer + isNotNull: the computed-array explode trap
       // (InferFiltersFromGenerate re-evaluates the array — and the
       // signature under it — in a filter below the generate)
-      val b = vt
-        .withColumn("bucket",
-          explode_outer(array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)))
-        .where(col("bucket").isNotNull)
-        .select(col("bucket"), col("vec_id").as("vec_b"),
-          col("embedding").as("vb"), col("n2").as("n2b"))
+      val probed =
+        if (probes == 1) vt
+        else vt.withColumn("bucket", explode_outer(
+            array(masks.map(m => col("bucket").bitwiseXOR(m)): _*)))
+          .where(col("bucket").isNotNull)
+      val b = probed.select(col("bucket"), col("vec_id").as("vec_b"),
+        col("embedding").as("vb"), col("n2").as("n2b"))
+      // Threshold BEFORE the cross-table dedup: cos_sim is identical for
+      // every sighting of a pair (same vectors, same rounding), so the
+      // filter commutes with dedup — and it is the difference between
+      // shuffling a handful of near-dup rows and shuffling every
+      // co-bucket candidate pair into the dedup exchange.
       a.join(b, Seq("bucket")).where(col("vec_a") < col("vec_b"))
         .select(col("vec_a"), col("vec_b"), col("bucket"),
-          round(pairCosine(dotNative(col("va"), col("vb")),
-            col("n2a"), col("n2b")), 6).as("cos_sim"))
+          cosSim(col("va"), col("vb"), col("n2a"), col("n2b")).as("cos_sim"))
         .where(col("cos_sim") >= threshold)
     }
+    // Deterministic cross-table dedup: bucket differs per table — keep
+    // the smallest. (dropDuplicates would keep an arbitrary sighting's.)
     perTable.reduce(_ unionByName _)
       .groupBy(col("vec_a"), col("vec_b"))
       .agg(min(col("bucket")).as("bucket"), max(col("cos_sim")).as("cos_sim"))
@@ -666,17 +657,33 @@ object Similarity {
               * col("scale") - x.cast("double"))) / size(v)))
   }
 
-  /** Nearest-centroid list id, by squared L2 distance expanded as
-    * |v|² − 2·v·c + |c|² (|v|² constant per row → argmin over −2·v·c + |c|²).
-    * One [[dotN]] per centroid, all inlined literals — a pure projection. */
-  def ivfListId(v: Column, centroids: Array[Array[Double]]): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
+  /** The IVF routing order: one struct(d, i) per centroid i, d its
+    * squared L2 distance expanded as |v|² − 2·v·c + |c|² with the
+    * per-row constant |v|² dropped. One [[dotN]] per centroid, all
+    * inlined literals — a pure projection. Sorting it ascending gives
+    * the probe order (distance, then centroid index). */
+  private def centroidDistances(v: Column,
+                                centroids: Array[Array[Double]]): Column =
+    array(centroids.zipWithIndex.map { case (c, i) =>
       val c2 = c.map(x => x * x).sum
       struct((lit(-2.0) * dotN(v, typedLit(c.toSeq), c.length) + lit(c2))
         .as("d"), lit(i).as("i"))
-    }
-    array_min(array(scored.toIndexedSeq: _*)).getField("i")
-  }
+    }.toIndexedSeq: _*)
+
+  /** Nearest-centroid list id: the minimum of [[centroidDistances]]. */
+  def ivfListId(v: Column, centroids: Array[Array[Double]]): Column =
+    array_min(centroidDistances(v, centroids)).getField("i")
+
+  /** The `probes` nearest-centroid list ids, nearest first, as an array
+    * — the multi-probe assignment of [[knnIvf]], [[knnGraphIvf]] and
+    * [[SemanticDedup]] (a near-dup pair straddling a k-means boundary is
+    * rescued by the second probe: single-assignment recall measured
+    * < 0.5 on the test corpus, 2-probe 0.79–1.0). Bounded at
+    * [[IvfFitNlistCap]] × dim inlined values, like [[ivfListId]]. */
+  def ivfListIds(v: Column, centroids: Array[Array[Double]],
+                 probes: Int): Column =
+    transform(slice(array_sort(centroidDistances(v, centroids)),
+      1, math.min(probes, centroids.length)), s => s.getField("i"))
 
   /** IVF-bucketed ANN: queries search only their `nprobe` nearest lists.
     * Corpus shuffles once on list id; each query fans out to nprobe list
@@ -685,37 +692,16 @@ object Similarity {
   def knnIvf(corpus: DataFrame, queries: DataFrame, k: Int,
              centroids: Array[Array[Double]], nprobe: Int,
              dim: Int = 64): DataFrame = {
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"),
-        ivfListId(col("embedding"), centroids).as("list_id"))
-    // nprobe nearest lists per query: sort the per-centroid distance
-    // structs and take the first nprobe ids.
-    val probeIds = {
-      val scored = centroids.zipWithIndex.map { case (cent, i) =>
-        val c2 = cent.map(x => x * x).sum
-        struct((lit(-2.0) * dotN(col("embedding"), typedLit(cent.toSeq),
-          cent.length) + lit(c2)).as("d"), lit(i).as("i"))
-      }
-      slice(transform(array_sort(array(scored.toIndexedSeq: _*)), s => s.getField("i")),
-        1, nprobe)
-    }
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        dotNative(col("embedding"), col("embedding")).as("qn2"),
-        explode(probeIds).as("list_id"))
+    val c = scoringSide(Spread(corpus), "cand_id", "cv", "cn2",
+      ivfListId(col("embedding"), centroids).as("list_id"))
+    val q = scoringSide(queries, "query_id", "qv", "qn2",
+      explode(ivfListIds(col("embedding"), centroids, nprobe)).as("list_id"))
     val scored = c.join(broadcast(q), Seq("list_id"))
       .where(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"), col("cn2")), 6)
-          .as("cos_sim"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
       .dropDuplicates("query_id", "cand_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, "query_id", "cand_id", k)
   }
 
   /** Adaptive-nprobe IVF ANN: instead of a fixed nprobe, each query scans
@@ -738,27 +724,19 @@ object Similarity {
                      centroids: Array[Array[Double]],
                      budgetFrac: Double): DataFrame = {
     val nlist = centroids.length
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"),
-        ivfListId(col("embedding"), centroids).as("list_id"))
+    val c = scoringSide(Spread(corpus), "cand_id", "cv", "cn2",
+      ivfListId(col("embedding"), centroids).as("list_id"))
     // Bounded driver-side stats: nlist rows, independent of corpus size.
     val sizeRows = c.groupBy(col("list_id")).count().collect()
     val sizes = Array.fill(nlist)(0L)
     sizeRows.foreach(r => sizes(r.getInt(0)) = r.getLong(1))
     val budget = math.max(1L, math.ceil(budgetFrac * sizes.sum).toLong)
     val sizesLit = typedLit(sizes.toSeq)
-    val scored = centroids.zipWithIndex.map { case (cent, i) =>
-      val c2 = cent.map(x => x * x).sum
-      struct((lit(-2.0) * dotN(col("embedding"), typedLit(cent.toSeq),
-        cent.length) + lit(c2)).as("d"), lit(i).as("i"))
-    }
     // Fold nearest-first: keep appending list ids while the running
     // candidate count is below the budget (so the budget is crossed by at
     // most one list — the spec pins the overshoot bound).
     val probeIds = aggregate(
-      array_sort(array(scored.toIndexedSeq: _*)),
+      array_sort(centroidDistances(col("embedding"), centroids)),
       struct(lit(0L).as("cum"),
         array().cast("array<int>").as("ids")),
       (acc, s) => when(acc.getField("cum") >= lit(budget), acc)
@@ -767,22 +745,14 @@ object Similarity {
             element_at(sizesLit, s.getField("i") + 1)).as("cum"),
           array_append(acc.getField("ids"), s.getField("i")).as("ids"))),
       acc => acc.getField("ids"))
-    val q = queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qv"),
-        dotNative(col("embedding"), col("embedding")).as("qn2"),
-        explode(probeIds).as("list_id"))
+    val q = scoringSide(queries, "query_id", "qv", "qn2",
+      explode(probeIds).as("list_id"))
     val pairs = c.join(broadcast(q), Seq("list_id"))
       .where(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"),
-          col("cn2")), 6).as("cos_sim"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
       .dropDuplicates("query_id", "cand_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    pairs.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(pairs, "query_id", "cand_id", k)
   }
 
   /** Corpus-wide approximate kNN GRAPH: every vector's `k` nearest
@@ -837,29 +807,17 @@ object Similarity {
     val nlist = centroids.length
     require(nprobe >= 1 && nprobe <= nlist,
       s"nprobe must be in [1, $nlist]: $nprobe")
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par).select(
-      col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-      dotNative(col("embedding"), col("embedding")).as("cn2"),
+    val c = scoringSide(Spread(corpus), "neighbor_id", "cv", "cn2",
       ivfListId(col("embedding"), centroids).as("list_id"))
-    val scored = centroids.zipWithIndex.map { case (cent, i) =>
-      val c2 = cent.map(x => x * x).sum
-      struct((lit(-2.0) * dotN(col("embedding"), typedLit(cent.toSeq),
-        cent.length) + lit(c2)).as("d"), lit(i).as("i"))
-    }
-    val probeIds = slice(transform(
-      array_sort(array(scored.toIndexedSeq: _*)), s => s.getField("i")),
-      1, nprobe)
     // explode_outer + isNotNull: the computed-array explode trap
-    val q = corpus.select(col("vec_id"), col("embedding").as("qv"),
-        dotNative(col("embedding"), col("embedding")).as("qn2"),
-        explode_outer(probeIds).as("list_id"))
+    val q = scoringSide(corpus, "vec_id", "qv", "qn2",
+        explode_outer(ivfListIds(col("embedding"), centroids, nprobe))
+          .as("list_id"))
       .where(col("list_id").isNotNull)
     val pairs = c.join(q, Seq("list_id"))
       .where(col("neighbor_id") =!= col("vec_id"))
       .select(col("vec_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")),
-          col("qn2"), col("cn2")), 6).as("cos_sim"),
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"),
         col("neighbor_id"))
     pairs.groupBy(col("vec_id"))
       .agg(graft.functions.TopKAggregate.topKBy(
@@ -879,25 +837,15 @@ object Similarity {
              nPlanes: Int = 4, seed: Long = 42L): DataFrame = {
     val dim = 64
     val planes = hyperplanes(nPlanes, dim, seed)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par)
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"),
-        bucketId(col("embedding"), planes).as("bucket"))
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"),
+    val c = scoringSide(Spread(corpus), "cand_id", "cv", "cn2",
+      bucketId(col("embedding"), planes).as("bucket"))
+    val q = scoringSide(queries, "query_id", "qv", "qn2",
       bucketId(col("embedding"), planes).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .where(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("bucket"), col("cand_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"), col("cn2")), 6)
-          .as("cos_sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
+    topK(scored, "query_id", "cand_id", k)
   }
 
   /** OR-amplified LSH ANN — the recall fix for [[knnLsh]]: `nTables`
@@ -923,31 +871,19 @@ object Similarity {
     require(nTables >= 1 && nPlanes >= 1, s"need >= 1 table/plane")
     val dim = 64
     val tables = Array.tabulate(nTables)(t => hyperplanes(nPlanes, dim, seed + t))
-    def hashed(df: DataFrame, idAs: String, vAs: String, n2As: String) = {
-      val buckets = array(tables.map(p => bucketId(col("embedding"), p))
-        .toIndexedSeq: _*)
-      // posexplode_outer: the plain explode of a COMPUTED array would make
-      // InferFiltersFromGenerate re-evaluate all L×P dot products in a
-      // pushed-down size() filter below the exchange
-      df.select(col("vec_id").as(idAs), col("embedding").as(vAs),
-          dotNative(col("embedding"), col("embedding")).as(n2As),
-          posexplode_outer(buckets).as(Seq("tbl", "bucket")))
-    }
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = hashed(corpus.repartition(par), "cand_id", "cv", "cn2")
-    val q = hashed(queries, "query_id", "qv", "qn2")
+    // posexplode_outer: the plain explode of a COMPUTED array would make
+    // InferFiltersFromGenerate re-evaluate all L×P dot products in a
+    // pushed-down size() filter below the exchange
+    val buckets = posexplode_outer(array(tables.map(p =>
+      bucketId(col("embedding"), p)).toIndexedSeq: _*)).as(Seq("tbl", "bucket"))
+    val c = scoringSide(Spread(corpus), "cand_id", "cv", "cn2", buckets)
+    val q = scoringSide(queries, "query_id", "qv", "qn2", buckets)
     val scored = c.join(broadcast(q), Seq("tbl", "bucket"))
       .where(col("cand_id") =!= col("query_id"))
       .select(col("query_id"), col("cand_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"), col("cn2")), 6)
-          .as("cos_sim"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
       .dropDuplicates("query_id", "cand_id")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(scored, "query_id", "cand_id", k)
   }
 
   /** Hard-negative mining for contrastive training — the counterpart
@@ -967,26 +903,15 @@ object Similarity {
     require(m > 0 && lo < hi, s"need m > 0 and lo < hi: $m, [$lo, $hi)")
     val dim = 64
     val planes = hyperplanes(nPlanes, dim, seed)
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val c = corpus.repartition(par)
-      .select(col("vec_id").as("neg_id"), col("embedding").as("cv"),
-        dotNative(col("embedding"), col("embedding")).as("cn2"),
-        bucketId(col("embedding"), planes).as("bucket"))
-    val q = anchors.select(col("vec_id").as("anchor_id"),
-      col("embedding").as("qv"),
-      dotNative(col("embedding"), col("embedding")).as("qn2"),
+    val c = scoringSide(Spread(corpus), "neg_id", "cv", "cn2",
+      bucketId(col("embedding"), planes).as("bucket"))
+    val q = scoringSide(anchors, "anchor_id", "qv", "qn2",
       bucketId(col("embedding"), planes).as("bucket"))
     val scored = c.join(broadcast(q), Seq("bucket"))
       .where(col("neg_id") =!= col("anchor_id"))
       .select(col("anchor_id"), col("neg_id"),
-        round(pairCosine(dotNative(col("qv"), col("cv")), col("qn2"), col("cn2")), 6)
-          .as("cos_sim"))
+        cosSim(col("qv"), col("cv"), col("qn2"), col("cn2")).as("cos_sim"))
       .where(col("cos_sim") >= lo && col("cos_sim") < hi)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("anchor_id"))
-      .orderBy(col("cos_sim").desc, col("neg_id").asc)
-    scored.withColumn("neg_rank", row_number().over(w).cast("long"))
-      .where(col("neg_rank") <= m)
-      .orderBy(col("anchor_id"), col("neg_rank"))
+    topK(scored, "anchor_id", "neg_id", m, rank = "neg_rank")
   }
 }

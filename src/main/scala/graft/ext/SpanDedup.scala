@@ -54,8 +54,7 @@ object SpanDedup {
     // Same rebalance rationale as docShingles: the k-gram fan-out is
     // tokens× work per row; a small scan (one file, one partition) must
     // not run it on a single core.
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    docs.repartition(par)
+    Spread(docs)
       .select(col("doc_id"), w.as("w"))
       // < k tokens => empty array INSIDE the expression (sequence(1, n)
       // turns descending for n < 1 — see docShingles). posexplode_outer,

@@ -640,10 +640,8 @@ object SplitIndex {
           .where(col("vec_a") =!= col("vec_b"))
           .select(least(col("vec_a"), col("vec_b")).as("doc_a"),
             greatest(col("vec_a"), col("vec_b")).as("doc_b"),
-            round(Similarity.pairCosine(
-              graft.functions.VectorFunctions
-                .dotNative(col("va"), col("vb")),
-              col("n2a"), col("n2b")), 6).as("cos_sim"))
+            Similarity.cosSim(col("va"), col("vb"), col("n2a"), col("n2b"))
+              .as("cos_sim"))
           .where(col("cos_sim") >= sp.threshold)
           .select(col("doc_a"), col("doc_b")).distinct()
           .localCheckpoint(true)

@@ -242,7 +242,6 @@ object TextAnalysis {
     * are absent, like the unigram scorer's zero-token exclusion. */
   def bigramPerplexity(docs: DataFrame, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0, s"need positive smoothing alpha: $alpha")
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     // token array MATERIALIZED per row before element reads: passing the
     // raw regexp expression into the HOF re-evaluates the whole extract
     // per element_at (the ProductQuant withNormalized lesson)
@@ -251,7 +250,7 @@ object TextAnalysis {
         element_at(col("__t"), i + 1)))
     // same build-once checkpoint (and stated durability tradeoff) as
     // [[unigramPerplexity]]'s dt
-    val dt = docs.repartition(par)
+    val dt = Spread(docs)
       .withColumn("__t", tokens(col("text")))
       .where(size(col("__t")) >= 2)
       .select(col("doc_id"), explode_outer(bigrams).as("bg"))
@@ -287,8 +286,7 @@ object TextAnalysis {
   def vocabGrowth(docs: DataFrame, prefixes: Seq[Long]): DataFrame = {
     require(prefixes.nonEmpty && prefixes == prefixes.sorted,
       s"prefix grid must be ascending: $prefixes")
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val firstSeen = docs.repartition(par)
+    val firstSeen = Spread(docs)
       .select(col("doc_id"),
         explode_outer(tokens(col("text"))).as("token"))
       .where(col("token").isNotNull)
@@ -311,11 +309,10 @@ object TextAnalysis {
     * vocabulary-scale joins. */
   def collocationsPmi(docs: DataFrame, minCount: Long = 5L,
                       topK: Int = 20): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
     val bigrams = transform(sequence(lit(1), size(col("__t")) - 1),
       i => concat(element_at(col("__t"), i), lit(" "),
         element_at(col("__t"), i + 1)))
-    val c2 = docs.repartition(par)
+    val c2 = Spread(docs)
       .withColumn("__t", tokens(col("text")))
       .where(size(col("__t")) >= 2)
       .select(explode_outer(bigrams).as("bg"))
@@ -397,8 +394,7 @@ object TextAnalysis {
     * deterministic-tie-break (highest count, then alphabetically first
     * token) into the same aggregation pass — no window, no self-join. */
   def repetitionScores(docs: DataFrame): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val toks = docs.repartition(par)
+    val toks = Spread(docs)
       .select(col("doc_id"), explode_outer(tokens(col("text"))).as("token"))
       .where(col("token").isNotNull) // outer: avoids InferFiltersFromGenerate
     val counts = toks.groupBy(col("doc_id"), col("token"))
@@ -460,8 +456,7 @@ object TextAnalysis {
     * once and everything downstream is vocabulary-scale. */
   def tokenDivergence(docs: DataFrame,
                       groupCol: String = "lang"): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val counts = docs.repartition(par)
+    val counts = Spread(docs)
       .select(col(groupCol).as("g"),
         explode_outer(tokens(col("text"))).as("token"))
       .where(col("token").isNotNull)

@@ -291,17 +291,23 @@ object VersionedTable {
       f.delete(new Path(new Path(root, "_stats"), s"v$v.json"), false)
       f.delete(new Path(new Path(root, "_stats"), s"franges_v$v.json"), false)
     }
-    // streaming ingest markers ([[graft.streaming.StreamingDecontamination]])
-    // are keyed by batch id; only the LAST batch can ever replay (the
-    // stream checkpoint), so every marker below the highest is dead state
-    val ingestDir = new Path(root, "_ingest")
-    if (f.exists(ingestDir)) {
-      val markers = f.listStatus(ingestDir).map(_.getPath)
-        .filter(p => p.getName.startsWith("b") &&
-          p.getName.drop(1).forall(_.isDigit))
-      if (markers.length > 1)
-        markers.sortBy(_.getName.drop(1).toLong).dropRight(1)
-          .foreach(f.delete(_, false))
+    // streaming replay markers are keyed by batch id `b<N>`: `_ingest/`
+    // ([[graft.streaming.StreamingDecontamination]]), `_screen/`
+    // (StreamingSemanticDecontamination, StreamingLexicalScreen) and
+    // `_stream/` (StreamingKnnGraph, StreamingSplitMaintenance). Only the
+    // LAST batch can ever replay (the stream checkpoint), so every marker
+    // below the highest is dead state; other names (a torn `b<N>.tmp`)
+    // are left alone
+    for (dir <- Seq("_ingest", "_screen", "_stream")) {
+      val markerDir = new Path(root, dir)
+      if (f.exists(markerDir)) {
+        val markers = f.listStatus(markerDir).map(_.getPath)
+          .filter(p => p.getName.startsWith("b") &&
+            p.getName.drop(1).forall(_.isDigit))
+        if (markers.length > 1)
+          markers.sortBy(_.getName.drop(1).toLong).dropRight(1)
+            .foreach(f.delete(_, false))
+      }
     }
     deleted
   }

@@ -24,11 +24,21 @@ import graft.sources.{BucketedTable, VersionedTable}
   */
 class ConcurrentBuildSpec extends SparkSpec {
 
-  private def fresh(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-conc-$tag").toFile
-    d.deleteOnExit()
-    new java.io.File(d, "root").getAbsolutePath
+  // temp dirs the tests create; deleteOnExit cannot remove a non-empty
+  // directory, so afterAll deletes them
+  private val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tempDir(prefix: String): java.io.File = {
+    val d = Files.createTempDirectory(prefix)
+    made += d
+    d.toFile
   }
+
+  override def afterAll(): Unit =
+    try made.foreach(deleteTree) finally super.afterAll()
+
+  private def fresh(tag: String): String =
+    new java.io.File(tempDir(s"graft-conc-$tag"), "root").getAbsolutePath
 
   private def race[A](n: Int)(body: Int => A): Seq[Either[String, A]] = {
     val pool = Executors.newFixedThreadPool(n)
@@ -116,8 +126,7 @@ class ConcurrentBuildSpec extends SparkSpec {
   test("BucketedTable.bucketed: racing threads materialize one layout") {
     // private copy of the nation table => a layout name no other suite
     // (or earlier run) can have materialized: the race hits a COLD layout
-    val dir = Files.createTempDirectory("graft-conc-layout").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft-conc-layout")
     val src = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     src.write.mode("overwrite")
       .parquet(new java.io.File(dir, "nation.parquet").getAbsolutePath)

@@ -105,6 +105,31 @@ class PlanShapeSpec extends SparkSpec {
     assert(!lsh.contains("NestedLoop"), s"LSH kNN has a nested loop:\n$lsh")
   }
 
+  test("LSH near-dup: one mask plans no generator, multi-probe explodes") {
+    val gen = "\\(\\d+\\) Generate".r
+    val single = plan(SparkEntry.queries("neardup_cosine_lsh")(spark, sf))
+    assert(gen.findFirstIn(single).isEmpty,
+      s"neardup_cosine_lsh gained a probe-mask generator:\n$single")
+    val multi = plan(SparkEntry.queries("neardup_multiprobe")(spark, sf))
+    assert(gen.findFirstIn(multi).isDefined,
+      s"neardup_multiprobe lost its probe-mask generator:\n$multi")
+  }
+
+  test("the rounded cosine is spelled only in Similarity") {
+    // (no Spark work: a scan of the main sources)
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    val offenders =
+      try stream.iterator().asScala.toList
+        .filter(_.toString.endsWith(".scala"))
+        .filterNot(_.getFileName.toString == "Similarity.scala")
+        .filter(p => java.nio.file.Files.readString(p).contains("pairCosine("))
+        .map(p => root.relativize(p).toString)
+      finally stream.close()
+    assert(offenders.isEmpty)
+  }
+
   test("round-5 queries keep their audited shapes") {
     // temperature mixture: the only data-side join is a broadcast of the
     // stratum thresholds — a regression to a shuffle join would move the

@@ -158,7 +158,7 @@ class ScaleLayoutSpec extends SparkSpec {
     val c = corpus()
     val cents = Similarity.ivfFit(c, nlist = 4)
     val withLists = c.select(col("vec_id"),
-      SemanticDedup.ivfListIds(col("embedding"), cents, 2).as("ls"),
+      Similarity.ivfListIds(col("embedding"), cents, 2).as("ls"),
       Similarity.ivfListId(col("embedding"), cents).as("nearest"))
     assert(withLists.where(element_at(col("ls"), 1) =!= col("nearest"))
       .count() === 0)
