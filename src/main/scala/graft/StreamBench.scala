@@ -486,13 +486,14 @@ object StreamBench {
     // 100+ triggers through the decontamination loop with compaction
     // armed AND the retention policy live: every 10 triggers,
     // VersionedTable.vacuum(keep=3) runs between triggers (the documented
-    // safe horizon with in-loop compaction), which also sweeps dead
-    // `_ingest/` replay markers — the long-horizon state that would
-    // otherwise grow one file per trigger forever. Reported: p95 over the
-    // first vs second half (flat = no hidden superlinear state), max/last
-    // manifest file counts, and the final marker count (bounded by the
-    // vacuum cadence, NOT by trigger count). Smaller batches than the
-    // throughput lane — the soak measures trend, not rate.
+    // safe horizon with in-loop compaction), while the writer purges its
+    // dead `_ingest/` replay markers every trigger — the long-horizon
+    // state that would otherwise grow one file per trigger forever.
+    // Reported: p95 over the first vs second half (flat = no hidden
+    // superlinear state), max/last manifest file counts, and the final
+    // marker count (one live marker, NOT one per trigger). Smaller
+    // batches than the throughput lane — the soak measures trend, not
+    // rate.
     val (soakStats, soakExtra) = {
       val soakTriggers =
         sys.env.getOrElse("SPARK_GRAFT_STREAM_SOAK_TRIGGERS", "100").toInt
@@ -537,7 +538,7 @@ object StreamBench {
           filesSeen += graft.sources.VersionedTable.fileCount(spark, indexRoot)
           // retention between triggers: keep >= 3 versions (compaction can
           // put a marker's pinned pre-version two behind latest); sweeps
-          // unreferenced data files AND dead _ingest markers
+          // unreferenced data files (the writer purges its dead markers)
           if (i % 10 == 0)
             graft.sources.VersionedTable.vacuum(spark, indexRoot,
               keepVersions = 3)

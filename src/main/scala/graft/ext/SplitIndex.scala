@@ -147,8 +147,7 @@ object SplitIndex {
     * points). */
   private def commitLabelsBase(labels: DataFrame, root: String): Long = {
     val spark = labels.sparkSession
-    val lv = VersionedTable.versions(spark, labelsRoot(root))
-      .lastOption.getOrElse(0L) + 1
+    val lv = VersionedTable.latest(spark, labelsRoot(root)) + 1
     val v = VersionedStats.commitWithRowStat(
       labels.select(col("doc_id"), col("rep"), lit(lv).as("lv"),
         lit(true).as("is_base")),

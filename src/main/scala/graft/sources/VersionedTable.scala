@@ -62,6 +62,10 @@ object VersionedTable {
       .sorted.toSeq
   }
 
+  /** The latest committed version, 0 for a fresh path. */
+  def latest(spark: SparkSession, root: String): Long =
+    versions(spark, root).lastOption.getOrElse(0L)
+
   /** Commit `df` as the next version. `append = true` carries the
     * previous version's files forward (the new snapshot = old + new
     * files); `false` makes the new manifest list only this commit's
@@ -69,15 +73,13 @@ object VersionedTable {
     * Returns the committed version number. */
   def commit(df: DataFrame, root: String, append: Boolean = false): Long = {
     val spark = df.sparkSession
-    val prior = versions(spark, root)
+    val prior = latest(spark, root)
     // next version = past BOTH the manifested versions and any staged
     // data/vN directory: a crashed writer's leftover stage (data without
     // a manifest) must not collide with — and so permanently block — the
     // next commit; skipping over it leaves the orphans below the manifest
     // horizon where vacuum may sweep them
-    val staged = stagedVersions(spark, root)
-    val v = math.max(prior.lastOption.getOrElse(0L),
-      staged.lastOption.getOrElse(0L)) + 1
+    val v = math.max(prior, latestStaged(spark, root)) + 1
     // Stage under a WRITER-UNIQUE dot-directory first, then CLAIM the
     // version directory by rename. Staging straight into data/vN with
     // errorifexists (the first cut) was check-then-write, not a claim:
@@ -143,8 +145,8 @@ object VersionedTable {
   def commitObjectStore(df: DataFrame, root: String,
                         append: Boolean = false): Long = {
     val spark = df.sparkSession
-    val prior = versions(spark, root)
-    val v = prior.lastOption.getOrElse(0L) + 1
+    val prior = latest(spark, root)
+    val v = prior + 1
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     // no leading dot: the name must survive any path-component filtering
     // a reader's file index applies to hidden (./_) segments
@@ -162,14 +164,14 @@ object VersionedTable {
     * this writer's data directory is removed too, so a retry commits a
     * fresh version with no orphans. Returns `v`. */
   private def publish(spark: SparkSession, root: String, v: Long,
-                      prior: Seq[Long], append: Boolean,
+                      prior: Long, append: Boolean,
                       dataDir: Path): Long = {
     val f = fs(spark, dataDir)
     val newFiles = f.listStatus(dataDir)
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.toString).sorted
     val carried =
-      if (append && prior.nonEmpty) manifestFiles(spark, root, prior.last)
+      if (append && prior > 0L) manifestFiles(spark, root, prior)
       else Seq.empty
     val all = carried ++ newFiles
     try MetaFile.createNew(spark, new Path(manifestDir(root), s"v$v.json"),
@@ -189,16 +191,16 @@ object VersionedTable {
     v
   }
 
-  /** Version numbers with a staged `data/vN` directory, ascending —
-    * committed, in-flight, and crashed-writer stages alike. */
-  private def stagedVersions(spark: SparkSession, root: String): Seq[Long] = {
+  /** The highest version with a staged `data/vN` directory (0 when
+    * none) — committed, in-flight, and crashed-writer stages alike. */
+  private def latestStaged(spark: SparkSession, root: String): Long = {
     val dataRoot = new Path(root, "data")
     val f = fs(spark, dataRoot)
-    if (!f.exists(dataRoot)) return Seq.empty
+    if (!f.exists(dataRoot)) return 0L
     f.listStatus(dataRoot).map(_.getPath.getName)
       .collect { case s if s.startsWith("v") && s.drop(1).forall(_.isDigit) =>
         s.drop(1).toLong }
-      .sorted.toSeq
+      .maxOption.getOrElse(0L)
   }
 
   private[graft] def manifestFiles(spark: SparkSession, root: String,
@@ -290,24 +292,6 @@ object VersionedTable {
       // sweeps with its manifest, or they accumulate forever
       f.delete(new Path(new Path(root, "_stats"), s"v$v.json"), false)
       f.delete(new Path(new Path(root, "_stats"), s"franges_v$v.json"), false)
-    }
-    // streaming replay markers are keyed by batch id `b<N>`: `_ingest/`
-    // ([[graft.streaming.StreamingDecontamination]]), `_screen/`
-    // (StreamingSemanticDecontamination, StreamingLexicalScreen) and
-    // `_stream/` (StreamingKnnGraph, StreamingSplitMaintenance). Only the
-    // LAST batch can ever replay (the stream checkpoint), so every marker
-    // below the highest is dead state; other names (a torn `b<N>.tmp`)
-    // are left alone
-    for (dir <- Seq("_ingest", "_screen", "_stream")) {
-      val markerDir = new Path(root, dir)
-      if (f.exists(markerDir)) {
-        val markers = f.listStatus(markerDir).map(_.getPath)
-          .filter(p => p.getName.startsWith("b") &&
-            p.getName.drop(1).forall(_.isDigit))
-        if (markers.length > 1)
-          markers.sortBy(_.getName.drop(1).toLong).dropRight(1)
-            .foreach(f.delete(_, false))
-      }
     }
     deleted
   }

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.KnnGraphIndex
-import graft.sources.{MetaFile, VersionedTable}
+import graft.sources.{Compaction, VersionedTable}
 
 /** Streaming maintenance of the PERSISTED corpus kNN graph — the fifth
   * index family's per-trigger loop (the span index has
@@ -31,15 +30,13 @@ import graft.sources.{MetaFile, VersionedTable}
   * a representative corpus, not whatever rows the first trigger
   * carries. The batch fails fast if either half is missing.
   *
-  * Replay posture (foreachBatch can re-deliver a batch) — the
-  * [[StreamingDecontamination]] marker scheme verbatim: a marker under
-  * `graphRoot/_stream/` records the batch's pre-append corpus version
-  * before any write; a replayed batch whose corpus append already
-  * committed skips the append (version inequality), and the graph
-  * ingest is idempotent on its own (all batch ids present → no-op).
-  * Every crash window converges to the same state. Each trigger
-  * advances the corpus version exactly once (all-duplicate batches
-  * commit an empty append) so the guards stay monotone per batch.
+  * Replay ([[BatchMarker]] contract): the marker under
+  * `graphRoot/_stream/` records the batch's pre-append corpus version; a
+  * replayed batch whose corpus append already committed skips the
+  * append, and the graph ingest is idempotent on its own (all batch
+  * ids present → no-op). Each trigger advances the corpus version
+  * exactly once (all-duplicate batches commit an empty append) so the
+  * guard stays monotone per batch.
   *
   * The frozen model's staleness boundary ([[KnnGraphIndex
   * .stalenessRatio]]) applies per trigger: a long-running stream that
@@ -53,42 +50,33 @@ import graft.sources.{MetaFile, VersionedTable}
   */
 object StreamingKnnGraph {
 
-  private def markerPath(graphRoot: String, batchId: Long) =
-    new Path(new Path(graphRoot, "_stream"), s"b$batchId")
-
-  private def markedVersion(spark: SparkSession, graphRoot: String,
-                            batchId: Long): Option[Long] =
-    MetaFile.read(spark, markerPath(graphRoot, batchId)).map(_.trim.toLong)
+  private def marker(graphRoot: String) = BatchMarker(graphRoot, "_stream")
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the graph version after
-    * the batch is absorbed.
-    *
-    * `compactAboveFiles > 0` arms the sibling lanes' file-count
-    * compaction policy on the CORPUS table (the append-per-trigger
-    * side; the graph commits full snapshots, so its file count is
-    * version-shaped, not append-shaped): past the threshold the
-    * corpus snapshot is rewritten clustered on vec_id. */
+    * the batch is absorbed. `compactAboveFiles > 0` arms
+    * [[graft.sources.Compaction.compactAbove]] on the CORPUS table (the
+    * append-per-trigger side; the graph commits full snapshots, so its
+    * file count is version-shaped, not append-shaped), clustered on
+    * vec_id. */
   def ingestBatch(batch: DataFrame, batchId: Long, graphRoot: String,
                   corpusRoot: String, rounds: Int = 1,
                   allowStale: Boolean = false,
-                  compactAboveFiles: Int = 0,
-                  compactTargetRows: Long = 4000000L): Long = {
+                  compactAboveFiles: Int = 0): Long = {
     val spark = batch.sparkSession
-    val corpusVs = VersionedTable.versions(spark, corpusRoot)
-    require(corpusVs.nonEmpty,
+    val corpusLatest = VersionedTable.latest(spark, corpusRoot)
+    require(corpusLatest > 0L,
       s"corpus table at $corpusRoot has no committed version — commit " +
         "the seed corpus (the vectors the graph was created on) before " +
         "starting the stream")
-    require(VersionedTable.versions(spark, graphRoot).nonEmpty,
+    require(VersionedTable.latest(spark, graphRoot) > 0L,
       s"KnnGraphIndex at $graphRoot has no committed version — create " +
         "the index from the seed corpus before starting the stream")
     val vecs = batch.select(col("vec_id"), col("embedding"))
-    val marked = markedVersion(spark, graphRoot, batchId)
-    val pre = marked.getOrElse(corpusVs.last)
-    if (marked.isEmpty)
-      MetaFile.replace(spark, markerPath(graphRoot, batchId), s"$pre")
-    if (VersionedTable.versions(spark, corpusRoot).last == pre) {
+    val marked = marker(graphRoot).read(spark, batchId)
+    val pre = marked.fold(corpusLatest)(_.head)
+    if (marked.isEmpty) marker(graphRoot).publish(spark, batchId, pre)
+    if (VersionedTable.latest(spark, corpusRoot) == pre) {
       // novelty filter: only vec_ids absent from the stored corpus
       // append (re-sent vectors must not duplicate corpus rows); the
       // empty-append fallback keeps versions monotone per batch
@@ -107,33 +95,23 @@ object StreamingKnnGraph {
       Seq("vec_id"), "left_semi")
     val version = KnnGraphIndex.ingest(graphRoot, corpus, batchInCorpus,
       rounds, allowStale)
-    if (compactAboveFiles > 0 &&
-        VersionedTable.fileCount(spark, corpusRoot) > compactAboveFiles)
-      graft.sources.Compaction.compactVersioned(spark, corpusRoot,
-        Seq(col("vec_id")), compactTargetRows)
+    Compaction.compactAbove(spark, corpusRoot, Seq(col("vec_id")),
+      compactAboveFiles)
     version
   }
 
-  /** Wire a (vec_id, embedding) stream into the loop. */
+  /** Wire a (vec_id, embedding) stream into the loop. `onBatch` gets the
+    * graph version. */
   def ingestWriter(vecs: DataFrame, graphRoot: String, corpusRoot: String,
                    checkpoint: String, rounds: Int = 1,
                    allowStale: Boolean = false,
                    onBatch: (Long, Long) => Unit = (_, _) => (),
                    trigger: Trigger = Trigger.AvailableNow(),
-                   compactAboveFiles: Int = 0,
-                   compactTargetRows: Long = 4000000L)
+                   compactAboveFiles: Int = 0)
       : DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val v = ingestBatch(
-            batch.select(col("vec_id"), col("embedding")), batchId,
-            graphRoot, corpusRoot, rounds, allowStale, compactAboveFiles,
-            compactTargetRows)
-          onBatch(batchId, v)
-        }
-      }
+    BatchMarker.writer(vecs, checkpoint, trigger, marker(graphRoot),
+        onBatch) { (batch, batchId) =>
+      ingestBatch(batch.select(col("vec_id"), col("embedding")), batchId,
+        graphRoot, corpusRoot, rounds, allowStale, compactAboveFiles)
+    }
 }

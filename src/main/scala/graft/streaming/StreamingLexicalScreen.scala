@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.LexicalIndex
-import graft.sources.{MetaFile, VersionedTable}
+import graft.sources.VersionedTable
 
 /** Streaming lexical decontamination: the training-document stream is
   * screened per micro-batch against the STATIC persisted BM25 index of
@@ -20,21 +19,14 @@ import graft.sources.{MetaFile, VersionedTable}
   * eval/benchmark index — nothing ingests, so a replayed batch
   * recomputes a bit-identical report from the same index. The only
   * at-least-once hazard left is double-APPENDING that identical report,
-  * closed by a per-batch marker recording the report log's pre-commit
-  * version: a replay whose marker exists and whose log already moved
-  * past it skips the commit (a version check, not a content diff —
-  * O(1) at any log size, and a later batch that happens to produce
-  * identical rows still commits). Single-writer per report root, as
-  * with every [[VersionedTable]].
+  * closed by a [[BatchMarker]] under `reportRoot/_screen/` recording the
+  * report log's pre-commit version: a replay whose log already moved
+  * past it skips the commit, while a later batch that happens to
+  * produce identical rows still commits.
   */
 object StreamingLexicalScreen {
 
-  private def markerPath(reportRoot: String, batchId: Long) =
-    new Path(new Path(reportRoot, "_screen"), s"b$batchId")
-
-  private def markedReportPre(spark: SparkSession, reportRoot: String,
-                              batchId: Long): Option[Long] =
-    MetaFile.read(spark, markerPath(reportRoot, batchId)).map(_.trim.toLong)
+  private def marker(reportRoot: String) = BatchMarker(reportRoot, "_screen")
 
   /** One batch through the screen — public so specs can replay it as
     * foreachBatch would. Returns the batch's report (committed at most
@@ -48,17 +40,14 @@ object StreamingLexicalScreen {
     val spark = batch.sparkSession
     val report = LexicalIndex.screenWith(si, batch, threshold, probeTerms)
       .persist()
-    val reportLatest = VersionedTable.versions(spark, reportRoot)
-      .lastOption.getOrElse(0L)
-    val pre = markedReportPre(spark, reportRoot, batchId) match {
-      case Some(v) => v
+    val pre = marker(reportRoot).read(spark, batchId) match {
+      case Some(m) => m.head
       case None =>
-        MetaFile.replace(spark, markerPath(reportRoot, batchId),
-          s"$reportLatest")
-        reportLatest
+        val v = VersionedTable.latest(spark, reportRoot)
+        marker(reportRoot).publish(spark, batchId, v)
+        v
     }
-    if (VersionedTable.versions(spark, reportRoot)
-        .lastOption.getOrElse(0L) == pre)
+    if (VersionedTable.latest(spark, reportRoot) == pre)
       VersionedTable.commit(report, reportRoot, append = true)
     report
   }
@@ -75,7 +64,8 @@ object StreamingLexicalScreen {
   /** Wire a document stream (doc_id, text) into the screen. The frozen
     * index's derived stats (postings, lengths, document frequencies)
     * are loop invariants: computed and cached ONCE here, reused by
-    * every micro-batch — not re-aggregated per trigger. */
+    * every micro-batch — not re-aggregated per trigger. `onBatch` gets
+    * the batch's report row count. */
   def screenWriter(docs: DataFrame, indexRoot: String, reportRoot: String,
                    threshold: Double, checkpoint: String,
                    probeTerms: Int = 16,
@@ -83,16 +73,11 @@ object StreamingLexicalScreen {
                    trigger: Trigger = Trigger.AvailableNow())
       : DataStreamWriter[Row] = {
     val si = LexicalIndex.indexStats(docs.sparkSession, indexRoot).persist()
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val r = screenBatch(batch.select(col("doc_id"), col("text")),
-            batchId, si, reportRoot, threshold, probeTerms)
-          try onBatch(batchId, r.count()) finally { r.unpersist(); () }
-        }
-      }
+    BatchMarker.writer(docs, checkpoint, trigger, marker(reportRoot),
+        onBatch) { (batch, batchId) =>
+      val r = screenBatch(batch.select(col("doc_id"), col("text")),
+        batchId, si, reportRoot, threshold, probeTerms)
+      try r.count() finally { r.unpersist(); () }
+    }
   }
 }

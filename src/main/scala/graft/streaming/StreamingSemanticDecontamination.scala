@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.PqIndex
-import graft.sources.{MetaFile, VersionedTable}
+import graft.sources.{Compaction, VersionedTable}
 
 /** Streaming SEMANTIC decontamination — the embedding-modality sibling
   * of [[StreamingDecontamination]]'s span loop: a continuous stream of
@@ -27,16 +26,13 @@ import graft.sources.{MetaFile, VersionedTable}
   * trigger happens to carry. The writer fails fast if the model or v1
   * is missing.
   *
-  * Replay posture (foreachBatch can re-deliver a batch) — the
-  * [[StreamingDecontamination]] marker scheme verbatim, because the
-  * hazard is identical: a replayed batch screened against the
-  * POST-ingest index would see its own survivors as "already indexed"
-  * and flag everything contaminated. A marker under
-  * `indexRoot/_screen/` records each batch's pre-ingest index version
-  * and pre-commit report version before any write; replays recompute
-  * the screen against that pinned version (time travel) and guard the
-  * report append / survivor ingest on version equality — every crash
-  * window converges to the same state.
+  * Replay ([[BatchMarker]] contract): a replayed batch screened against
+  * the POST-ingest index would see its own survivors as "already
+  * indexed" and flag everything contaminated. So the marker under
+  * `indexRoot/_screen/` records "<pre-ingest index version>
+  * <pre-commit report version>", the replay recomputes the screen
+  * against that index version, and the report append and survivor
+  * ingest guard on version equality — as in [[StreamingDecontamination]].
   *
   * In-batch duplicates are NOT screened against each other (the index
   * doesn't contain them yet — same contract as the span loop); feed
@@ -52,41 +48,28 @@ import graft.sources.{MetaFile, VersionedTable}
   */
 object StreamingSemanticDecontamination {
 
-  private def markerPath(indexRoot: String, batchId: Long) =
-    new Path(new Path(indexRoot, "_screen"), s"b$batchId")
-
-  private def markedVersions(spark: SparkSession, indexRoot: String,
-                             batchId: Long): Option[(Long, Long)] =
-    MetaFile.read(spark, markerPath(indexRoot, batchId)).map { s =>
-      val parts = s.trim.split("\\s+")
-      (parts(0).toLong, parts(1).toLong)
-    }
+  private def marker(indexRoot: String) = BatchMarker(indexRoot, "_screen")
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the screen report
     * (vec_id, min_adc_dist, contaminated) for the batch, computed
     * against the batch's pinned pre-ingest index version.
-    *
-    * `compactAboveFiles > 0` arms the same self-stabilizing file-count
-    * compaction policy as [[StreamingDecontamination.decontaminateBatch]]
-    * (see there for the replay/vacuum reasoning): past the threshold the
-    * codes snapshot is rewritten clustered on `list_id` — the screen
-    * reads only probed cells, so cell-clustered files let footer min/max
-    * stats skip every unprobed cell's bytes. */
+    * `compactAboveFiles > 0` arms [[graft.sources.Compaction.compactAbove]]
+    * on the codes, clustered on `list_id` — the screen reads only probed
+    * cells, so cell-clustered files let footer min/max stats skip every
+    * unprobed cell's bytes. */
   def screenBatch(batch: DataFrame, batchId: Long, indexRoot: String,
                   reportRoot: String, nprobe: Int, tau2: Double,
                   ingestSurvivors: Boolean = true,
-                  compactAboveFiles: Int = 0,
-                  compactTargetRows: Long = 4000000L): DataFrame = {
+                  compactAboveFiles: Int = 0): DataFrame = {
     val spark = batch.sparkSession
-    val latest = VersionedTable.versions(spark, indexRoot).lastOption
-      .getOrElse(throw new IllegalStateException(
-        s"PqIndex at $indexRoot has no committed version — create the " +
-          "index from the seed corpus before starting the screen stream"))
-    val reportLatest0 = VersionedTable.versions(spark, reportRoot)
-      .lastOption.getOrElse(0L)
-    val marked = markedVersions(spark, indexRoot, batchId)
-    val pre = marked.map(_._1).getOrElse(latest)
+    val latest = VersionedTable.latest(spark, indexRoot)
+    if (latest == 0L) throw new IllegalStateException(
+      s"PqIndex at $indexRoot has no committed version — create the " +
+        "index from the seed corpus before starting the screen stream")
+    val reportLatest0 = VersionedTable.latest(spark, reportRoot)
+    val marked = marker(indexRoot).read(spark, batchId)
+    val pre = marked.fold(latest)(_.head)
     // persist: the screen is consumed up to three times per trigger
     // (report commit, survivor anti-join, caller) — without a
     // materialization point each consumer re-runs the whole ADC join
@@ -97,15 +80,11 @@ object StreamingSemanticDecontamination {
       .withColumnRenamed("query_id", "vec_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     if (marked.isEmpty)
-      MetaFile.replace(spark, markerPath(indexRoot, batchId),
-        s"$pre $reportLatest0")
-    val reportPre = marked.map(_._2).getOrElse(reportLatest0)
-    val doCommit = VersionedTable.versions(spark, reportRoot)
-      .lastOption.getOrElse(0L) == reportPre
-    if (doCommit) VersionedTable.commit(report, reportRoot, append = true)
-    val nowLatest = VersionedTable.versions(spark, indexRoot)
-      .lastOption.getOrElse(0L)
-    if (ingestSurvivors && nowLatest == pre) {
+      marker(indexRoot).publish(spark, batchId, pre, reportLatest0)
+    val reportPre = marked.fold(reportLatest0)(_(1))
+    if (VersionedTable.latest(spark, reportRoot) == reportPre)
+      VersionedTable.commit(report, reportRoot, append = true)
+    if (ingestSurvivors && VersionedTable.latest(spark, indexRoot) == pre) {
       val survivors = batch.join(
         report.where(col("contaminated")).select(col("vec_id")),
         Seq("vec_id"), "left_anti")
@@ -118,39 +97,29 @@ object StreamingSemanticDecontamination {
           indexRoot, append = true)
       }
     }
-    // compaction policy: metadata-only manifest check, after ingest so
-    // the rewrite covers this batch's survivors
-    if (compactAboveFiles > 0 &&
-        VersionedTable.fileCount(spark, indexRoot) > compactAboveFiles)
-      graft.sources.Compaction.compactVersioned(spark, indexRoot,
-        Seq(col("list_id")), compactTargetRows)
+    // after ingest, so the rewrite covers this batch's survivors
+    Compaction.compactAbove(spark, indexRoot, Seq(col("list_id")),
+      compactAboveFiles)
     // async unpersist: consumers inside this call are done; a caller
     // re-reading the returned frame recomputes deterministically
     report.unpersist(blocking = false)
     report
   }
 
-  /** Wire a (vec_id, embedding) stream into the loop. */
+  /** Wire a (vec_id, embedding) stream into the loop. `onBatch` gets
+    * the index version. */
   def screenWriter(vecs: DataFrame, indexRoot: String, reportRoot: String,
                    nprobe: Int, tau2: Double, checkpoint: String,
                    ingestSurvivors: Boolean = true,
                    onBatch: (Long, Long) => Unit = (_, _) => (),
                    trigger: Trigger = Trigger.AvailableNow(),
-                   compactAboveFiles: Int = 0,
-                   compactTargetRows: Long = 4000000L)
+                   compactAboveFiles: Int = 0)
       : DataStreamWriter[Row] =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          screenBatch(batch.select(col("vec_id"), col("embedding")),
-            batchId, indexRoot, reportRoot, nprobe, tau2, ingestSurvivors,
-            compactAboveFiles, compactTargetRows)
-          val v = VersionedTable.versions(batch.sparkSession, indexRoot)
-            .lastOption.getOrElse(0L)
-          onBatch(batchId, v)
-        }
-      }
+    BatchMarker.writer(vecs, checkpoint, trigger, marker(indexRoot),
+        onBatch) { (batch, batchId) =>
+      screenBatch(batch.select(col("vec_id"), col("embedding")),
+        batchId, indexRoot, reportRoot, nprobe, tau2, ingestSurvivors,
+        compactAboveFiles)
+      VersionedTable.latest(batch.sparkSession, indexRoot)
+    }
 }

@@ -1,12 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.ext.SplitIndex
-import graft.sources.{MetaFile, VersionedTable}
+import graft.sources.{Compaction, VersionedTable}
 
 /** Streaming maintenance of the persisted SPLIT-LABELS index — the
   * sixth index family's per-trigger loop, completing the family
@@ -37,49 +36,40 @@ import graft.sources.{MetaFile, VersionedTable}
   * Bootstrap contract: [[SplitIndex.create]] must have run on the seed
   * corpus before the stream starts. The batch fails fast otherwise.
   *
-  * Replay posture: [[SplitIndex.ingest]] is idempotent on its own
-  * (labels are the commit-last authority; re-ingesting labeled ids is
-  * a no-op and every crash window converges via the per-table dedup
-  * guards), so the ingest leg needs NO marker. The report leg does: a
-  * marker under `root/_stream/` records the report's pre-append
-  * version AND the post-ingest labels version; a replayed batch
-  * recomputes its assignments against the PINNED labels version (time
-  * travel — a later batch may have merged this batch's cluster under a
-  * smaller representative, and the replay must reproduce what was
-  * originally reported, not today's view) and re-commits only when the
-  * report version still matches — the report converges to exactly one
-  * row per batch doc, byte-identical across redeliveries.
+  * Replay: [[SplitIndex.ingest]] is idempotent on its own (labels are
+  * the commit-last authority; re-ingesting labeled ids is a no-op and
+  * every crash window converges via the per-table dedup guards), so the
+  * ingest leg needs NO marker. The report leg does ([[BatchMarker]]
+  * contract): the marker under `root/_stream/` records "<pre-append
+  * report version> <post-ingest labels version>"; a replayed batch
+  * recomputes its assignments against the RECORDED labels version (a
+  * later batch may have merged this batch's cluster under a smaller
+  * representative, and the replay must reproduce what was originally
+  * reported, not today's view) and re-commits only when the report
+  * version still matches — the report converges to exactly one row per
+  * batch doc, byte-identical across redeliveries.
   */
 object StreamingSplitMaintenance {
 
-  private def markerPath(root: String, batchId: Long) =
-    new Path(new Path(root, "_stream"), s"b$batchId")
-
-  private def markedVersions(spark: SparkSession, root: String,
-                             batchId: Long): Option[(Long, Long)] =
-    MetaFile.read(spark, markerPath(root, batchId)).map { s =>
-      val parts = s.trim.split("\\s+")
-      (parts(0).toLong, parts(1).toLong)
-    }
+  private def marker(root: String) = BatchMarker(root, "_stream")
 
   /** One batch through the loop — public so specs can replay a batch
     * exactly as foreachBatch would. Returns the batch's assignment
     * report (doc_id, rep, split).
     *
-    * `compactAboveFiles > 0` arms the shared file-count compaction
-    * policy on the POSTINGS table, clustered on `fp` — the ingest's
-    * probe reads postings by fingerprint, so fp-clustered files keep
-    * footer stats useful. (Labels bound their own overlay debt: the
-    * ingest's merge-on-read commit carries a built-in file-count
-    * compaction policy — [[SplitIndex.ingest]].) */
+    * `compactAboveFiles > 0` arms [[graft.sources.Compaction.compactAbove]]
+    * on the POSTINGS table, clustered on `fp` — the ingest's probe reads
+    * postings by fingerprint, so fp-clustered files keep footer stats
+    * useful. (Labels bound their own overlay debt: the ingest's
+    * merge-on-read commit carries a built-in file-count compaction
+    * policy — [[SplitIndex.ingest]].) */
   def assignBatch(batch: DataFrame, batchId: Long, indexRoot: String,
                   reportRoot: String,
                   weights: Seq[(String, Int)] = Seq("train" -> 80,
                     "eval" -> 20),
-                  compactAboveFiles: Int = 0,
-                  compactTargetRows: Long = 4000000L): DataFrame = {
+                  compactAboveFiles: Int = 0): DataFrame = {
     val spark = batch.sparkSession
-    require(VersionedTable.versions(spark, indexRoot + "/labels").nonEmpty,
+    require(VersionedTable.latest(spark, indexRoot + "/labels") > 0L,
       s"SplitIndex at $indexRoot has no committed labels — create the " +
         "index from the seed corpus before starting the stream")
     val docs = batch.select(col("doc_id"), col("text"))
@@ -96,58 +86,44 @@ object StreamingSplitMaintenance {
         batch.select(col("doc_id").as("vec_id"), col("embedding")))
     else
       SplitIndex.ingest(indexRoot, docs)
-    val labelsPost0 = VersionedTable
-      .versions(spark, indexRoot + "/labels").last
-    val reportPre0 = VersionedTable.versions(spark, reportRoot)
-      .lastOption.getOrElse(0L)
-    val marked = markedVersions(spark, indexRoot, batchId)
-    if (marked.isEmpty)
-      MetaFile.replace(spark, markerPath(indexRoot, batchId),
-        s"$reportPre0 $labelsPost0")
-    val (reportPre, labelsV) = marked.getOrElse((reportPre0, labelsPost0))
+    val (reportPre, labelsV) = marker(indexRoot).read(spark, batchId) match {
+      case Some(m) => (m(0), m(1))
+      case None =>
+        val reportPre0 = VersionedTable.latest(spark, reportRoot)
+        val labelsPost0 = VersionedTable.latest(spark, indexRoot + "/labels")
+        marker(indexRoot).publish(spark, batchId, reportPre0, labelsPost0)
+        (reportPre0, labelsPost0)
+    }
     val report = graft.ext.Sampling.deterministicSplit(
         SplitIndex.labels(spark, indexRoot, Some(labelsV)),
         col("rep"), weights)
       .join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    if (VersionedTable.versions(spark, reportRoot)
-        .lastOption.getOrElse(0L) == reportPre)
+    if (VersionedTable.latest(spark, reportRoot) == reportPre)
       VersionedTable.commit(report, reportRoot, append = true)
-    if (compactAboveFiles > 0 &&
-        VersionedTable.fileCount(spark, indexRoot + "/fps")
-          > compactAboveFiles)
-      graft.sources.Compaction.compactVersioned(spark,
-        indexRoot + "/fps", Seq(col("fp")), compactTargetRows)
+    Compaction.compactAbove(spark, indexRoot + "/fps", Seq(col("fp")),
+      compactAboveFiles)
     report
   }
 
-  /** Wire a (doc_id, text) stream into the loop. */
+  /** Wire a (doc_id, text) stream into the loop. `onBatch` gets the
+    * labels version. */
   def assignWriter(docs: DataFrame, indexRoot: String, reportRoot: String,
                    checkpoint: String,
                    weights: Seq[(String, Int)] = Seq("train" -> 80,
                      "eval" -> 20),
                    onBatch: (Long, Long) => Unit = (_, _) => (),
                    trigger: Trigger = Trigger.AvailableNow(),
-                   compactAboveFiles: Int = 0,
-                   compactTargetRows: Long = 4000000L)
+                   compactAboveFiles: Int = 0)
       : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // pass the embedding column through when the stream carries
-          // one — the semantic-regime maintenance path
-          val cols = Seq(col("doc_id"), col("text")) ++
-            (if (batch.columns.contains("embedding"))
-              Seq(col("embedding")) else Seq.empty)
-          assignBatch(batch.select(cols: _*), batchId,
-            indexRoot, reportRoot, weights, compactAboveFiles,
-            compactTargetRows)
-          val v = VersionedTable
-            .versions(batch.sparkSession, indexRoot + "/labels")
-            .lastOption.getOrElse(0L)
-          onBatch(batchId, v)
-        }
-      }
+    BatchMarker.writer(docs, checkpoint, trigger, marker(indexRoot),
+        onBatch) { (batch, batchId) =>
+      // pass the embedding column through when the stream carries
+      // one — the semantic-regime maintenance path
+      val cols = Seq(col("doc_id"), col("text")) ++
+        (if (batch.columns.contains("embedding"))
+          Seq(col("embedding")) else Seq.empty)
+      assignBatch(batch.select(cols: _*), batchId,
+        indexRoot, reportRoot, weights, compactAboveFiles)
+      VersionedTable.latest(batch.sparkSession, indexRoot + "/labels")
+    }
 }

@@ -51,6 +51,8 @@ class StreamingDecontaminationSpec extends SparkSpec {
     assert(VersionedTable.versions(spark, indexRoot) === Seq(1L, 2L))
     assert(VersionedTable.versions(spark, reportRoot) === Seq(1L, 2L))
     assert(seen.toSeq === Seq((0L, 1L), (1L, 2L)))
+    // the writer purged every marker below the last batch
+    assert(BatchMarkerSpec.markers(s"$indexRoot/_ingest") === Set("b1"))
     // batch 1 cut against an empty index: everything passes through
     val r1 = reportMap(VersionedTable.read(spark, reportRoot, Some(1L)))
     assert(r1 === Map(1L -> ((6L, 6L)), 2L -> ((6L, 6L))))
@@ -167,7 +169,7 @@ class StreamingDecontaminationSpec extends SparkSpec {
     val q = StreamingDecontamination.decontaminationWriter(
       input.toDF().toDF("doc_id", "text"), indexRoot, reportRoot, K,
       tmp("ckpt-sdc"), trigger = Trigger.ProcessingTime(0),
-      compactAboveFiles = 2, compactTargetRows = 1000000L).start()
+      compactAboveFiles = 2).start()
     try batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
     finally q.stop()
     // unarmed twin on separate roots: the screen CONTENT must not depend
@@ -200,7 +202,7 @@ class StreamingDecontaminationSpec extends SparkSpec {
     val lastId = batches.size - 1L
     val replayed = reportMap(StreamingDecontamination.decontaminateBatch(
       batches.last.toDF("doc_id", "text"), lastId, indexRoot, reportRoot,
-      K, compactAboveFiles = 2, compactTargetRows = 1000000L))
+      K, compactAboveFiles = 2))
     val lastCommitted = reportMap(
       VersionedTable.read(spark, reportRoot)
         .exceptAll(VersionedTable.read(spark, reportRoot,

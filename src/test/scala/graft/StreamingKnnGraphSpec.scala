@@ -102,6 +102,7 @@ class StreamingKnnGraphSpec extends SparkSpec {
     } finally q.stop()
     assert(seen.map(_._1).toSeq === Seq(0L, 1L))
     assert(seen.map(_._2).toSeq === Seq(2L, 3L))
+    assert(BatchMarkerSpec.markers(s"$graphRoot/_stream") === Set("b1"))
     // both triggers' vectors are first-class graph vertices
     val g = KnnGraphIndex.topK(spark, graphRoot)
     assert(g.count() === 410L * k)
@@ -121,7 +122,7 @@ class StreamingKnnGraphSpec extends SparkSpec {
         col("vec_id") < 410 + i * 10))
     slices.zipWithIndex.foreach { case (b, i) =>
       StreamingKnnGraph.ingestBatch(b, i.toLong, armedG, armedC,
-        compactAboveFiles = 2, compactTargetRows = 1000000L)
+        compactAboveFiles = 2)
       StreamingKnnGraph.ingestBatch(b, i.toLong, plainG, plainC)
     }
     val armedFiles = VersionedTable.fileCount(spark, armedC)

@@ -72,6 +72,7 @@ class StreamingLexicalScreenSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(seen.map(_._1).toSeq === Seq(0L, 1L))
+    assert(BatchMarkerSpec.markers(s"$reportRoot/_screen") === Set("b1"))
     val rep = VersionedTable.read(spark, reportRoot)
       .orderBy("doc_id")
       .as[(Long, Long, Long, Double, Boolean)].collect()

@@ -95,6 +95,7 @@ class StreamingSemanticDecontaminationSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(seen.map(_._1).toSeq === Seq(0L, 1L))
+    assert(BatchMarkerSpec.markers(s"$indexRoot/_screen") === Set("b1"))
     // trigger 2's re-sent vectors all flagged in the audit log
     val rep = VersionedTable.read(spark, reportRoot)
       .where(col("vec_id") >= 100000L)
@@ -116,7 +117,7 @@ class StreamingSemanticDecontaminationSpec extends SparkSpec {
     val armed = slices.zipWithIndex.map { case (b, i) =>
       StreamingSemanticDecontamination.screenBatch(b, i.toLong, indexRoot,
           reportRoot, nprobe = 4, tau2 = 1.0,
-          compactAboveFiles = 2, compactTargetRows = 1000000L)
+          compactAboveFiles = 2)
         .as[(Long, Option[Double], Boolean)].collect().sortBy(_._1).toSeq
     }
     val plain = slices.zipWithIndex.map { case (b, i) =>

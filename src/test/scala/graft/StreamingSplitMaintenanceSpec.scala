@@ -104,6 +104,7 @@ class StreamingSplitMaintenanceSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(seen.map(_._1).toSeq === Seq(0L, 1L))
+    assert(BatchMarkerSpec.markers(s"$root/_stream") === Set("b1"))
     val rep = VersionedTable.read(spark, report)
       .as[(Long, Long, String)].collect().sortBy(_._1)
     assert(rep.map(_._1).toSeq === Seq(200L, 201L, 210L))

@@ -112,23 +112,6 @@ class VersionedTableSpec extends SparkSpec {
     }
   }
 
-  test("vacuum sweeps dead replay markers in every streaming marker dir") {
-    val root = freshRoot()
-    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
-    val dirs = Seq("_ingest", "_screen", "_stream")
-    for (d <- dirs; name <- (0 to 3).map(b => s"b$b") :+ "b2.tmp") {
-      val p = java.nio.file.Paths.get(root, d, name)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, "1".getBytes("UTF-8"))
-    }
-    VersionedTable.vacuum(spark, root, keepVersions = 1)
-    for (d <- dirs) {
-      val left = new java.io.File(root, d).list()
-        .filterNot(_.startsWith(".")).toSet
-      assert(left === Set("b3", "b2.tmp"), d)
-    }
-  }
-
   test("racing commits: versions stay distinct, losers fail clean, never torn") {
     val root = freshRoot()
     VersionedTable.commit(Seq((0L, "base")).toDF("id", "x"), root)
