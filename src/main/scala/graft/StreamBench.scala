@@ -549,10 +549,8 @@ object StreamBench {
         val half = stats.size / 2
         val firstHalf = stats.slice(1, half).map(_.ms)
         val secondHalf = stats.drop(half).map(_.ms)
-        val markers = {
-          val dir = new java.io.File(s"$indexRoot/_ingest")
-          if (dir.isDirectory) dir.listFiles().length else 0
-        }
+        val markers =
+          StreamingDecontamination.marker(indexRoot).batches(spark).size
         val extra = s""","docs_per_trigger":${base.length},"p95_first_half_ms":${f1(pct(firstHalf, 0.95))},"p95_second_half_ms":${f1(pct(secondHalf, 0.95))},"index_files_max":${if (files.isEmpty) -1 else files.max},"index_files_last":${files.lastOption.getOrElse(-1)},"ingest_markers_last":$markers,"versions_last":${graft.sources.VersionedTable.versions(spark, indexRoot).size}"""
         (stats, extra)
       }

@@ -217,13 +217,6 @@ object Dedup {
         .simhashVotes(col("hLo"), col("hHi")).as("simhash"))
   }
 
-  /** Convenience: `docs` with the signature appended (joins the one-scan
-    * [[simhashSignatures]] back on doc_id; pair generation should use the
-    * signatures directly and skip this join). */
-  def withSimhash(docs: DataFrame): DataFrame =
-    docs.join(simhashSignatures(docs), Seq("doc_id"), "left")
-      .withColumn("simhash", coalesce(col("simhash"), lit(0L)))
-
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken '03 — the MOSS
     * algorithm): positional k-gram hashes → minimum of each w-hash sliding
     * window → the distinct selected values are the document's fingerprint

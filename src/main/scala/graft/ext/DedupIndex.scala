@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.VersionedTable
 
 /** The near-dup index as a MAINTAINED ASSET: at 100 TB the corpus's
-  * dedup signatures (content fingerprints, minhash band signatures) are
+  * dedup signatures (content fingerprints, span hashes) are
   * not recomputed per ingest — they persist as a
   * [[graft.sources.VersionedTable]], each daily batch is matched
   * against the index READ (signature-sized, never corpus-text-sized),
@@ -20,9 +20,8 @@ import graft.sources.VersionedTable
   *    computed against the index are bit-identical to the
   *    recompute-the-corpus path in
   *    [[TextAnalysis.incrementalDedupReport]]).
-  *  - [[minhashIndex]]: per-doc LSH band signatures
-  *    ([[Dedup.minhashBands]]) — near-dup candidate generation by band
-  *    bucket collision, batch-vs-index, never all-pairs.
+  *  - [[spanIndex]]: the distinct k-gram hashes — substring
+  *    ([[SpanDedup]]) contamination, batch-vs-index.
   */
 object DedupIndex {
 
@@ -31,10 +30,6 @@ object DedupIndex {
     * fingerprint-cardinality table, persisted bucketed on `fp`. */
   def fingerprintIndex(corpus: DataFrame): DataFrame =
     corpus.select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
-
-  /** Near-dup index: (doc_id, band, sig) minhash band signatures. */
-  def minhashIndex(corpus: DataFrame, k: Int, bands: Int): DataFrame =
-    Dedup.minhashBands(corpus, k, bands)
 
   /** Read the latest committed index version, or build it from the
     * corpus and commit v1 if the table is empty — the only path that
@@ -82,53 +77,7 @@ object DedupIndex {
       .orderBy(groupCols.map(col): _*)
   }
 
-  /** Ingest one batch into a fingerprint index: append the batch's
-    * not-yet-indexed fingerprints as the next version (so re-ingesting
-    * the same batch reports 0 new — the index absorbs each batch
-    * exactly once). Returns the committed version. */
-  def ingestFingerprints(root: String, batch: DataFrame): Long = {
-    val spark = batch.sparkSession
-    val index = VersionedTable.read(spark, root)
-    val fresh = batch
-      .select(TextAnalysis.fingerprint(col("text")).as("fp")).distinct()
-      .join(index.select(col("fp")), Seq("fp"), "left_anti")
-    VersionedTable.commit(fresh, root, append = true)
-  }
-
-  /** Near-dup candidates of `batch` against the persisted minhash
-    * index: docs colliding with an indexed doc on >= `minBands` band
-    * signatures. One equi-join on (band, sig) — batch-signature-sized
-    * against index buckets, never all-pairs. Degenerate buckets (a
-    * signature shared by > `maxBucket` indexed docs — boilerplate
-    * shingles) are dropped with the same skew rationale as
-    * [[Dedup.minhashPairs]]: such collisions carry no discrimination
-    * and would square the join. */
-  def minhashCandidatesVsIndex(index: DataFrame, batch: DataFrame,
-                               k: Int, bands: Int, minBands: Int,
-                               maxBucket: Int = 1000): DataFrame = {
-    val bucketSize = index.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("__n"))
-    val prunedIndex = index.join(
-        bucketSize.where(col("__n") <= maxBucket), Seq("band", "sig"))
-      .select(col("doc_id").as("corpus_doc_id"), col("band"), col("sig"))
-    Dedup.minhashBands(batch, k, bands)
-      .withColumnRenamed("doc_id", "batch_doc_id")
-      .join(prunedIndex, Seq("band", "sig"))
-      .groupBy(col("batch_doc_id"), col("corpus_doc_id"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-      .where(col("n_shared_bands") >= minBands)
-      .orderBy(col("batch_doc_id"), col("corpus_doc_id"))
-  }
-
-  /** Append a batch's minhash signatures as the next index version
-    * (run after [[minhashCandidatesVsIndex]] has filtered the batch to
-    * its survivors). */
-  def ingestMinhash(root: String, survivors: DataFrame,
-                    k: Int, bands: Int): Long =
-    VersionedTable.commit(Dedup.minhashBands(survivors, k, bands),
-      root, append = true)
-
-  /** Span-level (substring) index — third index family, for the
+  /** Span-level (substring) index — the second index family, for the
     * [[SpanDedup]] granularity: the corpus's DISTINCT k-gram hashes
     * (column `sh`, md5). This is the exact form of the n-gram
     * decontamination index production pipelines keep for eval-set

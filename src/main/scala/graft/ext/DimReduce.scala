@@ -42,11 +42,6 @@ object DimReduce {
                             components: Array[Array[Double]]) {
     def k: Int = components.length
     def dim: Int = mean.length
-    /** Fraction of total variance captured by the k kept components. */
-    def varianceRatio: Double = {
-      val tot = eigenvalues.sum
-      if (tot == 0.0) 0.0 else eigenvalues.take(k).sum / tot
-    }
   }
 
   /** The one-pass sufficient statistics: [n, Σv, upper-tri Σvvᵀ]. */

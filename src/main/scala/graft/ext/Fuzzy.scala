@@ -22,10 +22,13 @@ import graft.functions.BoundedCollect.collectSetCapped
   */
 object Fuzzy {
 
-  /** Bucket-collect pair generation shared by the scorers: same-block
-    * (id, name) pairs with id_a < id_b, blocks capped at `maxBucket`. */
-  private def blockPairs(df: DataFrame, idCol: String, nameCol: String,
-                         block: Column, maxBucket: Int): DataFrame = {
+  /** Same-block pairs with `levenshtein(name_a, name_b) <= maxDist`,
+    * generated bucket-collect (blocks capped at `maxBucket`).
+    * Output: (block, id_a, id_b, name_a, name_b, edit_dist), id_a < id_b.
+    */
+  def blockedNamePairs(df: DataFrame, idCol: String, nameCol: String,
+                       block: Column, maxDist: Int,
+                       maxBucket: Int = 1000): DataFrame = {
     val rows = df.select(block.as("block"), col(idCol).as("id"),
       col(nameCol).as("name"))
     val buckets = rows.groupBy(col("block"))
@@ -44,33 +47,10 @@ object Fuzzy {
       .select(col("block"), col("p.id_a").as("id_a"),
         col("p.id_b").as("id_b"), col("p.name_a").as("name_a"),
         col("p.name_b").as("name_b"))
-  }
-
-  /** Same-block pairs with `levenshtein(name_a, name_b) <= maxDist`.
-    * Output: (block, id_a, id_b, name_a, name_b, edit_dist), id_a < id_b.
-    */
-  def blockedNamePairs(df: DataFrame, idCol: String, nameCol: String,
-                       block: Column, maxDist: Int,
-                       maxBucket: Int = 1000): DataFrame =
-    blockPairs(df, idCol, nameCol, block, maxBucket)
       .withColumn("edit_dist",
         levenshtein(col("name_a"), col("name_b")).cast("long"))
       .where(col("edit_dist") <= maxDist)
-
-  /** Same-block pairs scored by Jaro-Winkler ≥ `minSim` — the
-    * transposition-tolerant, prefix-boosted scorer for SHORT strings
-    * where levenshtein's integer steps are too coarse
-    * ([[graft.functions.StringSimilarity]]; bit-exact with DuckDB's
-    * `jaro_winkler_similarity`, so the oracle checks the pair set AND
-    * the scores). */
-  def blockedNamePairsJw(df: DataFrame, idCol: String, nameCol: String,
-                         block: Column, minSim: Double,
-                         maxBucket: Int = 1000): DataFrame =
-    blockPairs(df, idCol, nameCol, block, maxBucket)
-      .withColumn("jw_sim",
-        graft.functions.StringFunctions
-          .jaroWinkler(col("name_a"), col("name_b")))
-      .where(col("jw_sim") >= minSim)
+  }
 
   /** Multiplicity-weighted distinct-name pairing — the form that
     * survives heavy exact duplication: collapse identical names to
@@ -123,7 +103,7 @@ object Fuzzy {
       col("cnt").as("cnt_b"))
     // distinct-name blocks are bounded by maxBucket (a block with more
     // distinct names than that is a blocking-key design bug, as for
-    // blockPairs) — enforced via the per-block name count
+    // blockedNamePairs) — enforced via the per-block name count
     val sizes = names.groupBy(col("block"))
       .agg(count(lit(1)).as("__names"))
       .where(col("__names") <= maxBucket)

@@ -76,26 +76,6 @@ object Multimodal {
       .as[MediaItem]
   }
 
-  /** Resize/resample — the per-item payload TRANSFORM stage (image resize,
-    * audio resample): maps each item to a new item whose payload has
-    * exactly `targetLen` bytes via deterministic nearest-neighbor index
-    * mapping (`src[floor(i * n / targetLen)]`). A real codec swaps in at
-    * the same spot; shape-wise this is the stage where payload SIZE
-    * changes but cardinality does not (vs [[sampleFrames]], which changes
-    * cardinality). Executor-local map; payloads never shuffle. */
-  def resamplePayload(items: Dataset[MediaItem],
-                      targetLen: Int): Dataset[MediaItem] = {
-    require(targetLen > 0, s"need positive targetLen: $targetLen")
-    implicit val enc = Encoders.product[MediaItem]
-    items.map { item =>
-      val n = item.payload.length
-      val out =
-        if (n == 0) Array.empty[Byte]
-        else Array.tabulate(targetLen)(i => item.payload((i.toLong * n / targetLen).toInt))
-      item.copy(payload = out)
-    }
-  }
-
   /** One sampled frame: narrow row (length + checksum), bytes dropped at
     * the source per the module's scale posture. */
   final case class MediaFrame(item_id: Long, kind: String, frame_idx: Long,

@@ -63,28 +63,19 @@ object ProductQuant {
     * bounds the IVF fit. */
   val PqFitSampleCap: Int = 16384
 
-  /** L2-normalize `v` (array<float|double> → array<double>); zero
-    * vectors map to all-zero (norm check, not NaN). Pure projection.
-    *
-    * NOTE for consumers that READ BACK individual elements (the code /
-    * LUT / error expressions below): always materialize this as its own
-    * column first ([[withNormalized]]) and reference the attribute.
-    * Passing the raw expression means every `element_at` re-evaluates
-    * the whole transform — including the norm's dot product — because
+  /** Append the L2-normalized vector (array<float|double> →
+    * array<double>; zero vectors map to all-zero, not NaN) as a
+    * MATERIALIZED column `as`, computed once per row in its own
+    * projection. Consumers that READ BACK individual elements (the code /
+    * LUT / error expressions below) reference this attribute: an inline
+    * normalize expression would re-evaluate the whole transform —
+    * including the norm's dot product — at every `element_at`, because
     * the higher-order functions are CodegenFallback (no common-
     * subexpression elimination): measured 70 s instead of ~2 s on the
-    * sf0.1 error rollup. */
-  def l2Normalize(v: Column): Column = {
-    val n = sqrt(dotNative(v, v))
-    when(n === 0.0, transform(v, _ => lit(0.0)))
-      .otherwise(transform(v, x => x.cast("double") / n))
-  }
-
-  /** Append the L2-normalized vector as a MATERIALIZED column `as`,
-    * computed once per row in its own projection. CollapseProject will
-    * not inline it into consumers: the alias is non-cheap and
-    * multiply-referenced, which is exactly the property that keeps the
-    * m×ksub×dsub element reads O(1) each. */
+    * sf0.1 error rollup. CollapseProject will not inline the column into
+    * consumers: the alias is non-cheap and multiply-referenced, which is
+    * exactly the property that keeps the m×ksub×dsub element reads O(1)
+    * each. */
   private def withNormalized(df: DataFrame, vecCol: String,
                              as: String): DataFrame =
     df.withColumn("__nrm", sqrt(dotNative(col(vecCol), col(vecCol))))

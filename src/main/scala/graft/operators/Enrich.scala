@@ -3,25 +3,12 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Join-enrichment and derived-column operators (SURVEY.md §2.2-2.3).
-  *
-  * The reference's compute core is a chain of inner equi-joins of a fact
-  * table against small dimensions (reference: dags/etl/kpi_processor.py:59)
-  * plus scalar derivations (casts P2-P4, renames P13, defaults P9-P10).
-  *
-  * Scale posture: every dimension side is broadcast — the fact table is never
-  * shuffled for enrichment. Chained broadcast joins fuse into one
-  * WholeStageCodegen stage over the fact scan. When a dimension outgrows the
-  * broadcast threshold, drop the hint and AQE picks sort-merge; nothing else
-  * changes.
+/** Derived-column operators of the reference's load step (SURVEY.md
+  * P10/P11): defaults for missing columns (P10) and the hour-of-day →
+  * timestamp derivation (P11) that `load_to_redshift.py` applies before
+  * the warehouse write. Both are projections; neither shuffles.
   */
 object Enrich {
-
-  /** J1/J2: chained fact⋈dim broadcast enrichment on equal-named keys. */
-  def enrich(fact: DataFrame, dims: Seq[(DataFrame, Seq[String])]): DataFrame =
-    dims.foldLeft(fact) { case (acc, (dim, keys)) =>
-      acc.join(broadcast(dim), keys, "inner")
-    }
 
   /** P10: fill expected-but-missing columns with defaults
     * (reference: dags/etl/load_to_redshift.py:246-251). */

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.VersionedTable
-
 /** Incremental KPI maintenance — the engine form of the reference's
   * daily job (reference: dags/etl/load_to_redshift.py:186-203, which
   * deletes-then-reinserts each run's slice of `genre_kpis` so re-runs
@@ -128,33 +126,4 @@ object IncrementalKpis {
     prevKpis.join(broadcast(affected), groupCols, "left_anti")
       .unionByName(recomputed)
 
-  /** The one-call composition the daily job runs: read the latest KPI
-    * version, refresh it with a fact delta, commit the result as the
-    * next version (time travel keeps every prior refresh auditable).
-    *
-    * @param root        versioned KPI table root (latest version = the
-    *                    previous refresh's output)
-    * @param rowDiff     row-level fact diff from [[SnapshotDiff.diff]]
-    * @param factGroupCols diffed fact columns that carry group identity
-    *                    (e.g. the dim foreign key)
-    * @param toKpiGroups maps distinct fact-side group keys to distinct
-    *                    KPI group keys (e.g. broadcast-join the dim and
-    *                    project its attribute); identity for KPIs keyed
-    *                    directly on a fact column
-    * @param recompute   computes KPI rows from the NEW fact snapshot
-    *                    for exactly the given KPI groups (implement as
-    *                    a broadcast semi-join prune of the fact scan)
-    * @return the committed version number
-    */
-  def incrementalKpiRefresh(root: String, rowDiff: DataFrame,
-                            factGroupCols: Seq[String],
-                            toKpiGroups: DataFrame => DataFrame,
-                            recompute: DataFrame => DataFrame,
-                            kpiGroupCols: Seq[String]): Long = {
-    val spark = rowDiff.sparkSession
-    val prev = VersionedTable.read(spark, root)
-    val affected = toKpiGroups(affectedGroups(rowDiff, factGroupCols))
-    val refreshed = refresh(prev, recompute(affected), affected, kpiGroupCols)
-    VersionedTable.commit(refreshed, root)
-  }
 }

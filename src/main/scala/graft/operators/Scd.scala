@@ -78,14 +78,4 @@ object Scd {
     closed.select(merged.columns.map(col).toIndexedSeq: _*).union(merged)
   }
 
-  /** The open (current) slice of a type-2 dimension. */
-  def currentSlice(dim: DataFrame, toCol: String = "effective_to"): DataFrame =
-    dim.where(col(toCol).isNull)
-
-  /** Point-in-time slice: versions valid at `at` (from <= at < to). */
-  def asOfSlice(dim: DataFrame, at: Column,
-                fromCol: String = "effective_from",
-                toCol: String = "effective_to"): DataFrame =
-    dim.where(col(fromCol) <= at &&
-      (col(toCol).isNull || at < col(toCol)))
 }

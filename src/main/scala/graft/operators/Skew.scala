@@ -49,14 +49,6 @@ object Skew {
       Seq(count(lit(1)).as("__c")),
       Seq(sum(col("__c")).as(out)))
 
-  /** Salted sum per key. */
-  def saltedSum(df: DataFrame, keys: Seq[String], sumCol: String,
-                saltFrom: Seq[String], salts: Int = 64,
-                out: String = "total"): DataFrame =
-    saltedAgg(df, keys, saltFrom, salts,
-      Seq(sum(col(sumCol)).as("__s")),
-      Seq(sum(col("__s")).as(out)))
-
   /** Salted inner equi-join — the JOIN-side skew fix for when AQE's
     * skew-join split cannot apply (e.g. the skewed side feeds a bucketed
     * or already-exchanged plan, or the engine predates runtime re-plan):

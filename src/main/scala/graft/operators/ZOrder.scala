@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-code) multi-dimensional clustering — the lakehouse
@@ -37,14 +37,4 @@ object ZOrder {
     }.reduce(_ + _)
   }
 
-  /** Cluster `df` for a 2-dim Z-order write: range-partition on the code,
-    * sort within partitions — one file per partition downstream gives
-    * per-file min/max bounds on BOTH quantized dimensions. */
-  def clusterByZOrder(df: DataFrame, a: Column, b: Column, bits: Int,
-                      numPartitions: Int): DataFrame = {
-    val coded = df.withColumn("__z", zorderCode2(a, b, bits))
-    coded.repartitionByRange(numPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
 }

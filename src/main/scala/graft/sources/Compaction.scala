@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 
-/** Small-files compaction — rewrite a table into right-sized,
+/** Small-files compaction — rewrite a versioned table into right-sized,
   * range-clustered parquet files.
   *
   * The reference ingests up to 100 small CSV objects per hourly run
@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * files, and file-open overhead (not bytes) starts dominating scan time.
   * The standard fix is a periodic compaction pass: read the small files,
   * range-repartition on the query-predicate columns, write ~target-sized
-  * files capped with `maxRecordsPerFile`.
+  * files.
   *
   * Clustering matters as much as sizing: `repartitionByRange` +
   * `sortWithinPartitions` makes each output file a contiguous key range,
@@ -21,26 +21,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * predicate sets).
   */
 object Compaction {
-
-  /** Compact `df` into files of at most `targetRowsPerFile` rows,
-    * range-clustered on `clusterCols`. Returns the partition count used.
-    *
-    * Sizing does one extra `count()` — metadata-only on parquet sources
-    * (statistics scan, no data read). Files may exceed the partition
-    * count when a range partition lands over the cap (`maxRecordsPerFile`
-    * splits it into contiguous runs, preserving per-file key ranges). */
-  def compactedWrite(df: DataFrame, path: String, clusterCols: Seq[Column],
-                     targetRowsPerFile: Long): Int = {
-    require(targetRowsPerFile > 0, s"need positive target: $targetRowsPerFile")
-    val n = df.count()
-    val parts = math.max(1, math.ceil(n.toDouble / targetRowsPerFile)).toInt
-    df.repartitionByRange(parts, clusterCols: _*)
-      .sortWithinPartitions(clusterCols: _*)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", targetRowsPerFile)
-      .parquet(path)
-    parts
-  }
 
   /** Rows per file of an in-loop compaction rewrite ([[compactAbove]]). */
   val TargetRowsPerFile = 4000000L
@@ -75,8 +55,8 @@ object Compaction {
     * in place — a reader holding the old manifest keeps its exact file
     * set.
     *
-    * Many-small-files versions arise naturally here from streaming CDC
-    * commits (per-trigger versions) and append commits; running this
+    * Many-small-files versions arise naturally here from per-trigger
+    * streaming commits and append commits; running this
     * periodically bounds file-count growth the same way the reference's
     * archive step would need at scale.
     *

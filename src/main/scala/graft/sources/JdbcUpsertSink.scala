@@ -104,8 +104,8 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
     mergeUpsertKeys(df, table, keyCols :+ dateCol, numPartitions, batchSize)
 
   /** [[mergeUpsert]] core with an arbitrary key set (no load-date
-    * convention) — the shape CDC apply needs, where the business key IS
-    * the whole upsert key. */
+    * convention), for tables whose business key IS the whole upsert
+    * key. */
   def mergeUpsertKeys(df: DataFrame, table: String, keys: Seq[String],
                       numPartitions: Int = 4, batchSize: Int = 10000): Unit = {
     val staging = s"${table}_staging"
@@ -127,22 +127,6 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
       s"""MERGE INTO $table t USING $staging s ON $keyMatch
           $matchedClause
           WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($values)"""))
-  }
-
-  /** Delete target rows whose key appears in `keysDf` (staged batch +
-    * one `DELETE WHERE EXISTS` — key-batch-sized work, no data through
-    * the driver). Returns the number of rows deleted. The CDC `removed`
-    * leg; also useful as a GDPR-style erasure primitive. */
-  def deleteMatching(keysDf: DataFrame, table: String, keyCols: Seq[String],
-                     numPartitions: Int = 4, batchSize: Int = 10000): Long = {
-    val staging = s"${table}_staging"
-    stageBatch(keysDf.select(keyCols.map(k => keysDf(k)): _*), staging,
-      numPartitions, batchSize)
-    val keyMatch = keyCols
-      .map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
-    withStatement(_.executeUpdate(
-      s"""DELETE FROM $table t WHERE EXISTS (
-          SELECT 1 FROM $staging s WHERE $keyMatch)""").toLong)
   }
 
   private def quote(c: String): String = "\"" + c + "\""

@@ -56,17 +56,23 @@ final case class BatchMarker(root: String, dir: String) {
   def publish(spark: SparkSession, batchId: Long, versions: Long*): Unit =
     MetaFile.replace(spark, path(batchId), versions.mkString(" "))
 
+  /** The ids of the live markers `b<N>`, ascending. Other names in the
+    * directory (a torn `b<N>.tmp` sibling, a `.b<N>.crc` checksum) are
+    * not markers. */
+  def batches(spark: SparkSession): Seq[Long] = {
+    val f = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!f.exists(markerDir)) Nil
+    else f.listStatus(markerDir).toSeq.map(_.getPath.getName).collect {
+      case name if name.length > 1 && name.head == 'b' &&
+          name.tail.forall(_.isDigit) => name.tail.toLong
+    }.sorted
+  }
+
   /** Delete every marker `b<N>` with `N < batchId`. Other names (a torn
     * `b<N>.tmp` sibling) are left to the next [[publish]]. */
   def purgeBelow(spark: SparkSession, batchId: Long): Unit = {
-    val d = markerDir
-    val f = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (f.exists(d))
-      f.listStatus(d).map(_.getPath).filter { p =>
-        val n = p.getName.drop(1)
-        p.getName.startsWith("b") && n.nonEmpty && n.forall(_.isDigit) &&
-          n.toLong < batchId
-      }.foreach(f.delete(_, false))
+    val f = markerDir.getFileSystem(spark.sessionState.newHadoopConf())
+    batches(spark).filter(_ < batchId).foreach(n => f.delete(path(n), false))
   }
 }
 

@@ -42,7 +42,7 @@ import graft.sources.{Compaction, VersionedTable}
   */
 object StreamingDecontamination {
 
-  private def marker(indexRoot: String) = BatchMarker(indexRoot, "_ingest")
+  private[graft] def marker(indexRoot: String) = BatchMarker(indexRoot, "_ingest")
 
   /** The index at version `v`, where 0 means "before any commit" — an
     * empty hash-key frame. */

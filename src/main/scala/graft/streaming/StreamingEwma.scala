@@ -17,12 +17,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batches arrive in event-time order therefore lands on exactly the
   * batch operator's final value per key (spec-pinned).
   *
-  * Semantics contract (the [[StreamingEnrich]]/[[StreamingFunnel]]
-  * family's honest tradeoff): WITHIN a micro-batch rows fold in
-  * (ts, event_id) order; ACROSS batches the fold is
-  * as-has-arrived — a late event folds when it arrives (append mode
-  * never retracts an emitted level). The batch operator gives the exact
-  * retrospective answer; this gives the flowing one.
+  * Semantics contract (the honest tradeoff of a keyed stateful fold):
+  * WITHIN a micro-batch rows fold in (ts, event_id) order; ACROSS
+  * batches the fold is as-has-arrived — a late event folds when it
+  * arrives (append mode never retracts an emitted level). The batch
+  * operator gives the exact retrospective answer; this gives the
+  * flowing one.
   */
 object StreamingEwma {
 

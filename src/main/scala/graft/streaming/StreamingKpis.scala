@@ -1,126 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.Row
 
-import graft.sources.JdbcUpsertSink
-
-/** Structured-Streaming variant of the ingest→dedup→KPI pipeline
-  * (SURVEY.md §2.7). The reference's "streaming" is an hourly-cron batch
-  * over recently-modified S3 CSVs with a 2-hour lookback heuristic and a
-  * post-union dedup (reference: dags/etl_streaming_pipeline.py:42,
-  * dags/etl/extract_stream_data.py:124-150,205-206). The streaming file
-  * source is strictly better: it tracks processed files exactly (no
-  * double-read, no missed late file), and the watermark bounds dedup state
-  * where the reference re-reads everything.
+/** Structured-Streaming hourly KPIs (SURVEY.md §2.7). The reference's
+  * "streaming" is an hourly-cron batch over recently-modified S3 CSVs
+  * (reference: dags/etl_streaming_pipeline.py:42); a stream instead
+  * aggregates as events arrive.
   *
   * Same KPI functions as batch would be ideal, but streaming aggregations
   * need event-time windows for state eviction — so the windowed KPI here is
   * the calendar-hour variant (the batch twin is Kpis.hourlyKpisWindow), with
   * approx_count_distinct standing in for exact distincts (exact distinct
   * over unbounded keys is unbounded state at 100 TB — SURVEY.md §2.4 A3).
-  *
-  * Scale posture: state is bounded by (watermark horizon × key cardinality
-  * per hour); `maxFilesPerTrigger` paces ingest; the upsert sink makes
-  * redelivery idempotent per (key, load-date) — effectively-once end to end.
+  * State is bounded by (watermark horizon × key cardinality per hour).
   */
 object StreamingKpis {
 
-  /** S1-S3 streaming twin: exactly-tracked incremental file ingestion. */
-  def readCsvStream(spark: SparkSession, schema: StructType, path: String,
-                    maxFilesPerTrigger: Int = 100): DataFrame =
-    spark.readStream.schema(schema)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .csv(path)
-
-  /** D2 streaming twin: event-identity dedup with bounded state — replaces
-    * the reference's full-staging-rescan dedup.
-    *
-    * `watermark = None` inherits an upstream watermark: a query may define
-    * the event-time watermark ONCE — chaining two operators that each call
-    * withWatermark fails analysis with "Redefining watermark is disallowed".
-    */
-  def dedupWithWatermark(events: DataFrame, tsCol: String, keys: Seq[String],
-                         watermark: Option[String] = Some("2 hours")): DataFrame =
-    watermark.fold(events)(events.withWatermark(tsCol, _))
-      .dropDuplicatesWithinWatermark(keys)
-
   /** Calendar-hour tumbling-window KPIs on the stream (batch twin:
-    * Kpis.hourlyKpisWindow). Pass `watermark = None` when composing after
-    * [[dedupWithWatermark]] (the watermark is inherited, see above). */
-  def hourlyWindowedKpis(events: DataFrame, tsCol: String, userCol: String,
-                         watermark: Option[String] = Some("2 hours")): DataFrame =
-    watermark.fold(events)(events.withWatermark(tsCol, _))
+    * Kpis.hourlyKpisWindow), with a 2-hour event-time watermark. */
+  def hourlyWindowedKpis(events: DataFrame, tsCol: String,
+                         userCol: String): DataFrame =
+    events.withWatermark(tsCol, "2 hours")
       .groupBy(window(col(tsCol), "1 hour").as("hour_window"))
       .agg(count(lit(1)).as("n_events"),
         approx_count_distinct(col(userCol)).as("approx_unique_users"))
       .select(col("hour_window.start").as("hour_start"),
         col("n_events"), col("approx_unique_users"))
-
-  /** Per-window heavy hitters — the Misra-Gries aggregate
-    * ([[graft.functions.FrequentItemsSketch]]) run INSIDE a watermarked
-    * streaming aggregation: per event-time window, the frequent items
-    * of `itemCol` with bounded-error under-count estimates. Streaming
-    * state per window is the sketch's fixed capacity-entry buffer (the
-    * TypedImperativeAggregate serialize/merge contract is exactly what
-    * the state store persists across triggers), never the vocabulary —
-    * the streaming form of the batch `top_tokens_sketch` escalation:
-    * exact streaming top-k would grow state with every distinct item
-    * inside the horizon. Same guarantees as batch (any item above
-    * share 1/capacity surfaces; estimates under-count by ≤ N/capacity
-    * per window); take the top-k (k << capacity) downstream. */
-  def windowedHeavyHitters(events: DataFrame, tsCol: String,
-                           itemCol: String,
-                           windowLen: String = "1 hour",
-                           capacity: Int = 64,
-                           watermark: Option[String] = Some("2 hours"))
-      : DataFrame =
-    watermark.fold(events)(events.withWatermark(tsCol, _))
-      .groupBy(window(col(tsCol), windowLen).as("w"))
-      .agg(count(lit(1)).as("n_events"),
-        graft.functions.SketchAggregates.freqItems(col(itemCol), capacity)
-          .as("top_items"))
-      .select(col("w.start").as("window_start"), col("n_events"),
-        col("top_items"))
-
-  /** The composed streaming pipeline: watermark once → dedup → windowed
-    * KPIs. This is the supported way to chain the two stateful operators. */
-  def dedupedHourlyKpis(events: DataFrame, tsCol: String, userCol: String,
-                        idCols: Seq[String],
-                        watermark: String = "2 hours"): DataFrame =
-    hourlyWindowedKpis(
-      dedupWithWatermark(events, tsCol, idCols, Some(watermark)),
-      tsCol, userCol, watermark = None)
-
-  /** Streaming content dedup for document ingestion — the streaming twin
-    * of `TextAnalysis.fingerprintDedup` and the shape an LLM-data pipeline
-    * runs at the crawl frontier: fingerprint each arriving doc's canonical
-    * token stream (md5 — identical to the batch fingerprint, so batch
-    * backfills and the stream agree on identity) and drop re-crawls of the
-    * same content within the watermark horizon. State is one 32-char key
-    * per distinct document seen inside the horizon — bounded, unlike an
-    * ever-growing seen-set. */
-  def dedupDocsByFingerprint(docs: DataFrame, tsCol: String,
-                             watermark: String = "1 hour"): DataFrame =
-    docs.withColumn("fingerprint",
-        graft.ext.TextAnalysis.fingerprint(col("text")))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(Seq("fingerprint"))
-
-  /** Task-5 twin: micro-batch upsert through the same idempotent JDBC sink
-    * as batch — redelivered micro-batches collapse on (keys, dateCol). */
-  def toUpsertSink(kpis: DataFrame, sink: JdbcUpsertSink, table: String,
-                   keys: Seq[String], dateCol: String,
-                   checkpoint: String): DataStreamWriter[Row] =
-    kpis.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) sink.upsert(batch, table, keys, dateCol)
-      }
 }

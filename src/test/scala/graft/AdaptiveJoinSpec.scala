@@ -101,8 +101,7 @@ class AdaptiveJoinSpec extends SparkSpec {
     assert(hot._2 <= 3000L && hot._2 >= 3000L - 10000L / 64)
   }
 
-  private def tmp() = java.nio.file.Files
-    .createTempDirectory("graft_adaptive").resolve("tbl").toString
+  private def tmp() = tempDir("graft_adaptive").resolve("tbl").toString
 
   test("stored heavy hitters: written at commit, merged on append") {
     val root = tmp()

@@ -11,7 +11,7 @@ import graft.streaming.BatchMarker
   * stream), and a source scan that keeps the marker contract in it. */
 class BatchMarkerSpec extends SparkSpec {
 
-  private def freshRoot() = Files.createTempDirectory("graft_bm").toString
+  private def freshRoot() = tempDir("graft_bm").toString
 
   test("publish and read round-trip the payload bytes") {
     val m = BatchMarker(freshRoot(), "_stream")
@@ -35,6 +35,19 @@ class BatchMarkerSpec extends SparkSpec {
     assert(BatchMarkerSpec.markers(s"$root/_ingest") === Set("b3", "b2.tmp"))
     // a writer whose first batch is running has no marker dir yet
     BatchMarker(root, "_screen").purgeBelow(spark, 3L)
+  }
+
+  test("batches lists the live markers only") {
+    val m = BatchMarker(freshRoot(), "_ingest")
+    assert(m.batches(spark) === Nil) // no marker dir yet
+    m.publish(spark, 0L, 1L)
+    m.publish(spark, 1L, 2L)
+    MetaFileSpec.plantCrashedMarker(s"${m.root}/_ingest", 2L)
+    assert(m.batches(spark) === Seq(0L, 1L))
+    // the directory also holds b2.tmp and the checksum siblings
+    val listed = new java.io.File(s"${m.root}/_ingest").list().toSet
+    assert(listed.size > 2 && Set("b0", "b1", "b2.tmp").subsetOf(listed),
+      listed)
   }
 
   test("the marker contract lives only in BatchMarker") {

@@ -9,7 +9,7 @@ class CompactionSpec extends SparkSpec {
 
   test("compactVersioned: OPTIMIZE as a transactional version commit") {
     import graft.sources.VersionedTable
-    val root = java.nio.file.Files.createTempDirectory("graft_cvt")
+    val root = tempDir("graft_cvt")
       .resolve("tbl").toString
     // 10 append commits of 2-partition writes → a fragmented table
     (0 until 10).foreach { i =>
@@ -46,7 +46,7 @@ class CompactionSpec extends SparkSpec {
 
   test("OPTIMIZE carries the stats sidecar forward — catalog stays warm") {
     import graft.sources.{VersionedStats, VersionedTable}
-    val root = java.nio.file.Files.createTempDirectory("graft_cvs")
+    val root = tempDir("graft_cvs")
       .resolve("tbl").toString
     val df = ((0 until 3000).map(i => (7L, i.toLong)) ++
       (0 until 7000).map(i => (i % 700 + 100L, i.toLong))).toDF("k", "v")
@@ -61,7 +61,7 @@ class CompactionSpec extends SparkSpec {
     // and skew-aware planning still runs from the catalog
     assert(VersionedStats.statsFor(spark, root) === Some(statsBefore))
     assert(VersionedStats.heavyHittersFor(spark, root) === Some(hhBefore))
-    val dimRoot = java.nio.file.Files.createTempDirectory("graft_cvd")
+    val dimRoot = tempDir("graft_cvd")
       .resolve("tbl").toString
     VersionedStats.commitWithStats(
       (0L until 800L).map(k => (k + 7L, s"d$k")).toDF("k", "name"),
@@ -69,44 +69,6 @@ class CompactionSpec extends SparkSpec {
     val (_, d) = VersionedStats.adaptiveVersionedJoin(spark, root, dimRoot,
       "k", broadcastMaxRows = 0L, shufflePartitions = 32)
     assert(d.strategy === "salted", d)
-  }
-
-  test("compactedWrite sizes files to the target and clusters by key range") {
-    val n = 10000L
-    val df = spark.range(n).select(col("id"),
-      (col("id") % 97).as("v")) // write unsorted-ish payload
-    val out = java.nio.file.Files.createTempDirectory("graft_compact")
-      .toString + "/t"
-    val parts = Compaction.compactedWrite(df, out, Seq(col("id")),
-      targetRowsPerFile = 1500L)
-    assert(parts === 7) // ceil(10000/1500)
-
-    val back = spark.read.parquet(out)
-    assert(back.count() === n)
-    // per-file row cap + contiguous, pairwise non-overlapping key ranges
-    val files = back.groupBy(input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"), min("id").as("lo"), max("id").as("hi"))
-      .collect()
-      .map(r => (r.getAs[Long]("rows"), r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-      .sortBy(_._2)
-    assert(files.forall(_._1 <= 1500L), s"file over cap: ${files.mkString}")
-    assert(files.length >= parts)
-    files.sliding(2).foreach {
-      case Array((_, _, hi1), (_, lo2, _)) =>
-        assert(hi1 < lo2, s"overlapping file ranges: $hi1 vs $lo2")
-      case _ =>
-    }
-    // full coverage of the key space
-    assert(files.head._2 === 0L && files.last._3 === n - 1)
-  }
-
-  test("a dataset under one target yields a single file") {
-    val df = spark.range(100).toDF("id")
-    val out = java.nio.file.Files.createTempDirectory("graft_compact1")
-      .toString + "/t"
-    val parts = Compaction.compactedWrite(df, out, Seq(col("id")), 1000L)
-    assert(parts === 1)
-    assert(spark.read.parquet(out).count() === 100)
   }
 }
 

@@ -29,7 +29,7 @@ class CompactionVacuumRaceSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(prefix: String, commits: Int): String = {
-    val root = java.nio.file.Files.createTempDirectory(prefix)
+    val root = tempDir(prefix)
       .resolve("tbl").toString
     (0 until commits).foreach { i =>
       VersionedTable.commit(

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.util.concurrent.Executors
 
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -24,21 +24,8 @@ import graft.sources.{BucketedTable, VersionedTable}
   */
 class ConcurrentBuildSpec extends SparkSpec {
 
-  // temp dirs the tests create; deleteOnExit cannot remove a non-empty
-  // directory, so afterAll deletes them
-  private val made = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-
-  private def tempDir(prefix: String): java.io.File = {
-    val d = Files.createTempDirectory(prefix)
-    made += d
-    d.toFile
-  }
-
-  override def afterAll(): Unit =
-    try made.foreach(deleteTree) finally super.afterAll()
-
   private def fresh(tag: String): String =
-    new java.io.File(tempDir(s"graft-conc-$tag"), "root").getAbsolutePath
+    tempDir(s"graft-conc-$tag").resolve("root").toAbsolutePath.toString
 
   private def race[A](n: Int)(body: Int => A): Seq[Either[String, A]] = {
     val pool = Executors.newFixedThreadPool(n)
@@ -126,7 +113,7 @@ class ConcurrentBuildSpec extends SparkSpec {
   test("BucketedTable.bucketed: racing threads materialize one layout") {
     // private copy of the nation table => a layout name no other suite
     // (or earlier run) can have materialized: the race hits a COLD layout
-    val dir = tempDir("graft-conc-layout")
+    val dir = tempDir("graft-conc-layout").toFile
     val src = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     src.write.mode("overwrite")
       .parquet(new java.io.File(dir, "nation.parquet").getAbsolutePath)
@@ -150,21 +137,12 @@ class ConcurrentBuildSpec extends SparkSpec {
     // the three registered queries sharing one span-index root, plus the
     // two sharing the pq root — the exact sets the concurrent bench
     // overlaps; a private tables dir gives them COLD roots
-    val dir = Files.createTempDirectory("graft-conc-e2e").toFile
+    val dir = tempDir("graft-conc-e2e").toFile
     val idxRoot = Paths.get(
       graft.registry.IndexCatalog.dirRoot(dir.getAbsolutePath))
     try sharedRootRace(dir, idxRoot)
-    finally { deleteTree(idxRoot); deleteTree(dir.toPath) }
+    finally TempDirs.deleteTree(idxRoot)
   }
-
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    if (Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      val stream = Files.walk(root)
-      try stream.iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-      finally stream.close()
-    }
 
   private def sharedRootRace(dir: java.io.File,
                              idxRoot: java.nio.file.Path): Unit = {
@@ -181,7 +159,7 @@ class ConcurrentBuildSpec extends SparkSpec {
       n -> fn(spark, dir.getAbsolutePath).collect().toSeq.map(_.toString).sorted
     }.toMap
     // wipe the roots so the concurrent pass rebuilds them under the race
-    deleteTree(idxRoot)
+    TempDirs.deleteTree(idxRoot)
     val results = race(names.size) { i =>
       val (n, fn) = qs(i)
       n -> fn(spark, dir.getAbsolutePath).collect().toSeq.map(_.toString).sorted

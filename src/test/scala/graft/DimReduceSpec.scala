@@ -66,7 +66,8 @@ class DimReduceSpec extends SparkSpec {
     assert(math.abs(c0(0) * c0(0) + c0(1) * c0(1) - 1.0) < 1e-12)
     val dot01 = c0(0) * m.components(1)(0) + c0(1) * m.components(1)(1)
     assert(math.abs(dot01) < 1e-10)
-    assert(math.abs(m.varianceRatio - 1.0) < 1e-12) // k = d keeps everything
+    // k = d keeps everything: the kept eigenvalues are the total variance
+    assert(math.abs(m.eigenvalues.take(m.k).sum / m.eigenvalues.sum - 1.0) < 1e-12)
   }
 
   test("projectPca: per-component variance equals the eigenvalue") {

@@ -140,7 +140,7 @@ class DedupSpec extends SparkSpec {
   test("simhash: identical token sets collide at hamming 0; unrelated don't pair") {
     val df = Seq((1L, "spark scala data"), (2L, "data spark scala"),
       (3L, "utterly unrelated vocabulary")).toDF("doc_id", "text")
-    val sig = Dedup.withSimhash(df).select("doc_id", "simhash")
+    val sig = Dedup.simhashSignatures(df).select("doc_id", "simhash")
       .as[(Long, Long)].collect().toMap
     assert(sig(1L) === sig(2L)) // order-insensitive (distinct token set)
     assert(sig(1L) !== sig(3L)) // 64-bit sig separates unrelated vocab
@@ -156,7 +156,7 @@ class DedupSpec extends SparkSpec {
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val df = Seq((1L, base + " mike"), (2L, base + " november"),
       (3L, "one two three")).toDF("doc_id", "text")
-    val sig = Dedup.withSimhash(df).select("doc_id", "simhash")
+    val sig = Dedup.simhashSignatures(df).select("doc_id", "simhash")
       .as[(Long, Long)].collect().toMap
     val hamming = java.lang.Long.bitCount(sig(1L) ^ sig(2L))
     val pairs = Dedup.simhashPairs(df, maxHamming = 7)
@@ -233,12 +233,12 @@ class FuzzySpec extends SparkSpec {
       (4L, "rupert ltd"))    // robert/rupert share R163
       .toDF("id", "name")
     // token blocking finds nothing: all first tokens differ
-    assert(Fuzzy.blockedNamePairsJw(df, "id", "name",
-      block = split(col("name"), " ").getItem(0), minSim = 0.8)
+    assert(Fuzzy.blockedNamePairs(df, "id", "name",
+      block = split(col("name"), " ").getItem(0), maxDist = 2)
       .count() === 0L)
     // phonetic blocking pairs the homophones
-    val pairs = Fuzzy.blockedNamePairsJw(df, "id", "name",
-        block = soundex(split(col("name"), " ").getItem(0)), minSim = 0.8)
+    val pairs = Fuzzy.blockedNamePairs(df, "id", "name",
+        block = soundex(split(col("name"), " ").getItem(0)), maxDist = 2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 4L)))
@@ -260,9 +260,12 @@ class FuzzySpec extends SparkSpec {
       maxDist = 1)
     assert(raw.exceptAll(weighted).isEmpty && weighted.exceptAll(raw).isEmpty,
       "weighted form must be indistinguishable from the raw rollup")
-    // JW twin: same equivalence
-    val rawJw = Fuzzy.blockedNamePairsJw(df, "id", "name", blockCol,
-        minSim = 0.9, maxBucket = 100000)
+    // JW twin: same equivalence, against every raw same-block pair scored
+    val rawJw = Fuzzy.blockedNamePairs(df, "id", "name", blockCol,
+        maxDist = Int.MaxValue, maxBucket = 100000)
+      .withColumn("jw_sim", graft.functions.StringFunctions
+        .jaroWinkler(col("name_a"), col("name_b")))
+      .where(col("jw_sim") >= 0.9)
       .groupBy(col("block"))
       .agg(count(lit(1)).as("n_pairs"),
         round(avg(col("jw_sim")), 6).as("avg_sim"))
@@ -584,23 +587,6 @@ class MultimodalSpec extends SparkSpec {
     assert(feats(0).checksum === 'a'.toLong + 'b'.toLong)
   }
 
-  test("resamplePayload: exact target length, deterministic, empty-safe") {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Multimodal.MediaItem]
-    val items = Seq(
-      Multimodal.MediaItem(1L, "img", "abcdefgh".getBytes), // downsample 8->4
-      Multimodal.MediaItem(2L, "img", "xy".getBytes),       // upsample 2->4
-      Multimodal.MediaItem(3L, "img", Array.empty[Byte]))
-      .toDS()
-    val out = Multimodal.resamplePayload(items, targetLen = 4)
-      .orderBy("item_id").collect()
-    assert(new String(out(0).payload) === "aceg") // indices 0,2,4,6
-    assert(new String(out(1).payload) === "xxyy") // indices 0,0,1,1
-    assert(out(2).payload.isEmpty)                // empty stays empty
-    // deterministic: same input, same bytes
-    val again = Multimodal.resamplePayload(items, 4).orderBy("item_id").collect()
-    assert(out.map(_.payload.toSeq).toSeq === again.map(_.payload.toSeq).toSeq)
-  }
-
   test("sampleFrames: stride windows, short tail, empty payload -> no frames") {
     implicit val enc = org.apache.spark.sql.Encoders.product[Multimodal.MediaItem]
     val items = Seq(
@@ -727,7 +713,7 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("reliable checkpoint mode matches localCheckpoint results") {
-    val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
+    val dir = tempDir("cc-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     val edges = (0L until 8L).map(i => (i, i + 1)).toDF("a", "b") // >=3 rounds
     val cc = Components.connectedComponents(edges, "a", "b",

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, DedupIndex, TextAnalysis}
+import graft.ext.{DedupIndex, TextAnalysis}
 import graft.sources.VersionedTable
 
 /** The persisted dedup index: batch ingests match against the INDEX
@@ -12,8 +12,7 @@ import graft.sources.VersionedTable
 class IncrementalIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String) = java.nio.file.Files
-    .createTempDirectory(prefix).toString
+  private def tmp(prefix: String) = tempDir(prefix).toString
 
   private val corpusRows = Seq(
     (1L, "en", "the quick brown fox jumps over the lazy dog"),
@@ -63,76 +62,6 @@ class IncrementalIndexSpec extends SparkSpec {
     assert(!plan.contains(corpusDir), "corpus text rescanned by the report")
     assert(plan.contains(batchDir))
     assert(collectReport(report) === Seq(("de", 2L, 1L), ("en", 2L, 1L)))
-  }
-
-  test("ingesting a batch appends a version; re-ingest reports 0 new") {
-    val root = tmp("graft_fpidx3") + "/fp"
-    DedupIndex.readOrBuild(spark, root,
-      DedupIndex.fingerprintIndex(corpusDf))
-    val v2 = DedupIndex.ingestFingerprints(root, batchDf)
-    assert(v2 === 2L)
-    assert(VersionedTable.versions(spark, root) === Seq(1L, 2L))
-    // the index absorbed the batch: replaying it finds nothing new
-    val replay = collectReport(DedupIndex.incrementalNewDocs(
-      VersionedTable.read(spark, root), batchDf, Seq("lang")))
-    assert(replay === Seq(("de", 2L, 0L), ("en", 2L, 0L)))
-    // v1 (pre-ingest) stays auditable: the same report against the old
-    // version still sees the batch's novelty
-    val pinned = collectReport(DedupIndex.incrementalNewDocs(
-      VersionedTable.read(spark, root, Some(1L)), batchDf, Seq("lang")))
-    assert(pinned === Seq(("de", 2L, 1L), ("en", 2L, 1L)))
-  }
-
-  test("minhash candidates vs the persisted index match the recompute path") {
-    val k = 3; val bands = 8
-    val root = tmp("graft_mhidx") + "/mh"
-    DedupIndex.readOrBuild(spark, root,
-      DedupIndex.minhashIndex(corpusDf, k, bands))
-    val nearBatch = Seq(
-      // near-dup of corpus doc 1 (one word changed)
-      (20L, "en", "the quick brown fox leaps over the lazy dog"),
-      // unrelated
-      (21L, "en", "completely unrelated content nothing shared here at all"))
-      .toDF("doc_id", "lang", "text")
-    val vsIndex = DedupIndex.minhashCandidatesVsIndex(
-        VersionedTable.read(spark, root), nearBatch, k, bands, minBands = 1)
-      .as[(Long, Long, Long)].collect().toSeq
-    // ground truth: run the from-scratch pair generator over corpus ∪
-    // batch, keep only batch-vs-corpus pairs
-    val expected = Dedup.minhashPairs(
-        corpusDf.unionByName(nearBatch), k, bands, minBands = 1)
-      .as[(Long, Long, Long)].collect()
-      .collect { case (a, b, n) if b >= 20L && a < 20L => (b, a, n) }
-      .sorted.toSeq
-    assert(vsIndex.sorted === expected)
-    assert(vsIndex.exists { case (b, c, _) => b == 20L && c == 1L })
-    assert(!vsIndex.exists { case (b, _, _) => b == 21L })
-    // survivors (non-colliding docs) append as the next index version;
-    // replaying them now collides with their own signatures
-    val survivors = nearBatch.join(
-      vsIndex.map(_._1).toDF("doc_id"), Seq("doc_id"), "left_anti")
-    val v2 = DedupIndex.ingestMinhash(root, survivors, k, bands)
-    assert(v2 === 2L)
-    val replay = DedupIndex.minhashCandidatesVsIndex(
-        VersionedTable.read(spark, root), nearBatch, k, bands, minBands = 1)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(replay.exists { case (b, c, _) => b == 21L && c == 21L })
-  }
-
-  test("degenerate index buckets are dropped by the maxBucket cap") {
-    val k = 3; val bands = 4
-    // every corpus doc identical → all band buckets have size 4
-    val boiler = (1L to 4L).map(i => (i, "en", "same same same same same"))
-      .toDF("doc_id", "lang", "text")
-    val index = DedupIndex.minhashIndex(boiler, k, bands)
-    val probe = Seq((9L, "en", "same same same same same"))
-      .toDF("doc_id", "lang", "text")
-    val capped = DedupIndex.minhashCandidatesVsIndex(
-      index, probe, k, bands, minBands = 1, maxBucket = 3)
-    assert(capped.count() === 0) // buckets of 4 > cap 3 → pruned
-    val uncapped = DedupIndex.minhashCandidatesVsIndex(
-      index, probe, k, bands, minBands = 1, maxBucket = 100)
-    assert(uncapped.count() === 4)
   }
 
   test("span index: contamination vs index == recompute; corpus text unread") {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IncrementalKpis, SnapshotDiff}
-import graft.sources.{Cdc, JdbcUpsertSink, VersionedTable}
 
 /** Incremental KPI maintenance: delta-sized group refresh must be
   * indistinguishable from a full recompute, idempotent under re-applied
@@ -86,53 +85,6 @@ class IncrementalKpisSpec extends SparkSpec {
     assert(collectKpis(refreshed) === Seq(("y", 2L, 30L))) // x emptied out
   }
 
-  test("incrementalKpiRefresh: read latest version, refresh, commit next") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ikpi").resolve("kpis").toString
-    val v1 = VersionedTable.commit(kpiOf(oldFacts), root)
-    assert(v1 === 1L)
-    val v2 = IncrementalKpis.incrementalKpiRefresh(root, rowDiff,
-      factGroupCols = Seq("cat"), toKpiGroups = identity,
-      recompute = recomputeFor, kpiGroupCols = Seq("cat"))
-    assert(v2 === 2L)
-    assert(collectKpis(VersionedTable.read(spark, root)) ===
-      collectKpis(kpiOf(newFacts)))
-    // the pre-refresh state stays auditable via time travel
-    assert(collectKpis(VersionedTable.read(spark, root, Some(1L))) ===
-      collectKpis(kpiOf(oldFacts)))
-    // a re-run of the same batch commits an IDENTICAL next version
-    IncrementalKpis.incrementalKpiRefresh(root, rowDiff,
-      Seq("cat"), identity, recomputeFor, Seq("cat"))
-    assert(collectKpis(VersionedTable.read(spark, root, Some(3L))) ===
-      collectKpis(VersionedTable.read(spark, root, Some(2L))))
-  }
-
-  test("warehouse leg: KPI-table diff ships delta-sized, converges to full") {
-    val url = "jdbc:derby:memory:graftikpi;create=true"
-    val sink = JdbcUpsertSink(url)
-    sink.ensureTable(
-      """CREATE TABLE genre_kpis (
-         "cat" VARCHAR(16) NOT NULL,
-         "cnt" BIGINT,
-         "sum_cents" BIGINT)""", "genre_kpis")
-    // seed the warehouse with the previous refresh's KPI rows
-    sink.mergeUpsertKeys(kpiOf(oldFacts), "genre_kpis", Seq("cat"),
-      numPartitions = 2)
-    val affected = IncrementalKpis.affectedGroups(rowDiff, Seq("cat"))
-    val refreshed = IncrementalKpis.refresh(
-      kpiOf(oldFacts), recomputeFor(affected), affected, Seq("cat"))
-    // the warehouse write is the KPI-table diff — group-delta-sized,
-    // not fact-delta-sized, and certainly not full-table
-    val kpiDiff = SnapshotDiff.diff(kpiOf(oldFacts), refreshed, Seq("cat"),
-      nullSafeKeys = false)
-    val res = Cdc.cdcApply(kpiDiff, sink, "genre_kpis", Seq("cat"))
-    assert(res.upserted === 3L) // b, c changed; e added
-    assert(res.deleted === 1L)  // d emptied out
-    val got = spark.read.jdbc(url, "genre_kpis", new java.util.Properties)
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(got === collectKpis(kpiOf(newFacts)))
-  }
-
   test("PROPERTY: refresh == full recompute for ARBITRARY snapshot pairs") {
     // The fixture above exercises one hand-picked delta; this drives the
     // same contract over arbitrary add/remove/change/migrate mixes,
@@ -178,7 +130,7 @@ class IncrementalKpisSpec extends SparkSpec {
     // parquet-backed source: ConvertToLocalRelation would otherwise fold
     // the IN filter straight into a LocalRelation and leave no plan
     // shape (IN literal vs semi join) to observe
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune")
+    val dir = tempDir("graft_prune")
       .toString
     (1L to 2000L).map(k => (k, k % 500, k * 10))
       .toDF("fid", "grp", "cents").write.mode("overwrite").parquet(dir)

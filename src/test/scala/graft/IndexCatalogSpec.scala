@@ -27,14 +27,6 @@ class IndexCatalogSpec extends SparkSpec {
       finally stream.close()
     }
 
-  private def deleteTree(root: Path): Unit =
-    if (Files.exists(root)) {
-      val stream = Files.walk(root)
-      try stream.iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
-      finally stream.close()
-    }
-
   /** The fingerprint suffix as the catalog has always computed it: md5
     * of "name:len:mtime" over the source's files sorted by name, joined
     * by "|", first 12 hex chars. */
@@ -80,7 +72,7 @@ class IndexCatalogSpec extends SparkSpec {
 
   test("index_health adds no root and no version to a catalog its " +
       "creators built") {
-    val dir = Files.createTempDirectory("graft-catalog")
+    val dir = tempDir("graft-catalog")
     for (t <- Seq("documents", "embeddings"))
       Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
     val d = dir.toAbsolutePath.toString
@@ -98,9 +90,6 @@ class IndexCatalogSpec extends SparkSpec {
       assert(health.nonEmpty &&
         health.forall(_.getAs[Long]("versions") >= 1L))
       assert(tree(catalog) === built)
-    } finally {
-      deleteTree(catalog)
-      deleteTree(dir)
-    }
+    } finally TempDirs.deleteTree(catalog)
   }
 }

@@ -13,7 +13,7 @@ class IndexHealthSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-health-$tag")
+    tempDir(s"graft-health-$tag")
       .resolve("root").toString
 
   // the KnnGraphIndexSpec mixture fixture: 4 loose clusters in dim 8

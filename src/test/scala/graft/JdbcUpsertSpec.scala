@@ -108,7 +108,7 @@ class JdbcUpsertSpec extends SparkSpec {
          "load_date" DATE NOT NULL)"""
     sink.ensureTable(ddlC, "genre_kpis_copy")
     val copySink = graft.sources.CopyBulkSink(url)
-    val staging = java.nio.file.Files.createTempDirectory("graft_copy")
+    val staging = tempDir("graft_copy")
       .resolve("batch").toString
     val d1 = java.sql.Date.valueOf("2024-06-25")
     val batch = (1 to 100).map(i => (s"genre_$i", i.toLong, d1))
@@ -133,7 +133,7 @@ class JdbcUpsertSpec extends SparkSpec {
          "listen_count" BIGINT NOT NULL)"""
     sink.ensureTable(ddlR, "copy_rollback")
     val copySink = graft.sources.CopyBulkSink(url)
-    val staging = java.nio.file.Files.createTempDirectory("graft_copy_rb")
+    val staging = tempDir("graft_copy_rb")
       .resolve("batch").toString
     val good = Seq(("rock", 1L)).toDF("genre", "listen_count")
     // Plain-SQL dialect: statement 1 inserts, statement 2 fails — the
@@ -159,7 +159,7 @@ class JdbcUpsertSpec extends SparkSpec {
          "payload" VARCHAR(256) NOT NULL,
          "ts" TIMESTAMP NOT NULL)""", "copy_defaults")
     val payload = """{"genre":"rock","note":"say \"hi\", it's 'live'"}"""
-    val staging = java.nio.file.Files.createTempDirectory("graft_copy_def")
+    val staging = tempDir("graft_copy_def")
       .resolve("batch").toString
     graft.sources.CopyBulkSink(url).copyLoad(
       Seq(payload).toDF("payload")

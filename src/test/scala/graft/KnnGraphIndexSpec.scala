@@ -13,11 +13,8 @@ import graft.sources.{VersionedStats, VersionedTable}
 class KnnGraphIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-kgi-$tag").toFile
-    d.deleteOnExit()
-    new java.io.File(d, "root").getAbsolutePath
-  }
+  private def fresh(tag: String): String =
+    tempDir(s"graft-kgi-$tag").resolve("root").toAbsolutePath.toString
 
   // deterministic mixture fixture: 4 loose clusters of 30 in dim 8 —
   // clustered geometry so a 3-probe seed + one descent round reaches

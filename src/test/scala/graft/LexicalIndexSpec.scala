@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ext.LexicalIndex
@@ -14,7 +12,7 @@ class LexicalIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpRoot(): String =
-    Files.createTempDirectory("lexidx").toString + "/idx"
+    tempDir("lexidx").toString + "/idx"
 
   // eval docs with DISTINCT vocabularies (unlike the shared-vocab
   // synthetic corpus — here lexical similarity can actually separate)

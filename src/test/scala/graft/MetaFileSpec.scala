@@ -43,7 +43,7 @@ class MetaFileSpec extends SparkSpec {
   }
 
   test("read: None when absent; createNew: write-once, raises on exists") {
-    val p = hpath(Files.createTempDirectory("graft_meta").resolve("m/v1"))
+    val p = hpath(tempDir("graft_meta").resolve("m/v1"))
     assert(MetaFile.read(spark, p) === None)
     MetaFile.createNew(spark, p, "3 5")
     assert(MetaFile.read(spark, p) === Some("3 5"))

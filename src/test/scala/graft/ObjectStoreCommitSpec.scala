@@ -66,7 +66,7 @@ class ObjectStoreCommitSpec extends SparkSpec {
   import spark.implicits._
 
   private def objRoot(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    val dir = tempDir(prefix)
     spark.sparkContext.hadoopConfiguration.set("fs.objstore.impl",
       classOf[NonAtomicRenameFileSystem].getName)
     // no per-FS cache surprises across specs

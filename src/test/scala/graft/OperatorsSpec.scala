@@ -280,13 +280,6 @@ class EnrichSpec extends SparkSpec {
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
     assert(out.toSeq === Seq(Some(12.5), None, None))
   }
-
-  test("enrich chains broadcast inner joins on named keys") {
-    val fact = Seq((1, 10), (2, 20), (3, 30)).toDF("dk", "m")
-    val dim = Seq((1, "a"), (2, "b")).toDF("dk", "name")
-    val out = Enrich.enrich(fact, Seq((dim, Seq("dk"))))
-    assert(out.count() === 2) // inner join drops unmatched fact row
-  }
 }
 
 class PercentileSpec extends SparkSpec {

@@ -37,10 +37,10 @@ class PlanShapeSpec extends SparkSpec {
       "winnowing" -> Dedup.winnowingPairs(docs),
       "contamination" -> Dedup.contaminationPairs(docs, 5,
         Seq("train" -> 80, "val" -> 10, "test" -> 10)),
-      "fuzzy-jw" -> graft.ext.Fuzzy.blockedNamePairsJw(
+      "fuzzy" -> graft.ext.Fuzzy.blockedNamePairs(
         docs.selectExpr("doc_id", "substr(text, 1, 24) AS nm"),
         "doc_id", "nm", block = substring(col("nm"), 1, 4),
-        minSim = 0.9))) {
+        maxDist = 2))) {
       val p = plan(df)
       assert(scanCount(p) === 1, s"$name should scan the corpus once:\n$p")
       assert(!p.contains("NestedLoop"), s"$name has a nested-loop join")
@@ -505,8 +505,7 @@ class PlanShapeSpec extends SparkSpec {
   test("split-label merge-on-read: the overlay supersede is a broadcast " +
       "anti-join (base never shuffled); the pure-base state reads as a " +
       "plain scan with no join at all") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-planshape-split").resolve("r").toString
+    val tmp = tempDir("graft-planshape-split").resolve("r").toString
     val text = (0 until 60).map(t => s"a$t").mkString(" ")
     graft.ext.SplitIndex.create(
       Seq((0L, text), (1L, text), (2L, "b " * 60)).toDF("doc_id", "text"),

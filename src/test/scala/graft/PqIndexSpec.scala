@@ -14,8 +14,7 @@ class PqIndexSpec extends SparkSpec {
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   private def freshRoot(tag: String): String = {
-    val p = java.nio.file.Files
-      .createTempDirectory(s"graft_pqindex_$tag").toString
+    val p = tempDir(s"graft_pqindex_$tag").toString
     new java.io.File(p).delete() // VersionedTable owns creation
     p
   }

@@ -10,7 +10,7 @@ class RunLogPreviewSpec extends SparkSpec {
   import spark.implicits._
 
   test("run log: buffer, levels, one-object push, overwrite on re-push") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_runlog")
+    val dir = tempDir("graft_runlog")
     val path = dir.resolve("run.log").toString
     val log = RunLog(spark, path)
     log.info("extract started")
@@ -37,7 +37,7 @@ class RunLogPreviewSpec extends SparkSpec {
   }
 
   test("query logging: completed actions land in the log automatically") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_runlog2")
+    val dir = tempDir("graft_runlog2")
     val log = RunLog(spark, dir.resolve("run.log").toString)
       .attachQueryLogging()
     // listener delivery is async — poll for the line

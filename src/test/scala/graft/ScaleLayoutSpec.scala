@@ -245,7 +245,7 @@ class ScaleLayoutSpec extends SparkSpec {
   // ---- layout cache correctness -----------------------------------------
 
   test("regenerated source invalidates the cached layout (fingerprint)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp").toString
+    val dir = tempDir("graft-fp").toString
     spark.range(10).selectExpr("id AS k", "id * 2 AS v")
       .write.parquet(s"$dir/orders.parquet")
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)
@@ -259,7 +259,7 @@ class ScaleLayoutSpec extends SparkSpec {
   }
 
   test("catalog entry whose files vanished re-materializes, not FNF") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gone").toString
+    val dir = tempDir("graft-gone").toString
     spark.range(12).selectExpr("id AS k", "id AS v")
       .write.parquet(s"$dir/orders.parquet")
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)

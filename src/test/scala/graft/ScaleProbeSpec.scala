@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
@@ -16,7 +14,7 @@ class ScaleProbeSpec extends SparkSpec {
 
   private val base = "/root/testdata/sf0.001"
   private lazy val out: String = {
-    val dir = Files.createTempDirectory("scaleprobe-spec").toString
+    val dir = tempDir("scaleprobe-spec").toString
     ScaleProbe.generate(spark, base, dir, k = 2)
     dir
   }

@@ -64,17 +64,4 @@ class ScdSpec extends SparkSpec {
       (5L, "bronze", None, Some(d("2023-01-01"))),          // closed, kept
       (5L, "gold", Some(d("2023-01-01")), None)))           // new version
   }
-
-  test("point-in-time and current slices select the right versions") {
-    val out = Scd.scd2Merge(dim, updates, Seq("id"), Seq("tier"),
-      asOf = lit("2023-01-01").cast("date"))
-    val current = Scd.currentSlice(out)
-      .select("id", "tier").as[(Long, String)].collect().toSet
-    assert(current === Set((1L, "silver"), (2L, "gold"), (3L, "gold"),
-      (4L, "silver")))
-    // as of mid-2021: key 1 still gold, key 2 bronze, key 3 gold; 4 absent
-    val at = Scd.asOfSlice(out, lit("2021-07-01").cast("date"))
-      .select("id", "tier").as[(Long, String)].collect().toSet
-    assert(at === Set((1L, "gold"), (2L, "bronze"), (3L, "gold")))
-  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import graft.sources.{SchemaCanary, Tables}
 
@@ -28,8 +27,7 @@ class SchemaCanarySpec extends SparkSpec {
 
   test("a doctored string ts fails with the table and column named") {
     assume(new java.io.File(sfDir).isDirectory)
-    val tmp = Files.createTempDirectory("canary").toFile
-    tmp.deleteOnExit()
+    val tmp = tempDir("canary").toFile
     // copy the real tables' paths is unnecessary: point the canary at a dir
     // holding only a doctored events table; the other tables report
     // unreadable (also named), and the events.ts row carries the type error.

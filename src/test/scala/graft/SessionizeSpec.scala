@@ -33,7 +33,7 @@ class SessionizeSpec extends SparkSpec {
     val input = MemoryStream[SessionEvent]
     val sessions = StreamingSessions.sessionize(
       input.toDS(), gapSeconds = 1800, watermark = "0 seconds")
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-sess").toString
+    val ckpt = tempDir("ckpt-sess").toString
     val q = sessions.writeStream.format("memory").queryName("sess_out")
       .option("checkpointLocation", ckpt).outputMode("append").start()
 

@@ -16,7 +16,7 @@ class SourcesSpec extends SparkSpec {
   private val schema = StructType.fromDDL("id BIGINT, name STRING")
 
   test("S1 csv scan with explicit schema reads headers and skips empty files") {
-    val dir = Files.createTempDirectory("csv-src")
+    val dir = tempDir("csv-src")
     Files.writeString(dir.resolve("a.csv"), "id,name\n1,x\n2,y\n")
     Files.writeString(dir.resolve("empty.csv"), "")
     val df = Tables.csv(spark, schema, dir.toString + "/*.csv")
@@ -25,7 +25,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S3 modifiedAfter prunes files by mtime (the reference's 2h window)") {
-    val dir = Files.createTempDirectory("csv-mtime")
+    val dir = tempDir("csv-mtime")
     val old = dir.resolve("old.csv")
     Files.writeString(old, "id,name\n1,old\n")
     Files.setLastModifiedTime(old,
@@ -47,7 +47,7 @@ class SourcesSpec extends SparkSpec {
     * holds glob metacharacters that, read as a pattern, match another
     * fresh file (`fresh[4].csv` matches `fresh4.csv`). */
   private def landing(): java.nio.file.Path = {
-    val dir = Files.createTempDirectory("csv-landing")
+    val dir = tempDir("csv-landing")
     val stale = FileTime.fromMillis(System.currentTimeMillis() - 48L * 3600 * 1000)
     (0 until 35).foreach { i =>
       val f = dir.resolve(f"old$i%02d.csv")
@@ -118,7 +118,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S2 hidden and empty files are skipped, as by a plain read") {
-    val dir = Files.createTempDirectory("csv-hidden")
+    val dir = tempDir("csv-hidden")
     Files.writeString(dir.resolve("a.csv"), "id,name\n1,x\n")
     Files.writeString(dir.resolve("_meta.csv"), "id,name\n2,meta\n")
     Files.writeString(dir.resolve(".hidden.csv"), "id,name\n3,hidden\n")
@@ -131,7 +131,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("P1 lineage column carries the source file path") {
-    val dir = Files.createTempDirectory("csv-lineage")
+    val dir = tempDir("csv-lineage")
     Files.writeString(dir.resolve("part1.csv"), "id,name\n1,x\n")
     val df = Tables.withLineage(Tables.csv(spark, schema, dir.toString + "/*.csv"))
     val src = df.select("source_file").collect().head.getString(0)
@@ -140,7 +140,7 @@ class SourcesSpec extends SparkSpec {
 
   test("S4/S5 sinks round-trip: singleCsv and json") {
     import spark.implicits._
-    val out = Files.createTempDirectory("sink-out")
+    val out = tempDir("sink-out")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     Sinks.singleCsv(df, out.resolve("csv").toString)
     val back = spark.read.schema(schema).option("header", "true")
@@ -159,7 +159,7 @@ class PartitionPruningSpec extends SparkSpec {
   import spark.implicits._
 
   test("partitionBy write + partition-selective read prunes at the scan") {
-    val out = java.nio.file.Files.createTempDirectory("part-events").toString
+    val out = tempDir("part-events").toString
     val df = (0 until 1000).map(i =>
       (i.toLong, s"u$i", if (i % 3 == 0) "view" else if (i % 3 == 1) "click"
         else "purchase")).toDF("event_id", "user_id", "event_type")
@@ -190,7 +190,7 @@ class PartitionPruningSpec extends SparkSpec {
 class MalformedRecordsSpec extends SparkSpec {
 
   private def writeBad(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("csv-bad")
+    val dir = tempDir("csv-bad")
     java.nio.file.Files.writeString(dir.resolve("data.csv"),
       "id,value\n1,10.5\nnot_a_number,oops,extra\n3,30.0\n")
     dir.toString
@@ -251,7 +251,7 @@ class ClusteredWriteSpec extends SparkSpec {
   test("range-partitioned sorted write yields disjoint per-file key ranges") {
     val df = (0 until 10000).map(i => ((i * 7919) % 10000, s"v$i"))
       .toDF("k", "v")
-    val out = java.nio.file.Files.createTempDirectory("clustered").toString
+    val out = tempDir("clustered").toString
     df.repartitionByRange(8, $"k").sortWithinPartitions($"k")
       .write.mode("overwrite").parquet(out)
     val files = new java.io.File(out).listFiles()
@@ -275,7 +275,7 @@ class ClusteredWriteSpec extends SparkSpec {
     // footer-statistics pushdown included (spark-sql bundles ORC)
     val src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
-    val out = java.nio.file.Files.createTempDirectory("orc-rt").toString + "/t"
+    val out = tempDir("orc-rt").toString + "/t"
     src.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
     assert(back.schema === src.schema)

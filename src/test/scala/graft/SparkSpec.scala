@@ -1,20 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs, built by the same [[GraftSession]]
   * factory as Verify/Bench (UTC, nanos-as-long for the events table,
   * bucketed layout reads) on 2 threads and 2 shuffle partitions, so a
-  * spec session cannot drift from theirs. */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * spec session cannot drift from theirs. The session is shared across
+  * suites and never stopped (JVM exit ends it); each suite's
+  * [[TempDirs]] are deleted after its last test. */
+trait SparkSpec extends AnyFunSuite with TempDirs {
   // arm the debug contract check in top_k_by(distinctIds): any suite
   // exercising it through a caller that feeds an id differing values
   // fails loudly instead of silently getting best-value-per-id
   System.setProperty("graft.topk.checkDistinctContract", "true")
 
   lazy val spark: SparkSession = GraftSession(cpus = 2)
-
-  override def afterAll(): Unit = () // shared across suites; JVM exit cleans up
 }

@@ -12,7 +12,7 @@ class SplitIndexSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-splitidx-$tag")
+    tempDir(s"graft-splitidx-$tag")
       .resolve("root").toString
 
   // near-dup fixture: groups of docs sharing a 60-token text (identical

@@ -16,8 +16,7 @@ class StreamingDecontaminationSpec extends SparkSpec {
   import spark.implicits._
 
   private val K = 3
-  private def tmp(prefix: String) = java.nio.file.Files
-    .createTempDirectory(prefix).resolve("t").toString
+  private def tmp(prefix: String) = tempDir(prefix).resolve("t").toString
 
   private val batch1 = Seq(
     (1L, "a b c d e f"),

@@ -18,7 +18,7 @@ class StreamingEwmaSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EwmaInput]
     val out = StreamingEwma.smoothed(input.toDS())
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-ewma").toString
+    val ckpt = tempDir("ckpt-ewma").toString
     val q = out.writeStream.format("memory").queryName("ewma_out")
       .option("checkpointLocation", ckpt).outputMode("append").start()
 
@@ -66,7 +66,7 @@ class StreamingEwmaSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EwmaInput]
     val out = StreamingEwma.smoothed(input.toDS())
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-ewma2").toString
+    val ckpt = tempDir("ckpt-ewma2").toString
     val q = out.writeStream.format("memory").queryName("ewma_out2")
       .option("checkpointLocation", ckpt).outputMode("append").start()
     try {

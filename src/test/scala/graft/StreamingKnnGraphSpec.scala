@@ -20,7 +20,7 @@ class StreamingKnnGraphSpec extends SparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+    tempDir(prefix).resolve("t").toString
 
   private def bootstrap(graphRoot: String, corpusRoot: String,
                         seedMax: Long): Unit = {

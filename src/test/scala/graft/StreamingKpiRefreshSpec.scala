@@ -26,7 +26,7 @@ class StreamingKpiRefreshSpec extends SparkSpec {
 
   test("per-batch incremental KPI refresh == full recompute at every boundary") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_skpi")
+    val base = tempDir("graft_skpi")
     val factsRoot = base.resolve("facts").toString
     val kpiRoot = base.resolve("kpis").toString
     val ckpt = base.resolve("ckpt").toString
@@ -43,12 +43,13 @@ class StreamingKpiRefreshSpec extends SparkSpec {
           if (VersionedTable.versions(spark, kpiRoot).isEmpty) {
             VersionedTable.commit(kpiOf(batch), kpiRoot)
           } else {
-            IncrementalKpis.incrementalKpiRefresh(kpiRoot,
-              IncrementalKpis.appendOnlyDiff(batch, Seq("fid")),
-              factGroupCols = Seq("cat"), toKpiGroups = identity,
-              recompute = groups => kpiOf(
-                facts.join(broadcast(groups), Seq("cat"), "left_semi")),
-              kpiGroupCols = Seq("cat"))
+            val affected = IncrementalKpis.affectedGroups(
+              IncrementalKpis.appendOnlyDiff(batch, Seq("fid")), Seq("cat"))
+            val recomputed = kpiOf(
+              facts.join(broadcast(affected), Seq("cat"), "left_semi"))
+            VersionedTable.commit(IncrementalKpis.refresh(
+              VersionedTable.read(spark, kpiRoot), recomputed, affected,
+              Seq("cat")), kpiRoot)
           }
           ()
         }

@@ -14,7 +14,7 @@ class StreamingLexicalScreenSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+    tempDir(prefix).resolve("t").toString
 
   private def evalDocs = Seq(
     (0L, "alpha beta gamma delta epsilon zeta"),

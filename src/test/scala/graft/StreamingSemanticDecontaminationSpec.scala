@@ -19,7 +19,7 @@ class StreamingSemanticDecontaminationSpec extends SparkSpec {
     .parquet("/root/testdata/sf0.001/embeddings.parquet")
 
   private def tmp(prefix: String) = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+    val p = tempDir(prefix)
       .resolve("t").toString
     p
   }

@@ -1,60 +1,16 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.functions.SketchAggregates
 import graft.streaming.StreamingKpis
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
-  test("watermark dedup drops re-delivered events within the horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type")
-    val deduped = StreamingKpis.dedupWithWatermark(events, "ts",
-      Seq("user_id", "ts"))
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .option("checkpointLocation", tmp("ckpt-dedup")).outputMode("append")
-      .start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    input.addData((t0, 1L, "view"), (t0, 1L, "view"), (t0, 2L, "click"))
-    q.processAllAvailable()
-    input.addData((t0, 1L, "view")) // re-delivery in a later micro-batch
-    q.processAllAvailable()
-    val n = spark.sql("SELECT count(*) FROM dedup_out").as[Long].head()
-    q.stop()
-    assert(n === 2)
-  }
-
-  test("streaming fingerprint dedup drops same-content re-crawls only") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val docs = input.toDF().toDF("ts", "doc_id", "text")
-    val deduped = StreamingKpis.dedupDocsByFingerprint(docs, "ts")
-    val q = deduped.writeStream.format("memory").queryName("docdedup_out")
-      .option("checkpointLocation", tmp("ckpt-docdedup")).outputMode("append")
-      .start()
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
-    input.addData(
-      (t0, 1L, "the quick fox"),
-      (t0, 2L, "The  quick   FOX"), // same canonical content -> dropped
-      (t0, 3L, "something else"))
-    q.processAllAvailable()
-    input.addData((t0, 4L, "the quick fox")) // re-crawl, later micro-batch
-    q.processAllAvailable()
-    val kept = spark.sql("SELECT doc_id FROM docdedup_out").as[Long]
-      .collect().toSet
-    q.stop()
-    assert(kept.size === 2)
-    assert(kept.contains(3L))
-    assert(kept.intersect(Set(1L, 2L)).size === 1) // one survivor per content
-  }
+    tempDir(prefix).toString
 
   test("windowed KPIs bucket by calendar hour with bounded state") {
     implicit val sqlCtx = spark.sqlContext
@@ -83,8 +39,14 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String)]
     val events = input.toDF().toDF("ts", "event_type")
-    val hh = StreamingKpis.windowedHeavyHitters(events, "ts", "event_type",
-      capacity = 8)
+    // the Misra-Gries aggregate inside a watermarked window: the state
+    // store persists its fixed capacity-entry buffer between triggers
+    val hh = events.withWatermark("ts", "2 hours")
+      .groupBy(window(col("ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("n_events"),
+        SketchAggregates.freqItems(col("event_type"), 8).as("top_items"))
+      .select(col("w.start").as("window_start"), col("n_events"),
+        col("top_items"))
     val q = hh.writeStream.format("memory").queryName("hh_out")
       .option("checkpointLocation", tmp("ckpt-hh")).outputMode("update")
       .start()
@@ -109,129 +71,5 @@ class StreamingSpec extends SparkSpec {
       assert(items.head === (("view", 10L)), s"items: $items")
       assert(items.contains(("click", 2L)), s"items: $items")
     } finally q.stop()
-  }
-
-  test("chained dedup -> windowed KPIs shares one watermark (no redefinition)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val events = input.toDF().toDF("ts", "user_id", "event_type")
-    val kpis = StreamingKpis.dedupedHourlyKpis(events, "ts", "user_id",
-      Seq("user_id", "ts"))
-    val q = kpis.writeStream.format("memory").queryName("chained_out")
-      .option("checkpointLocation", tmp("ckpt-chain")).outputMode("update")
-      .start()
-    val t = java.sql.Timestamp.valueOf("2024-01-01 10:05:00")
-    input.addData((t, 1L, "view"), (t, 1L, "view"), // dup collapses
-      (java.sql.Timestamp.valueOf("2024-01-01 10:30:00"), 2L, "click"))
-    q.processAllAvailable()
-    val r = spark.sql("SELECT n_events FROM chained_out").as[Long].collect()
-    q.stop()
-    assert(r.toSeq === Seq(2)) // 3 raw - 1 dup, single 10:00 window
-  }
-
-  test("streaming file source + foreachBatch upsert lands rows idempotently") {
-    val dir = tmp("stream-src")
-    val ckpt = tmp("ckpt-upsert")
-    Files.writeString(java.nio.file.Path.of(dir, "batch1.csv"),
-      "ts,user_id,event_type\n2024-01-01 10:05:00,1,view\n2024-01-01 10:06:00,2,click\n")
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ts TIMESTAMP, user_id BIGINT, event_type STRING")
-    val stream = StreamingKpis.readCsvStream(spark, schema, dir + "/*.csv")
-    val kpis = StreamingKpis.hourlyWindowedKpis(stream, "ts", "user_id")
-      .withColumn("load_date", to_date(col("hour_start")))
-    val sink = graft.sources.JdbcUpsertSink("jdbc:derby:memory:streamdb;create=true")
-    sink.ensureTable(
-      """CREATE TABLE hourly_kpis (
-         "hour_start" TIMESTAMP NOT NULL,
-         "n_events" BIGINT, "approx_unique_users" BIGINT,
-         "load_date" DATE NOT NULL)""", "hourly_kpis")
-    val q = StreamingKpis.toUpsertSink(kpis, sink, "hourly_kpis",
-      Seq("hour_start"), "load_date", ckpt).start()
-    q.awaitTermination(60000)
-    assert(sink.countWhere("hourly_kpis", "1=1") === 1)
-    assert(sink.countWhere("hourly_kpis", "\"n_events\" = 2") === 1)
-  }
-}
-
-class StreamingJoinSpec extends SparkSpec {
-  import spark.implicits._
-  import graft.streaming.StreamingJoins
-
-  test("watermarked interval join attributes purchases to preceding clicks") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, java.sql.Timestamp)]
-    val c = clicks.toDF().toDF("c_user", "click_ts")
-    val p = purchases.toDF().toDF("p_user", "purch_ts")
-    val joined = StreamingJoins.intervalJoin(
-      p, "purch_ts", c, "click_ts",
-      col("p_user") === col("c_user"), maxDelay = "10 minutes",
-      watermark = "30 minutes")
-    val q = joined.writeStream.format("memory").queryName("attr_out")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt-join").toString)
-      .outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    clicks.addData(
-      (1L, ts("2024-01-01 10:00:00")),  // 5 min before u1's purchase -> match
-      (1L, ts("2024-01-01 09:30:00")),  // 35 min before -> outside window
-      (2L, ts("2024-01-01 10:02:00")))  // u2 never purchases
-    purchases.addData(
-      (1L, ts("2024-01-01 10:05:00")),
-      (3L, ts("2024-01-01 10:06:00")))  // u3 never clicked
-    q.processAllAvailable()
-    // a second micro-batch joins against clicks buffered from the first
-    purchases.addData((2L, ts("2024-01-01 10:08:00")))
-    q.processAllAvailable()
-    val rows = spark.sql(
-      "SELECT p_user, click_ts FROM attr_out ORDER BY p_user").collect()
-    q.stop()
-    assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 2L))
-    assert(rows(0).getTimestamp(1) === ts("2024-01-01 10:00:00"))
-    assert(rows(1).getTimestamp(1) === ts("2024-01-01 10:02:00"))
-  }
-
-  test("left-outer interval join: no-match rows emit only after watermark") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, java.sql.Timestamp)]
-    val purchases = MemoryStream[(Long, java.sql.Timestamp)]
-    val joined = StreamingJoins.intervalJoinLeftOuter(
-      purchases.toDF().toDF("p_user", "purch_ts"), "purch_ts",
-      clicks.toDF().toDF("c_user", "click_ts"), "click_ts",
-      col("p_user") === col("c_user"), maxDelay = "10 minutes",
-      watermark = "10 minutes")
-    val q = joined.writeStream.format("memory").queryName("attr_outer")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt-ojoin").toString)
-      .outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    clicks.addData((1L, ts("2024-01-01 10:00:00")))
-    purchases.addData(
-      (1L, ts("2024-01-01 10:05:00")),  // matched -> emits promptly
-      (3L, ts("2024-01-01 10:06:00")))  // organic: no click ever
-    q.processAllAvailable()
-    val prompt = spark.sql("SELECT p_user FROM attr_outer").collect()
-      .map(_.getLong(0)).toSeq
-    // the match is out; the no-match row MUST NOT be out yet — its
-    // click could still arrive within the interval
-    assert(prompt === Seq(1L))
-    // advance event time far past u3's interval end on BOTH inputs —
-    // the global watermark is the MIN across streams, so a stalled
-    // purchases side would hold every no-match row forever; the extra
-    // cycle lets the new watermark take effect on the next batch
-    clicks.addData((9L, ts("2024-01-01 11:00:00")))
-    purchases.addData((8L, ts("2024-01-01 11:00:00")))
-    q.processAllAvailable()
-    clicks.addData((9L, ts("2024-01-01 11:30:00")))
-    purchases.addData((8L, ts("2024-01-01 11:30:00")))
-    q.processAllAvailable()
-    val all = spark.sql(
-      "SELECT p_user, click_ts FROM attr_outer ORDER BY p_user").collect()
-    q.stop()
-    // u3 and the first u8 purchase (11:00 < the 11:20 watermark) have
-    // provably no match -> null-padded; the 11:30 u8 row stays buffered
-    assert(all.map(_.getLong(0)).toSeq === Seq(1L, 3L, 8L))
-    assert(all(1).isNullAt(1) && all(2).isNullAt(1),
-      "organic purchases must be null-padded")
   }
 }

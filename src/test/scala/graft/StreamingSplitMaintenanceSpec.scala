@@ -16,7 +16,7 @@ class StreamingSplitMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-ssm-$tag")
+    tempDir(s"graft-ssm-$tag")
       .resolve("t").toString
 
   private def text(tag: String) = (0 until 60).map(t => s"$tag$t")

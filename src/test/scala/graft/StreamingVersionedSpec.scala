@@ -5,7 +5,6 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.SnapshotDiff
 import graft.sources.VersionedTable
-import graft.streaming.StreamingVersioned
 
 /** The full loop closed: streaming snapshots commit as table VERSIONS
   * (manifest per trigger), and CDC runs off the table's own history —
@@ -17,10 +16,10 @@ class StreamingVersionedSpec extends SparkSpec {
 
   test("per-trigger commits version the stream; history diff is the CDC") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_svt")
+    val root = tempDir("graft_svt")
       .resolve("tbl").toString
     val input = MemoryStream[(Long, String, Double)]
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-svt").toString
+    val ckpt = tempDir("ckpt-svt").toString
     val q = input.toDF().toDF("id", "seg", "bal").writeStream
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(0))
@@ -40,52 +39,6 @@ class StreamingVersionedSpec extends SparkSpec {
           VersionedTable.read(spark, root, Some(2L)), Seq("id"))
         .select("id", "diff_status").as[(Long, String)].collect().toMap
       assert(d === Map(2L -> "changed", 3L -> "removed", 4L -> "added"))
-    } finally q.stop()
-  }
-
-  test("CDC change batches commit as versions; time travel hits every batch boundary") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_svc")
-      .resolve("tbl").toString
-    val input = MemoryStream[(Long, String, Boolean)]
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt-svc").toString
-    val committed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = StreamingVersioned.cdcCommitWriter(
-      input.toDF().toDF("id", "seg", "_deleted"), root, Seq("id"), ckpt,
-      onCommit = (b, v) => committed.synchronized { committed += ((b, v)) },
-      trigger = Trigger.ProcessingTime(0)).start()
-    try {
-      def state(v: Long): Map[Long, String] =
-        VersionedTable.read(spark, root, Some(v))
-          .as[(Long, String)].collect().toMap
-      // batch 1: three inserts
-      input.addData((1L, "A", false), (2L, "A", false), (3L, "B", false))
-      q.processAllAvailable()
-      // batch 2: update 2, delete 3, insert 4
-      input.addData((2L, "B", false), (3L, "", true), (4L, "C", false))
-      q.processAllAvailable()
-      // batch 3: delete 1
-      input.addData((1L, "", true))
-      q.processAllAvailable()
-      assert(VersionedTable.versions(spark, root) === Seq(1L, 2L, 3L))
-      // EVERY intermediate batch boundary reproduces via time travel
-      assert(state(1L) === Map(1L -> "A", 2L -> "A", 3L -> "B"))
-      assert(state(2L) === Map(1L -> "A", 2L -> "B", 4L -> "C"))
-      assert(state(3L) === Map(2L -> "B", 4L -> "C"))
-      // per-batch lineage: the diff between consecutive versions IS the
-      // batch's change set
-      val lineage = SnapshotDiff.diff(
-          VersionedTable.read(spark, root, Some(1L)),
-          VersionedTable.read(spark, root, Some(2L)),
-          Seq("id"), nullSafeKeys = false)
-        .select("id", "diff_status").as[(Long, String)].collect().toMap
-      assert(lineage === Map(2L -> "changed", 3L -> "removed", 4L -> "added"))
-      assert(committed.map(_._2).toSeq === Seq(1L, 2L, 3L))
-      // replaying an already-applied change set converges without
-      // minting a duplicate version (the foreachBatch retry story)
-      input.addData((1L, "", true)) // same change as batch 3
-      q.processAllAvailable()
-      assert(VersionedTable.versions(spark, root) === Seq(1L, 2L, 3L))
     } finally q.stop()
   }
 }

@@ -77,7 +77,7 @@ class TopKSpec extends SparkSpec {
       .select($"window.start".as("ws"), $"top")
       .writeStream.format("memory").queryName("topk_stream")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("ckpt-topk").toString)
+        tempDir("ckpt-topk").toString)
       .outputMode("update").start()
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     input.addData(

@@ -11,7 +11,7 @@ class TrainingShardsSpec extends SparkSpec {
 
   test("shuffledShardWrite: one file per shard, lossless, md5-ordered, stable") {
     val df = (0L until 2000L).map(i => (i, s"doc_$i")).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards")
+    val dir = tempDir("graft_shards")
       .resolve("out").toString
     TrainingShards.shuffledShardWrite(df, col("id"), nShards = 8, dir)
 
@@ -39,7 +39,7 @@ class TrainingShardsSpec extends SparkSpec {
     // the order is a real shuffle, not the input order
     assert(shard0 !== shard0.sorted)
     // bit-stable: a second write from a different layout is identical
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_shards2")
+    val dir2 = tempDir("graft_shards2")
       .resolve("out").toString
     TrainingShards.shuffledShardWrite(df.repartition(13), col("id"), 8, dir2)
     val back2 = spark.read.parquet(new java.io.File(dir2).listFiles()

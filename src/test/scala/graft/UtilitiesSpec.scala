@@ -10,8 +10,8 @@ import graft.sources.Archive
 
 class ArchiveSpec extends SparkSpec {
   test("S10 moveMatching relocates matching files, tolerates missing dirs") {
-    val src = Files.createTempDirectory("arch-src")
-    val dst = src.resolveSibling(src.getFileName.toString + "-dst")
+    val src = tempDir("arch-src")
+    val dst = tempDir("arch-dst").resolve("archive")
     Files.writeString(src.resolve("a.csv"), "x")
     Files.writeString(src.resolve("b.csv"), "y")
     Files.writeString(src.resolve("keep.txt"), "z")
@@ -27,22 +27,24 @@ class ArchiveSpec extends SparkSpec {
   }
 
   test("moveMatching propagates a malformed glob instead of moving nothing") {
-    val src = Files.createTempDirectory("arch-bad-glob")
+    val src = tempDir("arch-bad-glob")
     Files.writeString(src.resolve("a.csv"), "x")
     assertThrows[java.io.IOException] {
-      Archive.moveMatching(spark, src.toString, src.toString + "-dst", "[")
+      Archive.moveMatching(spark, src.toString,
+        tempDir("arch-dst").resolve("archive").toString, "[")
     }
     assert(Files.exists(src.resolve("a.csv")))
   }
 
   test("moveMatching goes through the session's Hadoop conf") {
-    val src = Files.createTempDirectory("arch-session-conf")
+    val src = tempDir("arch-session-conf")
     Files.writeString(src.resolve("a.csv"), "x")
     val before = CountingLocalFs.renames.get
     spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
     spark.conf.set("fs.file.impl.disable.cache", "true")
     try {
-      val moved = Archive.moveMatching(spark, src.toString, src.toString + "-dst")
+      val moved = Archive.moveMatching(spark, src.toString,
+        tempDir("arch-dst").resolve("archive").toString)
       assert(moved.size === 1)
       assert(CountingLocalFs.renames.get - before === 1)
     } finally {
@@ -77,7 +79,8 @@ class SkewSpec extends SparkSpec {
       .orderBy($"k").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     val saltedN = Skew.saltedCount(df, Seq("k"), Seq("id"), salts = 8)
       .orderBy($"k").collect().map(r => (r.getInt(0), r.getLong(1)))
-    val saltedS = Skew.saltedSum(df, Seq("k"), "v", Seq("id"), salts = 8)
+    val saltedS = Skew.saltedAgg(df, Seq("k"), Seq("id"), salts = 8,
+        Seq(sum($"v").as("__s")), Seq(sum($"__s").as("total")))
       .orderBy($"k").collect().map(r => (r.getInt(0), r.getDouble(1)))
     assert(saltedN.toSeq === direct.map(t => (t._1, t._2)).toSeq)
     assert(saltedS.map(_._1).toSeq === direct.map(_._1).toSeq)

@@ -12,8 +12,7 @@ import graft.sources.{VersionedStats, VersionedTable}
 class VersionedStatsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp() = java.nio.file.Files
-    .createTempDirectory("graft_vstats").resolve("tbl").toString
+  private def tmp() = tempDir("graft_vstats").resolve("tbl").toString
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString

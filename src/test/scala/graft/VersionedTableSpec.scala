@@ -45,8 +45,7 @@ object FailingCloseFileSystem {
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshRoot() = java.nio.file.Files
-    .createTempDirectory("graft_vt").resolve("tbl").toString
+  private def freshRoot() = tempDir("graft_vt").resolve("tbl").toString
 
   test("commit / time travel / append / logical overwrite") {
     val root = freshRoot()
@@ -217,7 +216,7 @@ class VersionedTableSpec extends SparkSpec {
   }
 
   test("a manifest write that fails leaves no torn version behind") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vt_faulty")
+    val dir = tempDir("graft_vt_faulty")
     spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl",
       classOf[FailingCloseFileSystem].getName)
     val root = s"faulty://$dir/tbl"

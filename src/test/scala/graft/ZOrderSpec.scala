@@ -50,9 +50,10 @@ class ZOrderSpec extends SparkSpec {
     // skipping perform). 16 files per layout.
     val grid = for (a <- 0 until 64; b <- 0 until 64) yield (a.toLong, b.toLong)
     val df = grid.toDF("a", "b")
-    val zDir = java.nio.file.Files.createTempDirectory("z2d").toString
-    val aDir = java.nio.file.Files.createTempDirectory("a1d").toString
-    ZOrder.clusterByZOrder(df, $"a", $"b", bits = 6, numPartitions = 16)
+    val zDir = tempDir("z2d").toString
+    val aDir = tempDir("a1d").toString
+    df.withColumn("z", ZOrder.zorderCode2($"a", $"b", bits = 6))
+      .repartitionByRange(16, $"z").sortWithinPartitions($"z").drop("z")
       .write.mode("overwrite").parquet(zDir)
     df.repartitionByRange(16, $"a").sortWithinPartitions($"a")
       .write.mode("overwrite").parquet(aDir)
@@ -92,21 +93,5 @@ class ZOrderSpec extends SparkSpec {
     val ac = spark.read.parquet(aDir)
       .where($"a".between(0, 31) && $"b".between(0, 7)).count()
     assert(zc === ac && zc === 32L * 8)
-  }
-
-  test("clusterByZOrder writes files whose min/max bound both dims") {
-    val grid = for (a <- 0 until 32; b <- 0 until 32) yield (a.toLong, b.toLong)
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
-    ZOrder.clusterByZOrder(grid.toDF("a", "b"), $"a", $"b", bits = 5,
-        numPartitions = 16)
-      .write.mode("overwrite").parquet(dir)
-    // per-file spans via input_file_name: every file bounds both dims to
-    // a fraction of the 0..31 range
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-      .select(avg("sa"), avg("sb")).as[(Double, Double)].head()
-    assert(spans._1 <= 12.0, s"dim a not bounded per file: $spans")
-    assert(spans._2 <= 12.0, s"dim b not bounded per file: $spans")
   }
 }

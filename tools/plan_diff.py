@@ -18,6 +18,13 @@ expressions are compared, not the ids a run happens to draw:
 
 Lines the build tool prints (`[success] Total time: ...`) are dropped.
 
+One plan shape is put in a canonical form per row: the `Expand` that
+Spark's distinct-aggregate rewrite plans (its last output is `gid`) lists
+its distinct groups in an order that can change from one run to the next
+(`hourly_kpis_hod`'s two `countDistinct`s). The group columns are sorted
+by name in every list of the row, the projections are sorted, and the
+`gid` literals that select them are renumbered to match.
+
 It prints every row whose normalized plan differs (with a unified diff
 capped at --context lines), and the per-row counts of Exchange,
 BroadcastExchange, Generate, Window and join nodes for each such row
@@ -34,6 +41,8 @@ from collections import OrderedDict
 HEADER = re.compile(r"^===== (.+) =====$")
 NODE = re.compile(r"^\((\d+)\) (\w+)")
 TOOL_LINE = re.compile(r"^\[(success|info|warn|error)\] ")
+EXPAND = re.compile(r"^\(\d+\) Expand\b")
+EXPAND_ARGS = "Arguments: "
 
 SUBS = [
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_N"),
@@ -55,6 +64,77 @@ def normalize(line):
     return line.rstrip()
 
 
+def split_top(text):
+    """Split on the commas that sit outside any bracket."""
+    parts, depth, cur = [], 0, []
+    for ch in text:
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        if ch == "," and depth == 0:
+            parts.append("".join(cur).strip())
+            cur = []
+        else:
+            cur.append(ch)
+    parts.append("".join(cur).strip())
+    return parts
+
+
+def canonical_expand(lines):
+    """Canonical form of each distinct-aggregate `Expand` in one row's
+    normalized lines (see the module doc); other lines pass through."""
+    lines = list(lines)
+    for i, line in enumerate(lines):
+        if not EXPAND.match(line):
+            continue
+        j = next((k for k in range(i + 1, min(i + 4, len(lines)))
+                  if lines[k].startswith(EXPAND_ARGS + "[[")), None)
+        if j is None:
+            continue
+        top = split_top(lines[j][len(EXPAND_ARGS):])
+        if len(top) != 2:
+            continue
+        projs = [split_top(p[1:-1]) for p in split_top(top[0][1:-1])]
+        out = split_top(top[1][1:-1])
+        gid = out[-1]
+        if not gid.startswith("gid#") or any(len(p) != len(out) for p in projs):
+            continue
+        try:
+            gids = sorted(int(p[-1]) for p in projs)
+        except ValueError:
+            continue
+        # the group columns (null in some projection), re-slotted by name
+        slots = [k for k in range(len(out) - 1)
+                 if any(p[k] == "null" for p in projs)]
+        by_name = sorted(slots, key=lambda k: out[k])
+
+        def reslot(items):
+            items = list(items)
+            moved = [items[k] for k in by_name]
+            for k, item in zip(slots, moved):
+                items[k] = item
+            return items
+
+        projs = sorted((reslot(p) for p in projs), key=lambda p: p[:-1])
+        renumber = {}
+        for p, g in zip(projs, gids):
+            renumber[p[-1]] = str(g)
+            p[-1] = str(g)
+        old_seq = ", ".join(out[k] for k in slots)
+        new_seq = ", ".join(out[k] for k in by_name)
+        lit = re.compile(r"(%s = )(\d+)\b" % re.escape(gid))
+        for k in range(len(lines)):
+            if k != j:
+                lines[k] = lit.sub(
+                    lambda m: m.group(1) + renumber.get(m.group(2), m.group(2)),
+                    lines[k].replace(old_seq, new_seq))
+        lines[j] = "%s[%s], [%s]" % (
+            EXPAND_ARGS, ", ".join("[%s]" % ", ".join(p) for p in projs),
+            ", ".join(reslot(out)))
+    return lines
+
+
 def split_rows(text):
     """Row name -> normalized plan lines, in dump order."""
     rows = OrderedDict()
@@ -68,7 +148,8 @@ def split_rows(text):
             rows[cur] = []
         elif cur is not None and not TOOL_LINE.match(raw):
             rows[cur].append(normalize(raw))
-    return rows
+    return OrderedDict((name, canonical_expand(lines))
+                       for name, lines in rows.items())
 
 
 def node_counts(lines):

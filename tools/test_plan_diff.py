@@ -64,6 +64,42 @@ Arguments: graft.ext.Multimodal$$$Lambda$6834/0x00007fbd2180a9e8@1c2b3a4d
 [success] Total time: 129 s (02:09), completed Oct 19, 2026, 8:49:52 AM
 """
 
+# hourly_kpis_hod's distinct-aggregate Expand as one run plans it (from a
+# `graft.Probe explain` dump), and as another run of the same commit
+# plans it: the two distinct groups, the columns that carry them and the
+# gid literals that select them in the other order
+HOD_V_FIRST = """
+===== hourly_kpis_hod =====
+(4) Expand
+Input [3]: [hour#4822, __u#4823L, __v#4824]
+Arguments: [[hour#4822, null, null, 0], [hour#4822, __v#4824, null, 1], [hour#4822, null, __u#4823L, 2]], [hour#4822, __v#4853, __u#4854L, gid#4852]
+
+(6) Exchange
+Input [5]: [hour#4822, __v#4853, __u#4854L, gid#4852, count#4866L]
+Arguments: hashpartitioning(hour#4822, __v#4853, __u#4854L, gid#4852, 4), ENSURE_REQUIREMENTS, [plan_id=13736]
+
+(8) HashAggregate
+Input [5]: [hour#4822, __v#4853, __u#4854L, gid#4852, count(1)#4855L]
+Keys [1]: [hour#4822]
+Functions [3]: [partial_count(__u#4854L) FILTER (WHERE (gid#4852 = 2)), partial_count(__v#4853) FILTER (WHERE (gid#4852 = 1)), partial_first(count(1)#4855L, true) FILTER (WHERE (gid#4852 = 0))]
+"""
+
+HOD_U_FIRST = """
+===== hourly_kpis_hod =====
+(4) Expand
+Input [3]: [hour#91, __u#92L, __v#93]
+Arguments: [[hour#91, null, null, 0], [hour#91, __u#92L, null, 1], [hour#91, null, __v#93, 2]], [hour#91, __u#95L, __v#96, gid#94]
+
+(6) Exchange
+Input [5]: [hour#91, __u#95L, __v#96, gid#94, count#97L]
+Arguments: hashpartitioning(hour#91, __u#95L, __v#96, gid#94, 4), ENSURE_REQUIREMENTS, [plan_id=120]
+
+(8) HashAggregate
+Input [5]: [hour#91, __u#95L, __v#96, gid#94, count(1)#98L]
+Keys [1]: [hour#91]
+Functions [3]: [partial_count(__u#95L) FILTER (WHERE (gid#94 = 1)), partial_count(__v#96) FILTER (WHERE (gid#94 = 2)), partial_first(count(1)#98L, true) FILTER (WHERE (gid#94 = 0))]
+"""
+
 
 class PlanDiffTest(unittest.TestCase):
 
@@ -92,6 +128,27 @@ class PlanDiffTest(unittest.TestCase):
         plan_diff.compare(BEFORE, BEFORE.replace("(2) Window", "(2) Sort"),
                           out=out)
         self.assertIn("node counts changed in 1: knn_lsh", out.getvalue())
+
+    def test_distinct_group_order_is_canonical(self):
+        self.assertEqual(
+            plan_diff.compare(HOD_V_FIRST, HOD_U_FIRST, out=io.StringIO()), 0)
+        rows = plan_diff.split_rows(HOD_U_FIRST)["hourly_kpis_hod"]
+        self.assertIn("Arguments: [[hour#N, __u#NL, null, 0], "
+                      "[hour#N, null, __v#N, 1], [hour#N, null, null, 2]], "
+                      "[hour#N, __u#NL, __v#N, gid#N]", rows)
+
+    def test_a_changed_distinct_column_still_differs(self):
+        # the second distinct group counts another column (__w, not __v)
+        changed = HOD_U_FIRST.replace("__v#", "__w#")
+        out = io.StringIO()
+        self.assertEqual(plan_diff.compare(HOD_V_FIRST, changed, out=out), 1)
+        self.assertIn("ROW hourly_kpis_hod: plan differs", out.getvalue())
+        # and so does a swap of the gid that selects each group
+        swapped = HOD_U_FIRST.replace("(gid#94 = 1)", "(gid#94 = X)") \
+            .replace("(gid#94 = 2)", "(gid#94 = 1)") \
+            .replace("(gid#94 = X)", "(gid#94 = 2)")
+        self.assertEqual(
+            plan_diff.compare(HOD_V_FIRST, swapped, out=io.StringIO()), 1)
 
     def test_normalize(self):
         self.assertEqual(
