@@ -38,17 +38,15 @@ object ImportanceSampling {
     * Bigrams join tokens with a single space; the token array is
     * materialized per row before element reads (the HOF re-evaluation
     * trap, cf. [[Bpe]]), and `sequence(1, size-1)` is guarded by
-    * `size >= 2` — Spark sequences step backwards when start > stop. */
-  def hashedNgramCounts(docs: DataFrame, dim: Int): DataFrame =
-    hashedNgramCountsCarrying(docs, dim, Nil)
-
-  /** [[hashedNgramCounts]] with extra doc-level columns CARRIED through
-    * the grouped aggregate (each must be functionally dependent on
-    * doc_id — e.g. a target-domain flag): grouping by (doc_id, carry,
-    * bucket) yields exactly the (doc_id, bucket) groups with the carried
-    * columns riding along, so a consumer needing them reads the grouped
-    * frame directly instead of re-attaching them with a corpus-keyed
-    * join over the postings-sized rows (guide §2.4). */
+    * `size >= 2` — Spark sequences step backwards when start > stop.
+    *
+    * Extra doc-level columns `carry` ride through the grouped aggregate
+    * (each must be functionally dependent on doc_id — e.g. a
+    * target-domain flag): grouping by (doc_id, carry, bucket) yields
+    * exactly the (doc_id, bucket) groups with the carried columns riding
+    * along, so a consumer needing them reads the grouped frame directly
+    * instead of re-attaching them with a corpus-keyed join over the
+    * postings-sized rows (guide §2.4). */
   private def hashedNgramCountsCarrying(docs: DataFrame, dim: Int,
                                         carry: Seq[String]): DataFrame = {
     require(dim >= 2, s"unreasonable feature dim: $dim")

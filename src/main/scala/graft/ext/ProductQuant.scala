@@ -87,10 +87,8 @@ object ProductQuant {
 
   /** Per-subspace Lloyd codebooks over the hash-ordered bounded sample.
     * Returns codebooks(sub)(code)(d): m subspaces × ksub centroids ×
-    * (dim/m) dims, fit on L2-normalized vectors. Same Lloyd discipline
-    * as [[Similarity.ivfFit]]: evenly-spaced init over the hash-ordered
-    * sample, first-index tie-breaks, empty cells keep their previous
-    * centroid, convergence = no centroid moved. */
+    * (dim/m) dims, fit on L2-normalized vectors by the same [[Lloyd]]
+    * loop as [[Similarity.ivfFit]]. */
   def pqFit(corpus: DataFrame, m: Int = 16, ksub: Int = 16, dim: Int = 64,
             seed: Long = 42L, maxIter: Int = 20): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
@@ -101,47 +99,16 @@ object ProductQuant {
     fitSubspaces(sampled, m, ksub, maxIter)
   }
 
-  /** The per-subspace Lloyd loop over an in-memory point set — shared by
-    * [[pqFit]] (raw normalized vectors) and [[pqFitIvf]] (coarse-cell
-    * residuals). Deterministic: evenly-spaced init, first-index
-    * tie-breaks, empty cells keep their centroid. */
+  /** One [[Lloyd]] fit per subspace over an in-memory point set — shared
+    * by [[pqFit]] (raw normalized vectors) and [[pqFitIvf]] (coarse-cell
+    * residuals). */
   private def fitSubspaces(sampled: Array[Array[Double]], m: Int, ksub: Int,
                            maxIter: Int): Array[Array[Array[Double]]] = {
     val dsub = sampled(0).length / m
     Array.tabulate(m) { s =>
       val off = s * dsub
       val pts = sampled.map(v => java.util.Arrays.copyOfRange(v, off, off + dsub))
-      var centroids = Array.tabulate(ksub)(i =>
-        pts((i.toLong * pts.length / ksub).toInt).clone())
-      var iter = 0
-      var moved = true
-      while (iter < maxIter && moved) {
-        val sums = Array.fill(ksub)(new Array[Double](dsub))
-        val counts = new Array[Long](ksub)
-        pts.foreach { p =>
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < ksub) {
-            var d = 0.0
-            var j = 0
-            while (j < dsub) { val t = p(j) - centroids(c)(j); d += t * t; j += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          var j = 0
-          while (j < dsub) { sums(best)(j) += p(j); j += 1 }
-          counts(best) += 1
-        }
-        val next = Array.tabulate(ksub) { c =>
-          if (counts(c) == 0) centroids(c) else sums(c).map(_ / counts(c))
-        }
-        moved = (0 until ksub).exists(c =>
-          !java.util.Arrays.equals(next(c), centroids(c)))
-        centroids = next
-        iter += 1
-      }
-      centroids
+      Lloyd.fit(pts, ksub, maxIter)
     }
   }
 
@@ -166,22 +133,6 @@ object ProductQuant {
     pqFit(corpus, m = 1, ksub = nlist, dim = dim, seed = seed,
       maxIter = maxIter)(0)
 
-  /** Nearest-coarse-centroid index (driver-side, for the fit sample). */
-  private def nearestCell(v: Array[Double],
-                          coarse: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < coarse.length) {
-      var d = 0.0
-      var j = 0
-      while (j < v.length) { val t = v(j) - coarse(c)(j); d += t * t; j += 1 }
-      if (d < bestD) { bestD = d; best = c }
-      c += 1
-    }
-    best
-  }
-
   /** Residual PQ codebooks for IVF-PQ (Jégou et al. §IV: encode
     * r = v̂ − c_cell, not v̂ — residuals concentrate near 0, so the same
     * code budget spends its resolution where the data actually is).
@@ -196,7 +147,7 @@ object ProductQuant {
     require(sampled.length >= ksub,
       s"need >= $ksub sample vectors to fit $ksub codes, got ${sampled.length}")
     val residuals = sampled.map { v =>
-      val c = coarse(nearestCell(v, coarse))
+      val c = coarse(Lloyd.nearest(v, coarse))
       Array.tabulate(v.length)(j => v(j) - c(j))
     }
     fitSubspaces(residuals, m, ksub, maxIter)

@@ -570,8 +570,8 @@ object Similarity {
     * distributed mllib jobs is pure scheduling overhead at every scale
     * (9.7 s vs ~0.1 s at sf0.1), and the corpus-side cost (one bounded
     * top-k scan) is unchanged. Deterministic by construction: hash-sorted
-    * sample (vec_id tie-break), evenly-spaced init, first-index
-    * tie-breaks, no RNG.
+    * sample (vec_id tie-break), then the [[Lloyd]] loop's evenly-spaced
+    * init and first-index tie-breaks, no RNG.
     *
     * nlist is HARD-CAPPED at [[IvfFitNlistCap]]: both the collected
     * sample (nlist × samplePerList rows) and the Lloyd cost
@@ -596,39 +596,7 @@ object Similarity {
       .limit(nlist * samplePerList)
       .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
     require(pts.length >= nlist, s"need >= $nlist sample vectors, got ${pts.length}")
-    val dim = pts(0).length
-    var centroids = Array.tabulate(nlist)(i =>
-      pts((i.toLong * pts.length / nlist).toInt).clone())
-    var iter = 0
-    var moved = true
-    while (iter < maxIter && moved) {
-      val sums = Array.fill(nlist)(new Array[Double](dim))
-      val counts = new Array[Long](nlist)
-      pts.foreach { p =>
-        var best = 0
-        var bestD = Double.MaxValue
-        var c = 0
-        while (c < nlist) {
-          var d = 0.0
-          var j = 0
-          while (j < dim) { val t = p(j) - centroids(c)(j); d += t * t; j += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        var j = 0
-        while (j < dim) { sums(best)(j) += p(j); j += 1 }
-        counts(best) += 1
-      }
-      val next = Array.tabulate(nlist) { c =>
-        if (counts(c) == 0) centroids(c) // empty list: keep previous centroid
-        else sums(c).map(_ / counts(c))
-      }
-      moved = (0 until nlist).exists(c =>
-        !java.util.Arrays.equals(next(c), centroids(c)))
-      centroids = next
-      iter += 1
-    }
-    centroids
+    Lloyd.fit(pts, nlist, maxIter)
   }
 
   /** Per-vector int8 quantization (absmax scaling — the standard 4x

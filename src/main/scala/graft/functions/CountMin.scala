@@ -1,14 +1,11 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -69,7 +66,7 @@ object CountMin {
 case class CmsSketch(child: Expression, depth: Int, width: Int,
                      mutableAggBufferOffset: Int = 0,
                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySum {
 
   override def children: Seq[Expression] = Seq(child)
 
@@ -79,8 +76,6 @@ case class CmsSketch(child: Expression, depth: Int, width: Int,
       s"cms_sketch expects string keys, got ${t.catalogString}")
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "cms_sketch"
 
   override def createAggregationBuffer(): Array[Long] =
@@ -97,29 +92,6 @@ case class CmsSketch(child: Expression, depth: Int, width: Int,
       d += 1
     }
     buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
   }
 
   override def withNewMutableAggBufferOffset(o: Int): CmsSketch =

@@ -1,15 +1,11 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** AGMS ("tug-of-war") sketch for JOIN-SIZE estimation (Alon, Gilbert,
   * Matias, Szegedy — the classic streaming estimator): counter i sums a
@@ -30,7 +26,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 case class AgmsSketch(child: Expression, counters: Int,
                       mutableAggBufferOffset: Int = 0,
                       inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySum {
 
   override def children: Seq[Expression] = Seq(child)
 
@@ -40,8 +36,6 @@ case class AgmsSketch(child: Expression, counters: Int,
       s"agms_sketch expects bigint keys, got ${t.catalogString}")
   }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "agms_sketch"
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](counters)
@@ -62,29 +56,6 @@ case class AgmsSketch(child: Expression, counters: Int,
       i += 1
     }
     buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) += b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    var i = 0
-    while (i < buf.length) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
   }
 
   override def withNewMutableAggBufferOffset(o: Int): AgmsSketch =

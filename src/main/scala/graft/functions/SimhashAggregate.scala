@@ -1,12 +1,9 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -18,15 +15,16 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * Custom aggregate rationale (SURVEY.md §7.4 escalation (b)): the
   * built-in form needs 64 SEPARATE aggregate expressions — 64 buffer
   * columns and 64 codegen'd shift/branch/sum updates per token row. This
-  * keeps ONE mutable long[64] buffer per group and votes all 64 bits in
-  * a tight JVM loop per row (measured ~2× on the simhash corpus scan,
-  * the bench's heaviest non-fixture query). Merge is element-wise add,
-  * so partial aggregation stays fully map-side combining.
+  * keeps ONE mutable long[65] buffer per group (64 votes, then the row
+  * count) and votes all 64 bits in a tight JVM loop per row (measured
+  * ~2× on the simhash corpus scan, the bench's heaviest non-fixture
+  * query). Merge is element-wise add, so partial aggregation stays
+  * fully map-side combining.
   */
 case class SimhashVotes(lo: Expression, hi: Expression,
                         mutableAggBufferOffset: Int = 0,
                         inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySum {
 
   override def children: Seq[Expression] = Seq(lo, hi)
 
@@ -70,12 +68,6 @@ case class SimhashVotes(lo: Expression, hi: Expression,
     buf
   }
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < 65) { a(i) += b(i); i += 1 }
-    a
-  }
-
   override def eval(buf: Array[Long]): Any =
     if (buf(64) == 0L) null
     else {
@@ -87,21 +79,6 @@ case class SimhashVotes(lo: Expression, hi: Expression,
       }
       sig
     }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(65 * 8)
-    var i = 0
-    while (i < 65) { bb.putLong(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](65)
-    var i = 0
-    while (i < 65) { out(i) = bb.getLong(); i += 1 }
-    out
-  }
 
   override def withNewMutableAggBufferOffset(o: Int): SimhashVotes =
     copy(mutableAggBufferOffset = o)

@@ -1,15 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Element-wise vector sum over an array<float> column — the aggregate a
   * centroid/IVF-training loop needs (`avg` = vec_sum / count).
@@ -19,8 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * an extra shuffle whose width is dim× the row count. This
   * TypedImperativeAggregate keeps ONE mutable double[dim] buffer per group
   * per partition (the same shape as mllib's aggregators), merges buffers
-  * across partitions, and never explodes. Buffer serde is a flat
-  * little-endian double array.
+  * across partitions, and never explodes.
   *
   * Null semantics: null arrays are ignored (like built-in sum); null
   * ELEMENTS are treated as 0. Result is null only for groups with no
@@ -30,29 +24,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 case class VectorSum(child: Expression,
                      mutableAggBufferOffset: Int = 0,
                      inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
+  extends DoubleArraySum {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"vec_sum expects array<float> or array<double>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "vec_sum"
-
-  // lazy: the constructor also runs on UNRESOLVED children (copy() during
-  // tree transforms), where dataType would throw.
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def createAggregationBuffer(): Array[Double] = Array.empty
 
   private def grow(buf: Array[Double], n: Int): Array[Double] =
     if (buf.length >= n) buf else java.util.Arrays.copyOf(buf, n)
@@ -66,7 +40,7 @@ case class VectorSum(child: Expression,
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        out(i) += (if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i))
+        out(i) += elem(arr, i)
       }
       i += 1
     }
@@ -77,24 +51,6 @@ case class VectorSum(child: Expression,
     val out = grow(a, b.length)
     var i = 0
     while (i < b.length) { out(i) += b(i); i += 1 }
-    out
-  }
-
-  override def eval(buf: Array[Double]): Any =
-    if (buf.isEmpty) null else new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    var i = 0
-    while (i < buf.length) { bb.putDouble(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Double](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getDouble(); i += 1 }
     out
   }
 

@@ -1,15 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** One-pass second-moment accumulator over an array<float|double> column:
   * count, element sums, and the upper-triangle Gram matrix Σ v·vᵀ — the
@@ -38,31 +33,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 case class VectorMoments(child: Expression,
                          mutableAggBufferOffset: Int = 0,
                          inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] {
+  extends DoubleArraySum {
 
-  override def children: Seq[Expression] = Seq(child)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"vec_moments expects array<float> or array<double>, got ${t.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "vec_moments"
-
-  private lazy val isFloat = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
 
   private def dimOf(buf: Array[Double]): Int =
     // length = 1 + d + d(d+1)/2 → d = (sqrt(9 + 8·(len−1)) − 3) / 2
     ((math.sqrt(9.0 + 8.0 * (buf.length - 1)) - 3.0) / 2.0).round.toInt
-
-  override def createAggregationBuffer(): Array[Double] = Array.empty
 
   override def update(buf: Array[Double], input: InternalRow): Array[Double] = {
     val v = child.eval(input)
@@ -79,8 +56,7 @@ case class VectorMoments(child: Expression,
     val row = new Array[Double](d)
     var i = 0
     while (i < d) {
-      row(i) = if (arr.isNullAt(i)) 0.0
-        else if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+      row(i) = elem(arr, i)
       i += 1
     }
     out(0) += 1.0
@@ -109,24 +85,6 @@ case class VectorMoments(child: Expression,
       while (i < b.length) { a(i) += b(i); i += 1 }
       a
     }
-
-  override def eval(buf: Array[Double]): Any =
-    if (buf.isEmpty) null else new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    var i = 0
-    while (i < buf.length) { bb.putDouble(buf(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Double](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getDouble(); i += 1 }
-    out
-  }
 
   override def withNewMutableAggBufferOffset(o: Int): VectorMoments =
     copy(mutableAggBufferOffset = o)

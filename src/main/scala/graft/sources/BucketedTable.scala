@@ -97,7 +97,7 @@ object BucketedTable {
       s"${fs.foldLeft(0L)((m, f) => math.max(m, f.lastModified))}"
   }
 
-  private def layoutRoot: File =
+  private[graft] def layoutRoot: File =
     new File(sys.props("java.io.tmpdir"), "graft-layout")
 
   /** The catalog name a (source, spec) pair materializes under —

@@ -128,8 +128,8 @@ class ConcurrentBuildSpec extends SparkSpec {
       s"row counts diverged: $results (interleaved writes into one path?)")
     // and the materialized layout is the single coherent one: a fresh
     // read through the catalog matches the source exactly
-    val name = BucketedTable.bucketedName(dir.getAbsolutePath, "nation",
-      "n_nationkey", 4)
+    val name = dropLayoutAfterAll(BucketedTable.bucketedName(
+      dir.getAbsolutePath, "nation", "n_nationkey", 4))
     assert(spark.table(name).count() == expected)
   }
 

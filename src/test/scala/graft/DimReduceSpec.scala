@@ -39,6 +39,16 @@ class DimReduceSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("ragged") ||
       e.getCause != null && e.getCause.getMessage.contains("ragged"))
+    // each partition consistent (dim 2 in one, 3 in the other): only the
+    // merge of the two partial buffers sees the mismatch
+    val split = spark.sparkContext.parallelize(Seq((0L, Seq(1f, 2f)),
+      (1L, Seq(3f, 4f)), (2L, Seq(1f, 2f, 3f)), (3L, Seq(4f, 5f, 6f))), 2)
+      .toDF("vec_id", "embedding")
+    val m2 = intercept[Exception] {
+      split.agg(VectorMoments.vecMoments(col("embedding"))).collect()
+    }
+    assert(m2.getMessage.contains("merging ragged") ||
+      m2.getCause != null && m2.getCause.getMessage.contains("merging ragged"))
   }
 
   test("jacobiEigen recovers a known symmetric spectrum") {

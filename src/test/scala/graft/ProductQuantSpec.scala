@@ -134,4 +134,25 @@ class ProductQuantSpec extends SparkSpec {
     assert(e16._1 <= e4, s"ksub=16 err ${e16._1} worse than ksub=4 $e4")
     info(f"mean_err2: ksub16=${e16._1}%.4f ksub4=$e4%.4f")
   }
+
+  test("Lloyd fits: centroids bit-identical on a fixed sample") {
+    // 240 seeded dim-8 vectors; the pin is the SHA-256 of every fitted
+    // double's bits, so any change to init, tie-break, empty-cell or
+    // stopping rule (or to the summation order) shows
+    val rnd = new java.util.Random(7L)
+    val corpus = (0L until 240L).map(id =>
+      (id, Seq.fill(8)((rnd.nextGaussian() + id % 3).toFloat)))
+      .toDF("vec_id", "embedding")
+    val coarse = ProductQuant.coarseFit(corpus, nlist = 3, dim = 8)
+    val fits = Seq(
+      Similarity.ivfFit(corpus, nlist = 4),
+      coarse,
+      ProductQuant.pqFit(corpus, m = 2, ksub = 4, dim = 8).flatten,
+      ProductQuant.pqFitIvf(corpus, coarse, m = 2, ksub = 4, dim = 8).flatten)
+    val bb = java.nio.ByteBuffer.allocate(fits.map(_.map(_.length).sum).sum * 8)
+    fits.foreach(_.foreach(_.foreach(bb.putDouble)))
+    val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bb.array())
+    assert(sha.map(b => f"${b & 0xff}%02x").mkString ===
+      "2386a451db61f2d602983ae0c59e905b8dfeb6330711e7921115a95c78f33ff6")
+  }
 }

@@ -58,6 +58,16 @@ class ReachableSurfaceSpec extends AnyFunSuite {
     val stale = allowed.keySet -- dead.map(_._1)
     assert(stale.isEmpty, s"allowlisted but reached or deleted: $stale")
   }
+
+  test("array-sum aggregates extend the one shared base") {
+    // an aggregate over a Long or Double array state is a LongArraySum or
+    // DoubleArraySum, not a fresh copy of their serde, merge and types
+    val own = scalaFiles("src/main/scala").filter { p =>
+      p.getFileName.toString != "ArraySumAggregate.scala" &&
+        ArrayStateAggregate.findFirstIn(Files.readString(p)).isDefined
+    }
+    assert(own.isEmpty, s"array-state aggregates outside the base: $own")
+  }
 }
 
 object ReachableSurfaceSpec {
@@ -92,6 +102,9 @@ object ReachableSurfaceSpec {
   private val Hidden = """\b(?:private|protected|override)\b""".r
 
   private val Token = """[A-Za-z0-9_]+""".r
+
+  private val ArrayStateAggregate =
+    """TypedImperativeAggregate\[\s*Array\[\s*(?:Long|Double)\s*\]\s*\]""".r
 
   private def scalaFiles(root: String): Seq[Path] = {
     val stream = Files.walk(Paths.get(root))

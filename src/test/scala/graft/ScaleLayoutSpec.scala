@@ -250,12 +250,14 @@ class ScaleLayoutSpec extends SparkSpec {
       .write.parquet(s"$dir/orders.parquet")
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)
       .count() === 10)
+    dropLayoutAfterAll(BucketedTable.bucketedName(dir, "orders", "k", 4))
     // regenerate the source at the SAME path with different contents —
     // the layout key must change, never serving the stale files
     spark.range(25).selectExpr("id AS k", "id * 3 AS v")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)
       .count() === 25, "stale layout served after source regeneration")
+    dropLayoutAfterAll(BucketedTable.bucketedName(dir, "orders", "k", 4))
   }
 
   test("catalog entry whose files vanished re-materializes, not FNF") {
@@ -264,15 +266,12 @@ class ScaleLayoutSpec extends SparkSpec {
       .write.parquet(s"$dir/orders.parquet")
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)
       .count() === 12)
-    val name = BucketedTable.bucketedName(dir, "orders", "k", 4)
+    val name =
+      dropLayoutAfterAll(BucketedTable.bucketedName(dir, "orders", "k", 4))
     assert(spark.catalog.tableExists(name))
     // simulate the tmp reaper: layout files gone, catalog entry alive
-    val layoutDir = new java.io.File(
-      new java.io.File(sys.props("java.io.tmpdir"), "graft-layout"), name)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(layoutDir)
+    val layoutDir = new java.io.File(BucketedTable.layoutRoot, name)
+    TempDirs.deleteTree(layoutDir.toPath)
     assert(!new java.io.File(layoutDir, "_SUCCESS").isFile)
     assert(BucketedTable.bucketed(spark, dir, "orders", "k", 4)
       .count() === 12, "vanished layout files must re-materialize")

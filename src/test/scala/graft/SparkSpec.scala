@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.BucketedTable
 
 /** Shared local session for specs, built by the same [[GraftSession]]
   * factory as Verify/Bench (UTC, nanos-as-long for the events table,
@@ -16,4 +22,18 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
   System.setProperty("graft.topk.checkDistinctContract", "true")
 
   lazy val spark: SparkSession = GraftSession(cpus = 2)
+
+  private val layouts = new ConcurrentLinkedQueue[String]
+
+  /** Drop the bucketed layout `name` (its catalog entry and its files
+    * under [[BucketedTable.layoutRoot]]) after the suite's last test. For
+    * layouts over a [[tempDir]] source: once the source is deleted no
+    * later run can select the layout again, so nothing else removes it. */
+  def dropLayoutAfterAll(name: String): String = { layouts.add(name); name }
+
+  override def afterAll(): Unit =
+    try layouts.asScala.foreach { name =>
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      TempDirs.deleteTree(BucketedTable.layoutRoot.toPath.resolve(name))
+    } finally super.afterAll()
 }
