@@ -28,27 +28,30 @@ object Pipeline {
     Cleaning.dedupByKey(
       Cleaning.dropNullKeys(Cleaning.unionAll(batches), requiredKeys), idCols)
 
+  // the events-shaped columns [[run]] reads
+  private val TsCol = "ts"
+  private val UserCol = "user_id"
+  private val TypeCol = "event_type"
+
   /** The analytical core over an events-shaped table: validation gate +
     * both KPI families from one cleaned frame (reference:
     * dags/etl/kpi_processor.py:40-101 + schema_check.py:258-329). */
-  def run(spark: SparkSession, events: DataFrame,
-          tsCol: String = "ts", userCol: String = "user_id",
-          typeCol: String = "event_type"): KpiOutputs = {
-    val cleaned = Validation.requireColumns(events, Seq(tsCol, userCol, typeCol))
+  def run(spark: SparkSession, events: DataFrame): KpiOutputs = {
+    val cleaned = Validation.requireColumns(events, Seq(TsCol, UserCol, TypeCol))
       .fold(
         missing => throw new IllegalArgumentException(
           s"missing required columns: ${missing.mkString(", ")}"),
         identity)
     val report = Validation.report(cleaned, Seq(
       Validation.rowCount,
-      Validation.nullCount(userCol),
-      Validation.dupCount(Seq(userCol, tsCol)),
-      Validation.violations("null_ts", col(tsCol).isNull)))
-    val hourly = Kpis.hourlyKpisHod(cleaned, tsCol, userCol, typeCol)
-    val genre = cleaned.groupBy(col(typeCol))
+      Validation.nullCount(UserCol),
+      Validation.dupCount(Seq(UserCol, TsCol)),
+      Validation.violations("null_ts", col(TsCol).isNull)))
+    val hourly = Kpis.hourlyKpisHod(cleaned, TsCol, UserCol, TypeCol)
+    val genre = cleaned.groupBy(col(TypeCol))
       .agg(count(lit(1)).as("listen_count"),
         round(avg(col("value")), 6).as("avg_duration"))
-      .orderBy(col(typeCol))
+      .orderBy(col(TypeCol))
     KpiOutputs(genre, hourly, report)
   }
 }

@@ -131,23 +131,14 @@ object Bpe {
       .toDF("round", "lhs", "rhs", "pair_count")
   }
 
-  /** Corpus segmentation stats under the learned vocabulary: per
-    * language, token count, total symbols, and mean symbols/token —
-    * the fertility number a tokenizer is judged by. One corpus scan
-    * (the word-type join is vocabulary-sized and broadcastable). */
-  def segmentationStats(docs: DataFrame, merges: Seq[Merge]): DataFrame =
-    statsOverTypes(docs, wordTypes(docs), merges)
-
-  /** Learn the vocabulary AND report segmentation stats from ONE
-    * word-type scan: the separate-call composition
-    * (`segmentationStats(docs, learnMerges(docs, r))`) tokenized and
-    * type-aggregated the corpus twice — once inside the learner, once
-    * for the type segmentation. Here the (word, n) table materializes
-    * once (eager executor-local checkpoint, vocabulary-sized) and feeds
-    * the learner's cached seed table and the stats' segmentation leg;
-    * only the per-(lang, token) occurrence scan still reads the corpus.
-    * Identical results by construction — same learner, same stats, same
-    * inputs. */
+  /** Learn the vocabulary AND report corpus segmentation stats under it:
+    * per language, token count, total symbols, and mean symbols/token —
+    * the fertility number a tokenizer is judged by. One word-type scan:
+    * the (word, n) table materializes once (eager executor-local
+    * checkpoint, vocabulary-sized) and feeds the learner's cached seed
+    * table and the stats' segmentation leg; only the per-(lang, token)
+    * occurrence scan still reads the corpus (the word-type join is
+    * vocabulary-sized and broadcastable). */
   def learnAndSegmentationStats(docs: DataFrame, rounds: Int): DataFrame = {
     // validate BEFORE the eager checkpoint: an invalid rounds argument
     // must not pay a corpus scan before throwing (ADVICE r16)

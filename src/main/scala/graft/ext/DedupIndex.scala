@@ -221,18 +221,15 @@ object DedupIndex {
     * each batch exactly once). The commit maintains the index's stats
     * sidecar (row count + `sh` sketch, delta-only on append) — the
     * catalog stat the probes' prune gate reads, so the gate costs zero
-    * scans at probe time. Returns the committed version. */
-  def ingestSpans(root: String, batch: DataFrame, k: Int): Long =
-    ingestSpansOn(root, batch.sparkSession, spanHashFrame(batch, k),
-      () => spanCount(batch, k))
-
-  /** [[ingestSpans]] on an already-built raw span-hash frame (any frame
-    * with an `sh` column) — the streaming loop computes the batch's
-    * span frame ONCE per trigger (persisted) and shares it between the
-    * cut report and this ingest, so the tokenize+explode pass runs once
-    * per trigger instead of once per probe. `spanRows` is called only
-    * when the gate has a catalog stat to compare against (a cached
-    * caller's count() is free by then). */
+    * scans at probe time. Returns the committed version.
+    *
+    * Takes an already-built raw span-hash frame (any frame with an `sh`
+    * column): the streaming loop computes the batch's span frame ONCE
+    * per trigger (persisted) and shares it between the cut report and
+    * this ingest, so the tokenize+explode pass runs once per trigger
+    * instead of once per probe. `spanRows` is called only when the gate
+    * has a catalog stat to compare against (a cached caller's count() is
+    * free by then). */
   private[graft] def ingestSpansOn(root: String, spark: SparkSession,
                                    batchSpans: DataFrame,
                                    spanRows: () => Long): Long = {
@@ -381,7 +378,7 @@ object DedupIndex {
     * merge into gaps-and-islands intervals per doc, and the rebuild is
     * the same indexed-filter token drop. Output mirrors
     * `cutDuplicatedSpans`: (doc_id, n_before, n_after, clean_md5) for
-    * every batch doc. Run [[ingestSpans]] AFTER cutting so the next
+    * every batch doc. Run [[ingestSpansOn]] AFTER cutting so the next
     * batch also dedups against what this one contributed. */
   def cutSeenSpans(index: DataFrame, batch: DataFrame, k: Int,
                    indexRows: Option[Long] = None): DataFrame =
@@ -398,7 +395,7 @@ object DedupIndex {
     import org.apache.spark.sql.expressions.Window
     // NO distinct on the index side: a LEFT SEMI join never duplicates
     // its left rows, so deduplicating the (already-distinct-by-
-    // construction — spanIndex/ingestSpans both dedup) index here only
+    // construction — spanIndex/ingestSpansOn both dedup) index here only
     // added a full index-sized aggregation to EVERY streaming trigger —
     // the soak lane measured the per-trigger time climbing with index
     // growth from exactly this kind of avoidable O(index) pass. The

@@ -3,8 +3,6 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.BoundedCollect.collectSetCapped
-
 /** Blocked fuzzy matching (entity resolution) — near-identical NAMES, not
   * near-identical documents: catalog/vendor/author strings that differ by
   * a typo or a token. Complements [[Dedup]] (content near-dup) with the
@@ -12,45 +10,12 @@ import graft.functions.BoundedCollect.collectSetCapped
   *
   * Scale shape — the standard ER pipeline: a cheap BLOCKING key bounds the
   * quadratic comparison to block-local pairs (never all-pairs), and the
-  * comparison itself runs as bucket-collect: ONE shuffle groups each
-  * block's (id, name) set, pairs generate inside the bucket, and the
-  * edit-distance filter prunes them — the same exchange-reuse-safe shape
-  * as [[Dedup.jaccardPairs]]. `maxBucket` guards degenerate blocks (a
-  * blocking key shared by everything is a key-design bug, not a reason to
-  * go quadratic). Good blocking keys at 100 TB: first token, phonetic
-  * code, length bucket, or a MinHash band for token-set blocking.
+  * pair join shuffles once on the block. `maxBucket` guards degenerate
+  * blocks (a blocking key shared by everything is a key-design bug, not a
+  * reason to go quadratic). Good blocking keys at 100 TB: first token,
+  * phonetic code, length bucket, or a MinHash band for token-set blocking.
   */
 object Fuzzy {
-
-  /** Same-block pairs with `levenshtein(name_a, name_b) <= maxDist`,
-    * generated bucket-collect (blocks capped at `maxBucket`).
-    * Output: (block, id_a, id_b, name_a, name_b, edit_dist), id_a < id_b.
-    */
-  def blockedNamePairs(df: DataFrame, idCol: String, nameCol: String,
-                       block: Column, maxDist: Int,
-                       maxBucket: Int = 1000): DataFrame = {
-    val rows = df.select(block.as("block"), col(idCol).as("id"),
-      col(nameCol).as("name"))
-    val buckets = rows.groupBy(col("block"))
-      .agg(sort_array(collectSetCapped(struct(col("id"), col("name")), maxBucket)).as("d"),
-        count(lit(1)).as("c"))
-      .where(col("c") >= 2 && col("c") <= maxBucket)
-    buckets.select(col("block"), explode_outer(
-        flatten(transform(col("d"), (x, i) =>
-          transform(slice(col("d"), i + 2, size(col("d"))),
-            y => struct(x.getField("id").as("id_a"),
-              y.getField("id").as("id_b"),
-              x.getField("name").as("name_a"),
-              y.getField("name").as("name_b"))))))
-        .as("p"))
-      .where(col("p").isNotNull) // outer: see Dedup.shingleRows
-      .select(col("block"), col("p.id_a").as("id_a"),
-        col("p.id_b").as("id_b"), col("p.name_a").as("name_a"),
-        col("p.name_b").as("name_b"))
-      .withColumn("edit_dist",
-        levenshtein(col("name_a"), col("name_b")).cast("long"))
-      .where(col("edit_dist") <= maxDist)
-  }
 
   /** Multiplicity-weighted distinct-name pairing — the form that
     * survives heavy exact duplication: collapse identical names to
@@ -58,7 +23,7 @@ object Fuzzy {
     * DISTINCT names only, and recover the RAW-row-pair statistics by
     * weighting each name pair by `cnt_a × cnt_b` (plus `C(cnt, 2)`
     * dist-0/sim-1 self-pairs per duplicated name). Numbers are
-    * IDENTICAL to rolling up [[blockedNamePairs]] over raw rows —
+    * IDENTICAL to rolling up every raw same-block row pair —
     * spec-pinned — at distinct-names² cost instead of rows²: the sf0.1
     * catalog has 20 000 rows but 64 names, which put every raw block
     * over `maxBucket` (rollup silently emptied — the sf0.1 sweep's
@@ -102,8 +67,8 @@ object Fuzzy {
     val b = names.select(col("block"), col("name").as("name_b"),
       col("cnt").as("cnt_b"))
     // distinct-name blocks are bounded by maxBucket (a block with more
-    // distinct names than that is a blocking-key design bug, as for
-    // blockedNamePairs) — enforced via the per-block name count
+    // distinct names than that is a blocking-key design bug) — enforced
+    // via the per-block name count
     val sizes = names.groupBy(col("block"))
       .agg(count(lit(1)).as("__names"))
       .where(col("__names") <= maxBucket)

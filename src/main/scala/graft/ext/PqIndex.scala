@@ -58,11 +58,10 @@ object PqIndex {
     if (!fs.exists(mp)) {
       import spark.implicits._
       // calibration stat alongside the model: the p99 reconstruction
-      // error of the corpus under THIS model — the additive margin
-      // [[tau2For]] derives screen thresholds from (an indexed
-      // vector's ADC distance to its own code is exactly its
-      // reconstruction error, so a dup-screen threshold must clear
-      // it). One approx-percentile pass at build time, never again.
+      // error of the corpus under THIS model — the margin a dup-screen
+      // threshold must clear (an indexed vector's ADC distance to its
+      // own code is exactly its reconstruction error). One
+      // approx-percentile pass at build time, never again.
       // The stats row also records the BUILD-TIME CORPUS COUNT — the
       // fit stat [[stalenessRatio]] compares the grown index against
       // (a count is exact in Double far past any corpus size the
@@ -131,32 +130,10 @@ object PqIndex {
     (coarse, cb)
   }
 
-  /** Calibrated screen threshold for [[semanticContamination]]:
-    * tau² = (2 − 2·cosThreshold) + err2_p99. On the unit sphere an
-    * exact near-dup at cosine ≥ t sits within squared distance
-    * 2 − 2t of its indexed twin, and ADC measures that distance
-    * against the twin's CODE, off by at most the twin's reconstruction
-    * error — adding the build-time p99 of that error makes the screen
-    * recall-oriented by construction: ≥99 % of exact re-sends flag at
-    * ANY t, with the 2 − 2t term as near-dup slack. Replaces hand-
-    * tuned magic thresholds; requires an index created with the stats
-    * row (this round's [[create]]). */
-  def tau2For(spark: SparkSession, root: String,
-              cosThreshold: Double): Double = {
-    require(cosThreshold >= -1.0 && cosThreshold <= 1.0,
-      s"cosThreshold $cosThreshold outside [-1, 1]")
-    val stats = statsDims(spark, root)
-    require(stats.nonEmpty, s"PqIndex at $root has no stats row — " +
-      "rebuilt indexes record err2_p99 at create; pass an explicit " +
-      "tau2 for legacy indexes")
-    (2.0 - 2.0 * cosThreshold) + stats.get.head
-  }
-
   // the parsed stats-row dims (err2_p99, build_n), cached per root: the
   // stats row is FROZEN at create (same argument as [[readModel]]'s
-  // cache), and both the per-trigger staleness check and every
-  // tau2-calibrated screen read it — without the cache each ingest
-  // trigger paid a _model parquet read for a constant
+  // cache), and the per-trigger staleness check reads it — without the
+  // cache each ingest trigger paid a _model parquet read for a constant
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[
     String, Option[Seq[Double]]]()
 
@@ -184,8 +161,8 @@ object PqIndex {
     * count recorded in the model's stats row. Same boundary class as
     * [[KnnGraphIndex.stalenessRatio]]: the sample-capped Lloyd fit saw
     * the BUILD corpus; one decade of growth later ~90% of the indexed
-    * mass was never seen by the fit, and quantization error (hence the
-    * [[tau2For]]-calibrated screens) drifts silently. Degrades OPEN
+    * mass was never seen by the fit, and quantization error (hence
+    * every ADC screen threshold) drifts silently. Degrades OPEN
     * (0.0) for legacy roots without the build_n stats element or the
     * rows sidecar. */
   def stalenessRatio(spark: SparkSession, root: String): Double = {

@@ -43,21 +43,14 @@ object Sampling {
     df.withColumn("split", expr)
   }
 
-  /** Systematic deterministic sample: keep rows whose key hashes below
-    * `percent` of the bucket space. Stable under reruns and engine changes
-    * (unlike `df.sample`), so downstream joins between sampled tables stay
-    * consistent. */
-  def hashSample(df: DataFrame, key: Column, percent: Int): DataFrame =
-    df.where(hashBucket(key, 100) < percent)
-
   /** Source-mixture sampling: per-stratum keep rates (integer percents) —
     * the mixture-weighting pass that up/down-samples sources or languages
     * into a training mix (e.g. keep all of en, half of de, a tenth of the
-    * long tail). Same determinism contract as [[hashSample]]: assignment
-    * is a pure function of the row's key, so re-runs, engine changes and
-    * repartitioning never migrate rows in or out of the mix. Strata absent
-    * from `rates` fall back to `defaultPercent`. Pure filter — no shuffle,
-    * pushes below downstream aggregates. */
+    * long tail). Same determinism contract as [[deterministicSplit]]:
+    * assignment is a pure function of the row's key, so re-runs, engine
+    * changes and repartitioning never migrate rows in or out of the mix.
+    * Strata absent from `rates` fall back to `defaultPercent`. Pure
+    * filter — no shuffle, pushes below downstream aggregates. */
   def mixtureSample(df: DataFrame, key: Column, stratum: Column,
                     rates: Seq[(String, Int)],
                     defaultPercent: Int = 100): DataFrame = {

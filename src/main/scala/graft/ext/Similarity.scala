@@ -41,32 +41,19 @@ import graft.functions.VectorFunctions.dotNative
   */
 object Similarity {
 
-  /** Left-fold dot product in doubles: sum_i a[i]*b[i]. Generic (per-row
-    * sized) variant — allocates a zipped intermediate per row. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** Fixed-dimension dot product: folds over a LITERAL index sequence
     * (constant-folded once per plan, not allocated per row) and never
     * materializes the products array — the hot-path variant for N²-pair
     * scoring, where zip_with's per-pair 64-element allocation is pure GC
-    * churn. Same op order as [[dot]] (left fold from 0.0), so results are
-    * bit-identical. */
+    * churn. Left fold from 0.0, the op order of the native dot product,
+    * so results are bit-identical. */
   def dotN(a: Column, b: Column, dim: Int): Column =
     aggregate(sequence(lit(1), lit(dim)), lit(0.0),
       (acc, i) => acc + element_at(a, i).cast("double")
         * element_at(b, i).cast("double"))
 
-  /** Cosine similarity; 0.0 for zero-norm inputs. */
-  def cosine(a: Column, b: Column): Column = {
-    val na = sqrt(dot(a, a))
-    val nb = sqrt(dot(b, b))
-    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
-  }
-
   /** Pairwise cosine with norms computed ONCE per side (not 3 dot products
-    * per pair). Op order matches [[cosine]]: dot / (sqrt(n2a) * sqrt(n2b)).
+    * per pair): dot / (sqrt(n2a) * sqrt(n2b)); 0.0 for zero-norm inputs.
     */
   private def pairCosine(dotCol: Column, n2a: Column, n2b: Column): Column =
     when(sqrt(n2a) === 0.0 || sqrt(n2b) === 0.0, lit(0.0))

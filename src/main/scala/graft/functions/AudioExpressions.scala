@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (FLAC format spec §STREAMINFO) — genuine sub-byte bit-field
   *    parsing, a different decode shape from WAV's chunk walk.
   */
-object AudioDecode {
+private[functions] object AudioDecode {
 
   /** Result schema of [[AudioInfoExpr]]. Non-nullable fields: a failed
     * parse nulls the whole struct instead. */

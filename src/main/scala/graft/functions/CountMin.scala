@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Updates are depth increments per row, merge is element-wise add, so
   * the sketch partial-aggregates map-side at any scale.
   */
-object CountMin {
+private[functions] object CountMin {
 
   /** FNV-1a 64 over the UTF-8 bytes, finalized splitmix64-style, seeded
     * per depth row. Static + deterministic so generated code, the

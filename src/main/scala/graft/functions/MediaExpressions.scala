@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Unrecognized, truncated, or corrupt payloads decode to NULL (a quality
   * funnel filters them; a decode error must never fail a 100 TB scan).
   */
-object MediaDecode {
+private[functions] object MediaDecode {
 
   /** Result schema of [[MediaDimsExpr]]. Fields are non-nullable because a
     * failed parse nulls the whole struct instead. */

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * differentially tested against: e.g. jw("abcccccc","abdddddd") must
   * stay at its jaro value 0.5, not boost to 0.6).
   */
-object StringSimilarity {
+private[functions] object StringSimilarity {
 
   /** O(|a|·window) two-pass match/transposition count; null-safe at the
     * expression layer. Operates on UTF-16 code units (names in catalogs

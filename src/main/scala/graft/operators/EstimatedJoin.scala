@@ -20,13 +20,13 @@ import graft.functions.JoinSizeSketch
   *    magnitude — sort-merge streams and spills that case, a broadcast
   *    hash probe amplifies it in memory.
   *
-  * Cost posture: [[estimate]] runs one cheap aggregate per side (a
-  * map-side-combining sketch + count, answer-sized result to the
-  * driver — planner statistics, same justification as the IVF
-  * quantizer sample). At warehouse scale the sketches would not be
-  * computed on demand at all: they are element-wise mergeable, so each
-  * table's sketch is maintained at write time and joins plan from
-  * stored stats — [[estimateFromSketches]] is that entry point.
+  * Cost posture: [[estimatedMultiJoin]] runs one cheap aggregate per
+  * side (a map-side-combining sketch + count, answer-sized result to the
+  * driver — planner statistics, same justification as the IVF quantizer
+  * sample). At warehouse scale the sketches would not be computed on
+  * demand at all: they are element-wise mergeable, so each table's
+  * sketch is maintained at write time and joins plan from stored stats
+  * ([[graft.sources.VersionedStats.adaptiveVersionedJoin]]).
   */
 object EstimatedJoin {
 
@@ -34,27 +34,14 @@ object EstimatedJoin {
                                 estJoinRows: Long, strategy: String,
                                 salts: Int = 0)
 
-  /** Pure decision from already-known statistics (stored table sketches
-    * at scale; [[estimate]] computes them on demand). Three-way:
-    * broadcast when a side fits and the output does not explode;
-    * otherwise bloom-pruned merge when the estimate says the join is
-    * SELECTIVE (output ≤ `bloomSelectivity` × the bigger side — few big
-    * rows can match, so a bloom of the smaller side's keys drops the
-    * rest before the shuffle); plain sort-merge for everything else. */
-  def estimateFromSketches(sketchLeft: Seq[Long], rowsLeft: Long,
-                           sketchRight: Seq[Long], rowsRight: Long,
-                           broadcastMaxRows: Long,
-                           fanoutCap: Double,
-                           bloomSelectivity: Double = 0.1): JoinEstimate = {
-    val est = JoinSizeSketch.estimate(sketchLeft, sketchRight)
-    JoinEstimate(rowsLeft, rowsRight, est,
-      decide(est, rowsLeft, rowsRight, broadcastMaxRows, fanoutCap,
-        bloomSelectivity))
-  }
-
-  /** The strategy rule alone, for callers that already hold an output
-    * estimate (the multi-join planner scales raw sketch estimates by
-    * upstream selectivity before deciding). */
+  /** The strategy rule, given an output estimate (the multi-join planner
+    * scales raw sketch estimates by upstream selectivity before
+    * deciding). Three-way: broadcast when a side fits and the output
+    * does not explode; otherwise bloom-pruned merge when the estimate
+    * says the join is SELECTIVE (output ≤ `bloomSelectivity` × the
+    * bigger side — few big rows can match, so a bloom of the smaller
+    * side's keys drops the rest before the shuffle); plain sort-merge
+    * for everything else. */
   def decide(estJoinRows: Long, rowsLeft: Long, rowsRight: Long,
              broadcastMaxRows: Long, fanoutCap: Double,
              bloomSelectivity: Double = 0.1): String = {
@@ -65,37 +52,6 @@ object EstimatedJoin {
       if (rowsRight <= rowsLeft) "broadcast_right" else "broadcast_left"
     } else if (estJoinRows <= bloomSelectivity * big) "bloom_merge"
     else "shuffle_merge"
-  }
-
-  /** Sketch both sides and decide. One aggregate job per side. */
-  def estimate(left: DataFrame, right: DataFrame,
-               leftKey: String, rightKey: String,
-               broadcastMaxRows: Long = 10000000L,
-               fanoutCap: Double = 4.0,
-               counters: Int = 256): JoinEstimate = {
-    def side(df: DataFrame, key: String): (Seq[Long], Long) = {
-      val r: Row = df.agg(
-        JoinSizeSketch.agmsSketch(col(key), counters).as("s"),
-        count(lit(1)).as("n")).head()
-      (r.getSeq[Long](0), r.getLong(1))
-    }
-    val (sl, nl) = side(left, leftKey)
-    val (sr, nr) = side(right, rightKey)
-    estimateFromSketches(sl, nl, sr, nr, broadcastMaxRows, fanoutCap)
-  }
-
-  /** The join, with the sketch-chosen strategy applied as a plan hint.
-    * Returns the joined frame plus the estimate that chose its shape
-    * (load accounting + plan audit). */
-  def estimatedJoin(left: DataFrame, right: DataFrame,
-                    leftKey: String, rightKey: String,
-                    joinType: String = "inner",
-                    broadcastMaxRows: Long = 10000000L,
-                    fanoutCap: Double = 4.0,
-                    counters: Int = 256): (DataFrame, JoinEstimate) = {
-    val e = estimate(left, right, leftKey, rightKey,
-      broadcastMaxRows, fanoutCap, counters)
-    (applyStrategy(left, right, leftKey, rightKey, joinType, e), e)
   }
 
   /** One dimension join of a star query: `fact.factKey = dim.dimKey`.
@@ -109,7 +65,7 @@ object EstimatedJoin {
 
   /** Stats-driven STAR-JOIN ordering: joins `dims` onto `fact` most
     * selective first, each step's physical strategy chosen by
-    * [[estimatedJoin]]'s three-way rule extended with [[AdaptiveJoin]]'s
+    * [[decide]]'s three-way rule extended with [[AdaptiveJoin]]'s
     * skew arm (a hot fact key above `hotShareThreshold` share salts the
     * step instead of bloom/merge — measured by the Misra-Gries summary
     * the planning pass already carries). Join ordering is the textbook
@@ -133,9 +89,8 @@ object EstimatedJoin {
     *    size `broadcastMaxRows` with that in mind.
     *
     * Inner joins only: reordering outer joins changes results. Dim
-    * column names must be distinct from fact columns (same contract as
-    * [[estimatedJoin]]). Returns the joined frame and the ordered step
-    * trace for plan audits. */
+    * column names must be distinct from fact columns. Returns the joined
+    * frame and the ordered step trace for plan audits. */
   def estimatedMultiJoin(fact: DataFrame, dims: Seq[DimSpec],
                          broadcastMaxRows: Long = 10000000L,
                          fanoutCap: Double = 4.0,
@@ -205,7 +160,7 @@ object EstimatedJoin {
         else ("salted", math.min(maxSalts,
           math.max(2, math.ceil(hotShare * parts).toInt)))
       val e = JoinEstimate(curRows, nd, scaled, strategy, salts)
-      current = applyStrategy(current, d.dim, d.factKey, d.dimKey, "inner", e)
+      current = applyStrategy(current, d.dim, d.factKey, d.dimKey, e)
       steps += MultiJoinStep(d.name, e)
       curRows = scaled
       remaining = remaining.filterNot(_._1.name == d.name)
@@ -213,24 +168,23 @@ object EstimatedJoin {
     (current, steps.result())
   }
 
-  /** Materialize a [[JoinEstimate]]'s decision as the physical plan —
-    * shared by the on-demand path above and the stored-stats path
-    * ([[graft.sources.VersionedStats.estimatedVersionedJoin]]). */
+  /** Materialize a [[JoinEstimate]]'s decision as the physical plan of an
+    * inner join. */
   def applyStrategy(left: DataFrame, right: DataFrame,
                     leftKey: String, rightKey: String,
-                    joinType: String, e: JoinEstimate): DataFrame = {
+                    e: JoinEstimate): DataFrame = {
     val cond = left(leftKey) === right(rightKey)
     e.strategy match {
-      case "broadcast_right" => left.join(broadcast(right), cond, joinType)
-      case "broadcast_left" => broadcast(left).join(right, cond, joinType)
-      // the skew arm (chosen by estimatedMultiJoin's heavy-hitter pass;
-      // inner-only, like bloom): LEFT is the measured hot side
-      case "salted" if joinType == "inner" =>
+      case "broadcast_right" => left.join(broadcast(right), cond)
+      case "broadcast_left" => broadcast(left).join(right, cond)
+      // the skew arm (chosen by estimatedMultiJoin's heavy-hitter pass):
+      // LEFT is the measured hot side
+      case "salted" =>
         Skew.saltedJoinCond(left, leftKey, right, rightKey, e.salts)
       // bloom pruning drops non-matching rows of the BIG side before
       // its shuffle — sound only for inner joins (an outer join must
-      // keep them); non-inner falls through to plain sort-merge
-      case "bloom_merge" if joinType == "inner" =>
+      // keep them)
+      case "bloom_merge" =>
         val bloomed =
           if (e.rowsRight <= e.rowsLeft)
             BloomJoin.prunedInnerJoin(left, leftKey, right, rightKey,
@@ -242,7 +196,7 @@ object EstimatedJoin {
         // was pruned (column names are distinct by this API's contract:
         // the condition references each side's own key name)
         bloomed.select((left.columns ++ right.columns).map(col).toSeq: _*)
-      case _ => left.join(right.hint("SHUFFLE_MERGE"), cond, joinType)
+      case _ => left.join(right.hint("SHUFFLE_MERGE"), cond)
     }
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: one full-outer shuffle join on the key — both sides
   * stream; no hashing trick can avoid reading both snapshots, but emitting
-  * `changed`/`added`/`removed` only (the default) keeps the output
+  * `changed`/`added`/`removed` only keeps the output
   * delta-sized. At 100 TB the snapshots would be bucketed on the key so
   * this join is co-located and shuffle-free — WITH ONE CAVEAT: the
   * null-safe (`<=>`) key equality the default uses is planned as joins on
@@ -31,8 +31,8 @@ object SnapshotDiff {
   /** Row-level diff of `oldDf` → `newDf` keyed on `keyCols`.
     *
     * Output: key columns, `diff_status` ∈ added|removed|changed
-    * (unchanged rows are dropped unless `keepUnchanged`), then for every
-    * compared column `old_<col>` / `new_<col>`.
+    * (unchanged rows are dropped), then for every compared column
+    * `old_<col>` / `new_<col>`.
     *
     * @param compareCols columns whose changes matter; defaults to every
     *                    shared non-key column. Columns present in only
@@ -48,7 +48,6 @@ object SnapshotDiff {
     */
   def diff(oldDf: DataFrame, newDf: DataFrame, keyCols: Seq[String],
            compareCols: Seq[String] = Nil,
-           keepUnchanged: Boolean = false,
            nullSafeKeys: Boolean = true): DataFrame = {
     val shared = oldDf.columns.toSet.intersect(newDf.columns.toSet)
     val cmp =
@@ -76,15 +75,7 @@ object SnapshotDiff {
     val keyOut = keyCols.map(k => coalesce(col(s"o.$k"), col(s"n.$k")).as(k))
     val valOut = cmp.flatMap(c =>
       Seq(col(s"o.$c").as(s"old_$c"), col(s"n.$c").as(s"new_$c")))
-    val out = joined.select(keyOut ++ (status.as("diff_status") +: valOut): _*)
-    if (keepUnchanged) out else out.where(col("diff_status") =!= "unchanged")
+    joined.select(keyOut ++ (status.as("diff_status") +: valOut): _*)
+      .where(col("diff_status") =!= "unchanged")
   }
-
-  /** One-row-per-status census of the same diff (counts never lie about
-    * volume; the row-level form can be huge when everything changed). */
-  def summary(oldDf: DataFrame, newDf: DataFrame, keyCols: Seq[String],
-              compareCols: Seq[String] = Nil): DataFrame =
-    diff(oldDf, newDf, keyCols, compareCols, keepUnchanged = true)
-      .groupBy(col("diff_status")).agg(count(lit(1)).as("n_rows"))
-      .orderBy(col("diff_status"))
 }

@@ -786,7 +786,7 @@ object Ext3Queries {
       val sorted = array_sort(means)
       val median = (element_at(sorted, 4) + element_at(sorted, 5)) / 2.0
       val est = greatest(round(median).cast("long"), lit(0L))
-      // EstimatedJoin.estimateFromSketches's rule, in-plan: broadcast
+      // EstimatedJoin.decide's broadcast rule, in-plan: broadcast
       // the smaller side iff it fits AND the output does not explode
       val canBroadcast =
         least(col("rows_a"), col("rows_b")) <= lit(10000000L) &&

@@ -20,13 +20,12 @@ import org.apache.spark.sql.DataFrame
   *
   * Dialects are a pure function `(table, stagedDir, partFiles) =>
   * statements`, so the statement plumbing is testable without a warehouse:
-  *  - [[CopyBulkSink.redshiftCopy]] emits the reference's statement shape
-  *    (one COPY over the whole prefix; Redshift ingests all files in
-  *    parallel).
-  *  - [[CopyBulkSink.derbyImport]] maps each staged part file onto
-  *    embedded Derby's real bulk path (`SYSCS_UTIL.SYSCS_IMPORT_TABLE`),
-  *    so the spec exercises an actual file-to-table bulk ingest
-  *    end to end, not a mocked statement.
+  * [[CopyBulkSink.derbyImport]] maps each staged part file onto embedded
+  * Derby's real bulk path (`SYSCS_UTIL.SYSCS_IMPORT_TABLE`), so the spec
+  * exercises an actual file-to-table bulk ingest end to end, not a mocked
+  * statement. A Redshift dialect would be the reference's one COPY over
+  * the whole prefix (load_to_redshift.py:136-146), which the reference
+  * defines but never calls.
   *
   * The dialect's statements run inside one JDBC transaction: a failure
   * rolls back whatever the transaction covers (the reference
@@ -52,10 +51,10 @@ final case class CopyBulkSink(url: String, props: Properties = new Properties) {
     */
   def copyLoad(df: DataFrame, table: String, stagingDir: String,
                dialect: CopyBulkSink.Dialect = CopyBulkSink.derbyImport,
-               numPartitions: Int = 4, header: Boolean = false,
+               numPartitions: Int = 4,
                writeOptions: Map[String, String] = Map.empty): Seq[String] = {
     df.repartition(numPartitions).write.mode("overwrite")
-      .option("header", header).options(CopyBulkSink.CsvDefaults ++ writeOptions)
+      .options(CopyBulkSink.CsvDefaults ++ writeOptions)
       .csv(stagingDir)
     // Enumerate staged part files via the Hadoop FS API so the same code
     // resolves local paths in tests and object-store prefixes in prod.
@@ -89,21 +88,6 @@ object CopyBulkSink {
     * quote in a directory name must not break (or inject into) the
     * statement. */
   private def q(s: String): String = s.replace("'", "''")
-
-  /** The reference's COPY statement shape (load_to_redshift.py:136-146):
-    * one statement over the staging prefix — the warehouse parallelizes
-    * across the part files itself. `credentialsSql` is the caller's
-    * auth clause (e.g. an IAM-role clause); it is interpolated verbatim
-    * and never logged by this sink. `ignoreHeader` mirrors IGNOREHEADER
-    * for prefixes staged with `header = true`. */
-  def redshiftCopy(credentialsSql: String, ignoreHeader: Int = 0,
-                   options: String = "DATEFORMAT 'auto' TIMEFORMAT 'auto'")
-      : Dialect = (table, dir, _) => Seq(
-    s"""COPY $table FROM '${q(dir)}'
-        $credentialsSql
-        CSV
-        IGNOREHEADER $ignoreHeader
-        $options""")
 
   /** Embedded Derby's genuine bulk-ingest path: one
     * `SYSCS_UTIL.SYSCS_IMPORT_TABLE` call per staged part file (Derby

@@ -24,8 +24,9 @@ private[sources] object Jdbc {
     connect(url, props) { c =>
       c.setAutoCommit(false)
       try statement(c) { st =>
-        try { val r = f(st); c.commit(); r }
-        catch { case e: Throwable => c.rollback(); throw e }
+        var committed = false
+        try { val r = f(st); c.commit(); committed = true; r }
+        finally if (!committed) c.rollback()
       } finally c.setAutoCommit(true)
     }
 

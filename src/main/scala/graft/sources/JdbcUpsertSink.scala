@@ -22,10 +22,9 @@ import org.apache.spark.sql.DataFrame
   * Scale posture: the staging write is the only data-volume path and it is
   * partition-parallel (`numPartitions` connections, `batchsize` rows per
   * round trip). The upsert transaction is warehouse-side SQL touching only
-  * keys in the batch — no data flows back through the driver. On warehouses
-  * with native MERGE the post-action collapses to one statement; the
-  * delete+insert form is the portable common denominator (works on
-  * Redshift, Postgres, Derby).
+  * keys in the batch — no data flows back through the driver. The
+  * delete+insert form is the reference's own and the portable common
+  * denominator (works on Redshift, Postgres, Derby).
   */
 final case class JdbcUpsertSink(url: String, props: Properties = new Properties) {
 
@@ -54,24 +53,6 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
   def upsert(df: DataFrame, table: String, keyCols: Seq[String], dateCol: String,
              numPartitions: Int = 4, batchSize: Int = 10000): Unit = {
     val staging = s"${table}_staging"
-    stageBatch(df, staging, numPartitions, batchSize)
-    val cols = df.columns.map(quote).mkString(", ")
-    val keyMatch = (keyCols :+ dateCol)
-      .map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
-    Jdbc.transaction(url, props) { st =>
-      // Derby lacks DELETE...USING; the EXISTS form is equivalent and
-      // portable (same rows: target matching any staged key+date).
-      st.executeUpdate(
-        s"""DELETE FROM $table t WHERE EXISTS (
-            SELECT 1 FROM $staging s WHERE $keyMatch)""")
-      st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
-    }
-  }
-
-  /** Staging load shared by [[upsert]] and [[mergeUpsert]]: drop + batched
-    * partition-parallel rewrite. */
-  private def stageBatch(df: DataFrame, staging: String,
-                         numPartitions: Int, batchSize: Int): Unit = {
     // Drop + rewrite staging (overwrite semantics without DDL surprises).
     executeIf(staging, exists = true, s"DROP TABLE $staging")
     // Force VARCHAR for string columns in the staging DDL — some dialects
@@ -86,47 +67,17 @@ final case class JdbcUpsertSink(url: String, props: Properties = new Properties)
        writer.option("createTableColumnTypes", stringCols.mkString(", "))
      else writer)
       .jdbc(url, staging, props)
-  }
-
-  /** S8 on MERGE dialects (Derby >= 10.11, Postgres >= 15, Redshift,
-    * Snowflake, BigQuery): the delete+insert pair collapses to ONE atomic
-    * `MERGE INTO ... WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT`
-    * statement — no explicit transaction needed, and matched rows update
-    * in place instead of churning delete+insert.
-    *
-    * Contract difference vs [[upsert]]: the staged batch must be UNIQUE on
-    * (keyCols, dateCol) — MERGE raises on duplicate matches (the
-    * delete+insert form would insert all duplicates). Same idempotence:
-    * re-running the same batch leaves the target unchanged. */
-  def mergeUpsert(df: DataFrame, table: String, keyCols: Seq[String],
-                  dateCol: String, numPartitions: Int = 4,
-                  batchSize: Int = 10000): Unit =
-    mergeUpsertKeys(df, table, keyCols :+ dateCol, numPartitions, batchSize)
-
-  /** [[mergeUpsert]] core with an arbitrary key set (no load-date
-    * convention), for tables whose business key IS the whole upsert
-    * key. */
-  def mergeUpsertKeys(df: DataFrame, table: String, keys: Seq[String],
-                      numPartitions: Int = 4, batchSize: Int = 10000): Unit = {
-    val staging = s"${table}_staging"
-    stageBatch(df, staging, numPartitions, batchSize)
-    val keyMatch = keys.map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
-    val nonKey = df.columns.filterNot(keys.contains)
     val cols = df.columns.map(quote).mkString(", ")
-    val values = df.columns.map(c => s"s.${quote(c)}").mkString(", ")
-    // A key-only batch has nothing to UPDATE — an empty SET clause would be
-    // malformed SQL, so emit the insert-only MERGE (matched rows are already
-    // identical by definition of the match condition).
-    val matchedClause =
-      if (nonKey.isEmpty) ""
-      else {
-        val setClause = nonKey.map(c => s"${quote(c)} = s.${quote(c)}").mkString(", ")
-        s"WHEN MATCHED THEN UPDATE SET $setClause"
-      }
-    withStatement(_.executeUpdate(
-      s"""MERGE INTO $table t USING $staging s ON $keyMatch
-          $matchedClause
-          WHEN NOT MATCHED THEN INSERT ($cols) VALUES ($values)"""))
+    val keyMatch = (keyCols :+ dateCol)
+      .map(k => s"t.${quote(k)} = s.${quote(k)}").mkString(" AND ")
+    Jdbc.transaction(url, props) { st =>
+      // Derby lacks DELETE...USING; the EXISTS form is equivalent and
+      // portable (same rows: target matching any staged key+date).
+      st.executeUpdate(
+        s"""DELETE FROM $table t WHERE EXISTS (
+            SELECT 1 FROM $staging s WHERE $keyMatch)""")
+      st.executeUpdate(s"INSERT INTO $table ($cols) SELECT $cols FROM $staging")
+    }
   }
 
   private def quote(c: String): String = "\"" + c + "\""

@@ -4,8 +4,6 @@ import java.time.Instant
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Buffered run log pushed to object storage at run end — the
   * reference's `S3Logger` shape (reference: dags/etl/s3_logger.py:7-36:
@@ -20,21 +18,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * appears complete or not at all — no partially-flushed logs), and a
   * re-push overwrites (same `put_object` semantics).
   *
-  * The Spark-native upgrade over manual logging:
-  * [[RunLog#attachQueryLogging]] registers a `QueryExecutionListener`
-  * so every completed action logs its name, duration and outcome
-  * automatically — the run log captures the whole job without
-  * sprinkling `log.info` through pipeline code.
-  *
   * Thread-safe: executor-side code never logs here (the buffer lives on
-  * the driver, like the reference's), but listener callbacks arrive on
-  * the listener-bus thread.
+  * the driver, like the reference's), but driver threads may share it.
   */
 final class RunLog(spark: SparkSession, path: String) {
 
   private val buf = new StringBuilder
-  private val listeners =
-    scala.collection.mutable.ArrayBuffer.empty[QueryExecutionListener]
 
   private def append(level: String, msg: String): Unit = synchronized {
     buf.append(Instant.now().toString).append(" - ").append(level)
@@ -47,28 +36,6 @@ final class RunLog(spark: SparkSession, path: String) {
 
   /** Current buffered content (diagnostic / spec access). */
   def content: String = synchronized(buf.toString)
-
-  /** Log every completed Spark action (name, wall duration, outcome)
-    * until [[detach]]. Returns this for chaining. */
-  def attachQueryLogging(): RunLog = synchronized {
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        info(f"action $funcName completed in ${durationNs / 1e9}%.3f s")
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit =
-        error(s"action $funcName failed: ${exception.getMessage}")
-    }
-    spark.listenerManager.register(l)
-    listeners += l
-    this
-  }
-
-  /** Unregister any attached query listeners (run end / spec cleanup). */
-  def detach(): Unit = synchronized {
-    listeners.foreach(spark.listenerManager.unregister)
-    listeners.clear()
-  }
 
   /** Write the whole buffer as ONE object at `path`, overwriting any
     * previous push — `put_object` semantics: readers see a complete log

@@ -6,20 +6,13 @@ import org.apache.spark.sql.DataFrame
   *
   * The reference serializes every staging/output dataset to a SINGLE CSV
   * object per write (reference: dags/etl/extract_stream_data.py:79-100,
-  * kpi_processor.py:27-37) — fine for KPI-sized frames, an anti-pattern for
-  * data-volume paths. Here:
-  *  - KPI-sized outputs may use `singleCsv` (explicit, bounded);
-  *  - staging/data paths use partitioned parquet — columnar, splittable,
-  *    predicate-pushdown-able on re-read; `partitionBy` gives real
-  *    partition pruning downstream (SURVEY.md §4 "partition pruning" row).
+  * kpi_processor.py:27-37) — an anti-pattern for data-volume paths. Here
+  * staging/data paths use partitioned parquet — columnar, splittable,
+  * predicate-pushdown-able on re-read; `partitionBy` gives real partition
+  * pruning downstream (SURVEY.md §4 "partition pruning" row) — and the
+  * KPI frames go straight to the warehouse upsert.
   */
 object Sinks {
-
-  /** S4 for small outputs only: one CSV object with header, like the
-    * reference's put_object. Deliberately explicit — callers must opt into
-    * the coalesce(1). */
-  def singleCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** Staging sink: partitioned parquet (replaces the reference's CSV
     * staging round-trips). */

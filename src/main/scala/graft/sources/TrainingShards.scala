@@ -4,64 +4,27 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ext.Sampling
-
-/** Deterministic corpus shuffle for training: write the dataset as N
-  * shards where the shard assignment AND the within-shard order are pure
-  * functions of each row's key (md5), so the "random" training order is
-  * exactly reproducible across runs, engines and cluster layouts — the
-  * property `df.repartition(N)` + `.sample`-style shuffles cannot give
-  * (round-robin and RNG both move with partition layout).
-  *
-  * Layout: `path/shard=K/` with ONE file per shard, rows inside the file
-  * in md5(key) order. A training loader reads shards round-robin (or a
-  * worker-subset of them) and gets an order that is uniform-random with
-  * respect to any content attribute yet bit-stable run over run.
-  *
-  * Scale posture: one hash repartition of the data (shard = hash bucket,
-  * all rows of a shard co-located) + an in-task sort; no global sort, no
-  * driver involvement. Shard count sizes the files: pick
-  * `corpus_bytes / target_file_bytes`.
+/** Deterministic corpus sharding for training: the shard assignment AND
+  * the order that cuts it are pure functions of each row's key (md5), so
+  * the "random" training order is exactly reproducible across runs,
+  * engines and cluster layouts — the property `df.repartition(N)` +
+  * `.sample`-style shuffles cannot give (round-robin and RNG both move
+  * with partition layout).
   */
 object TrainingShards {
-
-  /** Write `df` as `nShards` deterministic shards under `path`. Returns
-    * the shard count for convenience. */
-  def shuffledShardWrite(df: DataFrame, key: Column, nShards: Int,
-                         path: String): Int = {
-    require(nShards > 0, s"need positive shard count: $nShards")
-    // Shard from the 32-bit md5 bucket; order from the full md5 — using
-    // DIFFERENT substrings of the same hash would correlate order with
-    // shard, so the order key is the whole hex digest (shard prefix
-    // stripping is unnecessary: within a shard the digest remains
-    // uniform), tie-broken by the key itself for total order.
-    val withShard = df
-      .withColumn("shard", Sampling.hashBucket(key, nShards))
-      .withColumn("__ord", md5(key.cast("string")))
-    withShard
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("__ord"), key)
-      .drop("__ord")
-      .write.mode("overwrite")
-      .partitionBy("shard")
-      .parquet(path)
-    nShards
-  }
 
   /** TOKEN-balanced deterministic shard assignment: adds `shard` (long in
     * [0, nShards)) and `weight` (the evaluated weight, long) to `df` so
     * that every shard carries ~total/nShards weight (± one max-weight
     * row), not ~equal ROW counts. Docs vary 100× in length; a training
     * loader that steps shards in lockstep wants equal token budgets per
-    * shard, which `shuffledShardWrite`'s hash sharding only gives in
-    * expectation.
+    * shard, which hash sharding only gives in expectation.
     *
-    * Construction: rows take the md5(key) order (the same deterministic
-    * shuffle order as `shuffledShardWrite` — balance does NOT cost the
-    * reproducible-random order), and the shard is cut from the running
-    * weight total: shard = floor(prefix_weight * nShards / total). All
-    * integer arithmetic — bit-stable across engines, so the assignment is
-    * oracle-checkable.
+    * Construction: rows take the md5(key) order (a deterministic shuffle
+    * order — balance does NOT cost the reproducible-random order), and
+    * the shard is cut from the running weight total: shard =
+    * floor(prefix_weight * nShards / total). All integer arithmetic —
+    * bit-stable across engines, so the assignment is oracle-checkable.
     *
     * Scale posture: the prefix sum is NOT one global-order window (a
     * single-partition scan-stopper at corpus scale). Rows bucket by the

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{JoinSizeSketch, SketchAggregates}
-import graft.operators.{AdaptiveJoin, EstimatedJoin}
+import graft.operators.AdaptiveJoin
 
 /** Table statistics MAINTAINED AT WRITE TIME — the missing half of
   * sketch-driven join planning: [[graft.operators.EstimatedJoin]] can
@@ -292,34 +292,6 @@ object VersionedStats {
         }.toMap
       Some((rows, sketches))
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Join two versioned tables planning from their STORED stats — no
-    * scan happens before the physical strategy is chosen. Falls back to
-    * [[EstimatedJoin.estimatedJoin]]'s on-demand sketching when either
-    * sidecar is missing. The sketch hash family is deterministic, so
-    * the stored-stats decision is bit-identical to the on-demand one. */
-  def estimatedVersionedJoin(spark: SparkSession,
-                             leftRoot: String, rightRoot: String,
-                             leftKey: String, rightKey: String,
-                             joinType: String = "inner",
-                             broadcastMaxRows: Long = 10000000L,
-                             fanoutCap: Double = 4.0)
-      : (DataFrame, EstimatedJoin.JoinEstimate) = {
-    val left = VersionedTable.read(spark, leftRoot)
-    val right = VersionedTable.read(spark, rightRoot)
-    (for {
-      (nl, skl) <- statsFor(spark, leftRoot)
-      sl <- skl.get(leftKey)
-      (nr, skr) <- statsFor(spark, rightRoot)
-      sr <- skr.get(rightKey)
-    } yield {
-      val e = EstimatedJoin.estimateFromSketches(sl, nl, sr, nr,
-        broadcastMaxRows, fanoutCap)
-      (EstimatedJoin.applyStrategy(left, right, leftKey, rightKey,
-        joinType, e), e)
-    }).getOrElse(EstimatedJoin.estimatedJoin(left, right, leftKey, rightKey,
-      joinType, broadcastMaxRows, fanoutCap))
   }
 
   /** Skew-aware join of two versioned tables planned ENTIRELY from

@@ -28,13 +28,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * fails, its staged files are removed, and it throws CLEANLY. Both
   * race points assume ATOMIC RENAME + atomic create-no-overwrite —
   * true of file:// and HDFS, NOT of plain S3A (rename there is a
-  * non-atomic copy+delete): object-store deployments use
-  * [[commitObjectStore]], which removes the rename entirely and needs
-  * only conditional-put (S3 `If-None-Match`) for the manifest; the
-  * reader-side contract (manifest = source of
-  * truth) is unchanged. Sustained multi-writer throughput (retry loops,
-  * log compaction) is out of scope — the contract here is the weaker
-  * "a lost race is a CLEAN failure, never a torn table".
+  * non-atomic copy+delete), so an object-store root needs a commit
+  * without the rename claim. Sustained multi-writer throughput (retry
+  * loops, log compaction) is out of scope — the contract here is the
+  * weaker "a lost race is a CLEAN failure, never a torn table".
   *
   * Vacuum-vs-writer: [[vacuum]] cannot distinguish a crashed writer's
   * orphans from an IN-FLIGHT commit's staged-but-not-yet-manifested
@@ -113,51 +110,8 @@ object VersionedTable {
     publish(spark, root, v, prior, append, dataDir)
   }
 
-  /** Object-store-safe commit: the same manifest contract with NO
-    * directory rename anywhere. [[commit]]'s claim step renames the
-    * staged directory to `data/vN` — atomic on file:// and HDFS, but on
-    * plain S3A a "rename" is a non-atomic per-object copy+delete (the
-    * reference's own archive step does copy+delete for exactly this,
-    * reference: dags/etl/load_to_redshift.py:350-388), so two racing
-    * writers could interleave a torn claim. Here the staged
-    * writer-unique directory IS the version's permanent data directory:
-    *
-    *  1. stage under `data/obj-v{N}-{nonce}` (writer-unique, never
-    *     renamed, never shared — no interleaving is possible);
-    *  2. the manifest create with overwrite=false is the ONLY commit
-    *     point and the ONLY primitive that needs atomicity.
-    *
-    * PRECONDITION (loud, not assumed): the store must give
-    * create-no-overwrite atomicity for the manifest. Local FS and HDFS
-    * do natively. S3 does since it added conditional writes
-    * (`If-None-Match` on PUT, strong consistency) — S3A exposes it via
-    * `fs.s3a.create.conditional.enabled`; on a store WITHOUT conditional
-    * put, two racing manifest creates can both "succeed" and this mode
-    * degrades to last-writer-wins on the SAME version number — a torn
-    * history, not a torn snapshot (each manifest still references only
-    * its own writer's complete file set, so readers never see a mix;
-    * what is lost is the loser's commit without its writer learning).
-    * Deployments on such stores must serialize writers externally.
-    *
-    * Readers are untouched: a manifest is a file list; whether those
-    * files live under `data/vN` or `data/obj-v5-ab12cd34` is invisible.
-    * Returns the committed version. */
-  def commitObjectStore(df: DataFrame, root: String,
-                        append: Boolean = false): Long = {
-    val spark = df.sparkSession
-    val prior = latest(spark, root)
-    val v = prior + 1
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    // no leading dot: the name must survive any path-component filtering
-    // a reader's file index applies to hidden (./_) segments
-    val dataDir = new Path(root, s"data/obj-v$v-$nonce")
-    df.write.mode("errorifexists").parquet(dataDir.toString)
-    publish(spark, root, v, prior, append, dataDir)
-  }
-
   /** Write version `v`'s manifest — `dataDir`'s files, after the prior
-    * version's on an append — as the COMMIT POINT of both commit modes,
-    * and the only step whose atomicity is required. ONLY an existing
+    * version's on an append — as the COMMIT POINT. ONLY an existing
     * manifest is the lost-race signal; a write that fails after the
     * create is a FAILED commit, whose partial manifest [[MetaFile]]
     * removes (so versions() never lists a torn v{N}.json). Either way
@@ -274,7 +228,7 @@ object VersionedTable {
       val vNum: Option[Long] =
         if (name.startsWith("v") && name.drop(1).forall(_.isDigit))
           Some(name.drop(1).toLong)
-        else "^(?:\\.stage|obj)-v(\\d+)-".r.findFirstMatchIn(name)
+        else "^\\.stage-v(\\d+)-".r.findFirstMatchIn(name)
           .map(_.group(1).toLong)
       val aboveHorizon = d.isDirectory && vNum.exists(_ > latest)
       if (aboveHorizon) Seq.empty // possible in-flight commit — never sweep

@@ -43,22 +43,14 @@ object StreamingEwma {
     java.math.BigDecimal.valueOf(value * 1000000.0)
       .setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
+  /** 1/alpha of the fold: alpha = 1/2. The batch operator's exact
+    * scaling needs alpha to be a negative power of two. */
+  private val InvAlpha = 2L
+
   /** Fold the stream; emits one [[EwmaPoint]] per input event with the
-    * level AFTER that event. `alpha` must be a negative power of two
-    * (the batch operator's exact-scaling restriction). */
-  def smoothed(input: Dataset[EwmaInput],
-               alpha: Double = 0.5): Dataset[EwmaPoint] = {
-    val invAlpha = 1.0 / alpha
-    require(alpha > 0 && alpha <= 0.5 &&
-      invAlpha == math.rint(invAlpha) &&
-      java.lang.Long.bitCount(invAlpha.toLong) == 1,
-      s"alpha must be a negative power of two for exact scaling: $alpha")
-    // Same bound as the batch twin (Ewma.perEntity): m ≤ 2¹⁶ keeps the
-    // long multiply s·(m−1) overflow-free and the batch twin's double
-    // floor-division exact — past it the two folds diverge silently.
-    require(alpha >= 1.0 / 65536,
-      s"alpha below 2^-16 overflows the exact integer fold: $alpha")
-    val m = invAlpha.toLong
+    * level AFTER that event. */
+  def smoothed(input: Dataset[EwmaInput]): Dataset[EwmaPoint] = {
+    val m = InvAlpha
     val spark = input.sparkSession
     import spark.implicits._
     input

@@ -21,7 +21,7 @@ import graft.sources.{Compaction, VersionedTable}
   * cells and runs local descent over the affected neighborhood only.
   * Per-trigger work is batch-local: the one corpus-shaped pass is the
   * novelty anti-join against the stored vec_ids (a single-column scan,
-  * the same shape [[graft.ext.DedupIndex.ingestSpans]] pays per
+  * the same shape [[graft.ext.DedupIndex.ingestSpansOn]] pays per
   * trigger); the graph itself is touched only where new edges land.
   *
   * Bootstrap contract: [[KnnGraphIndex.create]] must have run on the
@@ -100,11 +100,11 @@ object StreamingKnnGraph {
     version
   }
 
-  /** Wire a (vec_id, embedding) stream into the loop. `onBatch` gets the
-    * graph version. */
+  /** Wire a (vec_id, embedding) stream into the loop, with
+    * [[ingestBatch]]'s default rounds and stale-model policy. `onBatch`
+    * gets the graph version. */
   def ingestWriter(vecs: DataFrame, graphRoot: String, corpusRoot: String,
-                   checkpoint: String, rounds: Int = 1,
-                   allowStale: Boolean = false,
+                   checkpoint: String,
                    onBatch: (Long, Long) => Unit = (_, _) => (),
                    trigger: Trigger = Trigger.AvailableNow(),
                    compactAboveFiles: Int = 0)
@@ -112,6 +112,6 @@ object StreamingKnnGraph {
     BatchMarker.writer(vecs, checkpoint, trigger, marker(graphRoot),
         onBatch) { (batch, batchId) =>
       ingestBatch(batch.select(col("vec_id"), col("embedding")), batchId,
-        graphRoot, corpusRoot, rounds, allowStale, compactAboveFiles)
+        graphRoot, corpusRoot, compactAboveFiles = compactAboveFiles)
     }
 }

@@ -105,12 +105,11 @@ object StreamingSplitMaintenance {
     report
   }
 
-  /** Wire a (doc_id, text) stream into the loop. `onBatch` gets the
-    * labels version. */
+  /** Wire a (doc_id, text) stream into the loop, split with
+    * [[assignBatch]]'s default weights. `onBatch` gets the labels
+    * version. */
   def assignWriter(docs: DataFrame, indexRoot: String, reportRoot: String,
                    checkpoint: String,
-                   weights: Seq[(String, Int)] = Seq("train" -> 80,
-                     "eval" -> 20),
                    onBatch: (Long, Long) => Unit = (_, _) => (),
                    trigger: Trigger = Trigger.AvailableNow(),
                    compactAboveFiles: Int = 0)
@@ -123,7 +122,7 @@ object StreamingSplitMaintenance {
         (if (batch.columns.contains("embedding"))
           Seq(col("embedding")) else Seq.empty)
       assignBatch(batch.select(cols: _*), batchId,
-        indexRoot, reportRoot, weights, compactAboveFiles)
+        indexRoot, reportRoot, compactAboveFiles = compactAboveFiles)
       VersionedTable.latest(batch.sparkSession, indexRoot + "/labels")
     }
 }

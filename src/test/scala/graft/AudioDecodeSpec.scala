@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{AudioDecode, AudioFunctions}
+import graft.functions.{AudioFunctions, SpecAccess}
 
 /** Real-encoder ground truth for the audio-header parser: the JDK's own
   * javax.sound writes actual RIFF/WAVE files (independent of our
@@ -29,7 +29,7 @@ class AudioDecodeSpec extends SparkSpec {
   }
 
   private def info(b: Array[Byte]): Option[(String, Int, Int, Int, Long)] =
-    Option(AudioDecode.infoRow(b)).map(r =>
+    Option(SpecAccess.infoRow(b)).map(r =>
       (r.getUTF8String(0).toString, r.getInt(1), r.getInt(2), r.getInt(3),
         r.getLong(4)))
 

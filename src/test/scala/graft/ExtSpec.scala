@@ -204,27 +204,6 @@ class FuzzySpec extends SparkSpec {
   import spark.implicits._
   import graft.ext.Fuzzy
 
-  test("blocked fuzzy match pairs within-block near names only") {
-    val df = Seq(
-      (1L, "acme corp"),  // block "acme"
-      (2L, "acme corq"),  // 1 edit from #1, same block
-      (3L, "acme unrelated name"), // same block, far
-      (4L, "acmf corp"))  // 1 edit from #1 but DIFFERENT block -> never compared
-      .toDF("id", "name")
-    val pairs = Fuzzy.blockedNamePairs(df, "id", "name",
-        block = split(col("name"), " ").getItem(0), maxDist = 1)
-      .select("id_a", "id_b", "edit_dist")
-      .as[(Long, Long, Long)].collect()
-    assert(pairs.toSeq === Seq((1L, 2L, 1L)))
-  }
-
-  test("maxBucket drops degenerate blocks instead of going quadratic") {
-    val df = (1L to 50L).map(i => (i, s"name $i")).toDF("id", "name")
-    val capped = Fuzzy.blockedNamePairs(df, "id", "name", lit("all"),
-      maxDist = 10, maxBucket = 10)
-    assert(capped.count() === 0L)
-  }
-
   test("soundex blocking pairs sound-alikes that token blocking misses") {
     val df = Seq(
       (1L, "smith forge"),   // soundex(smith) = S530
@@ -233,15 +212,14 @@ class FuzzySpec extends SparkSpec {
       (4L, "rupert ltd"))    // robert/rupert share R163
       .toDF("id", "name")
     // token blocking finds nothing: all first tokens differ
-    assert(Fuzzy.blockedNamePairs(df, "id", "name",
+    assert(Fuzzy.blockedPairStatsWeighted(df, "name",
       block = split(col("name"), " ").getItem(0), maxDist = 2)
       .count() === 0L)
-    // phonetic blocking pairs the homophones
-    val pairs = Fuzzy.blockedNamePairs(df, "id", "name",
+    // phonetic blocking pairs the homophones, and only them
+    val stats = Fuzzy.blockedPairStatsWeighted(df, "name",
         block = soundex(split(col("name"), " ").getItem(0)), maxDist = 2)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.contains((1L, 3L)) && !pairs.contains((2L, 4L)))
+      .as[(String, Long, Double)].collect().toSeq
+    assert(stats === Seq(("R163", 1L, 2.0), ("S530", 1L, 1.0)))
   }
 
   test("weighted distinct-name stats equal the raw-pair rollup exactly") {
@@ -251,8 +229,16 @@ class FuzzySpec extends SparkSpec {
       .table(spark, "/root/testdata/sf0.001", "part")
       .select(col("p_partkey").as("id"), col("p_name").as("name"))
     val blockCol = split(col("name"), " ").getItem(0)
-    val raw = Fuzzy.blockedNamePairs(df, "id", "name", blockCol,
-        maxDist = 1, maxBucket = 100000)
+    // every raw same-block row pair, id_a < id_b, with its edit distance
+    val rows = df.select(blockCol.as("block"), col("id"), col("name"))
+    val rawPairs = rows.select(col("block"), col("id").as("id_a"),
+        col("name").as("name_a"))
+      .join(rows.select(col("block"), col("id").as("id_b"),
+        col("name").as("name_b")), Seq("block"))
+      .where(col("id_a") < col("id_b"))
+      .withColumn("edit_dist",
+        levenshtein(col("name_a"), col("name_b")).cast("long"))
+    val raw = rawPairs.where(col("edit_dist") <= 1)
       .groupBy(col("block"))
       .agg(count(lit(1)).as("n_pairs"),
         round(avg(col("edit_dist")), 6).as("avg_dist"))
@@ -261,8 +247,7 @@ class FuzzySpec extends SparkSpec {
     assert(raw.exceptAll(weighted).isEmpty && weighted.exceptAll(raw).isEmpty,
       "weighted form must be indistinguishable from the raw rollup")
     // JW twin: same equivalence, against every raw same-block pair scored
-    val rawJw = Fuzzy.blockedNamePairs(df, "id", "name", blockCol,
-        maxDist = Int.MaxValue, maxBucket = 100000)
+    val rawJw = rawPairs
       .withColumn("jw_sim", graft.functions.StringFunctions
         .jaroWinkler(col("name_a"), col("name_b")))
       .where(col("jw_sim") >= 0.9)
@@ -281,13 +266,16 @@ class FuzzySpec extends SparkSpec {
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+  import graft.functions.VectorFunctions.dotNative
 
   test("cosine: identical=1, orthogonal=0, zero-norm=0") {
     val df = Seq(
       (Seq(1.0f, 0.0f), Seq(1.0f, 0.0f)),
       (Seq(1.0f, 0.0f), Seq(0.0f, 1.0f)),
       (Seq(0.0f, 0.0f), Seq(1.0f, 1.0f))).toDF("a", "b")
-    val out = df.select(Similarity.cosine(col("a"), col("b"))).as[Double].collect()
+    val n2 = (c: String) => dotNative(col(c), col(c))
+    val out = df.select(Similarity.cosSim(col("a"), col("b"), n2("a"), n2("b")))
+      .as[Double].collect()
     assert(out(0) === 1.0)
     assert(out(1) === 0.0)
     assert(out(2) === 0.0)
@@ -835,7 +823,7 @@ class ComponentsSpec extends SparkSpec {
 }
 
 class MediaDecodeSpec extends SparkSpec {
-  import graft.functions.{MediaDecode, MediaFunctions}
+  import graft.functions.{MediaFunctions, SpecAccess}
   import org.apache.spark.sql.functions._
 
   /** Real encoder ground truth: JDK ImageIO writes actual PNG/JPEG/GIF
@@ -850,7 +838,7 @@ class MediaDecodeSpec extends SparkSpec {
   }
 
   private def dims(b: Array[Byte]): Option[(String, Int, Int)] =
-    Option(MediaDecode.dimsRow(b)).map(r =>
+    Option(SpecAccess.dimsRow(b)).map(r =>
       (r.getUTF8String(0).toString, r.getInt(1), r.getInt(2)))
 
   test("decodes real ImageIO-encoded PNG / JPEG / GIF dimensions") {

@@ -27,6 +27,8 @@ class IncrementalIndexSpec extends SparkSpec {
 
   private def corpusDf = corpusRows.toDF("doc_id", "lang", "text")
   private def batchDf = batchRows.toDF("doc_id", "lang", "text")
+  private def ingest(root: String) = DedupIndex.ingestSpansOn(root, spark,
+    DedupIndex.spanHashFrame(batchDf, 3), () => DedupIndex.spanCount(batchDf, 3))
 
   private def collectReport(df: DataFrame): Seq[(String, Long, Long)] =
     df.as[(String, Long, Long)].collect().sortBy(_._1).toSeq
@@ -182,12 +184,12 @@ class IncrementalIndexSpec extends SparkSpec {
       DedupIndex.spanIndex(corpusDf, k = 3), statsKeys = Seq("sh"))
     val v1Rows = graft.sources.VersionedStats.statsFor(spark, root).get._1
     assert(v1Rows === VersionedTable.read(spark, root).count())
-    DedupIndex.ingestSpans(root, batchDf, k = 3)
+    ingest(root)
     val v2Rows = graft.sources.VersionedStats.statsFor(spark, root).get._1
     assert(v2Rows === VersionedTable.read(spark, root).count())
     assert(v2Rows > v1Rows) // the batch's novel spans landed in the stat
     // re-ingest: nothing appends, the stat stays exact
-    DedupIndex.ingestSpans(root, batchDf, k = 3)
+    ingest(root)
     assert(graft.sources.VersionedStats.statsFor(spark, root).get._1
       === v2Rows)
   }
@@ -226,11 +228,11 @@ class IncrementalIndexSpec extends SparkSpec {
     DedupIndex.readOrBuild(spark, root,
       DedupIndex.spanIndex(corpusDf, k = 3))
     val before = VersionedTable.read(spark, root).count()
-    DedupIndex.ingestSpans(root, batchDf, k = 3)
+    ingest(root)
     val afterFirst = VersionedTable.read(spark, root).count()
     // only the genuinely new docs' spans land (11: 5 spans, 13: 2)
     assert(afterFirst === before + 7)
-    DedupIndex.ingestSpans(root, batchDf, k = 3)
+    ingest(root)
     assert(VersionedTable.read(spark, root).count() === afterFirst)
     // and the absorbed batch now reads as fully seen
     val post = DedupIndex.spanContamination(

@@ -49,55 +49,6 @@ class JdbcUpsertSpec extends SparkSpec {
       "\"genre\" = 'jazz' AND \"listen_count\" = 5") === 1)
   }
 
-  test("mergeUpsert (MERGE dialect) matches delete+insert semantics") {
-    val mergeDdl =
-      """CREATE TABLE genre_kpis_m (
-         "genre" VARCHAR(64) NOT NULL,
-         "listen_count" BIGINT,
-         "load_date" DATE NOT NULL)"""
-    sink.ensureTable(mergeDdl, "genre_kpis_m")
-    val d1 = java.sql.Date.valueOf("2024-06-25")
-    val d2 = java.sql.Date.valueOf("2024-06-26")
-    val batch1 = Seq(("rock", 10L, d1), ("jazz", 5L, d1))
-      .toDF("genre", "listen_count", "load_date")
-
-    sink.mergeUpsert(batch1, "genre_kpis_m", Seq("genre"), "load_date",
-      numPartitions = 2)
-    assert(sink.countWhere("genre_kpis_m", "1=1") === 2)
-
-    // idempotence: same batch re-merged, no duplicates
-    sink.mergeUpsert(batch1, "genre_kpis_m", Seq("genre"), "load_date")
-    assert(sink.countWhere("genre_kpis_m", "1=1") === 2)
-
-    // same key, new date: inserted alongside
-    sink.mergeUpsert(Seq(("rock", 99L, d2)).toDF("genre", "listen_count",
-      "load_date"), "genre_kpis_m", Seq("genre"), "load_date")
-    assert(sink.countWhere("genre_kpis_m", "1=1") === 3)
-
-    // same key+date, new value: updated in place
-    sink.mergeUpsert(Seq(("rock", 42L, d1)).toDF("genre", "listen_count",
-      "load_date"), "genre_kpis_m", Seq("genre"), "load_date")
-    assert(sink.countWhere("genre_kpis_m", "1=1") === 3)
-    assert(sink.countWhere("genre_kpis_m",
-      "\"genre\" = 'rock' AND \"listen_count\" = 42") === 1)
-  }
-
-  test("mergeUpsert with a key-only batch emits an insert-only MERGE") {
-    // no non-key columns -> an empty UPDATE SET clause would be malformed
-    // SQL; the sink must fall back to WHEN NOT MATCHED-only
-    val ddlK =
-      """CREATE TABLE seen_keys (
-         "genre" VARCHAR(64) NOT NULL,
-         "load_date" DATE NOT NULL)"""
-    sink.ensureTable(ddlK, "seen_keys")
-    val d1 = java.sql.Date.valueOf("2024-06-25")
-    val batch = Seq(("rock", d1), ("jazz", d1)).toDF("genre", "load_date")
-    sink.mergeUpsert(batch, "seen_keys", Seq("genre"), "load_date")
-    assert(sink.countWhere("seen_keys", "1=1") === 2)
-    sink.mergeUpsert(batch, "seen_keys", Seq("genre"), "load_date") // idempotent
-    assert(sink.countWhere("seen_keys", "1=1") === 2)
-  }
-
   test("copyLoad bulk-ingests staged CSV part files (Derby IMPORT_TABLE)") {
     // the COPY-shaped S9 path end to end: partition-parallel CSV staging
     // + the warehouse's own bulk-ingest statement, not row INSERTs
@@ -177,21 +128,6 @@ class JdbcUpsertSpec extends SparkSpec {
       } finally c.close()
     assert(back === List((payload,
       java.time.LocalDateTime.parse("2024-06-25T13:45:07.123456"))))
-  }
-
-  test("redshiftCopy emits the reference COPY statement shape") {
-    val stmts = graft.sources.CopyBulkSink.redshiftCopy(
-      credentialsSql = "IAM_ROLE 'arn:aws:iam::0:role/loader'",
-      ignoreHeader = 1)("genre_kpis", "s3://bucket/staging/run1",
-      Seq("part-0.csv", "part-1.csv"))
-    // one statement over the PREFIX — the warehouse fans in the files
-    assert(stmts.length === 1)
-    val s = stmts.head
-    assert(s.contains("COPY genre_kpis FROM 's3://bucket/staging/run1'"))
-    assert(s.contains("IAM_ROLE 'arn:aws:iam::0:role/loader'"))
-    assert(s.contains("CSV"))
-    assert(s.contains("IGNOREHEADER 1"))
-    assert(s.contains("DATEFORMAT 'auto'"))
   }
 
   test("spark.read.jdbc round-trips the warehouse table (partitioned read)") {

@@ -36,11 +36,7 @@ class PlanShapeSpec extends SparkSpec {
       "simhash" -> Dedup.simhashPairs(docs),
       "winnowing" -> Dedup.winnowingPairs(docs),
       "contamination" -> Dedup.contaminationPairs(docs, 5,
-        Seq("train" -> 80, "val" -> 10, "test" -> 10)),
-      "fuzzy" -> graft.ext.Fuzzy.blockedNamePairs(
-        docs.selectExpr("doc_id", "substr(text, 1, 24) AS nm"),
-        "doc_id", "nm", block = substring(col("nm"), 1, 4),
-        maxDist = 2))) {
+        Seq("train" -> 80, "val" -> 10, "test" -> 10)))) {
       val p = plan(df)
       assert(scanCount(p) === 1, s"$name should scan the corpus once:\n$p")
       assert(!p.contains("NestedLoop"), s"$name has a nested-loop join")

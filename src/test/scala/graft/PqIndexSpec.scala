@@ -82,31 +82,6 @@ class PqIndexSpec extends SparkSpec {
       .where(col("vec_id") === 480).count() === 1L)
   }
 
-  test("tau2For: threshold calibrated from the stored err2_p99 stat") {
-    val root = freshRoot("tau")
-    val corpus = emb.where(col("vec_id") < 400)
-    PqIndex.create(corpus, root)
-    val tStrict = PqIndex.tau2For(spark, root, 1.0) // = err2_p99 alone
-    val t95 = PqIndex.tau2For(spark, root, 0.95)
-    val t50 = PqIndex.tau2For(spark, root, 0.5)
-    assert(tStrict > 0.0 && t95 > tStrict && t50 > t95) // monotone in slack
-    info(f"err2_p99=$tStrict%.3f tau2(0.95)=$t95%.3f tau2(0.5)=$t50%.3f")
-    // recall-by-construction: a re-sent duplicate's ADC distance is its
-    // own reconstruction error, and the margin is that error's p99 — so
-    // at the STRICTEST setting (t=1.0) at least 9/10 dups flag, and
-    // with near-dup slack (t=0.95) all do
-    val dups = corpus.where(col("vec_id") < 10)
-      .withColumn("vec_id", col("vec_id") + 100000L)
-    val strictFlags = PqIndex.semanticContamination(spark, root, dups,
-        nprobe = 4, tau2 = tStrict)
-      .as[(Long, Option[Double], Boolean)].collect().count(_._3)
-    assert(strictFlags >= 9, s"only $strictFlags/10 dups at err2_p99")
-    val relaxedFlags = PqIndex.semanticContamination(spark, root, dups,
-        nprobe = 4, tau2 = t95)
-      .as[(Long, Option[Double], Boolean)].collect().count(_._3)
-    assert(relaxedFlags === 10)
-  }
-
   test("semantic contamination flags re-sent vectors, separates fresh ones") {
     val root = freshRoot("contam")
     val corpus = emb.where(col("vec_id") < 400)

@@ -37,18 +37,6 @@ class SamplingSpec extends SparkSpec {
     }
   }
 
-  test("hashSample keeps a stable subset consistent with the split buckets") {
-    val df = (0L until 1000L).toDF("id")
-    val sampled = Sampling.hashSample(df, col("id"), 20)
-      .as[Long].collect().toSet
-    assert(sampled.nonEmpty && sampled.size < 400)
-    val again = Sampling.hashSample(df.repartition(3), col("id"), 20)
-      .as[Long].collect().toSet
-    assert(sampled === again)
-    // sampling at 100% keeps everything
-    assert(Sampling.hashSample(df, col("id"), 100).count() === 1000L)
-  }
-
   test("rejects weights summing over 100") {
     val df = Seq(1L).toDF("id")
     intercept[IllegalArgumentException] {

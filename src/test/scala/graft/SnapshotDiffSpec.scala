@@ -33,16 +33,6 @@ class SnapshotDiffSpec extends SparkSpec {
     assert(out.find(_._1 == 4L).get._4 === None)
   }
 
-  test("summary counts include unchanged; keepUnchanged keeps rows") {
-    val old = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
-    val neu = Seq((1L, "x"), (2L, "z")).toDF("k", "v")
-    val sum = SnapshotDiff.summary(old, neu, Seq("k"))
-      .as[(String, Long)].collect().toMap
-    assert(sum === Map("changed" -> 1L, "unchanged" -> 1L))
-    assert(SnapshotDiff.diff(old, neu, Seq("k"), keepUnchanged = true)
-      .count() === 2)
-  }
-
   test("columns present in only one snapshot are ignored, not changes") {
     val old = Seq((1L, "x", "dropme")).toDF("k", "v", "legacy")
     val neu = Seq((1L, "x", 99)).toDF("k", "v", "brand_new")

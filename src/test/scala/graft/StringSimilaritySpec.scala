@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{StringFunctions, StringSimilarity}
+import graft.functions.{SpecAccess, StringFunctions}
 
 /** Jaro-Winkler against the literature's canonical examples plus the
   * DuckDB-matching conventions (the fuzzy_part_pairs_jw oracle verifies
@@ -12,7 +12,7 @@ class StringSimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   private def jw(a: String, b: String): Double =
-    StringSimilarity.jaroWinkler(UTF8String.fromString(a),
+    SpecAccess.jaroWinkler(UTF8String.fromString(a),
       UTF8String.fromString(b))
 
   test("canonical Winkler examples") {

@@ -9,45 +9,6 @@ import graft.sources.TrainingShards
 class TrainingShardsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("shuffledShardWrite: one file per shard, lossless, md5-ordered, stable") {
-    val df = (0L until 2000L).map(i => (i, s"doc_$i")).toDF("id", "text")
-    val dir = tempDir("graft_shards")
-      .resolve("out").toString
-    TrainingShards.shuffledShardWrite(df, col("id"), nShards = 8, dir)
-
-    val back = spark.read.parquet(dir)
-    // lossless: every row lands in exactly one shard
-    assert(back.count() === 2000L)
-    assert(back.select("id").distinct().count() === 2000L)
-    // one data file per shard directory
-    val root = new java.io.File(dir)
-    val shardDirs = root.listFiles().filter(_.getName.startsWith("shard="))
-    assert(shardDirs.length === 8)
-    shardDirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length === 1, s"${d.getName} has ${files.length} files")
-    }
-    // within-shard file order IS md5(key) order (read one shard's single
-    // file as a single partition: row order = file order)
-    val shard0 = spark.read
-      .parquet(shardDirs.minBy(_.getName).getPath)
-      .select(col("id")).as[Long].collect().toSeq
-    val sorted = spark.createDataset(shard0).toDF("id")
-      .orderBy(md5(col("id").cast("string")), col("id"))
-      .as[Long].collect().toSeq
-    assert(shard0 === sorted, "file order must equal md5 order")
-    // the order is a real shuffle, not the input order
-    assert(shard0 !== shard0.sorted)
-    // bit-stable: a second write from a different layout is identical
-    val dir2 = tempDir("graft_shards2")
-      .resolve("out").toString
-    TrainingShards.shuffledShardWrite(df.repartition(13), col("id"), 8, dir2)
-    val back2 = spark.read.parquet(new java.io.File(dir2).listFiles()
-      .filter(_.getName.startsWith("shard=")).minBy(_.getName).getPath)
-      .select(col("id")).as[Long].collect().toSeq
-    assert(back2 === shard0)
-  }
-
   test("tokenBalancedAssign: shard weight balanced to ± one max row") {
     // heavily varied weights: w(i) = 1 + (i % 97)^2 — row-count sharding
     // would be far off; token sharding must land within one max weight

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.JoinSizeSketch
@@ -13,9 +12,6 @@ class VersionedStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp() = tempDir("graft_vstats").resolve("tbl").toString
-
-  private def plan(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
 
   test("sidecar stats equal the on-demand sketch bit-for-bit") {
     val root = tmp()
@@ -48,50 +44,6 @@ class VersionedStatsSpec extends SparkSpec {
       .agg(JoinSizeSketch.agmsSketch(col("k"), 256).as("s"))
       .as[Seq[Long]].head()
     assert(sk("k") === fromScratch)
-  }
-
-  test("join plans from stored stats: broadcast small, merge on explosion") {
-    val factRoot = tmp(); val dimRoot = tmp(); val hotRoot = tmp()
-    VersionedStats.commitWithStats(
-      (0 until 20000).map(i => (i % 500 + 1L, i.toLong)).toDF("fk", "v"),
-      factRoot, Seq("fk"))
-    VersionedStats.commitWithStats(
-      (1L to 500L).map(k => (k, s"d$k")).toDF("dk", "name"),
-      dimRoot, Seq("dk"))
-    // hot dim: 200 rows all on one key that is hot in the fact too
-    VersionedStats.commitWithStats(
-      (0L until 200L).map(_ => (1L, "hot")).toDF("dk", "name"),
-      hotRoot, Seq("dk"))
-    val (clean, e1) = VersionedStats.estimatedVersionedJoin(
-      spark, factRoot, dimRoot, "fk", "dk")
-    assert(e1.strategy === "broadcast_right")
-    assert(plan(clean).contains("BroadcastHashJoin"))
-    assert(clean.count() === 20000L)
-    // explosion fixture: every fact row on one key × a 200-row dim on
-    // the same key → estimated output 2M, fanout 200 ≫ cap
-    val hotFactRoot = tmp()
-    VersionedStats.commitWithStats(
-      (0L until 10000L).map(_ => (1L, "x")).toDF("fk", "v"),
-      hotFactRoot, Seq("fk"))
-    val (hot, e2) = VersionedStats.estimatedVersionedJoin(
-      spark, hotFactRoot, hotRoot, "fk", "dk")
-    assert(e2.rowsRight === 200L) // passes any small-side threshold...
-    assert(e2.strategy === "shuffle_merge") // ...but the estimate says no
-    assert(plan(hot).contains("SortMergeJoin"))
-  }
-
-  test("missing sidecar degrades to on-demand estimation") {
-    val aRoot = tmp(); val bRoot = tmp()
-    // plain commits: no stats written
-    VersionedTable.commit(
-      (0 until 5000).map(i => (i % 100 + 1L, i)).toDF("ak", "v"), aRoot)
-    VersionedTable.commit(
-      (1L to 100L).map(k => (k, k * 2)).toDF("bk", "w"), bRoot)
-    assert(VersionedStats.statsFor(spark, aRoot).isEmpty)
-    val (joined, e) = VersionedStats.estimatedVersionedJoin(
-      spark, aRoot, bRoot, "ak", "bk")
-    assert(e.strategy === "broadcast_right")
-    assert(joined.count() === 5000L)
   }
 
   test("corrupt sidecar degrades to None, never a failure") {

@@ -181,6 +181,26 @@ class VersionedTableSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq === Seq((9L, "z")))
   }
 
+  test("vacuum sweeps writer stages only below the horizon") {
+    val root = freshRoot()
+    VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
+    VersionedTable.commit(Seq((2L, "b")).toDF("id", "x"), root, append = true)
+    // a crashed writer's stage BELOW the horizon and an in-flight one ABOVE it
+    val fs = new Path(root)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val orphan = new Path(root, "data/.stage-v2-deadbeef/part-orphan.parquet")
+    val inflight = new Path(root, "data/.stage-v3-cafef00d/part-live.parquet")
+    Seq(orphan, inflight).foreach { p =>
+      fs.mkdirs(p.getParent)
+      val o = fs.create(p, false)
+      try o.write(Array[Byte](1, 2, 3)) finally o.close()
+    }
+    VersionedTable.vacuum(spark, root, keepVersions = 2)
+    assert(!fs.exists(orphan), "below-horizon orphan must be swept")
+    assert(fs.exists(inflight), "above-horizon in-flight stage must survive")
+    assert(VersionedTable.read(spark, root).count() === 2)
+  }
+
   test("a reader pinned to a retained version survives vacuum") {
     val root = freshRoot()
     VersionedTable.commit(Seq((1L, "a")).toDF("id", "x"), root)
